@@ -56,8 +56,7 @@ def read(path):
 
 
 def classpath(jar):
-    """The JVM class path: the harness jar, then every Spark jar by name
-    (explicit and ordered, so a class-data archive matches it)."""
+    """The JVM class path: the harness jar, then every Spark jar by name."""
     return ":".join([jar] + sorted(glob.glob(os.path.join(spark_jars(), "*.jar"))))
 
 
@@ -85,7 +84,7 @@ def build(log=sys.stderr):
     argfile = os.path.join(out, "sources.txt")
     with open(argfile, "w") as fh:
         fh.write("\n".join(files) + "\n")
-    cmd = ["java", "-Xss8m", "-Xmx2g", "-cp", ":".join(compiler),
+    cmd = ["java", "-XX:-UsePerfData", "-Xss8m", "-Xmx2g", "-cp", ":".join(compiler),
            "scala.tools.nsc.Main", "-nowarn",
            "-classpath", ":".join(sorted(glob.glob(os.path.join(jars, "*.jar")))),
            "-d", tmp, "@" + argfile]

@@ -3,9 +3,10 @@
     python3 benchmark/run.py --workload cdc_serve|curation \\
         --seed N --seconds S --trace 0|1
 
-Builds the engine and harness from source (see build.py), generates the
-inputs from the seed (gen.py), runs the workload in one JVM with
-``local[nproc]`` as one closed-loop client, checks the outputs, and prints
+Builds the engine and harness from source (see build.py), cuts the
+inputs for the seed from the checked-in test-data extract (inputs.py),
+runs the workload in one JVM with ``local[nproc]`` as one closed-loop
+client, checks the outputs, and prints
 as the last stdout line one JSON object:
 ``{"correct", "attempted", "failed", "metrics"}``. With ``--trace 0`` the
 metrics are the end-to-end metrics; with ``--trace 1`` the per-layer
@@ -26,17 +27,17 @@ import time
 HERE = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, HERE)
 import build  # noqa: E402
-import gen  # noqa: E402
+import inputs  # noqa: E402
 
 WORKLOADS = ("cdc_serve", "curation")
 JVM_TIMEOUT_S = 170
 HEAP = "2g"
 
 # End-to-end metrics: (name, unit). Every workload reports all of them;
-# what "op" and "read" are per workload is in README.md. Op and read are
-# gated on the CPU time they cost, not on wall time: on a shared host the
-# wall time of the same run swung by 30% between seeds with the neighbours'
-# load (README.md, "Why CPU seconds"); both wall medians are in the detail.
+# what "op" and "read" are per workload is in README.md. Set-up, op and
+# read are gated on the CPU time of the application threads, not on wall
+# time: on a shared host wall times follow the neighbours' load (README.md,
+# "Why CPU seconds"); the wall medians are in the detail.
 END_TO_END = [("setup_s", "s"), ("op_cpu_p50_s", "s"), ("read_cpu_p50_s", "s"),
               ("retained_heap_mb", "MB")]
 
@@ -163,7 +164,8 @@ def layer_metrics(raw, cores):
             rows = ctr("olap.sync_incremental", "rows_rewritten")
             m["olap.rows_rewritten"] = rows
             m["olap.partitions_rewritten"] = ctr("olap.sync_incremental", "partitions_rewritten")
-            m["olap.rewrite_useful_frac"] = ctr("olap.sync_incremental", "useful_rows") / rows
+            if rows:  # a batch whose buyers have no orders in the window rewrites nothing
+                m["olap.rewrite_useful_frac"] = ctr("olap.sync_incremental", "useful_rows") / rows
         if "streaming.scd1_merge" in by:
             m["streaming.state_mb_written"] = ctr("streaming.scd1_merge", "spark.output_mb")
         if "curation.round" in by:
@@ -193,7 +195,7 @@ def layer_metrics(raw, cores):
 
 def end_to_end(raw):
     s = raw["samples"]
-    return {"setup_s": median(s.get("setup", [])),
+    return {"setup_s": median(s.get("setup_cpu", [])),
             "op_cpu_p50_s": median(s.get("op_cpu", [])),
             "read_cpu_p50_s": median(s.get("read_cpu", [])),
             "retained_heap_mb": raw["info"].get("retained_heap_mb")}
@@ -203,7 +205,8 @@ def detail(raw, workload):
     """Per-workload metrics under the names README.md maps, with sample
     counts and each tail's percentile."""
     s = raw["samples"]
-    d = {"op_p50_s": median(s.get("op", [])), "read_p50_s": median(s.get("read", []))}
+    d = {"setup_wall_s": median(s.get("setup", [])),
+         "op_p50_s": median(s.get("op", [])), "read_p50_s": median(s.get("read", []))}
 
     def timing(name, key):
         xs = s.get(key, [])
@@ -221,7 +224,7 @@ def detail(raw, workload):
         t = tail(reads)
         d.update(query_tail_s=None if t is None else t[1],
                  query_tail_pct=None if t is None else round(t[0], 1), query_n=len(reads))
-        full = median(s.get("setup_sync", []))
+        full = median(s.get("setup", []))
         d["full_sync_s"] = full
         d["cdc_over_full"] = (median(s["op"]) / full) if s.get("op") and full else None
     else:
@@ -268,11 +271,12 @@ OPENS = [f"--add-opens=java.base/{p}=ALL-UNNAMED" for p in (
     "sun.nio.ch", "sun.nio.cs", "sun.security.action", "sun.util.calendar")]
 
 
-def run_jvm(jar, args, work, log_path, timeout, jvm_flags=()):
+def run_jvm(jar, args, work, log_path, timeout):
     """Runs the harness main; returns its exit code, or None on timeout
     (the JVM is then killed and reaped)."""
-    cmd = ["java", *OPENS, f"-Xmx{HEAP}", f"-Djava.io.tmpdir={work}/tmp",
-           "-Dspark.ui.enabled=false", *jvm_flags, "-cp", build.classpath(jar),
+    # no hsperfdata file: the run writes nothing outside its build directory
+    cmd = ["java", "-XX:-UsePerfData", *OPENS, f"-Xmx{HEAP}", f"-Djava.io.tmpdir={work}/tmp",
+           "-Dspark.ui.enabled=false", "-cp", build.classpath(jar),
            "graftbench.Main", *args]
     env = dict(os.environ, SPARK_GRAFT_CPUS=str(nproc()))
     os.makedirs(f"{work}/tmp", exist_ok=True)
@@ -289,58 +293,33 @@ def run_jvm(jar, args, work, log_path, timeout, jvm_flags=()):
                 p.wait()
 
 
-def class_archive(jar):
-    """JVM start-up flags that map a class-data archive of the harness's
-    classes, made once per build by a short tiny-scale run; it cuts JVM
-    and Spark start-up by seconds per run. Empty when it cannot be made."""
-    archive = jar + ".jsa"
-    stamp = build.read(jar + ".stamp")
-    if not (os.path.exists(archive) and os.path.exists(archive + ".stamp")
-            and build.read(archive + ".stamp") == stamp):
-        work = os.path.join(build.build_dir(), "cds-train")
-        shutil.rmtree(work, ignore_errors=True)
-        gen.write(0, "tiny", os.path.join(work, "data"))
-        if os.path.exists(archive):
-            os.remove(archive)
-        code = run_jvm(jar, ["--workload", "cdc_serve", "--seed", "0", "--seconds", "0",
-                             "--trace", "0", "--data", os.path.join(work, "data"),
-                             "--work", work, "--out", os.path.join(work, "result.json")],
-                       work, os.path.join(work, "jvm.log"), JVM_TIMEOUT_S,
-                       [f"-XX:ArchiveClassesAtExit={archive}"])
-        shutil.rmtree(work, ignore_errors=True)
-        if code != 0 or not os.path.exists(archive):
-            print("[build] no class-data archive; continuing without", file=sys.stderr)
-            return []
-        with open(archive + ".stamp", "w") as fh:
-            fh.write(stamp)
-    return [f"-XX:SharedArchiveFile={archive}", "-Xlog:cds=off", "-Xlog:cds+dynamic=off"]
-
-
 def main(argv=None):
     ap = argparse.ArgumentParser(description="graft sync-pipeline benchmark")
     ap.add_argument("--workload", required=True, choices=WORKLOADS)
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
-    ap.add_argument("--scale", choices=sorted(gen.SCALES), default="bench")
+    ap.add_argument("--data", choices=sorted(inputs.DATA), default="sf0.1",
+                    help="test-data extract the inputs are cut from")
     ap.add_argument("--keep", action="store_true", help="keep the work directory")
     a = ap.parse_args(argv)
+    # a terminated run still stops its JVM (run_jvm's finally)
+    signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))
 
     jar = build.build()
-    jvm_flags = class_archive(jar)
     t_start = time.time()  # a run's time limit starts once the build is done
     work = os.path.join(build.build_dir(), "work",
                         f"{a.workload}-{a.seed}-{a.trace}-{os.getpid()}")
     shutil.rmtree(work, ignore_errors=True)
     data = os.path.join(work, "data")
-    gen.write(a.seed, a.scale, data)
+    tables = inputs.write(a.seed, inputs.DATA[a.data], data)
     out = os.path.join(work, "result.json")
     log = os.path.join(work, "jvm.log")
     try:
         code = run_jvm(jar, ["--workload", a.workload, "--seed", str(a.seed),
                                  "--seconds", str(a.seconds), "--trace", str(a.trace),
                                  "--data", data, "--work", work, "--out", out],
-                       work, log, JVM_TIMEOUT_S - (time.time() - t_start), jvm_flags)
+                       work, log, JVM_TIMEOUT_S - (time.time() - t_start))
         if code != 0 or not os.path.exists(out):
             with open(log) as fh:
                 sys.stderr.write(fh.read()[-8000:])
@@ -354,19 +333,17 @@ def main(argv=None):
             print(f"[check failed] {c['name']}: {c['detail']}", file=sys.stderr)
         attempted = max(1, raw["attempted"])
         info = raw["info"]
-        det = {"workload": a.workload, "seed": a.seed, "scale": a.scale,
-               "data": gen.SCALES[a.scale], "nproc": nproc(),
+        det = {"workload": a.workload, "seed": a.seed, "data": a.data,
+               "inputs": tables, "nproc": nproc(),
                "cores": info.get("cores"), "heap_mb": info.get("heap_mb"),
                "commit": commit(), "rounds": info.get("rounds"),
                "setup_n": len(raw["samples"].get("setup", [])),
                "checks": len(raw["checks"]), "checks_failed": len(failed_checks),
                "check_names": sorted({c["name"].split(".")[0] for c in raw["checks"]}),
                "failed_frac": raw["failed"] / attempted,
-               "warmup_s": median(raw["samples"].get("warmup", [])),
-               "samples": {k: v for k, v in raw["samples"].items()
-                           if k not in ("setup_sync", "warmup")},
+               "samples": raw["samples"],
                **{k: v for k, v in info.items() if k in (
-                   "month", "residue", "target", "setup_total_s", "loop_s", "checks_s",
+                   "month", "residue", "target", "start_s", "setup_total_s", "loop_s", "checks_s",
                    "workload_s", "retained_heap_mb", "peak_rss_mb")}}
         if a.trace:
             metrics = layer_metrics(raw, info["cores"])
@@ -374,7 +351,7 @@ def main(argv=None):
         else:
             det.update(detail(raw, a.workload))
             if a.workload == "cdc_serve":
-                det["star_mb"] = dir_mb(os.path.join(work, "star2"))
+                det["star_mb"] = dir_mb(os.path.join(work, "star"))
             metrics = end_to_end(raw)
             units = dict(END_TO_END)
         missing = [k for k, v in metrics.items() if v is None]

@@ -18,24 +18,31 @@ final class Recorder {
   var attempted = 0L
   var failed = 0L
   var error: Option[String] = None
-  /** While set, timing samples are dropped (warm-up rounds). */
-  var warming = false
 
   def sample(name: String, v: Double): Unit =
-    if (!warming) samples.getOrElseUpdate(name, ArrayBuffer.empty) += v
+    samples.getOrElseUpdate(name, ArrayBuffer.empty) += v
 
-  private val os = java.lang.management.ManagementFactory.getOperatingSystemMXBean
-    .asInstanceOf[com.sun.management.OperatingSystemMXBean]
+  private val threads = java.lang.management.ManagementFactory.getThreadMXBean
+
+  /** CPU nanoseconds per live thread. Thread ids are never reused. */
+  private def threadCpu(): Map[Long, Long] =
+    threads.getAllThreadIds.iterator.map(id => id -> threads.getThreadCpuTime(id))
+      .filter(_._2 >= 0).toMap
 
   /** Runs one user-visible operation and returns (result, wall seconds,
-    * CPU seconds): the CPU time every thread of the JVM (driver, local
-    * executors, JIT, GC) spent while it ran. */
+    * CPU seconds). The CPU seconds are those of the JVM's application
+    * threads (driver, local executors, Spark's own threads) while it ran;
+    * the JIT compiler and GC threads are not among them, so compiling or
+    * collecting what an earlier operation left behind is not counted
+    * against this one. */
   def op[A](f: => A): (A, Double, Double) = {
     attempted += 1
-    val c0 = os.getProcessCpuTime
+    val c0 = threadCpu()
     val t0 = System.nanoTime()
     val r = f
-    (r, (System.nanoTime() - t0) / 1e9, (os.getProcessCpuTime - c0) / 1e9)
+    val wall = (System.nanoTime() - t0) / 1e9
+    val cpu = threadCpu().iterator.map { case (id, t) => t - c0.getOrElse(id, 0L) }.sum
+    (r, wall, cpu / 1e9)
   }
 
   /** Records a correctness check; a failed one counts as a failed op. */
@@ -72,6 +79,9 @@ object Main {
     if (a.trace) spark.sparkContext.addSparkListener(log)
     val rec = new Recorder
     rec.info("cores") = spark.sparkContext.defaultParallelism
+    // JVM launch to a ready session: start-up cost outside every metric
+    rec.info("start_s") = (System.currentTimeMillis() -
+      java.lang.management.ManagementFactory.getRuntimeMXBean.getStartTime) / 1e3
     rec.info("heap_mb") = Runtime.getRuntime.maxMemory / (1 << 20)
     val t0 = System.nanoTime()
     try {
@@ -148,19 +158,13 @@ object Main {
 final class Ctx(val spark: SparkSession, val a: Args, val tr: Tracer, val rec: Recorder) {
   val rng = new scala.util.Random(a.seed)
 
-  /** Closed loop, one client: after `warmup` untimed rounds (JIT and
-    * codegen warm-up; their wall time is the `warmup` sample), runs
-    * `round` back to back until `seconds` have passed and at least
-    * `minRounds` ran. A traced run instead alternates at least four rounds
-    * between the untraced call path (even) and the traced one-by-one path
-    * (odd), and samples each round's wall time as `round_untraced` /
-    * `round_traced` to give the tracing overhead. */
-  def loop(minRounds: Int, warmup: Int)(round: (Int, Boolean) => Unit): Unit = {
-    val w0 = System.nanoTime()
-    rec.warming = true
-    try for (i <- 0 until warmup) round(-1 - i, false)
-    finally rec.warming = false
-    rec.sample("warmup", (System.nanoTime() - w0) / 1e9)
+  /** Closed loop, one client: runs `round` back to back until `seconds`
+    * have passed and at least `minRounds` ran. A traced run instead
+    * alternates at least four rounds between the untraced call path (even)
+    * and the traced one-by-one path (odd), and samples each round's wall
+    * time as `round_untraced` / `round_traced` to give the tracing
+    * overhead. */
+  def loop(minRounds: Int)(round: (Int, Boolean) => Unit): Unit = {
     val t0 = System.nanoTime()
     var i = 0
     val min = if (a.trace) 4 else minRounds
@@ -177,17 +181,15 @@ final class Ctx(val spark: SparkSession, val a: Args, val tr: Tracer, val rec: R
     rec.info("loop_s") = (System.nanoTime() - t0) / 1e9
   }
 
-  /** Set-up, repeated `reps` times; each repetition's wall time is one
-    * `setup` sample. Returns the last repetition's result. */
-  def setup[A](reps: Int)(f: Int => A): A = {
-    var last: Option[A] = None
+  /** Set-up, repeated `reps` times; each repetition is one `setup` (wall
+    * seconds) and one `setup_cpu` (CPU seconds, as [[Recorder.op]]) sample. */
+  def setup(reps: Int)(f: Int => Unit): Unit = {
     for (i <- 0 until reps) {
-      val t0 = System.nanoTime()
-      last = Some(f(i))
-      rec.sample("setup", (System.nanoTime() - t0) / 1e9)
+      val (_, t, c) = rec.op(f(i))
+      rec.sample("setup", t)
+      rec.sample("setup_cpu", c)
     }
     rec.info("setup_total_s") = rec.samples("setup").sum
-    last.get
   }
 
   def dir(name: String): String = s"${a.work}/$name"

@@ -120,8 +120,9 @@ object TracedFullSync {
   }
 }
 
-/** `cdc_serve`: set-up runs the full sync (the bulk write path) into a
-  * fresh day-grain star, three times. Then rounds of one CDC batch
+/** `cdc_serve`: set-up writes a day-grain star and an SCD1 state once,
+  * untimed, then times full re-syncs (`StarSchemaJob.run` into the
+  * standing star, the bulk write path). Then rounds of one CDC batch
   * (targeted fact re-sync + SCD1 state merge) followed by three dashboard
   * reads on the star that batch just updated. */
 final class CdcServe(ctx: Ctx) {
@@ -155,18 +156,14 @@ final class CdcServe(ctx: Ctx) {
   def run(): Unit = {
     val n = stream.size
     var pos = rng.nextInt(n / 4)
-    val first = prefix(pos)
-    val (star, state) = setup(3) { i =>
-      val t0 = System.nanoTime()
-      StarSchemaJob.run(spark, src, dir(s"star$i"))
-      rec.sample("setup_sync", (System.nanoTime() - t0) / 1e9)
-      EventsCdc.scd1MergeBatch(spark, dir(s"state$i"), keys)(first, 0L)
-      (dir(s"star$i"), dir(s"state$i"))
-    }
-    // one month the generated date range covers whole, picked by the seed
+    val star = dir("star")
+    val state = dir("state")
+    StarSchemaJob.run(spark, src, star)
+    EventsCdc.scd1MergeBatch(spark, state, keys)(prefix(pos), 0L)
+    setup(2)(_ => StarSchemaJob.run(spark, src, star))
+    // one month of the star's dates, picked by the seed
     val months = spark.read.parquet(s"$star/dim_date")
-      .groupBy(trunc(col("date_key"), "month").as("m")).count()
-      .filter(col("count") >= 28)
+      .select(trunc(col("date_key"), "month").as("m")).distinct()
       .collect().map(_.getDate(0)).sortBy(_.getTime)
     val month = months(rng.nextInt(months.length))
     rec.info("month") = month.toString
@@ -177,7 +174,7 @@ final class CdcServe(ctx: Ctx) {
     val answers = ArrayBuffer.empty[(String, Seq[Row])]
     var nBatches = 0
 
-    loop(minRounds = 2, warmup = 1) { (_, traced) =>
+    loop(minRounds = 5) { (_, traced) =>
       // one batch: from `pos` up to and including the next 10 purchases
       val ids = ArrayBuffer.empty[Long]
       val buyers = ArrayBuffer.empty[Long]
@@ -294,21 +291,19 @@ final class Curation(ctx: Ctx) {
   def run(): Unit = {
     rec.info("residue") = residue
     rec.info("target") = target
-    val raw = setup(3) { i =>
-      FileFormats.writeRangeSorted(Tables.documents(spark, a.data), dir(s"raw$i"), "doc_id", 8)
-      dir(s"raw$i")
-    }
+    val raw = dir("raw")
+    setup(9)(_ => FileFormats.writeRangeSorted(Tables.documents(spark, a.data), raw, "doc_id", 8))
     val out = dir("stages")
     // The in-memory chain is the checks' reference. Run before the timed
-    // loop it also warms the operators up; one pass through the sink then
-    // warms the rest (without it the first timed pass ran ~10% slower).
+    // loop it is also the warm-up: it runs every operator of a pass, and
+    // the set-up repetitions ran the sink.
     val r0 = System.nanoTime()
     val want = ladder(inMemory(spark.read.parquet(raw))).collect().toSeq
     rec.sample("reference", (System.nanoTime() - r0) / 1e9)
     def storageMb = spark.sparkContext.getRDDStorageInfo.map(r => r.memSize + r.diskSize).sum / 1e6
     val baseMb = storageMb
     val answers = ArrayBuffer.empty[Seq[Row]]
-    loop(minRounds = 2, warmup = 1) { (_, traced) =>
+    loop(minRounds = 1) { (_, traced) =>
       if (traced) tr.span("curation.round") {
         val st = pass(raw, out, traced = true)
         val rows = tr.span("queries.ladder")(ladder(st).collect().toSeq)
@@ -321,9 +316,9 @@ final class Curation(ctx: Ctx) {
       } else {
         val (st, t, c) = rec.op(pass(raw, out, traced = false))
         rec.sample("op", t); rec.sample("op_cpu", c)
-        // three readers of the written ladder: a read takes ~1 s, so one
+        // five readers of the written ladder: a read takes ~1 s, so one
         // sample a pass left its median at the mercy of host noise
-        for (_ <- 0 until 3) {
+        for (_ <- 0 until 5) {
           val (rows, t2, c2) = rec.op(ladder(st).collect().toSeq)
           rec.sample("read", t2); rec.sample("read_cpu", c2)
           answers += rows

@@ -2,8 +2,8 @@
 
     python3 -m unittest discover -s benchmark -p 'test_*.py'
 
-The statistics tests are instant. The smoke tests build the engine and run
-each workload once on the tiny scale (the shape of the sf0.001 test data),
+The statistics and input tests are instant. The smoke tests build the
+engine and run each workload once on inputs cut from the sf0.001 extract,
 about a minute each; set GRAFTBENCH_SKIP_SMOKE=1 to skip them.
 """
 import contextlib
@@ -12,7 +12,7 @@ import json
 import os
 import unittest
 
-import gen
+import inputs
 import run
 
 
@@ -69,11 +69,34 @@ class SelfTime(unittest.TestCase):
 
 
 class Inputs(unittest.TestCase):
-    def test_same_seed_same_tables_other_seed_other_tables(self):
-        a, b, c = gen.tables(7, "tiny"), gen.tables(7, "tiny"), gen.tables(8, "tiny")
+    def test_same_seed_same_tables_other_seed_other_window(self):
+        src = inputs.DATA["sf0.001"]
+        (a, wa), (b, wb), (c, wc) = (inputs.tables(s, src) for s in (7, 7, 8))
+        self.assertEqual(wa, wb)
         for name in a:
             self.assertTrue(a[name].equals(b[name]), name)
-        self.assertFalse(a["orders"].equals(c["orders"]))
+        self.assertNotEqual(wa, wc)
+
+    def test_only_orders_lineitem_and_documents_are_cut(self):
+        src = inputs.DATA["sf0.1"]
+        ts, (first, end) = inputs.tables(3, src)
+        self.assertEqual((end - first).days, inputs.DAYS)
+        days = {d.date() for d in ts["orders"]["o_orderdate"].to_pylist()}
+        self.assertTrue(all(first <= d < end for d in days))
+        self.assertEqual(len(days), inputs.DAYS)
+        keys = set(ts["orders"]["o_orderkey"].to_pylist())
+        self.assertLessEqual(set(ts["lineitem"]["l_orderkey"].to_pylist()), keys)
+        whole = inputs.pq.read_table(f"{src}/lineitem.parquet")
+        self.assertEqual(ts["lineitem"].num_rows, sum(
+            1 for k in whole["l_orderkey"].to_pylist() if k in keys))
+        for name in ("customer", "part", "events"):
+            self.assertTrue(ts[name].equals(inputs.pq.read_table(f"{src}/{name}.parquet")))
+        docs = ts["documents"].to_pylist()
+        self.assertEqual(len(docs), inputs.DOCS)
+        ids = [d["doc_id"] for d in docs]
+        self.assertEqual(ids, sorted(ids))
+        whole = {d["doc_id"]: d for d in inputs.pq.read_table(f"{src}/documents.parquet").to_pylist()}
+        self.assertTrue(all(whole[d["doc_id"]] == d for d in docs))
 
 
 @unittest.skipIf(os.environ.get("GRAFTBENCH_SKIP_SMOKE"), "smoke runs skipped")
@@ -81,7 +104,7 @@ class Smoke(unittest.TestCase):
     def result(self, *args):
         out = io.StringIO()
         with contextlib.redirect_stdout(out):
-            run.main(["--scale", "tiny", "--seconds", "0", *args])
+            run.main(["--data", "sf0.001", "--seconds", "0", *args])
         lines = out.getvalue().strip().splitlines()
         last = json.loads(lines[-1])
         self.assertEqual(set(last), {"correct", "attempted", "failed", "metrics"})
