@@ -338,95 +338,70 @@ class ExtensionsSpec extends SparkSpec {
     spark.sql(
       "EXPLAIN SELECT * FROM graft_label_propagation('ext_lazy_emb', '1', '5', '1')")
       .collect()
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
+    val jobs = jobsDuring {
       spark.sql(
         "EXPLAIN SELECT * FROM graft_label_propagation('ext_lazy_emb', '1', '5', '2')")
         .collect()
-      org.apache.spark.sql.graft.GraftSqlShim.drainListenerBus(spark)
-      assert(jobs.get() === 0,
-        s"EXPLAIN of graft_label_propagation ran ${jobs.get()} Spark jobs " +
-          "— an analysis-reachable operator materialized eagerly")
-      // and the standing-index containment screen (r14 ADVICE: its eager
-      // probe checkpoints ran jobs at analysis time; now lazy bounded
-      // persists). File-source jobs from parquet schema inference are
-      // excluded by pre-building the index and warming the read below.
-      val contIdx = graft.sources.Scratch.dir("graft_ext_cs_lazy")
-      Seq((10L, "alpha beta gamma delta")).toDF("doc_id", "text")
-        .createOrReplaceTempView("ext_lazy_arr")
-      graft.ops.Dedup.writeContainmentIndex(
-        Seq((1L, "alpha beta gamma delta epsilon")).toDF("doc_id", "text"),
-        contIdx)
+    }
+    assert(jobs === 0,
+      s"EXPLAIN of graft_label_propagation ran $jobs Spark jobs " +
+        "— an analysis-reachable operator materialized eagerly")
+    // and the standing-index containment screen, whose probe frames are
+    // lazy bounded persists, not checkpoints run at analysis time.
+    // File-source jobs from parquet schema inference are excluded by
+    // pre-building the index and warming the read below.
+    val contIdx = graft.sources.Scratch.dir("graft_ext_cs_lazy")
+    Seq((10L, "alpha beta gamma delta")).toDF("doc_id", "text")
+      .createOrReplaceTempView("ext_lazy_arr")
+    graft.ops.Dedup.writeContainmentIndex(
+      Seq((1L, "alpha beta gamma delta epsilon")).toDF("doc_id", "text"),
+      contIdx)
+    spark.sql(s"EXPLAIN SELECT * FROM graft_containment_screen(" +
+        s"'ext_lazy_arr', '$contIdx', '3', '0.8')").collect()
+    // a parquet-backed plan pays fixed source-side jobs (schema
+    // inference / file listing) merely to CONSTRUCT the read — measure
+    // that floor on the raw index reads, then require the screen's
+    // EXPLAIN to add NOTHING on top of it (the probe itself runs no
+    // jobs at analysis)
+    val readFloor = jobsDuring {
+      Seq("shingles", "sizes", "df").foreach { t =>
+        spark.read.parquet(s"$contIdx/$t").queryExecution.explainString(
+          org.apache.spark.sql.execution.ExplainMode.fromString("simple"))
+      }
+    }
+    val screenJobs = jobsDuring {
       spark.sql(s"EXPLAIN SELECT * FROM graft_containment_screen(" +
-          s"'ext_lazy_arr', '$contIdx', '3', '0.8')").collect()
-      def jobsDuring(body: => Unit): Int = {
-        val n = new java.util.concurrent.atomic.AtomicInteger(0)
-        val lis = new org.apache.spark.scheduler.SparkListener {
-          override def onJobStart(
-              js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-            n.incrementAndGet(); ()
-          }
-        }
-        spark.sparkContext.addSparkListener(lis)
-        try {
-          body
-          org.apache.spark.sql.graft.GraftSqlShim.drainListenerBus(spark)
-        } finally spark.sparkContext.removeSparkListener(lis)
-        n.get()
+          s"'ext_lazy_arr', '$contIdx', '3', '0.9')").collect()
+    }
+    assert(screenJobs <= readFloor,
+      s"EXPLAIN of graft_containment_screen ran $screenJobs Spark jobs vs " +
+        s"a $readFloor-job source floor — probe frames materialized at analysis time")
+    // same pin for the standing fingerprint-index span screen, whose
+    // probe frames are lazy bounded persists like the containment screen's
+    val spanIdx = graft.sources.Scratch.dir("graft_ext_ss_lazy")
+    val spanCorpus = graft.sources.Scratch.dir("graft_ext_ss_corpus")
+    val standingDocs = Seq(
+      (1L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"))
+      .toDF("doc_id", "text")
+    graft.ops.Dedup.writeFingerprintIndex(standingDocs, spanIdx)
+    standingDocs.write.mode("overwrite").parquet(spanCorpus)
+    Seq((10L, "alpha beta gamma delta epsilon zeta eta theta iota mu"))
+      .toDF("doc_id", "text").createOrReplaceTempView("ext_lazy_span_arr")
+    spark.sql(s"EXPLAIN SELECT * FROM graft_span_screen_indexed(" +
+        s"'ext_lazy_span_arr', '$spanIdx', '$spanCorpus', '8')").collect()
+    val spanFloor = jobsDuring {
+      Seq(spanIdx, spanCorpus).foreach { t =>
+        spark.read.parquet(t).queryExecution.explainString(
+          org.apache.spark.sql.execution.ExplainMode.fromString("simple"))
       }
-      // a parquet-backed plan pays fixed source-side jobs (schema
-      // inference / file listing) merely to CONSTRUCT the read — measure
-      // that floor on the raw index reads, then require the screen's
-      // EXPLAIN to add NOTHING on top of it (the probe itself runs no
-      // jobs at analysis; pre-fix it ran the full probe pipeline here)
-      val readFloor = jobsDuring {
-        Seq("shingles", "sizes", "df").foreach { t =>
-          spark.read.parquet(s"$contIdx/$t").queryExecution.explainString(
-            org.apache.spark.sql.execution.ExplainMode.fromString("simple"))
-        }
-      }
-      val screenJobs = jobsDuring {
-        spark.sql(s"EXPLAIN SELECT * FROM graft_containment_screen(" +
-            s"'ext_lazy_arr', '$contIdx', '3', '0.9')").collect()
-      }
-      assert(screenJobs <= readFloor,
-        s"EXPLAIN of graft_containment_screen ran $screenJobs Spark jobs vs " +
-          s"a $readFloor-job source floor — probe frames materialized at analysis time")
-      // same pin for the standing fingerprint-index span screen (r15
-      // verdict: its probe frames were still eager localCheckpoints;
-      // now lazy bounded persists like the containment screen's)
-      val spanIdx = graft.sources.Scratch.dir("graft_ext_ss_lazy")
-      val spanCorpus = graft.sources.Scratch.dir("graft_ext_ss_corpus")
-      val standingDocs = Seq(
-        (1L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"))
-        .toDF("doc_id", "text")
-      graft.ops.Dedup.writeFingerprintIndex(standingDocs, spanIdx)
-      standingDocs.write.mode("overwrite").parquet(spanCorpus)
-      Seq((10L, "alpha beta gamma delta epsilon zeta eta theta iota mu"))
-        .toDF("doc_id", "text").createOrReplaceTempView("ext_lazy_span_arr")
+    }
+    val spanJobs = jobsDuring {
       spark.sql(s"EXPLAIN SELECT * FROM graft_span_screen_indexed(" +
-          s"'ext_lazy_span_arr', '$spanIdx', '$spanCorpus', '8')").collect()
-      val spanFloor = jobsDuring {
-        Seq(spanIdx, spanCorpus).foreach { t =>
-          spark.read.parquet(t).queryExecution.explainString(
-            org.apache.spark.sql.execution.ExplainMode.fromString("simple"))
-        }
-      }
-      val spanJobs = jobsDuring {
-        spark.sql(s"EXPLAIN SELECT * FROM graft_span_screen_indexed(" +
-            s"'ext_lazy_span_arr', '$spanIdx', '$spanCorpus', '9')").collect()
-      }
-      assert(spanJobs <= spanFloor,
-        s"EXPLAIN of graft_span_screen_indexed ran $spanJobs Spark jobs vs " +
-          s"a $spanFloor-job source floor — probe frames materialized at analysis time")
-    } finally spark.sparkContext.removeSparkListener(l)
+          s"'ext_lazy_span_arr', '$spanIdx', '$spanCorpus', '9')").collect()
+    }
+    assert(spanJobs <= spanFloor,
+      s"EXPLAIN of graft_span_screen_indexed ran $spanJobs Spark jobs vs " +
+        s"a $spanFloor-job source floor — probe frames materialized at analysis time")
     // and the operator still computes correctly after the lazy change
     val out = Similarity.labelPropagate(
       Seq((0L, Array(1.0f, 0.0f), "a"), (1L, Array(0.9f, 0.1f), "b"))
