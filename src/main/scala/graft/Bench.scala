@@ -15,19 +15,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Bench {
 
-  private def jstr(s: String): String = {
-    val sb = new StringBuilder("\"")
-    s.foreach {
-      case '\\'           => sb.append("\\\\")
-      case '"'            => sb.append("\\\"")
-      case c if c < 0x20  => sb.append(f"\\u${c.toInt}%04x")
-      case c              => sb.append(c)
-    }
-    sb.append('"').toString
-  }
-
   private def jmap(m: Seq[(String, String)]): String =
-    m.map { case (k, v) => jstr(k) + ":" + v }.mkString("{", ",", "}")
+    m.map { case (k, v) => JsonEscape.str(k) + ":" + v }.mkString("{", ",", "}")
 
   /** Bench-only extras (not in the correctness registry): the production
     * xxhash64 winnowing fingerprint next to the registry's portable-md5
@@ -641,7 +630,7 @@ object Bench {
     val coldTotal = if (errors.nonEmpty) -1.0 else cold.values.sum
     val qs = jmap(warm.toSeq.map { case (k, v) => k -> v.toString })
     val cs = jmap(cold.toSeq.map { case (k, v) => k -> v.toString })
-    val es = jmap(errors.toSeq.map { case (k, v) => k -> jstr(v) })
+    val es = jmap(errors.toSeq.map { case (k, v) => k -> JsonEscape.str(v) })
     // the HEAD commit ties a recorded bench line to the exact sources it
     // measured (best-effort: absent outside a git checkout)
     val commit = try {
@@ -655,7 +644,7 @@ object Bench {
     // recorder that keeps only the tail of stdout (the driver truncates to
     // 2000 chars) still retains every headline number — r10's recorded
     // bench lost its warm map AND total to exactly that truncation
-    val line = s"""{"queries":$qs,"cold":$cs,"errors":$es,"metric":"total","value":$total,"unit":"sec","partial":${errors.nonEmpty},"n_errors":${errors.size},"warm_total":$total,"cold_total":$coldTotal,"cold_is_plan_warm":true,"n_entries":${entries.size},"gauge":{"q1":$gauge,"baseline":$gaugeBaseline},"commit":${jstr(commit)},"sf":${jstr(sfDir)}}"""
+    val line = s"""{"queries":$qs,"cold":$cs,"errors":$es,"metric":"total","value":$total,"unit":"sec","partial":${errors.nonEmpty},"n_errors":${errors.size},"warm_total":$total,"cold_total":$coldTotal,"cold_is_plan_warm":true,"n_entries":${entries.size},"gauge":{"q1":$gauge,"baseline":$gaugeBaseline},"commit":${JsonEscape.str(commit)},"sf":${JsonEscape.str(sfDir)}}"""
     println(line)
     // stdout capture can truncate to a tail (r4 lost the whole warm map that
     // way) — also persist the full line next to the sources. A filtered

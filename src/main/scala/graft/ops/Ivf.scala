@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.VectorFunctions._
+import graft.sources.FileFormats
 
 /** IVF (inverted-file) approximate nearest neighbor — the second scale path
   * next to [[Similarity.knnLsh]]: partition the vector space with k-means,
@@ -253,9 +254,9 @@ object Ivf {
         if (accreted) {
           val name = d.getPath.getName
           val tmp = new Path(stage, name)
-          val expected = spark.read.parquet(d.getPath.toString).count()
-          graft.sources.FileFormats.compact(spark, d.getPath.toString, tmp.toString)
-          val rewritten = spark.read.parquet(tmp.toString).count()
+          val expected = FileFormats.footerRowCount(spark, d.getPath.toString).getOrElse(0L)
+          FileFormats.compact(spark, d.getPath.toString, tmp.toString)
+          val rewritten = FileFormats.footerRowCount(spark, tmp.toString).getOrElse(0L)
           if (rewritten != expected) {
             fs.delete(tmp, true)
             throw new IllegalStateException(

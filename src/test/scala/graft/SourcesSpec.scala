@@ -449,6 +449,24 @@ class SourcesSpec extends SparkSpec {
     assert(!new java.io.File(tmp).exists(), "refused rewrite must be cleaned up")
   }
 
+  test("compactAndSwap refuses a partitioned directory before writing anything") {
+    val dir = graft.sources.Scratch.dir("graft_swap_partitioned") + "/fact"
+    val lines = Tables.lineitem(spark, sf)
+      .select($"l_orderkey", $"l_linenumber", $"l_shipdate".cast("date").as("date_key"))
+    val dates = lines.select($"date_key").distinct().orderBy($"date_key")
+      .limit(3).as[java.sql.Date].collect()
+    FileFormats.writeFact(lines.filter($"date_key" <= dates.last), dir)
+    def partitions = new java.io.File(dir).list().filter(_.startsWith("date_key=")).sorted.toSeq
+    val before = partitions
+    val rows = FileFormats.footerRowCount(spark, dir)
+    assert(before.size === 3)
+    val ex = intercept[IllegalArgumentException](FileFormats.compactAndSwap(spark, dir))
+    assert(ex.getMessage.contains("partition directory"))
+    assert(partitions === before)
+    assert(FileFormats.footerRowCount(spark, dir) === rows)
+    assert(!new java.io.File(dir + ".compact_tmp").exists(), "nothing written")
+  }
+
   test("StarSchemaJob writes a readable star: typed partitions, pruned scans") {
     val out = graft.sources.Scratch.dir("graft_star_spec")
     val star = graft.olap.StarSchemaJob.run(spark, sf, out)

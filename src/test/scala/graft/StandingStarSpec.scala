@@ -11,8 +11,9 @@ import graft.sources.{FileFormats, Scratch, Tables}
 /** Metadata reads of a standing star — `StarSchemaJob.status` from parquet
   * footers and the schema gate's `FileFormats.standingSchema` from one
   * partition leaf — must answer exactly what a full Spark read answers,
-  * without its jobs; and the partition-grain re-sync must keep the layout
-  * the standing fact was written in. */
+  * without its jobs; an in-process session must open a many-partition
+  * table without a listing job; and the partition-grain re-sync must keep
+  * the layout the standing fact was written in. */
 class StandingStarSpec extends SparkSpec {
   import spark.implicits._
 
@@ -96,8 +97,9 @@ class StandingStarSpec extends SparkSpec {
     agrees(s"$base/nulls")
 
     // 60 partitions, above the 32-path threshold of Spark's distributed
-    // partition listing: a whole read lists them in a job; the leaf read
-    // runs only the one-task schema job
+    // partition listing; an in-process session lists them on the driver,
+    // so a whole read runs only the one-task schema job, as the leaf read
+    // does
     val cut = lines.select($"date_key").distinct().orderBy($"date_key")
       .limit(60).collect().last.get(0)
     FileFormats.writeFact(lines.filter($"date_key" <= cut), s"$base/sixty")
@@ -109,6 +111,34 @@ class StandingStarSpec extends SparkSpec {
     assert(FileFormats.standingSchema(spark, s"$base/missing") === None)
     assert(new java.io.File(s"$base/empty").mkdirs())
     assert(FileFormats.standingSchema(spark, s"$base/empty") === None)
+  }
+
+  test("an in-process session opens a many-partition table without a listing job, listing afresh on every read") {
+    assert(Seq("local", "local[4]", "local[*]", "local[4,2]", "local[*, 3]")
+      .forall(GraftSession.inProcess))
+    assert(!Seq("local-cluster[2,1,1024]", "yarn", "spark://host:7077")
+      .exists(GraftSession.inProcess))
+    assert(spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold") ===
+      Int.MaxValue.toString, "the suite's local[4] session lists on the driver")
+
+    val dir = Scratch.dir("graft_driver_listing") + "/fact"
+    val dates = lines.select($"date_key").distinct().orderBy($"date_key")
+      .limit(61).as[java.sql.Date].collect()
+    FileFormats.writeFact(lines.filter($"date_key" < dates.last), dir)
+    assert(partitionDirs(dir).size === 60)
+    val jobs = jobsDuring(spark.read.parquet(dir).schema)
+    assert(jobs === 1, s"a whole read of 60 partitions ran $jobs Spark jobs, not the one schema job")
+
+    // a 61st date lands after a read: the next read lists it, so nothing
+    // of the earlier listing is kept across reads
+    val before = spark.read.parquet(dir).count()
+    val added = lines.filter($"date_key" === dates.last)
+    FileFormats.writeFactUnchecked(added, dir, "date_key",
+      Seq("l_orderkey", "l_linenumber"), "day", dynamic = true)
+    assert(partitionDirs(dir).size === 61)
+    val after = spark.read.parquet(dir).count()
+    assert(after === before + added.count())
+    assert(FileFormats.footerRowCount(spark, dir) === Some(after))
   }
 
   test("the schema gate of a mixed-schema fact anchors on its latest-named leaf") {
