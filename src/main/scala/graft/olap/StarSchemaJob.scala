@@ -2,7 +2,6 @@ package graft.olap
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 import graft.sources.{FileFormats, Tables}
 
 /** Full-sync orchestration — the Spark form of the reference's
@@ -126,10 +125,10 @@ object StarSchemaJob {
     * overwrite — untouched partitions keep their files; a full-table
     * overwrite at 100 TB for a handful of changed orders would be absurd).
     *
-    * The partition grain is the standing fact's own: a fact
-    * [[FileFormats.writeFact]] wrote at `"month"` granularity carries the
-    * sink-derived `month_key` column, and then whole changed months are
-    * rebuilt and replaced; otherwise whole changed dates.
+    * The partition grain is the standing fact's own
+    * ([[FileFormats.factGranularity]]): for a fact [[FileFormats.writeFact]]
+    * wrote at `"month"` granularity whole changed months are rebuilt and
+    * replaced; otherwise whole changed dates.
     *
     * The changed-key set is tiny → broadcast semijoin prunes the rebuild to
     * matching orders before the fact joins run.
@@ -140,8 +139,7 @@ object StarSchemaJob {
                       changedCustKeys: DataFrame): Long = {
     val factDir = s"$outDir/fact_sales"
     val standing = FileFormats.standingSchema(spark, factDir)
-    val granularity =
-      if (standing.exists(_.fieldNames.contains("month_key"))) "month" else "day"
+    val granularity = FileFormats.factGranularity(standing)
     def grain(c: Column): Column =
       if (granularity == "month") trunc(to_date(c), "month") else to_date(c)
     val orders = Tables.orders(spark, srcDir)
@@ -163,17 +161,13 @@ object StarSchemaJob {
     // fork the directory's schema — refuse it before any partition is
     // replaced (a widened slice is fine: old partitions read the new
     // column as NULL through FileFormats.readEvolved)
-    standing.foreach { s0 =>
-      graft.sources.SchemaEvolution.requireEvolvable(
-        StructType(s0.fields.filterNot(_.name == "month_key")),
-        slice.schema, s"syncIncremental($factDir)")
-    }
+    FileFormats.requireFactEvolvable(standing, slice.schema,
+      s"syncIncremental($factDir)")
     // row count comes from an observe() metric on the write itself — a
     // separate count() action would run the whole semijoin+star-join twice
     val obs = org.apache.spark.sql.Observation("incremental_sync")
     FileFormats.writeFactUnchecked(
-      slice.observe(obs, count(lit(1)).as("n_rows")), factDir,
-      "date_key", Seq("l_orderkey", "l_linenumber"), granularity,
+      slice.observe(obs, count(lit(1)).as("n_rows")), factDir, granularity,
       dynamic = true)
     obs.get("n_rows").asInstanceOf[Long]
   }

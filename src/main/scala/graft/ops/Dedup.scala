@@ -752,24 +752,18 @@ object Dedup {
     verifyJaccardHashed(candidates, ex, threshold)
   }
 
-  /** Exact-Jaccard verification of candidate (d1, d2) pairs by
-    * inclusion-exclusion over EXPLODED shingle rows:
-    * |A∩B| counted with two equi-joins on (doc, shingle-hash), then
-    * J = |A∩B| / (|A| + |B| - |A∩B|). No per-doc arrays are ever
-    * materialized or shipped — the array formulation duplicates a hub
-    * document's whole shingle set onto every pair it appears in, which is
-    * exactly the row a dedup job meets most (one canonical doc × thousands
-    * of near-copies). Zero-intersection candidates drop out of the count
-    * join, which is semantically free: they cannot clear any positive
-    * threshold. */
-  private def verifyJaccard(candidates: DataFrame, sr: DataFrame,
-                            threshold: Double): DataFrame =
-    verifyJaccardHashed(candidates,
-      sr.select(col("doc_id"), xxhash64(col("g")).as("h")), threshold)
-
-  /** [[verifyJaccard]] over the already-hashed (doc_id, h) shingle table —
-    * callers that materialize that frame once (ngramJaccard's pinned
-    * checkpoint) pass it directly so verification reads the same blocks. */
+  /** Exact-Jaccard verification of candidate (d1, d2) pairs over the
+    * hashed (doc_id, h) shingle table, by inclusion-exclusion over its
+    * EXPLODED rows: |A∩B| counted with two equi-joins on (doc,
+    * shingle-hash), then J = |A∩B| / (|A| + |B| - |A∩B|). No per-doc
+    * arrays are ever materialized or shipped — the array formulation
+    * duplicates a hub document's whole shingle set onto every pair it
+    * appears in, which is exactly the row a dedup job meets most (one
+    * canonical doc × thousands of near-copies). Zero-intersection
+    * candidates drop out of the count join, which is semantically free:
+    * they cannot clear any positive threshold. Callers that materialize
+    * the hashed frame once (ngramJaccard's pinned checkpoint) pass it
+    * directly so verification reads the same blocks. */
   private def verifyJaccardHashed(candidates: DataFrame, ex: DataFrame,
                                   threshold: Double): DataFrame = {
     val sz = ex.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))

@@ -212,12 +212,12 @@ object FileFormats {
   def readEvolved(spark: SparkSession, dir: String): DataFrame =
     spark.read.option("mergeSchema", "true").parquet(dir)
 
-  /** Fact-table sink: partitioned by the date key (so every downstream
+  /** Fact-table sink: partitioned by `date_key` (so every downstream
     * date-range query prunes partitions at the source) and sorted within
-    * partitions on (partition col, join keys). The partition column leads
-    * the sort deliberately: the V1 dynamic-partition writer requires rows
-    * sorted by partition columns and would otherwise INSERT ITS OWN sort,
-    * discarding the join-key order — leading with it satisfies the writer
+    * partitions on (`date_key`, `l_orderkey`, `l_linenumber`). The date
+    * leads the sort deliberately: the V1 dynamic-partition writer requires
+    * rows sorted by partition columns and would otherwise INSERT ITS OWN
+    * sort, discarding the join-key order — leading with it satisfies the writer
     * and keeps rowgroups orderkey-ordered (run-length-friendly encoding,
     * parquet min/max skipping on the sort prefix). The repartition on the
     * partition column sends every partition value to exactly ONE task, so
@@ -237,36 +237,46 @@ object FileFormats {
     * so day-level predicates still skip row groups via parquet min/max on
     * the leading sort column even though directory pruning is month-grain. */
   def writeFact(fact: DataFrame, outDir: String,
-                partitionCol: String = "date_key",
-                sortCols: Seq[String] = Seq("l_orderkey", "l_linenumber"),
                 granularity: String = "day"): Unit = {
     // schema-evolution gate BEFORE the overwrite touches anything: a
     // widened fact is fine (full rewrite carries the new column), a
     // narrowed or retyped one refuses loudly while the standing data is
-    // still intact. month_key is sink-derived (never part of the caller's
-    // frame), so it is excluded from the standing anchor.
-    standingSchema(fact.sparkSession, outDir).foreach { s0 =>
-      SchemaEvolution.requireEvolvable(
-        StructType(s0.fields.filterNot(_.name == "month_key")),
-        fact.schema, s"writeFact($outDir)")
-    }
-    writeFactUnchecked(fact, outDir, partitionCol, sortCols, granularity,
-      dynamic = false)
+    // still intact
+    requireFactEvolvable(standingSchema(fact.sparkSession, outDir),
+      fact.schema, s"writeFact($outDir)")
+    writeFactUnchecked(fact, outDir, granularity, dynamic = false)
   }
+
+  // the fact's layout: date partitions sorted on (date, natural key); a
+  // month-grain fact's directory column is sink-derived, never the caller's
+  private val FactDateCol = "date_key"
+  private val FactSortCols = Seq("l_orderkey", "l_linenumber")
+  private val MonthKey = "month_key"
+
+  /** The grain a standing fact was written at: `"month"` when it carries
+    * the month directory column, else (or with no standing fact) `"day"`. */
+  private[graft] def factGranularity(standing: Option[StructType]): String =
+    if (standing.exists(_.fieldNames.contains(MonthKey))) "month" else "day"
+
+  /** The fact sinks' schema gate against the standing fact, if any, whose
+    * sink-derived month directory column is left out of the anchor. */
+  private[graft] def requireFactEvolvable(standing: Option[StructType],
+                                          fact: StructType, where: String): Unit =
+    standing.foreach { s0 =>
+      SchemaEvolution.requireEvolvable(
+        StructType(s0.fields.filterNot(_.name == MonthKey)), fact, where)
+    }
 
   /** [[writeFact]]'s layout without its gate. `dynamic` replaces only the
     * partition directories `fact` has rows for and keeps the rest (the
     * partition-grain re-sync); otherwise the whole directory is replaced. */
   private[graft] def writeFactUnchecked(fact: DataFrame, outDir: String,
-                                        partitionCol: String,
-                                        sortCols: Seq[String],
                                         granularity: String,
                                         dynamic: Boolean): Unit = {
     val (keyed, dirCol) = granularity match {
-      case "day" => (fact, partitionCol)
+      case "day" => (fact, FactDateCol)
       case "month" =>
-        (fact.withColumn("month_key", trunc(col(partitionCol), "month")),
-          "month_key")
+        (fact.withColumn(MonthKey, trunc(col(FactDateCol), "month")), MonthKey)
       case other =>
         throw new IllegalArgumentException(
           s"writeFact granularity must be 'day' or 'month', got '$other'")
@@ -274,35 +284,28 @@ object FileFormats {
     keyed
       .repartition(col(dirCol))
       .sortWithinPartitions(
-        (Seq(dirCol, partitionCol).distinct ++ sortCols).map(col): _*)
+        (Seq(dirCol, FactDateCol).distinct ++ FactSortCols).map(col): _*)
       .write.mode("overwrite")
       .option("partitionOverwriteMode", if (dynamic) "dynamic" else "static")
       .partitionBy(dirCol)
       .parquet(outDir)
   }
 
-  /** Dimension sink, size-tiered. Small dims (the default) coalesce to one
-    * file — they broadcast at read time and a single footer beats a
-    * thousand tiny files. `large = true` is for dims that mirror an OLTP
-    * giant (a 100 TB deployment's customer dim is billions of rows): the
-    * write keeps its parallelism and caps rows per file, because a
-    * single-task single-file write is as wrong there as a broadcast join
-    * would be. Tiering is declared by the caller — a row-count probe at
-    * write time would cost an extra job, and the caller knows which dims
-    * mirror giants. For the join side of large dims, see [[writeBucketed]]:
-    * bucket fact and dim on the join key and the recurring fact⋈dim join
-    * runs as a zero-Exchange sort-merge join. */
-  def writeDim(dim: DataFrame, outDir: String, large: Boolean = false,
-               maxRecordsPerFile: Long = 4L * 1000 * 1000): Unit = {
+  /** Dimension sink: one file. A dimension broadcasts at read time, and a
+    * single footer beats a thousand tiny files. A dimension too large for
+    * that posture (one that mirrors an OLTP giant: a 100 TB deployment's
+    * customer dim is billions of rows) does not come through here:
+    * [[graft.olap.StarSchemaJob.run]]'s `largeDims` sends it through
+    * [[writeBucketed]] on its join key, multi-file and co-located with any
+    * fact bucketed the same way, so the recurring fact⋈dim join runs as a
+    * zero-Exchange sort-merge join. */
+  def writeDim(dim: DataFrame, outDir: String): Unit = {
     // same evolution gate as writeFact: widened dim rewrites fine,
     // narrowed/retyped refuses before the standing copy is destroyed
     standingSchema(dim.sparkSession, outDir).foreach { s0 =>
       SchemaEvolution.requireEvolvable(s0, dim.schema, s"writeDim($outDir)")
     }
-    (if (large) dim else dim.coalesce(1))
-      .write.mode("overwrite")
-      .option("maxRecordsPerFile", maxRecordsPerFile.toString)
-      .parquet(outDir)
+    dim.coalesce(1).write.mode("overwrite").parquet(outDir)
   }
 
   /** Range-sorted sink: `repartitionByRange` + in-partition sort on `key`

@@ -90,21 +90,45 @@ object EventsCdc {
       .map(_.getPath.getName.stripPrefix("v=").toLong)
   }
 
+  /** The one retention rule of every versioned (`v=N`) state sink: once
+    * batch N has written `v=N`, keep it and the newest version before it
+    * (in `prior`, the sink's own listing below N) and delete every older
+    * one. A replay of batch N (the engine re-delivers only the last batch)
+    * merges into that prior version; were it gone, the replay would
+    * rebuild state from the batch alone and silently drop every key the
+    * batch does not touch. Nothing reads an older version. `drop` releases
+    * a version's catalog table (bucketed sink) before its directory goes. */
+  private def sweepVersions(spark: SparkSession, dir: String, prior: Seq[Long],
+                            drop: Long => Unit = _ => ()): Unit =
+    prior.sorted.dropRight(1).foreach { v =>
+      drop(v)
+      val p = new org.apache.hadoop.fs.Path(s"$dir/v=$v")
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+    }
+
+  /** [[scd1MergeBatch]] and [[scd2MergeBatch]]'s one body: `v=N` is
+    * `merge` of the newest version below N (None at first), then swept. */
+  private def mergeVersioned(spark: SparkSession, stateDir: String, batchId: Long)
+                            (merge: Option[DataFrame] => DataFrame): Unit = {
+    val prior = stateVersions(spark, stateDir).filter(_ < batchId)
+    val state =
+      if (prior.isEmpty) None
+      else Some(spark.read.parquet(s"$stateDir/v=${prior.max}"))
+    merge(state).write.mode("overwrite").parquet(s"$stateDir/v=$batchId")
+    sweepVersions(spark, stateDir, prior)
+  }
+
   /** foreachBatch SCD1 merge into a versioned parquet state directory:
     * batch N writes `v=N` from `v=N-1 ∪ batch` (last-write-wins per key).
     * Versioned writes keep the merge idempotent under micro-batch replay —
-    * re-running batch N simply overwrites `v=N` with identical content.
+    * re-running batch N simply overwrites `v=N` with identical content;
+    * [[sweepVersions]] keeps just `v=N` and its input, so a worker that
+    * never stops holds two copies of the state, not one per micro-batch.
     * (A transactional table format would replace the versioning in a real
     * deployment; the merge semantics are the deliverable here.) */
   def scd1MergeBatch(spark: SparkSession, stateDir: String, keys: Seq[String])
-                    (batch: DataFrame, batchId: Long): Unit = {
-    val versions = stateVersions(spark, stateDir).filter(_ < batchId)
-    val state =
-      if (versions.isEmpty) None
-      else Some(spark.read.parquet(s"$stateDir/v=${versions.max}"))
-    mergeStep(state, batch, keys)
-      .write.mode("overwrite").parquet(s"$stateDir/v=$batchId")
-  }
+                    (batch: DataFrame, batchId: Long): Unit =
+    mergeVersioned(spark, stateDir, batchId)(mergeStep(_, batch, keys))
 
   /** Launch the CDC pipeline: change stream → SCD1 state maintenance. */
   def runScd1(spark: SparkSession, events: DataFrame, stateDir: String,
@@ -160,12 +184,11 @@ object EventsCdc {
     * `${table}_v$N` through the bucketed sink, so every merge's expensive
     * side is exchange-free and the bucket layout is paid once per version
     * write, never re-derived at read time. Overwrite keeps replays
-    * idempotent exactly as [[scd1MergeBatch]]; `retain` bounds growth —
-    * re-running batch N needs only v=N-1, so older versions' tables are
-    * dropped and their directories deleted (Hadoop FS, so HDFS/S3A work). */
+    * idempotent exactly as [[scd1MergeBatch]], with the same retention
+    * ([[sweepVersions]]; swept versions' tables are dropped too). */
   def scd1MergeBatchBucketed(spark: SparkSession, stateTable: String,
                              statePath: String, keys: Seq[String],
-                             buckets: Int, retain: Int = 2)
+                             buckets: Int)
                             (batch: DataFrame, batchId: Long): Unit = {
     val versions = stateVersions(spark, statePath).filter(_ < batchId)
     val merged =
@@ -186,11 +209,8 @@ object EventsCdc {
       .bucketBy(buckets, keys.head, keys.tail: _*)
       .sortBy(keys.head, keys.tail: _*)
       .saveAsTable(s"${stateTable}_v$batchId")
-    versions.sorted.dropRight(math.max(retain - 1, 0)).foreach { v =>
-      spark.sql(s"DROP TABLE IF EXISTS ${stateTable}_v$v")
-      val p = new org.apache.hadoop.fs.Path(s"$statePath/v=$v")
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-    }
+    sweepVersions(spark, statePath, versions,
+      v => spark.sql(s"DROP TABLE IF EXISTS ${stateTable}_v$v"))
   }
 
   /** [[runWorker]] with the bucketed state sink: the full worker loop whose
@@ -415,25 +435,6 @@ object EventsCdc {
       }
       .start()
 
-  /** One SCD2 merge step — the streaming application of
-    * [[graft.olap.StarSchema.scd2History]]'s contract: the state's CLOSED
-    * interval rows pass through UNTOUCHED (history is immutable — at scale
-    * this slice is an append-only table that never rewrites); each key's
-    * OPEN row is closed at its first batch change (`valid_to_us` = the
-    * change's timestamp, `is_current` = false); the batch's own changes
-    * become the key's next versions (ordinals continue from the open
-    * row's), the last one per key open/current. A DELETE is a change row
-    * like any other — the tombstone version becomes current, ending the
-    * interval; point-in-time lookups before the delete still resolve and
-    * the live view excludes the key (no resurrection).
-    *
-    * Work per batch is batch-sized plus the touched keys' open rows —
-    * never closed history. Assumes IN-ORDER batches (every change in
-    * batch N is `(tsUs, tie)`-after the state's open row for its key —
-    * the CDC worker contract; [[dedupStream]] upstream absorbs
-    * redelivery). With in-order batches the result is IDENTICAL to
-    * running scd2History over the concatenated change log (spec-pinned).
-    */
   /** The four columns [[graft.olap.StarSchema.scd2History]] adds to the
     * change rows — excluded from the evolution gate's standing anchor
     * (the arriving batch is raw changes and never carries them). */
@@ -453,6 +454,25 @@ object EventsCdc {
     graft.sources.SchemaEvolution.widen(state, batch.schema)
   }
 
+  /** One SCD2 merge step — the streaming application of
+    * [[graft.olap.StarSchema.scd2History]]'s contract: the state's CLOSED
+    * interval rows pass through UNTOUCHED (history is immutable — at scale
+    * this slice is an append-only table that never rewrites); each key's
+    * OPEN row is closed at its first batch change (`valid_to_us` = the
+    * change's timestamp, `is_current` = false); the batch's own changes
+    * become the key's next versions (ordinals continue from the open
+    * row's), the last one per key open/current. A DELETE is a change row
+    * like any other — the tombstone version becomes current, ending the
+    * interval; point-in-time lookups before the delete still resolve and
+    * the live view excludes the key (no resurrection).
+    *
+    * Work per batch is batch-sized plus the touched keys' open rows —
+    * never closed history. Assumes IN-ORDER batches (every change in
+    * batch N is `(tsUs, tie)`-after the state's open row for its key —
+    * the CDC worker contract; [[dedupStream]] upstream absorbs
+    * redelivery). With in-order batches the result is IDENTICAL to
+    * running scd2History over the concatenated change log (spec-pinned).
+    */
   def scd2MergeStep(state: Option[DataFrame], batch: DataFrame,
                     keys: Seq[String], tsUsCol: String = "ts_us",
                     tieCol: String = "event_id"): DataFrame = {
@@ -500,20 +520,16 @@ object EventsCdc {
   /** foreachBatch SCD2 merge into a versioned parquet state directory —
     * the SCD2 twin of [[scd1MergeBatch]]: batch N writes `v=N` from
     * `v=N-1` merged with the batch; overwrite keeps replays idempotent
-    * (re-running batch N rewrites identical content). The versioned
+    * (re-running batch N rewrites identical content) and
+    * [[sweepVersions]] keeps only `v=N` and its input. The versioned
     * full-state write is the sandbox stand-in for a transactional table;
     * the merge itself never reads or shuffles more than the batch and the
     * open rows, so the real deployment swaps the sink, not the logic. */
   def scd2MergeBatch(spark: SparkSession, stateDir: String, keys: Seq[String],
                      tsUsCol: String = "ts_us", tieCol: String = "event_id")
-                    (batch: DataFrame, batchId: Long): Unit = {
-    val versions = stateVersions(spark, stateDir).filter(_ < batchId)
-    val state =
-      if (versions.isEmpty) None
-      else Some(spark.read.parquet(s"$stateDir/v=${versions.max}"))
-    scd2MergeStep(state, batch, keys, tsUsCol, tieCol)
-      .write.mode("overwrite").parquet(s"$stateDir/v=$batchId")
-  }
+                    (batch: DataFrame, batchId: Long): Unit =
+    mergeVersioned(spark, stateDir, batchId)(
+      scd2MergeStep(_, batch, keys, tsUsCol, tieCol))
 
   /** Launch the continuous SCD2 pipeline: change stream → versioned SCD2
     * history maintenance — the reference worker's apply loop with type-2
@@ -547,19 +563,13 @@ object EventsCdc {
     * rows|), never O(|history|) — spec-pinned. The full versioned state
     * is [[scd2SplitState]] (closed appends ∪ newest open), and equals
     * [[graft.olap.StarSchema.scd2History]] of the concatenated change log
-    * exactly. `retain` bounds open-version growth as in
-    * [[scd1MergeBatchBucketed]]; closed dirs are the product, not cache,
-    * and are kept. */
+    * exactly. Open versions are swept by [[sweepVersions]]' rule, so a
+    * replay of batch N still finds its input; closed dirs are the product,
+    * not cache, and are kept. */
   def scd2MergeBatchSplit(spark: SparkSession, stateDir: String,
                           keys: Seq[String], tsUsCol: String = "ts_us",
-                          tieCol: String = "event_id", retain: Int = 2)
+                          tieCol: String = "event_id")
                          (batch: DataFrame, batchId: Long): Unit = {
-    // retain=1 would delete the very version a micro-batch replay reads:
-    // a crash between the retention sweep and the checkpoint commit would
-    // make the replayed batch re-bootstrap from the batch alone, silently
-    // dropping every untouched key's open row
-    require(retain >= 2,
-      s"retain must be >= 2 (replay of batch N needs open/v=N-1), got $retain")
     val versions = stateVersions(spark, s"$stateDir/open").filter(_ < batchId)
     val next = versions match {
       case vs if vs.isEmpty =>
@@ -581,10 +591,7 @@ object EventsCdc {
       next.filter(col("is_current"))
         .write.mode("overwrite").parquet(s"$stateDir/open/v=$batchId")
     } finally next.unpersist(blocking = false)
-    versions.sorted.dropRight(math.max(retain - 1, 0)).foreach { v =>
-      val p = new org.apache.hadoop.fs.Path(s"$stateDir/open/v=$v")
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-    }
+    sweepVersions(spark, s"$stateDir/open", versions)
   }
 
   /** Assemble the full SCD2 state from a [[scd2MergeBatchSplit]] sink:

@@ -413,12 +413,14 @@ class EventsCdcSpec extends SparkSpec {
       dedupDelay = "3650 days", maxFilesPerTrigger = 1)
     q.awaitTermination()
     // final state must equal the batch SCD1 over the DISTINCT delivered
-    // events — the replay must not perturb it. Two micro-batches ran, so
-    // batch 1's merge MUST have seen batch 0's state (v=0 < v=1).
+    // events — the replay must not perturb it. At least two micro-batches
+    // ran, and each later merge saw its prior version through the Hadoop
+    // FS listing: the retention sweep (same listing) left exactly the last
+    // version and the one it merged into.
     val versions = EventsCdc.stateVersions(spark, stateDir)
-    assert(versions.size > 1 && versions.min === 0L,
-      s"expected multiple versions from v=0 via the Hadoop FS listing (so " +
-        s"later merges saw prior state), got $versions")
+    assert(versions.nonEmpty && versions.sorted === Seq(versions.max - 1, versions.max),
+      s"expected the last version and its input via the Hadoop FS listing " +
+        s"(so later merges saw prior state), got $versions")
     val finalState = spark.read.parquet(s"$stateDir/v=${versions.max}")
     val batchState = StarSchema.scd1Latest(
       ev.filter($"b" === 1 || $"b" === 2).drop("b"),
@@ -491,8 +493,8 @@ class EventsCdcSpec extends SparkSpec {
       dedupDelay = "3650 days", maxFilesPerTrigger = 1)
     q.awaitTermination()
     val versions = EventsCdc.stateVersions(spark, statePath)
-    assert(versions.nonEmpty && versions.size <= 2,
-      s"retention (retain=2) must bound the kept versions, got $versions")
+    assert(versions.nonEmpty && versions.sorted === Seq(versions.max - 1, versions.max),
+      s"retention keeps the last version and the one it merged into, got $versions")
     val finalState = spark.table(s"cdc_wbkt_v${versions.max}")
       .select($"user_id", $"event_id").as[(Long, Long)].collect().toSet
     val batchState = StarSchema.scd1Latest(
@@ -883,14 +885,61 @@ class EventsCdcSpec extends SparkSpec {
     assert(assembled.collect().map(_.toString).sorted.toSeq ===
       batchEquiv.collect().map(_.toString).sorted.toSeq)
     // replay idempotence: re-running the LAST batch (the only one the
-    // streaming engine ever re-delivers — retain=2 keeps exactly its
-    // input version v=4 around) rewrites only batch 5's own closed dir
+    // streaming engine ever re-delivers — the retention rule keeps exactly
+    // its input version v=4 around) rewrites only batch 5's own closed dir
     // and open snapshot with identical content
     val before = assembled.collect().map(_.toString).sorted.toSeq
     EventsCdc.scd2MergeBatchSplit(spark, stateDir, keys)(batches(5), 5L)
     assert(rowsAt(s"$stateDir/closed/batch=5") === 3)
     val after = EventsCdc.scd2SplitState(spark, stateDir)
     assert(after.collect().map(_.toString).sorted.toSeq === before)
+  }
+
+  test("versioned CDC sinks keep v=N and the version before it; a replay of batch N rebuilds the same state") {
+    // one retention rule for every v=N sink: keep the version just written
+    // and the newest one before it. A worker that never stops then holds
+    // two copies of its state, not one per micro-batch, and a replay of the
+    // last batch (the only one the streaming engine re-delivers) still
+    // finds its input. Batch b touches only key b and the hot key 9, so a
+    // replay rebuilt from the batch alone would lose keys 0..b-1.
+    val batches = (0 to 5).map { b =>
+      Seq((b.toLong, b * 100L, b * 10L), (9L, b * 100L + 50, b * 10L + 1))
+        .toDF("k", "ts_us", "event_id")
+        .withColumn("ts", expr("timestamp_micros(ts_us)"))
+        .withColumn("payload", concat(lit("p"), $"event_id"))
+    }
+    val log = batches.reduce(_ unionByName _)
+    val keys = Seq("k")
+    def latest(dir: String) =
+      spark.read.parquet(s"$dir/v=${EventsCdc.stateVersions(spark, dir).max}")
+    val scd2 = StarSchema.scd2History(log, keys, $"ts_us", Seq($"ts_us", $"event_id"))
+    val sinks = Seq(
+      ("scd1MergeBatch",
+        (d: String, b: org.apache.spark.sql.DataFrame, n: Long) =>
+          EventsCdc.scd1MergeBatch(spark, d, keys)(b, n),
+        (d: String) => d, latest _,
+        StarSchema.scd1Latest(log, keys, Seq($"ts".desc, $"event_id".desc))),
+      ("scd2MergeBatch",
+        (d: String, b: org.apache.spark.sql.DataFrame, n: Long) =>
+          EventsCdc.scd2MergeBatch(spark, d, keys)(b, n),
+        (d: String) => d, latest _, scd2),
+      ("scd2MergeBatchSplit",
+        (d: String, b: org.apache.spark.sql.DataFrame, n: Long) =>
+          EventsCdc.scd2MergeBatchSplit(spark, d, keys)(b, n),
+        (d: String) => s"$d/open", EventsCdc.scd2SplitState(spark, _: String), scd2))
+    sinks.foreach { case (name, write, versioned, state, oracle) =>
+      val dir = graft.sources.Scratch.dir(s"graft_retention_$name")
+      def rows(): Seq[String] = state(dir).select(oracle.columns.map(col): _*)
+        .collect().map(_.toString).sorted.toSeq
+      batches.zipWithIndex.foreach { case (b, i) => write(dir, b, i.toLong) }
+      val before = rows()
+      assert(before === oracle.collect().map(_.toString).sorted.toSeq,
+        s"$name: the state must equal the batch operator over the whole log")
+      write(dir, batches(5), 5L)
+      assert(rows() === before, s"$name: a replay of batch 5 must rebuild the same state")
+      assert(EventsCdc.stateVersions(spark, versioned(dir)).sorted === Seq(4L, 5L),
+        s"$name must keep exactly v=5 and the v=4 it merged into")
+    }
   }
 
   test("runScd2: the streaming pipeline maintains versioned SCD2 state end to end") {
@@ -917,8 +966,9 @@ class EventsCdcSpec extends SparkSpec {
         maxFilesPerTrigger = 1),
       stateDir, ckpt, keys = Seq("user_id"))
     q.awaitTermination()
+    // three micro-batches; the retention rule keeps the last and its input
     val versions = EventsCdc.stateVersions(spark, stateDir)
-    assert(versions.size === 3)
+    assert(versions.sorted === Seq(1L, 2L))
     val finalState = spark.read.parquet(s"$stateDir/v=${versions.max}")
     val expected = graft.olap.StarSchema.scd2History(
       ev, Seq("user_id"), $"ts_us", Seq($"ts_us", $"event_id"))
@@ -964,8 +1014,8 @@ class EventsCdcSpec extends SparkSpec {
         maxFilesPerTrigger = 1),
       stateDir, ckpt, keys = Seq("user_id"))
     q.awaitTermination()
-    // one closed append per batch, open versions bounded by the retain
-    // window (default 2), never the batch count
+    // one closed append per batch; the retention rule keeps two open
+    // versions (the last and the one it merged into), never the batch count
     (0 to 2).foreach { b =>
       assert(new java.io.File(s"$stateDir/closed/batch=$b").exists(),
         s"closed slice of batch $b missing")

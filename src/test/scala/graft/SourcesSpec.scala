@@ -231,13 +231,6 @@ class SourcesSpec extends SparkSpec {
       assert(plan.contains("SortMergeJoin"), s"expected SMJ, not broadcast:\n$plan")
       assert(!plan.contains("Exchange"),
         s"fact⋈large-dim must be co-located (zero exchanges):\n$plan")
-      // and the multi-file non-bucketed path caps rows per file
-      val dimDir = graft.sources.Scratch.dir("graft_dim_large")
-      FileFormats.writeDim(star.dimCustomer, dimDir, large = true,
-        maxRecordsPerFile = 50)
-      val files = new java.io.File(dimDir).listFiles()
-        .filter(f => f.getName.endsWith(".parquet"))
-      assert(files.length > 1, "maxRecordsPerFile must split the large dim")
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 

@@ -133,8 +133,7 @@ class StandingStarSpec extends SparkSpec {
     // of the earlier listing is kept across reads
     val before = spark.read.parquet(dir).count()
     val added = lines.filter($"date_key" === dates.last)
-    FileFormats.writeFactUnchecked(added, dir, "date_key",
-      Seq("l_orderkey", "l_linenumber"), "day", dynamic = true)
+    FileFormats.writeFactUnchecked(added, dir, "day", dynamic = true)
     assert(partitionDirs(dir).size === 61)
     val after = spark.read.parquet(dir).count()
     assert(after === before + added.count())
@@ -154,7 +153,7 @@ class StandingStarSpec extends SparkSpec {
       FileFormats.writeFactUnchecked(
         lines.filter(if (widenedLate) late else !late)
           .withColumn("l_quantity", lit(1.0)),
-        dir, "date_key", Seq("l_orderkey", "l_linenumber"), "day", dynamic = true)
+        dir, "day", dynamic = true)
       dir
     }
     val lateDir = mixed("graft_gate_mixed_late", widenedLate = true)
