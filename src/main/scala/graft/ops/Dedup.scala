@@ -20,31 +20,28 @@ object Dedup {
   def normText(text: Column): Column =
     regexp_replace(lower(trim(text)), "\\s+", " ")
 
-  /** Distinct word n-gram shingles as (doc_id, g) rows: tokens are exploded
-    * once and shingle strings assembled with `lead` windows (all codegen;
-    * the per-row `transform`+`concat_ws` array formulation is
-    * CodegenFallback and costs ~45µs per shingle interpreted). Docs shorter
-    * than n words emit no rows.
+  /** Distinct word n-gram shingles as (doc_id, g) rows: each row's
+    * [[TextAnalysis.ngrams]], `array_distinct` within the row, exploded —
+    * no doc_id exchange, sort or window (a global `.distinct()` would add
+    * a (doc_id, g) exchange). A minhash-shaped consumer over 3-shingles of
+    * the 5,000 sf0.1 docs (`local[4]`, 4-core shared host, last 5 of 7
+    * alternating reps) took 0.75–1.05 CPU s against 0.92–1.43 for a
+    * doc_id lead-window build, equal output hash. Docs shorter than n
+    * words emit no rows; rows sharing a doc_id each emit their own.
     *
     * The input is routed through [[Par.spread]] HERE, not at call sites:
-    * the tokenize+explode is the scan stage's per-row work (single-task on
-    * a one-row-group input), and spreading inside keeps every shingle
-    * consumer — the minhash/ngram pins AND the lazy containment-join
-    * frame — on ONE canonical plan so InternalCaches/plan-cache sharing
-    * survives (a call-site spread split the canonicals and containment
-    * entries re-derived the single-task subtree, measured 1.5–1.7× worse,
-    * r19). */
-  def shingleRows(docs: DataFrame, n: Int): DataFrame = {
-    val byDoc = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-    Par.spread(docs).select(col("doc_id"), posexplode(TextAnalysis.tokens(col("text"))))
-      .toDF("doc_id", "pos", "t")
+    * the tokenize + n-gram explode — the whole shingle build — is the
+    * scan stage's per-row work (single-task on a one-row-group input),
+    * and spreading inside keeps every shingle consumer — the
+    * minhash/ngram pins AND the lazy containment-join frame — on ONE
+    * canonical plan so InternalCaches/plan-cache sharing survives (a
+    * call-site spread split the canonicals and containment entries
+    * re-derived the single-task subtree, measured 1.5–1.7× worse, r19). */
+  def shingleRows(docs: DataFrame, n: Int): DataFrame =
+    Par.spread(docs)
+      .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("t"))
       .select(col("doc_id"),
-        concat_ws(" ", (0 until n).map(j => lead(col("t"), j).over(byDoc)): _*).as("g"),
-        lead(col("t"), n - 1).over(byDoc).isNotNull.as("full"))
-      .filter(col("full"))
-      .select(col("doc_id"), col("g"))
-      .distinct()
-  }
+        explode(array_distinct(TextAnalysis.ngrams(col("t"), n))).as("g"))
 
   /** Pairwise cross-source shingle-overlap matrix — WHERE duplication flows
     * between sources (the per-source dup-share read-out reports how
@@ -79,21 +76,12 @@ object Dedup {
   /** Distinct (source, h1, h2) shingle-hash rows — the map-side reduction
     * [[sourceOverlap]] computes inline and the standing source-shingle
     * index persists. Hash-only: shingle text never leaves the scan. */
-  def sourceShingleRows(docs: DataFrame, n: Int): DataFrame = {
-    val byDoc = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-    docs
-      .select(col("doc_id"), col("source"),
-        posexplode(graft.ops.TextAnalysis.tokens(col("text"))))
-      .toDF("doc_id", "source", "pos", "t")
-      .select(col("source"),
-        concat_ws(" ", (0 until n).map(j => lead(col("t"), j).over(byDoc)): _*)
-          .as("g"),
-        lead(col("t"), n - 1).over(byDoc).isNotNull.as("full"))
-      .filter(col("full"))
+  def sourceShingleRows(docs: DataFrame, n: Int): DataFrame =
+    docs.select(col("source"), TextAnalysis.tokens(col("text")).as("t"))
+      .select(col("source"), explode(TextAnalysis.ngrams(col("t"), n)).as("g"))
       .select(col("source"), xxhash64(col("g")).as("h1"),
         xxhash64(lit(1L), col("g")).as("h2"))
       .distinct()
-  }
 
   /** The overlap-matrix census over (source, h1, h2) rows (inline from
     * [[sourceOverlap]], or a standing index scan from
@@ -428,9 +416,10 @@ object Dedup {
     * positional winnowing spans ([[spanDedup]]): exact block hits only, but
     * cheap — no candidate verification pass at all.
     *
-    * Scale shape: one explode + per-doc windows (doc-bounded partitions),
-    * then the shuffle carries only (hash128, doc_id, block_idx, words) —
-    * never block text: blocks reduce map-side to a two-seed 128-bit
+    * Scale shape: one per-row block explode ([[TextAnalysis.ngrams]] at
+    * stride `blockWords`, no window), then the shuffle carries only
+    * (hash128, doc_id, block_idx, words) — never block text: blocks
+    * reduce map-side to a two-seed 128-bit
     * xxhash64 pair ([[exact]]'s collision argument), the min-instance
     * groupBy is map-side combined, and the join back is hash-to-hash. A
     * corpus-boilerplate block (high df) is ONE grouped row after the
@@ -441,8 +430,8 @@ object Dedup {
     * AdversarialSpec-pinned); empty docs tokenize to one empty block and
     * dedup against each other. */
   def blockDedup(docs: DataFrame, blockWords: Int = 8): DataFrame = {
-    // blocks (tokenize + per-doc windows) feeds the first-instance groupBy
-    // AND the survival join — pinned so one invocation tokenizes once
+    // blocks (tokenize + per-row block hashes) feeds the first-instance
+    // groupBy AND the survival join — pinned so one invocation tokenizes once
     // (hash-only rows, corpus-block-bounded; the fuzzy twin's discipline)
     val blocks = InternalCaches.persistBounded(blockRows(docs, blockWords))
     val first = blocks.groupBy(col("__h1"), col("__h2"))
@@ -491,28 +480,19 @@ object Dedup {
     * n_removed, words_total, words_removed, kept_ratio). */
   def fuzzyBlockDedup(docs: DataFrame, blockWords: Int = 8,
                       maxDf: Int = 16): DataFrame = {
-    val byDoc = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-    // inst (tokenize + two per-doc windows — the expensive subtree) feeds
-    // the firsts groupBy AND the final survival join; firsts feeds both
-    // band halves AND the final join. Unpinned, one invocation evaluated
-    // inst FOUR times (r18: the PQ-subvector/minhash recompute class) —
-    // both are corpus-block-bounded hash frames, pinned lazily through
-    // the bounded LRU.
+    // inst (tokenize + per-token block hashes — the expensive subtree)
+    // feeds the firsts groupBy AND the final survival join; firsts feeds
+    // both band halves AND the final join. Unpinned, one invocation
+    // evaluated inst FOUR times (r18: the PQ-subvector/minhash recompute
+    // class) — both are corpus-block-bounded hash frames, pinned lazily
+    // through the bounded LRU.
     val inst = InternalCaches.persistBounded(docs
-      .select(col("doc_id"), posexplode(TextAnalysis.tokens(col("text"))))
-      .toDF("doc_id", "pos", "t")
-      .select(col("doc_id"), col("pos"),
-        array((0 until blockWords).map(j =>
-          lead(col("t"), j).over(byDoc)): _*).as("ts"),
-        count(lit(1)).over(Window.partitionBy(col("doc_id"))).as("n_toks"))
-      .filter(pmod(col("pos"), lit(blockWords)) === 0)
-      .select(col("doc_id"),
-        (col("pos") / blockWords).cast("long").as("block_idx"),
-        least(lit(blockWords.toLong), col("n_toks") - col("pos")).as("bw"),
-        col("ts"))
-      .select(col("doc_id"), col("block_idx"), col("bw"),
-        transform(slice(col("ts"), lit(1), col("bw").cast("int")),
-          t => xxhash64(t)).as("ph")))
+      .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("t"))
+      .select(col("doc_id"), posexplode(TextAnalysis.ngrams(col("t"),
+        blockWords, blockWords, g => transform(g, t => xxhash64(t))))
+        .as(Seq("block_idx", "ph")))
+      .select(col("doc_id"), col("block_idx").cast("long").as("block_idx"),
+        size(col("ph")).cast("long").as("bw"), col("ph")))
     val firsts = InternalCaches.persistBounded(inst.groupBy(col("ph"))
       .agg(min(struct(col("doc_id"), col("block_idx"))).as("fkey")))
     val nl = expr("(size(ph)+1) div 2")
@@ -556,21 +536,15 @@ object Dedup {
   /** One row per `blockWords`-token block: (doc_id, block_idx, hash128
     * pair, block word count). Shared by the one-shot [[blockDedup]] and
     * the standing-index arrival path ([[incrementalBlockDedup]]). */
-  def blockRows(docs: DataFrame, blockWords: Int): DataFrame = {
-    val byDoc = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-    docs
-      .select(col("doc_id"), posexplode(TextAnalysis.tokens(col("text"))))
-      .toDF("doc_id", "pos", "t")
-      .select(col("doc_id"), col("pos"),
-        concat_ws(" ",
-          (0 until blockWords).map(j => lead(col("t"), j).over(byDoc)): _*).as("blk"),
-        count(lit(1)).over(Window.partitionBy(col("doc_id"))).as("n_toks"))
-      .filter(pmod(col("pos"), lit(blockWords)) === 0)
-      .select(col("doc_id"),
-        (col("pos") / blockWords).cast("long").as("block_idx"),
+  def blockRows(docs: DataFrame, blockWords: Int): DataFrame =
+    docs.select(col("doc_id"), TextAnalysis.tokens(col("text")).as("t"))
+      .select(col("doc_id"), size(col("t")).as("n_toks"),
+        posexplode(TextAnalysis.ngrams(col("t"), blockWords, blockWords))
+          .as(Seq("block_idx", "blk")))
+      .select(col("doc_id"), col("block_idx").cast("long").as("block_idx"),
         xxhash64(col("blk")).as("__h1"), xxhash64(lit(1L), col("blk")).as("__h2"),
-        least(lit(blockWords.toLong), col("n_toks") - col("pos")).as("bw"))
-  }
+        least(lit(blockWords.toLong),
+          col("n_toks") - col("block_idx") * blockWords).as("bw"))
 
   /** Per-doc survival aggregate over marked block rows (needs `removed`). */
   private def blockStats(marked: DataFrame): DataFrame =
@@ -647,11 +621,12 @@ object Dedup {
     * (any token's cut bit is a pure function of its k-gram). The price is
     * occasional tiny chunks whose duplication is noise; they are visible
     * in the stats rather than silently clamped. Scale shape: per-doc
-    * windows (doc-bounded), chunk text reassembled doc-locally via a
-    * co-partitioned join back to the token arrays, and the global
-    * first-instance shuffle carries only (hash128, doc_id, chunk_idx,
-    * len) — [[exact]]'s collision argument, [[blockDedup]]'s no-skew
-    * argument. NULL-text docs are absent from the output
+    * windows (doc-bounded; kept, as a chunk index is a running sum of cut
+    * bits over positions, not a gram), chunk text reassembled doc-locally
+    * via a co-partitioned join back to the token arrays, and the global
+    * first-instance shuffle carries only (hash128, doc_id, chunk_idx, len)
+    * — [[exact]]'s collision argument, [[blockDedup]]'s no-skew argument.
+    * NULL-text docs are absent from the output
     * ([[blockDedup]]'s contract, AdversarialSpec-pinned). */
   def cdcChunkDedup(docs: DataFrame, k: Int = 3, divisor: Int = 8): DataFrame = {
     val byDoc = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
@@ -714,7 +689,7 @@ object Dedup {
     * all-pairs oracle); only the candidate count changes.
     */
   def ngramJaccard(docs: DataFrame, n: Int = 3, threshold: Double = 0.8): DataFrame = {
-    // ONE tokenize+explode+window pass: the hashed shingle table feeds the
+    // ONE tokenize+explode pass: the hashed shingle table feeds the
     // sizes, the df table, the prefix filter, and both verification joins
     // (six consumers). Left lazy, every consumer re-derives the subtree
     // and cross-stage exchange reuse is up to AQE's scheduling — measured
@@ -983,7 +958,7 @@ object Dedup {
     * a*x+b modular form (which wraps 64-bit arithmetic and trips ANSI
     * overflow checks).
     *
-    * Shingles arrive as [[shingleRows]] (codegen'd lead-window assembly);
+    * Shingles arrive as [[shingleRows]] (per-row n-grams, no window);
     * per-doc hash arrays are collected with one narrow doc_id shuffle
     * (longs only) and the perms×shingles permutation loop runs in the
     * native codegen'd
@@ -1000,7 +975,7 @@ object Dedup {
                  bands: Int = 32, rows: Int = 4, seed: Long = 42L): DataFrame = {
     // the hashed shingle table feeds banding AND both verification joins
     // (plus the size census) — five consumers of one corpus-sized
-    // tokenize+explode+window subtree. Left lazy, each consumer re-derives
+    // tokenize+explode subtree. Left lazy, each consumer re-derives
     // it and cross-stage exchange reuse is up to AQE's scheduling (the
     // ngramJaccard bimodality, r14); the bounded lazy persist pins one
     // evaluation (same canonical plan as ngramJaccard's prefix table, so
@@ -1240,8 +1215,8 @@ object Dedup {
     * n defaults to 8 — long enough that chance collisions vanish, short
     * enough to catch paraphrased leakage).
     *
-    * Shapes for 100 TB: both sides shingle through the codegen'd
-    * [[shingleRows]] lead-window assembly and reduce to 64-bit hashes
+    * Shapes for 100 TB: both sides shingle through [[shingleRows]]'
+    * per-row n-grams (no doc_id exchange) and reduce to 64-bit hashes
     * map-side; the benchmark's distinct shingle set (eval sets are tiny
     * next to a corpus) BROADCASTS, so the corpus never shuffles — the
     * whole check is a scan + broadcast semi-join + one doc_id-keyed count.
@@ -1869,17 +1844,13 @@ object Dedup {
   /** Positional k-gram hashes: (doc_id, pos, gh) with 1-based token
     * positions — [[shingleRows]] keeping positions and duplicates (the
     * verification path needs every occurrence, not the distinct set). */
-  private def posGramRows(docs: DataFrame, k: Int,
-                          shingleHash: Column => Column): DataFrame = {
-    val byDoc = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-    docs.select(col("doc_id"), posexplode(TextAnalysis.tokens(col("text"))))
-      .toDF("doc_id", "pos", "t")
-      .select(col("doc_id"), (col("pos") + 1).as("pos"),
-        concat_ws(" ", (0 until k).map(j => lead(col("t"), j).over(byDoc)): _*).as("g"),
-        lead(col("t"), k - 1).over(byDoc).isNotNull.as("full"))
-      .filter(col("full"))
-      .select(col("doc_id"), col("pos"), shingleHash(col("g")).as("gh"))
-  }
+  private[graft] def posGramRows(docs: DataFrame, k: Int,
+                                 shingleHash: Column => Column): DataFrame =
+    docs.select(col("doc_id"), TextAnalysis.tokens(col("text")).as("t"))
+      .select(col("doc_id"),
+        posexplode(TextAnalysis.ngrams(col("t"), k)).as(Seq("i", "g")))
+      .select(col("doc_id"), (col("i") + 1).as("pos"),
+        shingleHash(col("g")).as("gh"))
 
   /** Asymmetric span containment over the [[spanDedup]] pairs — the
     * quote/boilerplate-superset detector: for each shared-span pair, what

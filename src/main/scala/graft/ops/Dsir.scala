@@ -31,11 +31,11 @@ import graft.queries.Exact
   *     shared with the dedup oracles — any SQL engine reproduces the exact
   *     bucket, where a murmur/xxhash would be Spark-only.
   *
-  * Scale shape: ONE token explode feeds the per-doc bigram stream (a
-  * doc_id-windowed lead — per-doc-local, no cross-doc shuffle) and both
-  * count tables; the count tables are at most B = 4096 rows each, so
-  * scoring is two BROADCAST joins plus two 1-row totals — the corpus is
-  * scored at scan speed and never reshuffles. At 100 TB the target model
+  * Scale shape: ONE per-row tokenize feeds the per-doc bigram stream
+  * ([[TextAnalysis.ngrams]] — row-local, no doc_id exchange or window)
+  * and both count tables; the count tables are at most B = 4096 rows
+  * each, so scoring is two BROADCAST joins plus two 1-row totals — the
+  * corpus is scored at scan speed and never reshuffles. At 100 TB the target model
   * typically comes from a fixed curated corpus; the broadcast-scoring shape
   * is identical, only the count-table provenance changes. Docs with fewer
   * than two tokens have no features and are absent from the output (the
@@ -58,16 +58,12 @@ object Dsir {
   /** Per-doc (doc_id, fh) hashed-bigram feature occurrences with the
     * target-membership flag carried through. */
   private def features(docs: DataFrame, isTarget: Column): DataFrame = {
-    val byDoc = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
     docs
       .select(col("doc_id"), isTarget.as("is_tgt"),
-        posexplode(TextAnalysis.tokens(col("text"))))
-      .toDF("doc_id", "is_tgt", "pos", "t")
-      .select(col("doc_id"), col("is_tgt"), col("t").as("w1"),
-        lead(col("t"), 1).over(byDoc).as("w2"))
-      .filter(col("w2").isNotNull)
+        TextAnalysis.tokens(col("text")).as("t"))
       .select(col("doc_id"), col("is_tgt"),
-        featHash(concat(col("w1"), lit(" "), col("w2"))).as("fh"))
+        explode(TextAnalysis.ngrams(col("t"), 2)).as("g"))
+      .select(col("doc_id"), col("is_tgt"), featHash(col("g")).as("fh"))
   }
 
   /** Per-batch ADDITIVE count partials of the two hashed-bigram models:

@@ -41,9 +41,9 @@ object Par {
     * a `.rdd`-based probe would eagerly execute upstream stages. */
   // No decision memo: the decision reads the ANALYZED plan, which comes
   // before cache substitution, so one logical input gets one decision —
-  // and one canonical plan across consumers, the cache-key split the
-  // shingleRows comment guards against — whatever the session happens to
-  // have cached when it is asked (r19 ADVICE). Deciding costs one walk of
+  // and one canonical plan across consumers, the cache-key split
+  // Dedup.shingleRows' scaladoc guards against — whatever the session has
+  // cached when it is asked (r19 ADVICE). Deciding costs one walk of
   // the analyzed plan plus its size-only stats, and no job.
   def spread(df: DataFrame): DataFrame = {
     // streaming frames never reach the single-task-scan regime this

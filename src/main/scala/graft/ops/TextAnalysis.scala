@@ -18,6 +18,33 @@ object TextAnalysis {
     * spaces. */
   def tokens(text: Column): Column = split(lower(trim(text)), " ")
 
+  /** One row's n-grams: gram i is tokens i·stride+1 .. i·stride+n of `t`
+    * (an already-projected [[tokens]] array) joined by spaces, or `gram`
+    * of that slice. Stride 1 gives the size−n+1 full grams; a larger
+    * stride gives Scala's `sliding(n, stride)` (stride n: blocks, short
+    * tail kept). No gram (NULL, too short) reads NULL; posexplode's index
+    * is the gram's start / stride. Built inside the row: no doc_id
+    * exchange or window, and rows sharing a doc_id gram independently.
+    * Project `t` in its own select first — a split inlined into the lambda
+    * re-runs per gram (1.92–2.38 against 0.75–1.05 CPU s in
+    * [[Dedup.shingleRows]]' probe). `sequence` refuses stop < start, so
+    * the guard is load-bearing (cf. [[charGini]]). */
+  def ngrams(t: Column, n: Int, stride: Int = 1,
+             gram: Column => Column = array_join(_, " ")): Column = {
+    require(n >= 1 && stride >= 1, s"need n >= 1 and stride >= 1: $n, $stride")
+    val m = size(t)
+    // last start: at stride 1 the last full gram, else the last multiple
+    // of stride below both m and m - n + stride
+    val (last, enough) =
+      if (stride == 1) (m - n, m >= n)
+      else {
+        val y = m - (math.max(n - stride, 0) + 1)
+        (greatest(lit(0), y - pmod(y, lit(stride))), m >= 1)
+      }
+    when(enough, transform(sequence(lit(0), last, lit(stride)),
+      i => gram(slice(t, i + 1, lit(n)))))
+  }
+
   /** Per-language stopword marker lists for the n-gram/stopword language-ID
     * heuristic. Tiny by design — the heuristic is the operator; swapping in
     * real per-language lexicons is a data change, not a code change. */
@@ -108,19 +135,15 @@ object TextAnalysis {
   /** Repetition-based quality signals (the Gopher-style filters a
     * training-data pipeline runs to drop degenerate/templated text):
     * duplicate-word fraction (1 - distinct/total) and the frequency share
-    * of the single most repeated word bigram. Explode + lead windows + two
-    * hash aggregates — all codegen, shuffles keyed on doc_id only. */
+    * of the single most repeated word bigram. Token and per-row [[ngrams]]
+    * bigram explodes feed two hash aggregates keyed on doc_id, no window. */
   def repetition(docs: DataFrame): DataFrame = {
-    val byDoc = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-    val ex = docs.select(col("doc_id"), posexplode(tokens(col("text"))))
-      .toDF("doc_id", "pos", "t")
-      .select(col("doc_id"), col("pos"), col("t"),
-        concat_ws(" ", col("t"), lead(col("t"), 1).over(byDoc)).as("bg"),
-        lead(col("t"), 1).over(byDoc).isNotNull.as("has_bg"))
-    val words = ex.groupBy(col("doc_id"))
+    val ts = docs.select(col("doc_id"), tokens(col("text")).as("t"))
+    val words = ts.select(col("doc_id"), explode(col("t")).as("t"))
+      .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_tokens"),
            countDistinct(col("t")).as("n_distinct"))
-    val topBigram = ex.filter(col("has_bg"))
+    val topBigram = ts.select(col("doc_id"), explode(ngrams(col("t"), 2)).as("bg"))
       .groupBy(col("doc_id"), col("bg")).agg(count(lit(1)).as("c"))
       .groupBy(col("doc_id"))
       .agg(max(col("c")).as("top_bigram_count"), sum(col("c")).as("n_bigrams"))
@@ -148,12 +171,12 @@ object TextAnalysis {
     * fingerprint hash. Docs shorter than k words have no shingles and emit
     * no rows.
     *
-    * Shape: explode tokens once, build shingles with `lead` and take window
-    * minima with `min over (rows current..w-1 following)` — one doc_id
-    * shuffle feeding chained window frames, every hash computed exactly
-    * once by a codegen'd expression. (The per-row array formulation is a
-    * trap: nested `transform`/`slice` lambdas re-evaluate the inlined hash
-    * array per window after project collapse — O(m²) interpreted hashing.)
+    * Shape: per-row [[ngrams]] shingles (posexplode keeps positions), then
+    * window minima `min over (rows current..w-1 following)` — the one
+    * doc_id window left: a winnowing minimum is a running aggregate over
+    * positions, not a gram. (A per-row array form of the minima is a trap:
+    * nested `transform`/`slice` lambdas re-evaluate the inlined hash array
+    * per window after project collapse — O(m²) interpreted hashing.)
     *
     * @param shingleHash hash expression per shingle string. Default is
     *                    xxhash64 (fastest); pass e.g.
@@ -165,16 +188,12 @@ object TextAnalysis {
   def fingerprintHashes(docs: DataFrame, k: Int = 3, w: Int = 4,
                         shingleHash: Column => Column = xxhash64(_)): DataFrame = {
     val byDoc = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-    val sh = docs.select(col("doc_id"), posexplode(tokens(col("text"))))
-      .toDF("doc_id", "pos", "t")
-      .select(col("doc_id"), col("pos"),
-        concat_ws(" ", (0 until k).map(j => lead(col("t"), j).over(byDoc)): _*).as("g"),
-        lead(col("t"), k - 1).over(byDoc).isNotNull.as("full"))
-      .filter(col("full"))
-      .select(col("doc_id"), col("pos"), shingleHash(col("g")).as("h"))
+    val sh = docs.select(col("doc_id"), tokens(col("text")).as("t"))
+      .select(col("doc_id"), (size(col("t")) - (k - 1)).as("m"),
+        posexplode(ngrams(col("t"), k)).as(Seq("pos", "g")))
+      .select(col("doc_id"), col("m"), col("pos"), shingleHash(col("g")).as("h"))
     val winMin = byDoc.rowsBetween(Window.currentRow, w - 1)
     sh
-      .withColumn("m", count(lit(1)).over(Window.partitionBy(col("doc_id"))))
       .withColumn("wmin", min(col("h")).over(winMin))
       // full windows only (start pos <= m-w); if the doc has fewer than w
       // shingles, the single window anchored at its first shingle covers all
@@ -303,21 +322,18 @@ object TextAnalysis {
     * in double (not int64 products) because n_xy·N overflows 64 bits at
     * corpus scale.
     *
-    * Plan shape: one tokenize/explode feeds both the bigram counts (lead
-    * window per doc — pairs never span documents) and the unigram counts;
-    * the `minCount` filter drops the hapax tail BEFORE the joins, so the
-    * two vocabulary joins see only frequent pairs; the 1-row total
-    * broadcasts. */
+    * Plan shape: one tokenize feeds the unigram counts and the per-row
+    * [[ngrams]] pairs (never spanning documents; no doc_id read); the
+    * `minCount` filter drops the hapax tail BEFORE the joins, so the two
+    * vocabulary joins see only frequent pairs; the 1-row total broadcasts. */
   def bigramPmi(docs: DataFrame, minCount: Long = 5, k: Int = 50): DataFrame = {
-    val byDoc = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-    val toks = docs.select(col("doc_id"), posexplode(tokens(col("text"))))
-      .toDF("doc_id", "pos", "t")
-    val uni = toks.groupBy(col("t").as("w")).agg(count(lit(1)).as("n_w"))
+    val ts = docs.select(tokens(col("text")).as("t"))
+    val uni = ts.select(explode(col("t")).as("w"))
+      .groupBy(col("w")).agg(count(lit(1)).as("n_w"))
     val total = uni.agg(sum(col("n_w")).as("n_total"))
-    val pairs = toks
-      .select(col("t").as("w1"), lead(col("t"), 1).over(byDoc).as("w2"))
-      .filter(col("w2").isNotNull)
-      .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("n_xy"))
+    val pairs = ts.select(explode(ngrams(col("t"), 2, gram = g => g)).as("p"))
+      .groupBy(col("p")(0).as("w1"), col("p")(1).as("w2"))
+      .agg(count(lit(1)).as("n_xy"))
       .filter(col("n_xy") >= minCount)
     pairs
       .join(uni.select(col("w").as("w1"), col("n_w").as("n_x")), "w1")
@@ -866,23 +882,21 @@ object TextAnalysis {
     * but both order "predictable" above "chaotic" text, which is what the
     * filter consumes.
     *
-    * Shape: ONE token explode feeds the unigram counts, the vocab size,
-    * and (via a doc_id-windowed lead) the per-doc bigram stream; bigram
-    * probabilities arrive by two shuffle joins keyed on the bigram and on
-    * w1 — both map-side-combined aggregates over the same explode. At
+    * Shape: ONE tokenize feeds the unigram counts, the vocab size, and
+    * the per-row [[ngrams]] bigram stream; bigram probabilities arrive by
+    * two shuffle joins keyed on the bigram and on w1 — both
+    * map-side-combined aggregates over the same explode. At
     * 100 TB the count tables are corpus-level but key-partitioned; in a
     * production CCNet pipeline the counts come from a fixed reference
     * corpus and the join is a broadcast — the scoring shape is identical. */
   def lmBigramScore(docs: DataFrame): DataFrame = {
-    val byDoc = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-    val toks = docs.select(col("doc_id"), posexplode(tokens(col("text"))))
-      .toDF("doc_id", "pos", "t")
-    val uni = toks.groupBy(col("t").as("w1")).agg(count(lit(1)).as("n_w1"))
+    val ts = docs.select(col("doc_id"), tokens(col("text")).as("t"))
+    val uni = ts.select(explode(col("t")).as("w1"))
+      .groupBy(col("w1")).agg(count(lit(1)).as("n_w1"))
     val vocab = uni.select(count(lit(1)).as("v"))
-    val bigrams = toks
-      .select(col("doc_id"), col("t").as("w1"),
-        lead(col("t"), 1).over(byDoc).as("w2"))
-      .filter(col("w2").isNotNull)
+    val bigrams = ts
+      .select(col("doc_id"), explode(ngrams(col("t"), 2, gram = g => g)).as("p"))
+      .select(col("doc_id"), col("p")(0).as("w1"), col("p")(1).as("w2"))
     val pair = bigrams.groupBy(col("w1"), col("w2"))
       .agg(count(lit(1)).as("n_pair"))
     bigrams

@@ -540,20 +540,16 @@ object DocQueries {
   }
 
   /** Corpus-level adjacent-token-pair frequencies — the statistic the first
-    * BPE merge iteration of tokenizer training maximizes. Pairs are built
-    * with per-doc lead windows (tokens exploded once, codegen'd), counted
-    * with a map-side-partial hash aggregate, and the head taken with
+    * BPE merge iteration of tokenizer training maximizes. Pairs are each
+    * row's [[TextAnalysis.ngrams]] bigrams (built per row, so only `text`
+    * is read and no doc_id exchange or window is planned), counted with a
+    * map-side-partial hash aggregate, and the head taken with
     * TakeOrdered — the full pair histogram is never collected. */
   private def bpePairCounts(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val byDoc = org.apache.spark.sql.expressions.Window
-      .partitionBy($"doc_id").orderBy($"pos")
     Tables.documents(s, d)
-      .select($"doc_id", posexplode(TextAnalysis.tokens($"text")))
-      .toDF("doc_id", "pos", "t")
-      .select(concat_ws(" ", $"t", lead($"t", 1).over(byDoc)).as("pair"),
-              lead($"t", 1).over(byDoc).isNotNull.as("full"))
-      .filter($"full")
+      .select(TextAnalysis.tokens($"text").as("t"))
+      .select(explode(TextAnalysis.ngrams($"t", 2)).as("pair"))
       .groupBy($"pair").agg(count(lit(1)).as("n"))
       .orderBy($"n".desc, $"pair").limit(50)
   }

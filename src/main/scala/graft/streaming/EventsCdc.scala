@@ -97,7 +97,10 @@ object EventsCdc {
     * merges into that prior version; were it gone, the replay would
     * rebuild state from the batch alone and silently drop every key the
     * batch does not touch. Nothing reads an older version. `drop` releases
-    * a version's catalog table (bucketed sink) before its directory goes. */
+    * a version's catalog table (bucketed sink) before its directory goes.
+    * An empty micro-batch (a watermark's no-data batch) changes no state:
+    * every sink returns before writing or sweeping (`isEmpty`, a `limit(1)`
+    * take), so the newest version stays the next batch's input. */
   private def sweepVersions(spark: SparkSession, dir: String, prior: Seq[Long],
                             drop: Long => Unit = _ => ()): Unit =
     prior.sorted.dropRight(1).foreach { v =>
@@ -108,8 +111,10 @@ object EventsCdc {
 
   /** [[scd1MergeBatch]] and [[scd2MergeBatch]]'s one body: `v=N` is
     * `merge` of the newest version below N (None at first), then swept. */
-  private def mergeVersioned(spark: SparkSession, stateDir: String, batchId: Long)
+  private def mergeVersioned(spark: SparkSession, stateDir: String,
+                             batch: DataFrame, batchId: Long)
                             (merge: Option[DataFrame] => DataFrame): Unit = {
+    if (batch.isEmpty) return
     val prior = stateVersions(spark, stateDir).filter(_ < batchId)
     val state =
       if (prior.isEmpty) None
@@ -128,7 +133,7 @@ object EventsCdc {
     * deployment; the merge semantics are the deliverable here.) */
   def scd1MergeBatch(spark: SparkSession, stateDir: String, keys: Seq[String])
                     (batch: DataFrame, batchId: Long): Unit =
-    mergeVersioned(spark, stateDir, batchId)(mergeStep(_, batch, keys))
+    mergeVersioned(spark, stateDir, batch, batchId)(mergeStep(_, batch, keys))
 
   /** Launch the CDC pipeline: change stream → SCD1 state maintenance. */
   def runScd1(spark: SparkSession, events: DataFrame, stateDir: String,
@@ -190,6 +195,7 @@ object EventsCdc {
                              statePath: String, keys: Seq[String],
                              buckets: Int)
                             (batch: DataFrame, batchId: Long): Unit = {
+    if (batch.isEmpty) return
     val versions = stateVersions(spark, statePath).filter(_ < batchId)
     val merged =
       if (versions.isEmpty) mergeStep(None, batch, keys)
@@ -528,7 +534,7 @@ object EventsCdc {
   def scd2MergeBatch(spark: SparkSession, stateDir: String, keys: Seq[String],
                      tsUsCol: String = "ts_us", tieCol: String = "event_id")
                     (batch: DataFrame, batchId: Long): Unit =
-    mergeVersioned(spark, stateDir, batchId)(
+    mergeVersioned(spark, stateDir, batch, batchId)(
       scd2MergeStep(_, batch, keys, tsUsCol, tieCol))
 
   /** Launch the continuous SCD2 pipeline: change stream → versioned SCD2
@@ -570,6 +576,7 @@ object EventsCdc {
                           keys: Seq[String], tsUsCol: String = "ts_us",
                           tieCol: String = "event_id")
                          (batch: DataFrame, batchId: Long): Unit = {
+    if (batch.isEmpty) return
     val versions = stateVersions(spark, s"$stateDir/open").filter(_ < batchId)
     val next = versions match {
       case vs if vs.isEmpty =>

@@ -904,6 +904,30 @@ class DedupSpec extends SparkSpec {
     assert(fromTable.nonEmpty, "testdata should have df>2 grams")
   }
 
+  test("duplicate doc_ids: each row grams alone, under any partitioning") {
+    // two rows share doc_id 7; both start at token 0 and repeat a bigram,
+    // so a doc_id window ordered by position would interleave their tokens
+    val a = (7L, "the cat sat on the mat the cat sat", "tgt")
+    val b = (7L, "a dog ran to the cat sat by the park", "raw")
+    def frame(rows: (Long, String, String)*) = rows.toDF("doc_id", "text", "source")
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).toSeq.sorted
+    val isTgt = col("source") === "tgt"
+    val sites: Seq[(String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)] = Seq(
+      "shingleRows" -> (Dedup.shingleRows(_, 3)),
+      "posGramRows" -> (Dedup.posGramRows(_, 3, xxhash64(_))),
+      "countPartials" -> (graft.ops.Dsir.countPartials(_, isTgt)))
+    sites.foreach { case (name, f) =>
+      val union = f(frame(a)).unionByName(f(frame(b)))
+      // count partials are additive: the union of the rows' partials sums
+      val want = rows(if (name != "countPartials") union
+        else union.groupBy($"fh").agg(sum($"n_t").as("n_t"), sum($"n_r").as("n_r")))
+      Seq(1, 4).foreach { p =>
+        assert(rows(f(frame(a, b).repartition(p))) === want, s"$name, $p partitions")
+      }
+    }
+  }
+
   test("decontaminate flags only docs sharing an 8-gram with the benchmark") {
     val bench = Seq(
       (100L, "alpha beta gamma delta epsilon zeta eta theta iota kappa")

@@ -901,24 +901,34 @@ class EventsCdcSpec extends SparkSpec {
     // two copies of its state, not one per micro-batch, and a replay of the
     // last batch (the only one the streaming engine re-delivers) still
     // finds its input. Batch b touches only key b and the hot key 9, so a
-    // replay rebuilt from the batch alone would lose keys 0..b-1.
+    // replay rebuilt from the batch alone would lose keys 0..b-1. Batch 6
+    // holds no rows (a watermark's no-data batch): it writes no v=6, and
+    // the state, its replay, and a later replay of batch 5 all stay put.
     val batches = (0 to 5).map { b =>
       Seq((b.toLong, b * 100L, b * 10L), (9L, b * 100L + 50, b * 10L + 1))
         .toDF("k", "ts_us", "event_id")
         .withColumn("ts", expr("timestamp_micros(ts_us)"))
         .withColumn("payload", concat(lit("p"), $"event_id"))
     }
+    val noData = batches(0).limit(0)
     val log = batches.reduce(_ unionByName _)
     val keys = Seq("k")
     def latest(dir: String) =
       spark.read.parquet(s"$dir/v=${EventsCdc.stateVersions(spark, dir).max}")
+    val scd1 = StarSchema.scd1Latest(log, keys, Seq($"ts".desc, $"event_id".desc))
     val scd2 = StarSchema.scd2History(log, keys, $"ts_us", Seq($"ts_us", $"event_id"))
+    (0 to 6).foreach(v => spark.sql(s"DROP TABLE IF EXISTS cdc_retention_v$v"))
     val sinks = Seq(
       ("scd1MergeBatch",
         (d: String, b: org.apache.spark.sql.DataFrame, n: Long) =>
           EventsCdc.scd1MergeBatch(spark, d, keys)(b, n),
-        (d: String) => d, latest _,
-        StarSchema.scd1Latest(log, keys, Seq($"ts".desc, $"event_id".desc))),
+        (d: String) => d, latest _, scd1),
+      ("scd1MergeBatchBucketed",
+        (d: String, b: org.apache.spark.sql.DataFrame, n: Long) =>
+          EventsCdc.scd1MergeBatchBucketed(spark, "cdc_retention", d, keys, 4)(b, n),
+        (d: String) => d,
+        (d: String) => spark.table(
+          s"cdc_retention_v${EventsCdc.stateVersions(spark, d).max}"), scd1),
       ("scd2MergeBatch",
         (d: String, b: org.apache.spark.sql.DataFrame, n: Long) =>
           EventsCdc.scd2MergeBatch(spark, d, keys)(b, n),
@@ -931,14 +941,22 @@ class EventsCdcSpec extends SparkSpec {
       val dir = graft.sources.Scratch.dir(s"graft_retention_$name")
       def rows(): Seq[String] = state(dir).select(oracle.columns.map(col): _*)
         .collect().map(_.toString).sorted.toSeq
+      def kept(): Seq[Long] = EventsCdc.stateVersions(spark, versioned(dir)).sorted
       batches.zipWithIndex.foreach { case (b, i) => write(dir, b, i.toLong) }
       val before = rows()
       assert(before === oracle.collect().map(_.toString).sorted.toSeq,
         s"$name: the state must equal the batch operator over the whole log")
       write(dir, batches(5), 5L)
       assert(rows() === before, s"$name: a replay of batch 5 must rebuild the same state")
-      assert(EventsCdc.stateVersions(spark, versioned(dir)).sorted === Seq(4L, 5L),
+      assert(kept() === Seq(4L, 5L),
         s"$name must keep exactly v=5 and the v=4 it merged into")
+      write(dir, noData, 6L)
+      assert(kept() === Seq(4L, 5L), s"$name: an empty batch must write no v=6")
+      assert(rows() === before, s"$name: an empty batch must leave the state as it was")
+      write(dir, noData, 6L)
+      write(dir, batches(5), 5L)
+      assert(kept() === Seq(4L, 5L) && rows() === before,
+        s"$name: replays around an empty batch must rebuild the same state")
     }
   }
 

@@ -108,8 +108,8 @@ class PlanAuditSpec extends SparkSpec {
     Seq("lang_id", "text_quality", "token_count", "doc_fingerprint",
         "dedup_exact", "ngram_jaccard", "dedup_minhash", "dedup_simhash",
         "quality_repetition", "pii_redact", "text_normalize",
-        "quality_filter", "bpe_pair_counts", "decontaminate",
-        "tfidf_topterms", "bigram_pmi", "quality_weighted_sample",
+        "quality_filter", "decontaminate",
+        "tfidf_topterms", "quality_weighted_sample",
         "dedup_eval", "contamination_score", "span_dedup",
         "bm25_rank", "gopher_rules", "lm_bigram_score",
         "doc_chunking", "ccnet_perplexity_buckets",
@@ -122,9 +122,7 @@ class PlanAuditSpec extends SparkSpec {
         "dedup_threshold_curve", "quality_threshold_curve",
         "contamination_threshold_curve").foreach { name =>
       // (dedup_clusters' final plan starts from localCheckpointed label
-      // RDDs — its upstream scans are audited via dedup_minhash;
-      // bpe_pair_counts builds pairs per-doc with lead windows keyed by
-      // doc_id — pairs must not span document boundaries)
+      // RDDs — its upstream scans are audited via dedup_minhash)
       val p = plans.toMap.apply(name)
       assert(p.contains("ReadSchema: struct<doc_id:bigint,text:string>"),
         s"$name reads more than (doc_id, text) from documents")
@@ -133,8 +131,10 @@ class PlanAuditSpec extends SparkSpec {
     assert(plans.toMap.apply("heavy_hitters")
       .contains("ReadSchema: struct<doc_id:bigint,text:string>"),
       "heavy_hitters reads more than (doc_id, text) from documents")
-    // corpus-level heads need only text
-    Seq("token_topk").foreach { name =>
+    // corpus-level heads need only text; bpe_pair_counts and bigram_pmi
+    // build their pairs per row (TextAnalysis.ngrams), so pairs cannot
+    // span documents without reading doc_id
+    Seq("token_topk", "bpe_pair_counts", "bigram_pmi").foreach { name =>
       assert(plans.toMap.apply(name).contains("ReadSchema: struct<text:string>"),
         s"$name reads more than (text) from documents")
     }
@@ -323,6 +323,32 @@ class PlanAuditSpec extends SparkSpec {
     assert(rfm.contains(
       "ReadSchema: struct<o_custkey:bigint,o_totalprice:double,o_orderdate:timestamp"),
       s"rfm_segments reads more than (custkey, totalprice, orderdate):\n$rfm")
+  }
+
+  test("n-gram entries plan no window partitioned on doc_id") {
+    // every gram is built inside its row (TextAnalysis.ngrams), so a
+    // doc_id-partitioned Window here is a lead-window gram site come back:
+    // Exchange(doc_id) -> Sort -> Window for work that never leaves the row
+    val byDoc = """Window \[(.*)\], \[([^\]]*)\], \[""".r
+    Seq("dedup_minhash", "decontaminate", "quality_repetition", "bigram_pmi",
+        "lm_bigram_score", "bpe_pair_counts", "block_dedup",
+        "fuzzy_block_dedup", "source_overlap", "span_dedup",
+        "dsir_weights").foreach { name =>
+      val p = plans.toMap.apply(name)
+      val windows = byDoc.findAllMatchIn(p).filter(_.group(2).contains("doc_id#"))
+        .map(_.group(1)).toSeq
+      if (name == "span_dedup")
+        // fingerprintHashes keeps ONE window: the winnowing minimum, a
+        // running aggregate over positions — its shingles are per row
+        assert(windows.nonEmpty && windows.forall(w =>
+            w.startsWith("min(") && !w.contains("lead(") && !w.contains("count(")),
+          s"span_dedup's only doc_id window should be the winnowing min:\n$p")
+      else
+        assert(windows.isEmpty, s"$name plans a doc_id window:\n$p")
+    }
+    // dsir_weights keeps its global-total window over the <= B-row model
+    assert(plans.toMap.apply("dsir_weights").contains("Window ["),
+      "dsir_weights should keep its global-total window")
   }
 
   test("q15 takes the global max as a window over the aggregate, not a second fact scan") {

@@ -42,6 +42,48 @@ class TextAnalysisSpec extends SparkSpec {
     assert(r.getAs[Int]("bpe_tokens") === 8)
   }
 
+  test("ngrams equals Scala's sliding: NULL, empty, short, exact, spaced rows and block tails") {
+    // texts by id: NULL, "", 1..17 words, runs of spaces (empty tokens)
+    val texts: Seq[(Int, Option[String])] =
+      Seq(0 -> None, 1 -> Some(""), 2 -> Some("a  b   c d"), 3 -> Some("  x y  ")) ++
+        (1 to 17).map(k => (10 + k) -> Some((1 to k).map(i => s"W$i").mkString(" ")))
+    val docs = texts.toDF("id", "text")
+      .select($"id", TextAnalysis.tokens($"text").as("t"))
+    // reference: the same tokens (lowercase, trim spaces, split keeping
+    // empty tokens), Scala's sliding, and only full windows at stride 1
+    def ref(text: Option[String], n: Int, stride: Int): Seq[(Int, Seq[String])] =
+      text.toSeq.flatMap { s =>
+        val t = s.toLowerCase.dropWhile(_ == ' ').reverse.dropWhile(_ == ' ')
+          .reverse.split(" ", -1).toSeq
+        val w = t.sliding(n, stride).toSeq
+        (if (stride == 1) w.filter(_.size == n) else w).zipWithIndex
+          .map { case (g, i) => (i, g) }
+      }
+    // (n, stride): n = 1, shingles below/at/above the row size, blocks
+    // with tail widths 1..8, a stride between 1 and n, a stride above n
+    Seq((1, 1), (2, 1), (3, 1), (5, 1), (8, 8), (3, 3), (4, 2), (2, 3)).foreach {
+      case (n, stride) =>
+        val got = docs
+          .select($"id", posexplode(TextAnalysis.ngrams($"t", n, stride, g => g)))
+          .as[(Int, Int, Seq[String])].collect()
+          .groupBy(_._1).map { case (id, rs) =>
+            id -> rs.map(r => (r._2, r._3)).sortBy(_._1).toSeq }
+        texts.foreach { case (id, text) =>
+          assert(got.getOrElse(id, Seq.empty) === ref(text, n, stride),
+            s"n=$n stride=$stride text=$text")
+        }
+        // the default gram is the slice joined by single spaces
+        val joined = docs.select($"id", explode(TextAnalysis.ngrams($"t", n, stride)))
+          .as[(Int, String)].collect().toSeq.sorted
+        assert(joined === got.toSeq.flatMap { case (id, gs) =>
+          gs.map(g => (id, g._2.mkString(" "))) }.sorted, s"n=$n stride=$stride")
+    }
+    // no gram reads NULL: NULL text, and fewer than n tokens at stride 1
+    val none = docs.select($"id", TextAnalysis.ngrams($"t", 3).isNull.as("none"))
+      .as[(Int, Boolean)].collect().toMap
+    assert(none(0) && none(1) && none(11) && none(12) && !none(13))
+  }
+
   test("repetition signals: duplicated text scores high, diverse text low") {
     val docs = Seq(
       (1L, "spam spam spam spam"),
