@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.sources.FileFormats
 
 /** Benchmark main: one JSON line with per-query wall times at
   * `SPARK_GRAFT_SF_DIR`.
@@ -84,7 +85,7 @@ object Bench {
           graft.ops.Dedup.writeClusterTable(docs, dd)
           dd
         })
-        graft.ops.Dedup.keepBest(s.read.parquet(dir), docs)
+        graft.ops.Dedup.keepBest(FileFormats.readParquet(s, dir), docs)
       }
     },
     // steady-state per-source duplication dashboard: the same standing
@@ -103,7 +104,7 @@ object Bench {
           dd
         })
         docs.select(col("doc_id"), col("source"))
-          .join(s.read.parquet(dir).select(col("doc_id"), col("cluster_id")),
+          .join(FileFormats.readParquet(s, dir).select(col("doc_id"), col("cluster_id")),
             Seq("doc_id"), "left")
           .groupBy(col("source"))
           .agg(count(lit(1)).as("n_docs"),
@@ -165,7 +166,7 @@ object Bench {
           Seq("user_id"))(b, i.toLong)
       } finally release()
       val last = graft.streaming.EventsCdc.stateVersions(s, dir).max
-      s.read.parquet(s"$dir/v=$last")
+      FileFormats.readParquet(s, s"$dir/v=$last")
     }),
     "scd2_sink_split" -> ((s, d) => {
       val dir = graft.sources.Scratch.dir("graft_scd2_sp_bench")

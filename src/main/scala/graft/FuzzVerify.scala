@@ -3,6 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
+import graft.sources.FileFormats
 
 /** Oracle-diff fuzz harness: re-run a random registry subset over a
   * layout-PERTURBED copy of the input tables and let the DuckDB oracle
@@ -63,7 +64,7 @@ object FuzzVerify {
     tables.foreach { t =>
       val src = s"$sfDir/$t.parquet"
       if (new java.io.File(src).exists()) {
-        val df = spark.read.parquet(src)
+        val df = FileFormats.readParquet(spark, src)
         df.withColumn("__fuzz",
             xxhash64((lit(seed) +: df.columns.toSeq.map(col)): _*))
           .repartition(parts, col("__fuzz"))

@@ -16,8 +16,8 @@ import org.apache.spark.sql.SparkSession
   * listing job (one task per directory above 32 paths). In-process, that
   * job's tasks run on this JVM's own threads, list the same directories
   * the driver would, and add scheduling and serialization on top: on the
-  * 2,405 partitions of an sf0.1 fact, `spark.read.parquet(fact).schema`
-  * took 7.7–10.8 s wall and 25.6–31.2 CPU s with the job, 0.37–0.63 s
+  * 2,405 partitions of an sf0.1 fact, the schema of Spark's whole read
+  * took 7.7–10.8 s wall and 25.6–31.2 CPU s with the listing job, 0.37–0.63 s
   * (both) listed on the driver, and a one-month slice aggregate 7.5–9.7 s
   * against 0.53–0.85 s (4-core shared host, local disk). Driver-side
   * listing builds each file's status from its block locations, not from
@@ -30,14 +30,19 @@ import org.apache.spark.sql.SparkSession
   * Two things are left as they are on purpose:
   *  - `FileFormats.standingSchema` keeps its one-leaf read. Cluster
   *    masters still pay the listing job on a whole read, and even on the
-  *    driver the leaf read is cheaper (0.10–0.17 s against 0.37–0.63 s on
-  *    the same fact); its pinned mixed-schema verdict stays too.
+  *    driver the leaf read is cheaper. On the same fact, re-measured
+  *    in-process (4-core shared host, load 3–4, 5 alternating reps): the
+  *    leaf read took 0.08–0.12 s and ran 0 Spark jobs; a whole
+  *    `FileFormats.readParquet` took 0.70–0.80 s and ran 0 jobs; Spark's own
+  *    whole read took 0.73–0.83 s and ran 1 job, its schema-inference job.
+  *    Its pinned mixed-schema verdict stays too.
   *  - No file-status cache is shared across reads. Spark's
   *    `FileStatusCache` gives each new `InMemoryFileIndex` its own client,
   *    so every `spark.read` lists again, and a graft-side cache would have
   *    to be invalidated by every writer of the directory, writers outside
   *    graft included. A listing on the driver is cheap already: the whole
-  *    2,405-partition read above, schema job included, is under 0.65 s.
+  *    2,405-partition read above is under 0.85 s, and none of the
+  *    engine's reads runs the schema job on top of it.
   */
 object GraftSession {
   /** `local`, `local[N]`, `local[*]`, `local[N,F]`, `local[*,F]`: the

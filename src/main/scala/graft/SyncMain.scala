@@ -66,7 +66,7 @@ object SyncMain {
             // GRAFT_SCHEMA_FROM: a parquet path whose schema arrival files
             // must conform to (guards JDBC integer-width widening)
             schemaFrom = sys.env.get("GRAFT_SCHEMA_FROM")
-              .map(p => spark.read.parquet(p).schema))
+              .map(p => graft.sources.FileFormats.readParquet(spark, p).schema))
           println(s"listen loop ended at notify_id $mark")
         case other =>
           throw new IllegalArgumentException(s"unknown mode: $other")

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.sources.FileFormats
 
 /** Corpus deduplication operators: exact, exact n-gram Jaccard (prefix-filter
   * set-similarity join), MinHash+LSH, SimHash.
@@ -147,7 +148,7 @@ object Dedup {
   def sourceOverlapFromIndex(spark: org.apache.spark.sql.SparkSession,
                              dir: String): DataFrame =
     sourceOverlapCensus(
-      spark.read.parquet(dir).select(col("source"), col("h1"), col("h2")))
+      FileFormats.readParquet(spark, dir).select(col("source"), col("h1"), col("h2")))
 
   /** Exact dedup: every doc mapped to the smallest doc_id sharing its
     * normalized text. The shuffle carries only (hash128, doc_id) — never the
@@ -589,7 +590,7 @@ object Dedup {
   def incrementalBlockDedup(spark: org.apache.spark.sql.SparkSession,
                             dir: String, arrivals: DataFrame,
                             blockWords: Int = 8): DataFrame = {
-    val idx = spark.read.parquet(dir).select(col("__h1"), col("__h2"))
+    val idx = FileFormats.readParquet(spark, dir).select(col("__h1"), col("__h2"))
     // batch-bounded; feeds batchFirst AND the marked join (blockDedup's pin)
     val blocks = InternalCaches.persistBounded(blockRows(arrivals, blockWords))
     val batchFirst = blocks.groupBy(col("__h1"), col("__h2"))
@@ -894,9 +895,9 @@ object Dedup {
                                    dir: String, arrivals: DataFrame,
                                    n: Int = 3,
                                    threshold: Double = 0.8): DataFrame = {
-    val idxSh = spark.read.parquet(s"$dir/shingles")
+    val idxSh = FileFormats.readParquet(spark, s"$dir/shingles")
     // max() collapses replayed size rows (same value re-appended)
-    val idxSz = spark.read.parquet(s"$dir/sizes")
+    val idxSz = FileFormats.readParquet(spark, s"$dir/sizes")
       .groupBy(col("doc_id")).agg(max(col("sz")).as("sz_super"))
     // batch-bounded; feeds prefix + verification. Lazy bounded persist,
     // not eager localCheckpoint: the SQL-surface resolution rule invokes
@@ -908,7 +909,7 @@ object Dedup {
       .select(col("doc_id"), xxhash64(col("g")).as("h")))
     // standing df for exactly the hashes the arrivals carry (broadcast
     // probe — batch-bounded result), summed over the append partials
-    val dfProbe = spark.read.parquet(s"$dir/df")
+    val dfProbe = FileFormats.readParquet(spark, s"$dir/df")
       .join(broadcast(exA.select(col("h")).distinct()), "h")
       .groupBy(col("h")).agg(sum(col("df")).as("df"))
     val szA = exA.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
@@ -1118,7 +1119,7 @@ object Dedup {
     // standing-index probe twin 2.78 → 1.22).
     val newBands = InternalCaches.persistBounded(
       bandRows(newDocs, n, bands, rows, seed))
-    val stored = spark.read.parquet(indexDir)
+    val stored = FileFormats.readParquet(spark, indexDir)
     val oldNew = stored.toDF("da", "band", "band_hash")
       .join(broadcast(newBands.toDF("db", "band", "band_hash")),
             Seq("band", "band_hash"))
@@ -1369,7 +1370,7 @@ object Dedup {
     val batchFirst = ag.groupBy(col("h")).agg(min(col("doc_id")).as("__first_doc"))
     // batch-bounded probe broadcast against the standing index; distinct
     // because blind appends may have duplicated index rows
-    val seen = spark.read.parquet(dir).select(col("h"))
+    val seen = FileFormats.readParquet(spark, dir).select(col("h"))
       .join(broadcast(batchFirst.select(col("h"))), Seq("h"), "left_semi")
       .distinct()
     val scored = ag.join(batchFirst, Seq("h"))
@@ -1606,7 +1607,7 @@ object Dedup {
                                 dfDir: String, docs: DataFrame,
                                 minDf: Int = 16, k: Int = 5,
                                 shingleHash: Column => Column = xxhash64(_)): DataFrame = {
-    val hot = spark.read.parquet(dfDir)
+    val hot = FileFormats.readParquet(spark, dfDir)
       .groupBy(col("gh")).agg(sum(col("df")).as("df"))
       .filter(col("df") > minDf)
       .select(col("gh"))
@@ -1691,7 +1692,7 @@ object Dedup {
       s"minLen must be >= k+w-1 = ${k + w - 1}, got $minLen")
     val newFps = InternalCaches.persistBounded(
       TextAnalysis.fingerprintHashes(newDocs, k, w, shingleHash))
-    val stored = spark.read.parquet(indexDir)
+    val stored = FileFormats.readParquet(spark, indexDir)
       .select(col("doc_id"), col("fp_hash"))
     // index rows for fingerprints the arrivals carry (broadcast probe),
     // plus the arrivals' own rows = every (doc, fp) row of the UNION

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.queries.Exact
+import graft.sources.FileFormats
 
 /** Data Selection via Importance Resampling — the "make the raw crawl look
   * like the target domain" curation operator (after Xie et al. 2023, "Data
@@ -130,7 +131,7 @@ object Dsir {
   def weightsFromTable(spark: org.apache.spark.sql.SparkSession,
                        countsDir: String, docs: DataFrame): DataFrame =
     weightsFromCounts(docs,
-      spark.read.parquet(countsDir).select(col("fh"), col("n_t"), col("n_r")))
+      FileFormats.readParquet(spark, countsDir).select(col("fh"), col("n_t"), col("n_r")))
 
   /** Per-doc importance weight: mean over the doc's hashed-bigram feature
     * occurrences of p_target(f) / p_raw(f), both add-one smoothed over the

@@ -159,7 +159,7 @@ object Ivf {
     * before eviction calls [[InternalCaches.release]]. */
   def appendToIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
                     newEmbeddings: DataFrame): DataFrame = {
-    val centroids = spark.read.parquet(s"$dir/centroids")
+    val centroids = FileFormats.readParquet(spark, s"$dir/centroids")
     val data = prepared(newEmbeddings)
     val assigned = graft.ops.InternalCaches.persistBounded(assign(data, centroids))
     data.join(assigned, "vec_id")
@@ -182,8 +182,8 @@ object Ivf {
     * sags or size_ratio spikes past the operator's thresholds. */
   def driftReport(spark: org.apache.spark.sql.SparkSession,
                   dir: String): DataFrame = {
-    val lists = spark.read.parquet(s"$dir/lists")
-    val centroids = spark.read.parquet(s"$dir/centroids")
+    val lists = FileFormats.readParquet(spark, s"$dir/lists")
+    val centroids = FileFormats.readParquet(spark, s"$dir/centroids")
     val per = lists.join(broadcast(centroids), "centroid_id")
       .select(col("centroid_id"),
         cosinePrenormed(col("emb"), col("cvec"), col("nrm"), col("cnrm")).as("cos"))
@@ -310,7 +310,7 @@ object Ivf {
               col("size_ratio") > maxSizeRatio)
       .isEmpty
     if (drifted) {
-      val vecs = spark.read.parquet(s"$dir/lists")
+      val vecs = FileFormats.readParquet(spark, s"$dir/lists")
         .select(col("vec_id"), col("emb").as("embedding"))
       val model = fit(vecs, nLists, iters)
       val tmp = s"$dir.refit_tmp"
@@ -345,8 +345,8 @@ object Ivf {
     * read. Results are identical to [[search]] on the in-memory model. */
   def searchIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
                   queries: DataFrame, k: Int = 5, nprobe: Int = 4): DataFrame = {
-    val lists = spark.read.parquet(s"$dir/lists")
-    val centroids = spark.read.parquet(s"$dir/centroids")
+    val lists = FileFormats.readParquet(spark, s"$dir/lists")
+    val centroids = FileFormats.readParquet(spark, s"$dir/centroids")
     val q = preparedQueries(queries)
     val probed = probes(q, centroids, nprobe)
     val scored = lists.join(broadcast(probed), "centroid_id")

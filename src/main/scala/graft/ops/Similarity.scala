@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.VectorFunctions._
+import graft.sources.FileFormats
 
 /** Approximate-nearest-neighbor and embedding near-dup operators over an
   * `array<float>` embedding column.
@@ -126,7 +127,7 @@ object Similarity {
     * [[pcaPower]] over everything absorbed, bit for bit. */
   def pcaFromTable(spark: org.apache.spark.sql.SparkSession, dir: String,
                    iters: Int = 8): DataFrame =
-    pcaFromSums(spark, spark.read.parquet(dir)
+    pcaFromSums(spark, FileFormats.readParquet(spark, dir)
       .groupBy(col("i"), col("j"))
       .agg(sum(col("s")).cast("decimal(38,6)").as("s")), iters)
 
@@ -731,7 +732,7 @@ object Similarity {
     * absorbed, bit for bit. */
   def embeddingDriftFromTable(spark: org.apache.spark.sql.SparkSession,
                               dir: String): DataFrame =
-    driftFromPartials(spark.read.parquet(dir)
+    driftFromPartials(FileFormats.readParquet(spark, dir)
       .groupBy(col("label"), col("dim"))
       .agg(sum(col("sa")).as("sa"), sum(col("na")).as("na"),
         sum(col("sb")).as("sb"), sum(col("nb")).as("nb")))

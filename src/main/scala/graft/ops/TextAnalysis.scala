@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.sources.FileFormats
 
 /** Text-corpus analysis operators for LLM training-data pipelines: language
   * ID, quality scoring, token counting, document fingerprinting.
@@ -511,10 +512,10 @@ object TextAnalysis {
     * equals the batch [[vocabGrowth]] over everything absorbed. */
   def vocabGrowthFromIndex(spark: org.apache.spark.sql.SparkSession,
                            dir: String): DataFrame = {
-    val types = spark.read.parquet(s"$dir/types")
+    val types = FileFormats.readParquet(spark, s"$dir/types")
       .groupBy(col("h")).agg(min(col("bucket")).as("bucket"))
       .groupBy(col("bucket")).agg(count(lit(1)).as("new_types"))
-    val volAll = spark.read.parquet(s"$dir/vol").groupBy(col("bucket"))
+    val volAll = FileFormats.readParquet(spark, s"$dir/vol").groupBy(col("bucket"))
       .agg(sum(col("n_docs")).as("n_docs"), sum(col("n_tokens")).as("n_tokens"))
     vocabCurve(volAll.select(col("bucket"), col("n_docs")),
       volAll.select(col("bucket"), col("n_tokens")), types)

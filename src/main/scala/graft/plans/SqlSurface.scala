@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.rules.Rule
+import graft.sources.FileFormats
 
 /** The SQL-surface glue for whole-TABLE operators: Spark's
   * `injectTableFunction` hands a builder only the argument EXPRESSIONS
@@ -88,7 +89,7 @@ class GraftTableOpResolution(session: SparkSession) extends Rule[LogicalPlan] {
           // O(corpus) graft_span_screen recompute). Same analysis-time
           // probe-materialization note as containment_screen.
           graft.ops.Dedup.incrementalSpanScreen(session, params(0),
-            session.read.parquet(params(1)), df, params(2).toInt)
+            FileFormats.readParquet(session, params(1)), df, params(2).toInt)
         case "graph_triangles" =>
           graft.ops.Similarity.graphTriangles(df, params(0).toInt)
         case "dsir_weights" =>

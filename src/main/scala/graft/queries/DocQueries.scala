@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
 import graft.ops.{Dedup, Ivf, Multimodal, Retrieval, Similarity, Sketches, TextAnalysis}
+import graft.sources.FileFormats
 
 /** SparkEntry wrappers + DuckDB oracles for the LLM-data-pipeline block
   * (SURVEY.md §2C): text analysis, dedup, similarity search, multimodal
@@ -4458,27 +4459,27 @@ $sel
       keep => graft.sources.FileFormats.writeRangeSorted(
         corpus.join(keep, "doc_id"), s"$out/gate", "doc_id", 8)
     }
-    val gated = s.read.parquet(s"$out/gate")
+    val gated = FileFormats.readParquet(s, s"$out/gate")
 
     stagedWrite(Dedup.minhashLsh(gated).select($"d2".as("doc_id")).distinct()) {
       dup => graft.sources.FileFormats.writeRangeSorted(
         gated.join(dup, Seq("doc_id"), "left_anti"), s"$out/dedup", "doc_id", 8)
     }
-    val deduped = s.read.parquet(s"$out/dedup")
+    val deduped = FileFormats.readParquet(s, s"$out/dedup")
 
     stagedWrite(Dedup.decontaminate(deduped, bench, n = 8)
         .filter(!$"contaminated").select($"doc_id")) {
       cleanIds => graft.sources.FileFormats.writeRangeSorted(
         deduped.join(cleanIds, "doc_id"), s"$out/clean", "doc_id", 8)
     }
-    val cleaned = s.read.parquet(s"$out/clean")
+    val cleaned = FileFormats.readParquet(s, s"$out/clean")
 
     stagedWrite(graft.ops.Dsir.resample(cleaned, $"source" === "src0")
         .select($"doc_id")) {
       sampIds => graft.sources.FileFormats.writeRangeSorted(
         cleaned.join(sampIds, "doc_id"), s"$out/sample", "doc_id", 8)
     }
-    val sampled = s.read.parquet(s"$out/sample")
+    val sampled = FileFormats.readParquet(s, s"$out/sample")
 
     // the packing transform has no small-id seam (it RESHAPES rows), so
     // its cache carries the packed rows themselves — bounded by the
@@ -4487,7 +4488,7 @@ $sel
       packedRows => graft.sources.FileFormats.writeRangeSorted(
         packedRows, s"$out/packed", "doc_id", 8)
     }
-    val packed = s.read.parquet(s"$out/packed")
+    val packed = FileFormats.readParquet(s, s"$out/packed")
 
     def cnt(df: DataFrame, as: String) =
       df.groupBy($"source").agg(count(lit(1)).as(as))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.sources.Tables
 import graft.olap.StarSchema
 import Exact._
+import graft.sources.FileFormats
 
 /** SparkEntry wrappers + DuckDB oracles for the star-schema ETL block
   * (SURVEY.md §2A). Every query ends with an explicit deterministic ORDER BY
@@ -295,8 +296,8 @@ object StarQueries {
     import s.implicits._
     val out = s"${System.getProperty("java.io.tmpdir")}/graft_star_${math.abs(d.hashCode)}"
     graft.olap.StarSchemaJob.run(s, d, out, factGranularity = "month")
-    val fact = s.read.parquet(s"$out/fact_sales")
-    val dimPart = s.read.parquet(s"$out/dim_part")
+    val fact = FileFormats.readParquet(s, s"$out/fact_sales")
+    val dimPart = FileFormats.readParquet(s, s"$out/dim_part")
     fact.join(broadcast(dimPart), fact("l_partkey") === dimPart("p_partkey"))
       .groupBy($"category", year($"date_key").as("sale_year"))
       .agg(count(lit(1)).as("n_rows"),

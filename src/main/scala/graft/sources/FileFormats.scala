@@ -3,9 +3,10 @@ package graft.sources
 import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.spark.sql.{AnalysisException, Column, DataFrame, SparkSession}
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame, DataFrameReader, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.DEFAULT_PARTITION_NAME
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquetShim
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -69,7 +70,7 @@ object FileFormats {
     val total = entries
       .filter(_.getPath.getName.endsWith(".parquet")).map(_.getLen).sum
     val n = math.max(1, math.ceil(total.toDouble / targetBytes).toInt)
-    spark.read.parquet(dir).coalesce(n)
+    readParquet(spark, dir).coalesce(n)
       .write.mode("overwrite").parquet(outDir)
     n
   }
@@ -149,7 +150,7 @@ object FileFormats {
     * each data file's footer: a directory walk in the calling JVM
     * (partition directories included, [[skipped]] names excluded) and one
     * footer read per file, no Spark job. None when the directory is missing or holds no data
-    * file, the cases where `spark.read.parquet(dir)` fails to resolve.
+    * file, the cases where Spark's parquet read of `dir` fails to resolve.
     * `readFooter` from the listed status reads only the footer: 0.6 s for
     * 2,405 files, where `ParquetFileReader.open` per file took 26 s. */
   private[graft] def footerRowCount(spark: SparkSession,
@@ -165,21 +166,94 @@ object FileFormats {
     }.sum)
   }
 
-  /** The standing schema of a parquet directory, if it exists and holds
-    * data — the anchor the [[SchemaEvolution]] gate compares a new batch
-    * against. Read from ONE partition leaf with `basePath` at the table
-    * root, so partition columns keep their names and inferred types: the
-    * leaf is the last `k=v` directory in name order at each level (for a
+  /** Parquet summary files, which Spark's listing keeps and its schema
+    * inference reads before any data footer. */
+  private def summary(name: String): Boolean =
+    name.startsWith("_metadata") || name.startsWith("_common_metadata")
+
+  /** The leaf directory a schema is read from, with its files in name
+    * order: the last `k=v` directory in name order at each level (for a
     * date-partitioned fact, the latest date), passing over
     * `__HIVE_DEFAULT_PARTITION__` leaves, whose NULL value would infer the
-    * partition column as a string. An unpartitioned directory, or one
-    * whose only leaves are default partitions, is read whole. The cost is
-    * two directory listings and one single-task schema job, not a listing of
-    * every partition: on a 2,405-partition sf0.1 fact, 0.10–0.17 s against
-    * 0.37–0.63 s for a whole read listed on the driver, as an in-process
-    * [[graft.GraftSession]] lists it (4-core shared host, local disk). A
-    * cluster master's whole read still runs Spark's listing job, one task
-    * per partition directory (7.7–10.8 s on the same fact in-process).
+    * partition column as a string. The first directory on the way down
+    * that holds a file is the leaf: an unpartitioned directory is its own
+    * leaf. Summary files count as files here, so a directory holding one
+    * is a leaf whose files include it. None when no such leaf holds a
+    * file. */
+  private def leaf(fs: FileSystem, d: Path): Option[(Path, Seq[FileStatus])] = {
+    val entries = fs.listStatus(d).toSeq.filter { s =>
+      val name = s.getPath.getName
+      !skipped(name) || summary(name)
+    }
+    val files = entries.filter(_.isFile)
+    if (files.nonEmpty) Some((d, files.sortBy(_.getPath.getName)))
+    else entries.map(_.getPath)
+      .filter(c => c.getName.contains("=") &&
+        !c.getName.endsWith("=" + DEFAULT_PARTITION_NAME))
+      .sortBy(_.getName)(Ordering[String].reverse)
+      .iterator.flatMap(c => leaf(fs, c)).nextOption()
+  }
+
+  /** `reader.parquet(path)` with the data schema of the first of `files`'
+    * footers, so Spark's schema inference, a one-task job per read even
+    * for a single footer, never runs. The footer goes through Spark's own
+    * conversion
+    * ([[org.apache.spark.sql.execution.datasources.parquet.GraftParquetShim]]),
+    * and partition columns are left to Spark, which still infers them from
+    * the directory names. With no file, or with a summary file among them
+    * (Spark reads it first), the read is Spark's own, so it fails or
+    * answers exactly as Spark does. */
+  private def withFooterSchema(spark: SparkSession, reader: DataFrameReader,
+                               path: String, files: Seq[FileStatus]): DataFrame =
+    if (files.isEmpty || files.exists(f => summary(f.getPath.getName)))
+      reader.parquet(path)
+    else {
+      val f = files.head
+      val conf = spark.sparkContext.hadoopConfiguration
+      val footer = new Footer(f.getPath, ParquetFileReader.readFooter(conf, f, NO_FILTER))
+      reader.schema(GraftParquetShim.readSchema(Seq(footer), spark).get).parquet(path)
+    }
+
+  /** The engine's parquet read: Spark's read of `path` with its data
+    * schema taken from ONE footer read on the driver, so opening a table
+    * runs no Spark job. The file is the first in name order of [[leaf]]'s
+    * directory; a directory whose only leaves are default partitions
+    * takes the first data file in path order. Spark's own pick is the first
+    * data file of its listing; this one depends only on names, and it is
+    * the same leaf [[standingSchema]] anchors the schema gate on. A
+    * missing path, a directory with no data file and a directory holding a
+    * summary file are read by Spark itself (same exception, same answer).
+    *
+    * Like Spark's own read, it assumes the data files agree on a schema;
+    * a directory spanning schema versions is read through [[readEvolved]]. */
+  def readParquet(spark: SparkSession, path: String): DataFrame = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val files =
+      try {
+        val st = fs.getFileStatus(p)
+        if (st.isFile) Seq(st)
+        else leaf(fs, p).map(_._2)
+          .getOrElse(dataFiles(fs, p).sortBy(_.getPath.toString))
+      } catch { case _: java.io.FileNotFoundException => Nil }
+    withFooterSchema(spark, spark.read, path, files)
+  }
+
+  /** The standing schema of a parquet directory, if it exists and holds
+    * data — the anchor the [[SchemaEvolution]] gate compares a new batch
+    * against. Read from [[leaf]]'s directory with `basePath` at the table
+    * root, so partition columns keep their names and inferred types, and
+    * its data schema from that leaf's first footer, as [[readParquet]]
+    * does; an unpartitioned directory is its own leaf. One whose only
+    * leaves are default partitions is read whole through [[readParquet]]. The cost is
+    * one directory listing per level down to the leaf, a listing of the
+    * leaf by Spark and one footer read, and no Spark job: on a
+    * 2,405-partition sf0.1 fact, 0.08–0.12 s and 0 jobs, against
+    * 0.73–0.83 s and 1 job (the schema job) for Spark's whole read listed
+    * on the driver, as an in-process [[graft.GraftSession]] lists it
+    * (4-core shared host, load 3–4). A cluster master's whole read still
+    * runs Spark's listing job, one task per partition directory
+    * (7.7–10.8 s on the same fact in-process).
     *
     * Not a mergeSchema sweep: the gate anchors on that leaf's layout; a
     * mixed-schema dir is read back through [[readEvolved]]. */
@@ -187,20 +261,12 @@ object FileFormats {
                                     dir: String): Option[StructType] = {
     val p = new Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def leaf(d: Path): Option[Path] = {
-      val entries = visible(fs, d)
-      if (entries.exists(_.isFile)) Some(d)
-      else entries.map(_.getPath)
-        .filter(c => c.getName.contains("=") &&
-          !c.getName.endsWith("=" + DEFAULT_PARTITION_NAME))
-        .sortBy(_.getName)(Ordering[String].reverse)
-        .iterator.flatMap(c => leaf(c)).nextOption()
-    }
     if (!fs.exists(p)) None
-    else try Some((leaf(p) match {
-      case Some(l) if l != p =>
-        spark.read.option("basePath", dir).parquet(l.toString)
-      case _ => spark.read.parquet(dir)
+    else try Some((leaf(fs, p) match {
+      case Some((l, files)) =>
+        withFooterSchema(spark, spark.read.option("basePath", dir),
+          l.toString, files)
+      case None => readParquet(spark, dir)
     }).schema)
     catch { case _: AnalysisException => None }
   }
@@ -208,7 +274,10 @@ object FileFormats {
   /** Read a standing table that may span schema versions (a widened batch
     * wrote newer files with more columns): `mergeSchema` unions every
     * footer's schema and older files surface the added columns as NULL —
-    * the read half of the [[SchemaEvolution]] contract. */
+    * the read half of the [[SchemaEvolution]] contract. The one engine
+    * read [[readParquet]] does not serve: one footer cannot answer a
+    * union, so Spark's job reads every footer, and merges them in its
+    * listing order. */
   def readEvolved(spark: SparkSession, dir: String): DataFrame =
     spark.read.option("mergeSchema", "true").parquet(dir)
 

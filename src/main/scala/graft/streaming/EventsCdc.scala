@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 import graft.olap.StarSchema
+import graft.sources.FileFormats
 
 /** Structured-Streaming CDC pipeline — the streaming form of the reference's
   * LISTEN/NOTIFY worker (worker_sync.py:42-108): a change stream of events is
@@ -118,7 +119,7 @@ object EventsCdc {
     val prior = stateVersions(spark, stateDir).filter(_ < batchId)
     val state =
       if (prior.isEmpty) None
-      else Some(spark.read.parquet(s"$stateDir/v=${prior.max}"))
+      else Some(FileFormats.readParquet(spark, s"$stateDir/v=${prior.max}"))
     merge(state).write.mode("overwrite").parquet(s"$stateDir/v=$batchId")
     sweepVersions(spark, stateDir, prior)
   }
@@ -206,7 +207,7 @@ object EventsCdc {
         val prev = s"${stateTable}_v${versions.max}"
         val state =
           if (spark.catalog.tableExists(prev)) spark.table(prev)
-          else spark.read.parquet(s"$statePath/v=${versions.max}")
+          else FileFormats.readParquet(spark, s"$statePath/v=${versions.max}")
         mergeStepCoLocated(state, batch, keys)
       }
     merged.write.mode("overwrite")
@@ -583,7 +584,7 @@ object EventsCdc {
         StarSchema.scd2History(batch, keys, col(tsUsCol),
           Seq(col(tsUsCol), col(tieCol)))
       case vs =>
-        scd2MergeOpen(spark.read.parquet(s"$stateDir/open/v=${vs.max}"),
+        scd2MergeOpen(FileFormats.readParquet(spark, s"$stateDir/open/v=${vs.max}"),
           batch, keys, tsUsCol, tieCol)
     }
     // two actions split the merge result (closed slice, open slice), each
@@ -606,7 +607,7 @@ object EventsCdc {
   def scd2SplitState(spark: SparkSession, stateDir: String): DataFrame = {
     val versions = stateVersions(spark, s"$stateDir/open")
     require(versions.nonEmpty, s"no open state under $stateDir/open")
-    val open = spark.read.parquet(s"$stateDir/open/v=${versions.max}")
+    val open = FileFormats.readParquet(spark, s"$stateDir/open/v=${versions.max}")
     val closedPath = new org.apache.hadoop.fs.Path(s"$stateDir/closed")
     val fs = closedPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(closedPath)) open
@@ -614,9 +615,7 @@ object EventsCdc {
     // versions (a widened batch wrote newer files with more columns) —
     // older closed rows surface the added columns as NULL, per the
     // SchemaEvolution contract
-    else spark.read.option("basePath", s"$stateDir/closed")
-      .option("mergeSchema", "true")
-      .parquet(s"$stateDir/closed").drop("batch")
+    else FileFormats.readEvolved(spark, s"$stateDir/closed").drop("batch")
       .unionByName(open, allowMissingColumns = true)
   }
 

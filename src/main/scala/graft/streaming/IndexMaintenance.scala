@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import graft.sources.FileFormats
 
 /** Streaming maintenance of the standing ANN index — the arrival path of
   * the IVF lifecycle ([[graft.ops.Ivf.refreshIndex]]) as a continuous
@@ -100,7 +101,7 @@ object IndexMaintenance {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val old = spark.read.parquet(corpusDir)
+        val old = FileFormats.readParquet(spark, corpusDir)
         StateSink.appendIdempotent(
           graft.ops.Dedup.incrementalSpanScreen(spark, indexDir, old, batch,
             minLen, k, w, maxDf),
@@ -316,7 +317,7 @@ object IndexMaintenance {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val old = spark.read.parquet(corpusDir)
+        val old = FileFormats.readParquet(spark, corpusDir)
         StateSink.appendIdempotent(
           graft.ops.Dedup
             .incrementalMinhash(spark, indexDir, old, batch,

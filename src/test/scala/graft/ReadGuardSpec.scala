@@ -1,0 +1,64 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Every engine parquet read goes through `FileFormats.readParquet`, which
+  * takes the data schema from one footer on the driver. A bare
+  * `spark.read.parquet(..)` (or one with options) elsewhere would bring
+  * back Spark's schema-inference job on every open; this scan of the
+  * engine's sources keeps it from coming back. Inside `FileFormats` only
+  * `readEvolved`'s merge-schema read is a bare read. */
+class ReadGuardSpec extends AnyFunSuite {
+
+  /** `read` then any `.option(..)` calls then `.parquet(` or a parquet
+    * `.format(..)`, across line breaks. */
+  private val BareRead =
+    """\bread\s*(?:\.\s*options?\s*\((?:[^()]|\([^()]*\))*\)\s*)*\.\s*(?:parquet\s*\(|format\s*\(\s*"parquet"\s*\))""".r
+
+  private def sources(root: Path): Seq[Path] = {
+    val s = Files.walk(root)
+    try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+    finally s.close()
+  }
+
+  private def bareReads(file: Path): Seq[String] = {
+    val text = new String(Files.readAllBytes(file), "UTF-8")
+    BareRead.findAllMatchIn(text).map { m =>
+      val line = text.substring(0, m.start).count(_ == '\n') + 1
+      s"$file:$line: ${m.matched.replaceAll("\\s+", " ")}"
+    }.toList
+  }
+
+  test("no parquet read outside FileFormats infers its schema with a Spark job") {
+    val root = Paths.get("src/main/scala")
+    val all = sources(root)
+    assert(all.size > 50, s"found only ${all.size} sources under $root")
+    val (own, rest) = all.partition(_.endsWith(Paths.get("graft/sources/FileFormats.scala")))
+    assert(own.size === 1)
+    val outside = rest.flatMap(bareReads)
+    assert(outside.isEmpty,
+      "route these through FileFormats.readParquet:\n" + outside.mkString("\n"))
+    val inside = bareReads(own.head)
+    assert(inside.size === 1 && inside.head.contains("mergeSchema"),
+      "FileFormats' only bare read is readEvolved's:\n" + inside.mkString("\n"))
+  }
+
+  test("the scan sees every form of a bare read") {
+    val forms = Seq(
+      "spark.read.parquet(dir)",
+      "s.read.parquet(s\"$dir/v=1\")",
+      "spark.read.option(\"basePath\", dir).parquet(leaf)",
+      "spark.read\n  .option(\"a\", f(x))\n  .option(\"b\", \"c\")\n  .parquet(dir)",
+      "spark.read.format(\"parquet\").load(dir)")
+    forms.foreach(f => assert(BareRead.findFirstIn(f).nonEmpty, f))
+    val allowed = Seq(
+      "spark.read.schema(s).parquet(dir)",
+      "spark.readStream.schema(s).parquet(dir)",
+      "df.write.mode(\"overwrite\").parquet(dir)",
+      "spark.read.format(\"jdbc\").load()",
+      "FileFormats.readParquet(spark, dir)")
+    allowed.foreach(f => assert(BareRead.findFirstIn(f).isEmpty, f))
+  }
+}

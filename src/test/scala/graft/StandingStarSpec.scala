@@ -97,20 +97,111 @@ class StandingStarSpec extends SparkSpec {
     agrees(s"$base/nulls")
 
     // 60 partitions, above the 32-path threshold of Spark's distributed
-    // partition listing; an in-process session lists them on the driver,
-    // so a whole read runs only the one-task schema job, as the leaf read
-    // does
+    // partition listing; the leaf read lists one leaf and takes its data
+    // schema from one footer, so it runs no Spark job at all (Spark's own
+    // whole read runs its one-task schema job, pinned below)
     val cut = lines.select($"date_key").distinct().orderBy($"date_key")
       .limit(60).collect().last.get(0)
     FileFormats.writeFact(lines.filter($"date_key" <= cut), s"$base/sixty")
     assert(partitionDirs(s"$base/sixty").size === 60)
     val jobs = jobsDuring(FileFormats.standingSchema(spark, s"$base/sixty"))
-    assert(jobs <= 1, s"standingSchema ran $jobs Spark jobs on 60 partitions")
+    assert(jobs === 0, s"standingSchema ran $jobs Spark jobs on 60 partitions")
     agrees(s"$base/sixty")
 
     assert(FileFormats.standingSchema(spark, s"$base/missing") === None)
     assert(new java.io.File(s"$base/empty").mkdirs())
     assert(FileFormats.standingSchema(spark, s"$base/empty") === None)
+  }
+
+  test("readParquet answers Spark's schema from one footer: tables, layouts, stray names, nested types") {
+    def agrees(path: String): Unit =
+      assert(FileFormats.readParquet(spark, path).schema ===
+        spark.read.parquet(path).schema, path)
+    // every test table; events' TIMESTAMP(NANOS) under the session's nanosAsLong
+    assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") === "true")
+    Tables.all.foreach(t => agrees(s"$sf/$t.parquet"))
+
+    val base = Scratch.dir("graft_read_parquet")
+    FileFormats.writeFact(lines, s"$base/day")
+    FileFormats.writeFact(lines, s"$base/month", granularity = "month")
+    FileFormats.writeRangeSorted(lines, s"$base/flat", "l_orderkey", 4)
+    assert(new java.io.File(s"$base/flat").list().count(_.endsWith(".parquet")) === 4)
+    FileFormats.writeFact(
+      lines.withColumn("date_key", when($"l_linenumber" =!= 1, $"date_key")),
+      s"$base/nulls")
+    FileFormats.writeFact(lines.withColumn("date_key", lit(null).cast(DateType)),
+      s"$base/only_nulls")
+    assert(partitionDirs(s"$base/only_nulls") === Seq("date_key=__HIVE_DEFAULT_PARTITION__"))
+    Seq("day", "month", "flat", "nulls", "only_nulls").foreach(d => agrees(s"$base/$d"))
+
+    // a different-schema parquet file planted under every name a read
+    // skips: picking any of them would change the schema
+    val stray = s"$base/stray_src"
+    spark.range(3).toDF("stray").write.parquet(stray)
+    val strayFile = firstDataFile(stray)
+    val day = s"$base/day"
+    val leaf = firstDataFile(day).getParent
+    def plant(target: Path): Unit = {
+      Files.createDirectories(target.getParent)
+      Files.copy(strayFile, target, StandardCopyOption.REPLACE_EXISTING)
+    }
+    plant(Paths.get(day, "_SUCCESS"))
+    plant(Paths.get(day, "_temporary", "0", "_temporary", "attempt_0", "part-0.parquet"))
+    plant(Paths.get(day, ".part-0.parquet.crc"))
+    plant(Paths.get(day, ".hidden"))
+    plant(Paths.get(day, "part-0.parquet._COPYING_"))
+    plant(leaf.resolve(".part-9.parquet.crc"))
+    plant(leaf.resolve("a-part.parquet._COPYING_"))
+    agrees(day)
+    assert(!FileFormats.readParquet(spark, day).columns.contains("stray"))
+
+    // a summary file is Spark's schema source; the read defers to Spark
+    val summarized = s"$base/summarized"
+    FileFormats.writeRangeSorted(lines, summarized, "l_orderkey", 2)
+    Files.copy(strayFile, Paths.get(summarized, "_common_metadata"))
+    agrees(summarized)
+
+    // Spark-written nested, map and timestamp_ntz columns: the footer's
+    // Spark row metadata carries them
+    val nested = s"$base/nested"
+    spark.range(5).select(
+      $"id",
+      struct($"id".as("a"), array(struct(($"id" * 2).as("b"))).as("xs")).as("s"),
+      map($"id".cast("string"), $"id".cast("double")).as("m"),
+      expr("make_timestamp_ntz(2024, 1, 1 + cast(id as int), 12, 30, 45.5)").as("ntz"),
+      expr("cast(id as decimal(12, 3))").as("d")
+    ).write.parquet(nested)
+    agrees(nested)
+    assert(FileFormats.readParquet(spark, nested).schema("ntz").dataType ===
+      org.apache.spark.sql.types.TimestampNTZType)
+    assert(FileFormats.readParquet(spark, nested).collect().toSeq ===
+      spark.read.parquet(nested).collect().toSeq)
+
+    // no data to read: the same exception as Spark's read
+    assert(new java.io.File(s"$base/empty").mkdirs())
+    assert(new java.io.File(s"$base/marker_only").mkdirs())
+    assert(new java.io.File(s"$base/marker_only/_SUCCESS").createNewFile())
+    Seq("missing", "empty", "marker_only").foreach { d =>
+      val spark0 = intercept[Exception](spark.read.parquet(s"$base/$d").schema)
+      val ours = intercept[Exception](FileFormats.readParquet(spark, s"$base/$d").schema)
+      assert(ours.getClass === spark0.getClass, d)
+      assert(ours.isInstanceOf[AnalysisException], d)
+    }
+  }
+
+  test("engine reads open a table, the standing schema and a CDC state version without a Spark job") {
+    assert(jobsDuring(Tables.orders(spark, sf).schema) === 0,
+      "Tables.orders must open from one footer")
+    assert(jobsDuring(Tables.events(spark, sf).schema) === 0,
+      "Tables.events' type dispatch must open from one footer")
+    // Spark's own read of the same table runs its schema-inference job
+    assert(jobsDuring(spark.read.parquet(s"$sf/orders.parquet").schema) === 1)
+
+    val state = Scratch.dir("graft_state_read")
+    val batch = Tables.events(spark, sf).limit(50)
+    graft.streaming.EventsCdc.scd1MergeBatch(spark, state, Seq("user_id"))(batch, 1)
+    assert(jobsDuring(FileFormats.readParquet(spark, s"$state/v=1").schema) === 0,
+      "a versioned state read must open from one footer")
   }
 
   test("an in-process session opens a many-partition table without a listing job, listing afresh on every read") {
