@@ -151,23 +151,10 @@ object Bench {
           standing, all.filter(col("doc_id") % 25 === 0))
       }
     },
-    // the SCD2 sink decision, measured: SAME 6-batch in-order change-log
-    // maintenance through the full-state-rewrite sink (every batch
-    // rewrites closed history too) vs the split sink (closed appends
-    // once, open rewrites). Fresh state dirs per invocation — cold and
-    // warm both pay all 6 merges, so the pair isolates the SINK cost,
-    // and the gap grows with history depth (here 6 batches; a year of
-    // batches at 100 TB makes the rewrite sink unrunnable)
-    "scd2_sink_full_rewrite" -> ((s, d) => {
-      val dir = graft.sources.Scratch.dir("graft_scd2_fr_bench")
-      val (batches, release) = scd2Batches(s, d)
-      try batches.zipWithIndex.foreach { case (b, i) =>
-        graft.streaming.EventsCdc.scd2MergeBatch(s, dir,
-          Seq("user_id"))(b, i.toLong)
-      } finally release()
-      val last = graft.streaming.EventsCdc.stateVersions(s, dir).max
-      FileFormats.readParquet(s, s"$dir/v=$last")
-    }),
+    // the SCD2 sink, measured: 6-batch in-order change-log maintenance
+    // through the split sink (closed rows append once, the open rows
+    // rewrite). A fresh state dir per invocation — cold and warm both pay
+    // all 6 merges, so the entry times the sink over a growing history
     "scd2_sink_split" -> ((s, d) => {
       val dir = graft.sources.Scratch.dir("graft_scd2_sp_bench")
       val (batches, release) = scd2Batches(s, d)
@@ -461,7 +448,7 @@ object Bench {
       .drop("__r")
   }
 
-  /** The 6 in-order micro-batches both SCD2 sink bench entries replay,
+  /** The 6 in-order micro-batches the SCD2 sink bench entry replays,
     * plus the release handle the entry calls after the replay.
     *
     * The split frame is persisted LOCALLY and scoped to the entry — the

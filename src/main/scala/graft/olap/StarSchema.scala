@@ -21,8 +21,7 @@ object StarSchema {
   /** SCD Type-1 "last write wins": keep the newest row per natural key.
     * Set-oriented equivalent of the reference's `ON CONFLICT DO UPDATE`
     * upsert loop (sync_oltp_to_olap.py:54-93, 174-191). One shuffle on the
-    * key; at scale a pre-bucketed state table turns this into a co-located
-    * merge.
+    * key.
     *
     * @param order descending-priority ordering (newest first), e.g.
     *              `Seq(col("ts").desc, col("event_id").desc)`
@@ -44,9 +43,9 @@ object StarSchema {
     * (`valid_from_us <= t AND (valid_to_us IS NULL OR t < valid_to_us)`).
     *
     * One key-partitioned shuffle carries the whole computation (the lead
-    * and the ordinal ride the same sorted window); at scale the state
-    * lives in the bucketed sink like the SCD1 state, making the per-batch
-    * append a co-located merge.
+    * and the ordinal ride the same sorted window). The streaming sink
+    * ([[graft.streaming.EventsCdc.scd2MergeBatchSplit]]) runs it over each
+    * batch alone and rewrites only the open rows.
     *
     * @param tsUs  epoch-microsecond change-time column (long — engine-exact)
     * @param order full tiebroken ascending order, e.g.

@@ -66,33 +66,23 @@ object StarSchemaJob {
     * the reference (FK targets exist before the fact lands). The dim writes
     * are independent Spark jobs, so they are submitted concurrently
     * (driver threads; the scheduler interleaves their stages across the
-    * cluster instead of running seven small jobs back-to-back).
-    *
-    * `largeDims` declares the size tier per dim (name → join key): a dim
-    * listed there is NOT broadcastable-small (the 100 TB deployment's
-    * customer dim mirrors a billions-of-rows OLTP table), so it is written
-    * through the bucketed sink on its join key — multi-file, and
-    * join-co-located with any fact copy bucketed the same way (SMJ with
-    * zero exchanges; SourcesSpec asserts the plan) — instead of the
-    * single-file broadcast posture.
+    * cluster instead of running seven small jobs back-to-back). Every
+    * table is a plain parquet directory: every dimension goes through the
+    * one-file [[FileFormats.writeDim]] sink and the fact through
+    * [[FileFormats.writeFact]], and nothing is registered in the session
+    * catalog.
     *
     * `factGranularity` passes through to [[FileFormats.writeFact]]: `"day"`
     * (default) is the 100 TB layout; `"month"` is the documented
     * small-scale layout (see writeFact's scaladoc for the crossover). */
   def run(spark: SparkSession, srcDir: String, outDir: String,
-          largeDims: Map[String, String] = Map.empty,
-          buckets: Int = 32,
           factGranularity: String = "day"): Star = {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
     implicit val ec: ExecutionContext = ExecutionContext.global
     val star = build(spark, srcDir)
     val dimWrites = star.dims.toSeq.map { case (name, df) =>
-      Future(largeDims.get(name) match {
-        case Some(key) =>
-          FileFormats.writeBucketed(df, s"star_$name", s"$outDir/$name", key, buckets)
-        case None => FileFormats.writeDim(df, s"$outDir/$name")
-      })
+      Future(FileFormats.writeDim(df, s"$outDir/$name"))
     }
     Await.result(Future.sequence(dimWrites), Duration.Inf)
     FileFormats.writeFact(star.factSales, s"$outDir/fact_sales",

@@ -361,13 +361,7 @@ object FileFormats {
   }
 
   /** Dimension sink: one file. A dimension broadcasts at read time, and a
-    * single footer beats a thousand tiny files. A dimension too large for
-    * that posture (one that mirrors an OLTP giant: a 100 TB deployment's
-    * customer dim is billions of rows) does not come through here:
-    * [[graft.olap.StarSchemaJob.run]]'s `largeDims` sends it through
-    * [[writeBucketed]] on its join key, multi-file and co-located with any
-    * fact bucketed the same way, so the recurring fact⋈dim join runs as a
-    * zero-Exchange sort-merge join. */
+    * single footer beats a thousand tiny files. */
   def writeDim(dim: DataFrame, outDir: String): Unit = {
     // same evolution gate as writeFact: widened dim rewrites fine,
     // narrowed/retyped refuses before the standing copy is destroyed
@@ -463,86 +457,4 @@ object FileFormats {
       .sortWithinPartitions(z)
       .write.mode("overwrite").parquet(outDir)
   }
-
-  /** Bucket-preserving compaction — [[compact]]'s coalesce rewrite is
-    * WRONG for a bucketed table: it would flatten the per-bucket files
-    * into arbitrary ones and drop the metastore bucket spec, silently
-    * costing every downstream join its zero-Exchange property. A bucketed
-    * table accretes files per (writer task × bucket) — recurring merges
-    * ([[graft.streaming.EventsCdc.scd1MergeBatchBucketed]]) multiply them
-    * — so compaction here means: ONE file per bucket, same bucket spec.
-    *
-    * The bucket spec is read from the metastore (never trusted from the
-    * caller — a mismatched respec would silently break co-location), and
-    * the data is repartitioned on the EXPLICIT bucket-id expression
-    * `pmod(hash(keys), n)` — the exact murmur3-pmod the datasource bucket
-    * writer computes. Repartitioning on the raw keys is NOT safe here:
-    * the source of a compaction is by definition a bucketed table, its
-    * scan already reports `hashpartitioning(keys, n)`, and the planner is
-    * entitled to elide or rewire a shuffle it deems redundant — observed
-    * on Spark 4.1 as a plain multi-file-per-task scan feeding the writer
-    * directly (one file per task × bucket, the accretion this function
-    * exists to undo). Keying the shuffle on the derived bucket-id
-    * expression is never partitioning-equivalent to the scan, so the
-    * exchange survives, and every distinct bucket id lands wholly inside
-    * one task — the bucketed writer then emits exactly one file per
-    * bucket (a task holding two ids emits two files; totals still = n).
-    * The rewrite is registered at `outTable`/`outPath` with the SAME
-    * bucketBy/sortBy; the swap (metastore repoint / rename) stays the
-    * caller's, as with [[compact]]. A post-write file-count assert fails
-    * loudly if a future planner change breaks the invariant again.
-    * SourcesSpec asserts the post-compaction join still plans no
-    * Exchange.
-    *
-    * @return number of buckets (= output file count) */
-  def compactBucketed(spark: SparkSession, tableName: String,
-                      outTable: String, outPath: String): Int = {
-    val meta = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(tableName))
-    val spec = meta.bucketSpec.getOrElse(throw new IllegalArgumentException(
-      s"$tableName has no bucket spec — use compact() for plain directories"))
-    val keys = spec.bucketColumnNames
-    val sorts = spec.sortColumnNames
-    val n = spec.numBuckets
-    val bucketId = pmod(hash(keys.map(col): _*), lit(n))
-    val writer = spark.table(tableName)
-      .repartition(n, bucketId)
-      .write.mode("overwrite")
-      .option("path", outPath)
-      .format("parquet")
-      .bucketBy(n, keys.head, keys.tail: _*)
-    (if (sorts.nonEmpty) writer.sortBy(sorts.head, sorts.tail: _*) else writer)
-      .saveAsTable(outTable)
-    // the invariant is one file per NON-EMPTY bucket (a bucket the hash
-    // never maps a row to legitimately has no file), checked from the
-    // bucket-id suffix the datasource writer embeds in every file name;
-    // Hadoop FS listing so the check works on cluster filesystems too
-    val p = new org.apache.hadoop.fs.Path(outPath)
-    val names = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .listStatus(p).map(_.getPath.getName).filter(_.endsWith(".parquet"))
-    val bucketIds = names.flatMap("_(\\d{5})\\.".r.findFirstMatchIn(_).map(_.group(1)))
-    require(names.length == bucketIds.distinct.length && names.length <= n,
-      s"compactBucketed invariant broken: ${names.length} files over " +
-        s"${bucketIds.distinct.length} distinct bucket ids (spec: $n buckets) " +
-        s"at $outPath — planner no longer preserves the bucket-id shuffle")
-    n
-  }
-
-  /** Bucketed sink for recurring equi-joins: two tables written with the
-    * SAME bucket count on their join keys are join-co-located — Spark
-    * plans the sort-merge join with NO Exchange on either side (bucket i
-    * only ever meets bucket i). This is the 100 TB layout for the SCD1
-    * state table and any fact⋈fact recurring join: the shuffle is paid
-    * ONCE at write time, then every subsequent merge/join/groupBy on the
-    * bucket key is shuffle-free. `sortBy` pre-sorts within buckets so the
-    * merge phase needs no sort either. Registered as an EXTERNAL table
-    * (data lives at `path`); SourcesSpec proves the exchange-free plan. */
-  def writeBucketed(df: DataFrame, tableName: String, path: String,
-                    key: String, buckets: Int): Unit =
-    df.write.mode("overwrite")
-      .option("path", path)
-      .format("parquet")
-      .bucketBy(buckets, key)
-      .sortBy(key)
-      .saveAsTable(tableName)
 }

@@ -97,32 +97,16 @@ object EventsCdc {
     * one. A replay of batch N (the engine re-delivers only the last batch)
     * merges into that prior version; were it gone, the replay would
     * rebuild state from the batch alone and silently drop every key the
-    * batch does not touch. Nothing reads an older version. `drop` releases
-    * a version's catalog table (bucketed sink) before its directory goes.
-    * An empty micro-batch (a watermark's no-data batch) changes no state:
-    * every sink returns before writing or sweeping (`isEmpty`, a `limit(1)`
+    * batch does not touch. Nothing reads an older version. An empty
+    * micro-batch (a watermark's no-data batch) changes no state: every
+    * sink returns before writing or sweeping (`isEmpty`, a `limit(1)`
     * take), so the newest version stays the next batch's input. */
-  private def sweepVersions(spark: SparkSession, dir: String, prior: Seq[Long],
-                            drop: Long => Unit = _ => ()): Unit =
+  private def sweepVersions(spark: SparkSession, dir: String,
+                            prior: Seq[Long]): Unit =
     prior.sorted.dropRight(1).foreach { v =>
-      drop(v)
       val p = new org.apache.hadoop.fs.Path(s"$dir/v=$v")
       p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
     }
-
-  /** [[scd1MergeBatch]] and [[scd2MergeBatch]]'s one body: `v=N` is
-    * `merge` of the newest version below N (None at first), then swept. */
-  private def mergeVersioned(spark: SparkSession, stateDir: String,
-                             batch: DataFrame, batchId: Long)
-                            (merge: Option[DataFrame] => DataFrame): Unit = {
-    if (batch.isEmpty) return
-    val prior = stateVersions(spark, stateDir).filter(_ < batchId)
-    val state =
-      if (prior.isEmpty) None
-      else Some(FileFormats.readParquet(spark, s"$stateDir/v=${prior.max}"))
-    merge(state).write.mode("overwrite").parquet(s"$stateDir/v=$batchId")
-    sweepVersions(spark, stateDir, prior)
-  }
 
   /** foreachBatch SCD1 merge into a versioned parquet state directory:
     * batch N writes `v=N` from `v=N-1 ∪ batch` (last-write-wins per key).
@@ -133,8 +117,16 @@ object EventsCdc {
     * (A transactional table format would replace the versioning in a real
     * deployment; the merge semantics are the deliverable here.) */
   def scd1MergeBatch(spark: SparkSession, stateDir: String, keys: Seq[String])
-                    (batch: DataFrame, batchId: Long): Unit =
-    mergeVersioned(spark, stateDir, batch, batchId)(mergeStep(_, batch, keys))
+                    (batch: DataFrame, batchId: Long): Unit = {
+    if (batch.isEmpty) return
+    val prior = stateVersions(spark, stateDir).filter(_ < batchId)
+    val state =
+      if (prior.isEmpty) None
+      else Some(FileFormats.readParquet(spark, s"$stateDir/v=${prior.max}"))
+    mergeStep(state, batch, keys)
+      .write.mode("overwrite").parquet(s"$stateDir/v=$batchId")
+    sweepVersions(spark, stateDir, prior)
+  }
 
   /** Launch the CDC pipeline: change stream → SCD1 state maintenance. */
   def runScd1(spark: SparkSession, events: DataFrame, stateDir: String,
@@ -145,98 +137,6 @@ object EventsCdc {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch(scd1MergeBatch(spark, stateDir, keys) _)
-      .start()
-
-  /** SCD1 merge as a full-outer join pick — the CO-LOCATED form of
-    * [[mergeStep]] for a bucketed state table. [[mergeStep]] unions the
-    * state with the batch and re-windows, which hash-shuffles the FULL
-    * state every micro-batch; at 100 TB the state dwarfs every batch, so
-    * that recurring shuffle IS the pipeline's cost. Here the state never
-    * moves: with state bucketed on `keys`
-    * ([[graft.sources.FileFormats.writeBucketed]]), the full-outer
-    * sort-merge join plans NO Exchange on the state side — only the small
-    * batch shuffles to the bucket layout. Per key, the newer of (state row,
-    * newest batch row) wins under the same (`tsCol` desc, `tieCol` desc)
-    * order as [[mergeStep]]; tombstones survive like any other row.
-    * Assumes `tsCol` is non-null on arriving rows (event streams carry an
-    * event time) and state holds one row per key (the SCD1 invariant). */
-  def mergeStepCoLocated(state: DataFrame, batch: DataFrame, keys: Seq[String],
-                         tsCol: String = "ts",
-                         tieCol: String = "event_id"): DataFrame = {
-    // evolution gate + widen (SchemaEvolution contract): a widened batch
-    // is admitted — the standing side gains the new columns as NULL via a
-    // PROJECTION over the bucketed scan, which preserves its output
-    // partitioning, so the merge stays exchange-free on the state side; a
-    // narrowed/retyped batch refuses loudly here, before any write
-    val added = graft.sources.SchemaEvolution
-      .requireEvolvable(state.schema, batch.schema, "SCD1 co-located merge")
-    val st = graft.sources.SchemaEvolution.widen(state, batch.schema)
-    val nonKeys = state.columns.toSeq.filterNot(keys.contains) ++
-      added.map(_.name)
-    val batchLatest = StarSchema
-      .scd1Latest(batch, keys, Seq(col(tsCol).desc, col(tieCol).desc))
-      .select(keys.map(col) ++ nonKeys.map(c => col(c).as(s"__b_$c")): _*)
-    val takeBatch = col(s"__b_$tsCol").isNotNull &&
-      (col(tsCol).isNull || col(s"__b_$tsCol") > col(tsCol) ||
-       (col(s"__b_$tsCol") === col(tsCol) && col(s"__b_$tieCol") >= col(tieCol)))
-    st.join(batchLatest, keys, "full_outer")
-      .select(keys.map(col) ++ nonKeys.map(c =>
-        when(takeBatch, col(s"__b_$c")).otherwise(col(c)).as(c)): _*)
-  }
-
-  /** foreachBatch SCD1 merge over versioned BUCKETED state — the sink
-    * SURVEY §4 promises: batch N reads external table `${table}_v${N-1}`
-    * (bucketed + sorted on `keys` at `$statePath/v=${N-1}`) and writes
-    * `${table}_v$N` through the bucketed sink, so every merge's expensive
-    * side is exchange-free and the bucket layout is paid once per version
-    * write, never re-derived at read time. Overwrite keeps replays
-    * idempotent exactly as [[scd1MergeBatch]], with the same retention
-    * ([[sweepVersions]]; swept versions' tables are dropped too). */
-  def scd1MergeBatchBucketed(spark: SparkSession, stateTable: String,
-                             statePath: String, keys: Seq[String],
-                             buckets: Int)
-                            (batch: DataFrame, batchId: Long): Unit = {
-    if (batch.isEmpty) return
-    val versions = stateVersions(spark, statePath).filter(_ < batchId)
-    val merged =
-      if (versions.isEmpty) mergeStep(None, batch, keys)
-      else {
-        // catalog miss (fresh session over surviving state dirs): fall back
-        // to the plain parquet read — correct, just not exchange-free for
-        // this one batch; the version written below restores the layout
-        val prev = s"${stateTable}_v${versions.max}"
-        val state =
-          if (spark.catalog.tableExists(prev)) spark.table(prev)
-          else FileFormats.readParquet(spark, s"$statePath/v=${versions.max}")
-        mergeStepCoLocated(state, batch, keys)
-      }
-    merged.write.mode("overwrite")
-      .option("path", s"$statePath/v=$batchId")
-      .format("parquet")
-      .bucketBy(buckets, keys.head, keys.tail: _*)
-      .sortBy(keys.head, keys.tail: _*)
-      .saveAsTable(s"${stateTable}_v$batchId")
-    sweepVersions(spark, statePath, versions,
-      v => spark.sql(s"DROP TABLE IF EXISTS ${stateTable}_v$v"))
-  }
-
-  /** [[runWorker]] with the bucketed state sink: the full worker loop whose
-    * per-batch merge never shuffles the state side. */
-  def runWorkerBucketed(spark: SparkSession, srcDir: String,
-                        schemaFrom: DataFrame, stateTable: String,
-                        statePath: String, checkpointDir: String,
-                        keys: Seq[String] = Seq("user_id"), buckets: Int = 32,
-                        dedupDelay: String = "2 hours",
-                        maxFilesPerTrigger: Int = 0,
-                        trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    dedupStream(readEventStream(spark, srcDir, schemaFrom, maxFilesPerTrigger),
-                dedupDelay)
-      .writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch(
-        scd1MergeBatchBucketed(spark, stateTable, statePath, keys, buckets) _)
       .start()
 
   /** One micro-batch of the JDBC worker: reduce the batch to its newest
@@ -461,50 +361,26 @@ object EventsCdc {
     graft.sources.SchemaEvolution.widen(state, batch.schema)
   }
 
-  /** One SCD2 merge step — the streaming application of
-    * [[graft.olap.StarSchema.scd2History]]'s contract: the state's CLOSED
-    * interval rows pass through UNTOUCHED (history is immutable — at scale
-    * this slice is an append-only table that never rewrites); each key's
-    * OPEN row is closed at its first batch change (`valid_to_us` = the
-    * change's timestamp, `is_current` = false); the batch's own changes
-    * become the key's next versions (ordinals continue from the open
-    * row's), the last one per key open/current. A DELETE is a change row
-    * like any other — the tombstone version becomes current, ending the
-    * interval; point-in-time lookups before the delete still resolve and
-    * the live view excludes the key (no resurrection).
+  /** The open-side merge of one batch — the streaming application of
+    * [[graft.olap.StarSchema.scd2History]]'s contract, touching ONLY the
+    * standing open rows and the batch: closed history never enters the
+    * plan. Each key's OPEN row is closed at its first batch change
+    * (`valid_to_us` = the change's timestamp, `is_current` = false); the
+    * batch's own changes become the key's next versions (ordinals
+    * continue from the open row's), the last one per key open/current. A
+    * DELETE is a change row like any other — the tombstone version
+    * becomes current, ending the interval; point-in-time lookups before
+    * the delete still resolve and the live view excludes the key (no
+    * resurrection). Returns the touched keys' full new version runs.
     *
-    * Work per batch is batch-sized plus the touched keys' open rows —
-    * never closed history. Assumes IN-ORDER batches (every change in
-    * batch N is `(tsUs, tie)`-after the state's open row for its key —
-    * the CDC worker contract; [[dedupStream]] upstream absorbs
-    * redelivery). With in-order batches the result is IDENTICAL to
-    * running scd2History over the concatenated change log (spec-pinned).
-    */
-  def scd2MergeStep(state: Option[DataFrame], batch: DataFrame,
-                    keys: Seq[String], tsUsCol: String = "ts_us",
-                    tieCol: String = "event_id"): DataFrame = {
-    state match {
-      case None => StarSchema.scd2History(batch, keys, col(tsUsCol),
-        Seq(col(tsUsCol), col(tieCol)))
-      case Some(st0) =>
-        val st = scd2Evolve(st0, batch)
-        st.filter(!col("is_current")).unionByName(
-          scd2MergeOpen(st.filter(col("is_current")), batch,
-            keys, tsUsCol, tieCol))
-    }
-  }
-
-  /** The open-side algebra of [[scd2MergeStep]], touching ONLY the open
-    * rows and the batch — the closed slice never enters the plan. Returns
-    * the touched keys' full new version runs: previously-open rows now
-    * closed at their key's first batch change, plus the batch's own
-    * versions (ordinals continued), last one per key current. */
+    * Assumes IN-ORDER batches (every change in batch N is `(tsUs, tie)`-
+    * after the state's open row for its key — the CDC worker contract;
+    * [[dedupStream]] upstream absorbs redelivery). With in-order batches
+    * the assembled state is IDENTICAL to running scd2History over the
+    * concatenated change log (spec-pinned). */
   private def scd2MergeOpen(open0: DataFrame, batch: DataFrame,
                             keys: Seq[String], tsUsCol: String,
                             tieCol: String): DataFrame = {
-    // gate + widen here as well: the split sink calls this directly with
-    // the open slice read from disk (idempotent when the caller already
-    // widened — widen of a covered schema is the identity)
     val open = scd2Evolve(open0, batch)
     val batchHist = StarSchema.scd2History(batch, keys, col(tsUsCol),
       Seq(col(tsUsCol), col(tieCol)))
@@ -524,40 +400,10 @@ object EventsCdc {
     openMerged.unionByName(shifted)
   }
 
-  /** foreachBatch SCD2 merge into a versioned parquet state directory —
-    * the SCD2 twin of [[scd1MergeBatch]]: batch N writes `v=N` from
-    * `v=N-1` merged with the batch; overwrite keeps replays idempotent
-    * (re-running batch N rewrites identical content) and
-    * [[sweepVersions]] keeps only `v=N` and its input. The versioned
-    * full-state write is the sandbox stand-in for a transactional table;
-    * the merge itself never reads or shuffles more than the batch and the
-    * open rows, so the real deployment swaps the sink, not the logic. */
-  def scd2MergeBatch(spark: SparkSession, stateDir: String, keys: Seq[String],
-                     tsUsCol: String = "ts_us", tieCol: String = "event_id")
-                    (batch: DataFrame, batchId: Long): Unit =
-    mergeVersioned(spark, stateDir, batch, batchId)(
-      scd2MergeStep(_, batch, keys, tsUsCol, tieCol))
-
-  /** Launch the continuous SCD2 pipeline: change stream → versioned SCD2
-    * history maintenance — the reference worker's apply loop with type-2
-    * history instead of last-write-wins. */
-  def runScd2(spark: SparkSession, changes: DataFrame, stateDir: String,
-              checkpointDir: String, keys: Seq[String] = Seq("user_id"),
-              tsUsCol: String = "ts_us", tieCol: String = "event_id",
-              trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    changes.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch(scd2MergeBatch(spark, stateDir, keys, tsUsCol, tieCol) _)
-      .start()
-
-  /** Split-state SCD2 merge — the sink whose write cost matches
-    * [[scd2MergeStep]]'s read cost. [[scd2MergeBatch]] rewrites the ENTIRE
-    * versioned state (closed history included) every batch, so at scale
-    * the immutable slice — which only ever GROWS — dominates every write.
-    * Here the storage honors the scaladoc's own claim that closed history
-    * is append-only:
+  /** foreachBatch SCD2 merge into a split closed/open state directory —
+    * the SCD2 twin of [[scd1MergeBatch]], whose write cost matches
+    * [[scd2MergeOpen]]'s read cost. Closed history only ever grows, so it
+    * is stored append-only and never rewritten:
     *
     *   - `$stateDir/closed/batch=N` — the interval rows that became
     *     closed IN batch N, written once, never rewritten. Re-running
@@ -619,7 +465,9 @@ object EventsCdc {
       .unionByName(open, allowMissingColumns = true)
   }
 
-  /** [[runScd2]] with the split closed/open sink. */
+  /** Launch the continuous SCD2 pipeline: change stream → split SCD2
+    * history maintenance ([[scd2MergeBatchSplit]]) — the reference
+    * worker's apply loop with type-2 history instead of last-write-wins. */
   def runScd2Split(spark: SparkSession, changes: DataFrame, stateDir: String,
                    checkpointDir: String, keys: Seq[String] = Seq("user_id"),
                    tsUsCol: String = "ts_us", tieCol: String = "event_id",

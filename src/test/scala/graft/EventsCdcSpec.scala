@@ -438,72 +438,6 @@ class EventsCdcSpec extends SparkSpec {
       "expected at least one tombstoned user held out of the live view")
   }
 
-  test("co-located merge: bucketed state side plans no Exchange and matches mergeStep") {
-    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    val ev = Tables.events(spark, sf).withColumn("b",
-      ntile(3).over(org.apache.spark.sql.expressions.Window
-        .orderBy($"ts", $"event_id")))
-    val state0 = StarSchema.scd1Latest(ev.filter($"b" === 1).drop("b"),
-      Seq("user_id"), Seq($"ts".desc, $"event_id".desc))
-    val path = graft.sources.Scratch.dir("graft_bkt_state")
-    spark.sql("DROP TABLE IF EXISTS cdc_bkt_state_v0")
-    graft.sources.FileFormats.writeBucketed(
-      state0, "cdc_bkt_state_v0", path, "user_id", buckets = 4)
-    val batch = ev.filter($"b" === 2).drop("b")
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      // deterministic plan shape for the side-specific shuffle assertion
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val merged = EventsCdc.mergeStepCoLocated(
-        spark.table("cdc_bkt_state_v0"), batch, Seq("user_id"))
-      val smjs = merged.queryExecution.executedPlan.collect {
-        case j: SortMergeJoinExec => j
-      }
-      assert(smjs.length === 1, s"expected exactly one SMJ:\n${planOf(merged)}")
-      val stateSide =
-        if (smjs.head.left.toString.contains("cdc_bkt_state_v0")) smjs.head.left
-        else smjs.head.right
-      assert(stateSide.toString.contains("cdc_bkt_state_v0"),
-        s"bucketed state scan not found under the join:\n${planOf(merged)}")
-      assert(stateSide.collect { case e: ShuffleExchangeExec => e }.isEmpty,
-        s"the state side of the merge must not shuffle:\n$stateSide")
-      // bit-identical to the union+window mergeStep
-      val expected = EventsCdc.mergeStep(Some(state0), batch, Seq("user_id"))
-        .select($"user_id", $"event_id", $"event_type")
-        .as[(Long, Long, String)].collect().toSet
-      val got = merged.select($"user_id", $"event_id", $"event_type")
-        .as[(Long, Long, String)].collect().toSet
-      assert(got === expected)
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
-    }
-  }
-
-  test("bucketed worker loop converges to batch SCD1 with bounded retained versions") {
-    val dir = streamDir()
-    val statePath = graft.sources.Scratch.dir("graft_bkt_worker_state")
-    val ckpt = graft.sources.Scratch.dir("graft_bkt_worker_ckpt")
-    (0 to 5).foreach(v => spark.sql(s"DROP TABLE IF EXISTS cdc_wbkt_v$v"))
-    val q = EventsCdc.runWorkerBucketed(spark, dir, Tables.events(spark, sf),
-      "cdc_wbkt", statePath, ckpt, keys = Seq("user_id"), buckets = 4,
-      dedupDelay = "3650 days", maxFilesPerTrigger = 1)
-    q.awaitTermination()
-    val versions = EventsCdc.stateVersions(spark, statePath)
-    assert(versions.nonEmpty && versions.sorted === Seq(versions.max - 1, versions.max),
-      s"retention keeps the last version and the one it merged into, got $versions")
-    val finalState = spark.table(s"cdc_wbkt_v${versions.max}")
-      .select($"user_id", $"event_id").as[(Long, Long)].collect().toSet
-    val batchState = StarSchema.scd1Latest(
-        Tables.events(spark, sf), Seq("user_id"),
-        Seq($"ts".desc, $"event_id".desc))
-      .select($"user_id", $"event_id").as[(Long, Long)].collect().toSet
-    assert(finalState === batchState)
-  }
-
   test("stream-stream interval join matches the batch range join on in-order micro-batches") {
     val dir = streamDir()
     def src = spark.readStream
@@ -822,9 +756,11 @@ class EventsCdcSpec extends SparkSpec {
     val b2 = df((1L, 200L, 3L, "a2"), (1L, 200L, 4L, "a3"), (2L, 250L, 5L, "b2"))
     val b3 = df((1L, 300L, 6L, "DELETE"), (3L, 300L, 7L, "c1"))
     val keys = Seq("k")
-    val s1 = EventsCdc.scd2MergeStep(None, b1, keys)
-    val s2 = EventsCdc.scd2MergeStep(Some(s1), b2, keys)
-    val s3 = EventsCdc.scd2MergeStep(Some(s2), b3, keys)
+    val stateDir = graft.sources.Scratch.dir("graft_scd2merge")
+    Seq(b1, b2, b3).zipWithIndex.foreach { case (b, i) =>
+      EventsCdc.scd2MergeBatchSplit(spark, stateDir, keys)(b, i.toLong)
+    }
+    val s3 = EventsCdc.scd2SplitState(spark, stateDir)
     val batchEquiv = graft.olap.StarSchema.scd2History(
       b1.unionByName(b2).unionByName(b3), keys, $"ts_us",
       Seq($"ts_us", $"event_id"))
@@ -917,22 +853,11 @@ class EventsCdcSpec extends SparkSpec {
       spark.read.parquet(s"$dir/v=${EventsCdc.stateVersions(spark, dir).max}")
     val scd1 = StarSchema.scd1Latest(log, keys, Seq($"ts".desc, $"event_id".desc))
     val scd2 = StarSchema.scd2History(log, keys, $"ts_us", Seq($"ts_us", $"event_id"))
-    (0 to 6).foreach(v => spark.sql(s"DROP TABLE IF EXISTS cdc_retention_v$v"))
     val sinks = Seq(
       ("scd1MergeBatch",
         (d: String, b: org.apache.spark.sql.DataFrame, n: Long) =>
           EventsCdc.scd1MergeBatch(spark, d, keys)(b, n),
         (d: String) => d, latest _, scd1),
-      ("scd1MergeBatchBucketed",
-        (d: String, b: org.apache.spark.sql.DataFrame, n: Long) =>
-          EventsCdc.scd1MergeBatchBucketed(spark, "cdc_retention", d, keys, 4)(b, n),
-        (d: String) => d,
-        (d: String) => spark.table(
-          s"cdc_retention_v${EventsCdc.stateVersions(spark, d).max}"), scd1),
-      ("scd2MergeBatch",
-        (d: String, b: org.apache.spark.sql.DataFrame, n: Long) =>
-          EventsCdc.scd2MergeBatch(spark, d, keys)(b, n),
-        (d: String) => d, latest _, scd2),
       ("scd2MergeBatchSplit",
         (d: String, b: org.apache.spark.sql.DataFrame, n: Long) =>
           EventsCdc.scd2MergeBatchSplit(spark, d, keys)(b, n),
@@ -958,50 +883,6 @@ class EventsCdcSpec extends SparkSpec {
       assert(kept() === Seq(4L, 5L) && rows() === before,
         s"$name: replays around an empty batch must rebuild the same state")
     }
-  }
-
-  test("runScd2: the streaming pipeline maintains versioned SCD2 state end to end") {
-    val ev = Tables.events(spark, sf)
-      .select($"user_id", unix_micros($"ts").as("ts_us"), $"event_id",
-        $"event_type")
-    val third = ntile(3).over(org.apache.spark.sql.expressions.Window
-      .orderBy($"ts_us", $"event_id"))
-    val parts = ev.withColumn("b", third)
-    val dir = graft.sources.Scratch.path("graft_scd2_src")
-    (1 to 3).foreach { i =>
-      val tmp = graft.sources.Scratch.dir("graft_scd2_tmp")
-      parts.filter($"b" === i).drop("b")
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      Files.copy(part.toPath, dir.resolve(s"$i.parquet"))
-      Thread.sleep(1000)
-    }
-    val stateDir = graft.sources.Scratch.dir("graft_scd2_state")
-    val ckpt = graft.sources.Scratch.dir("graft_scd2_ckpt")
-    val q = EventsCdc.runScd2(spark,
-      EventsCdc.readEventStream(spark, dir.toString, parts.drop("b"),
-        maxFilesPerTrigger = 1),
-      stateDir, ckpt, keys = Seq("user_id"))
-    q.awaitTermination()
-    // three micro-batches; the retention rule keeps the last and its input
-    val versions = EventsCdc.stateVersions(spark, stateDir)
-    assert(versions.sorted === Seq(1L, 2L))
-    val finalState = spark.read.parquet(s"$stateDir/v=${versions.max}")
-    val expected = graft.olap.StarSchema.scd2History(
-      ev, Seq("user_id"), $"ts_us", Seq($"ts_us", $"event_id"))
-    assert(finalState.collect().map(_.toString).sorted.toSeq ===
-      expected.collect().map(_.toString).sorted.toSeq)
-    // SCD2 invariants on the maintained state: exactly one current row per
-    // key, and per-key intervals chain with no holes
-    val perKey = finalState.groupBy($"user_id")
-      .agg(sum(when($"is_current", 1).otherwise(0)).as("n_open"))
-    assert(perKey.filter($"n_open" =!= 1).count() === 0)
-    val holes = finalState.alias("a").join(finalState.alias("b"),
-        $"a.user_id" === $"b.user_id" &&
-        col("a.version") + 1 === col("b.version") &&
-        $"a.valid_to_us" =!= $"b.valid_from_us")
-    assert(holes.count() === 0)
   }
 
   test("runScd2Split: the streaming pipeline maintains split closed/open state end to end") {
@@ -1050,6 +931,16 @@ class EventsCdcSpec extends SparkSpec {
       s"$stateDir/open/v=${EventsCdc.stateVersions(spark, s"$stateDir/open").max}")
     assert(open.filter(!$"is_current").count() === 0)
     assert(open.count() === ev.select($"user_id").distinct().count())
+    // SCD2 invariants on the assembled state: exactly one current row per
+    // key, and per-key intervals chain with no holes
+    val perKey = assembled.groupBy($"user_id")
+      .agg(sum(when($"is_current", 1).otherwise(0)).as("n_open"))
+    assert(perKey.filter($"n_open" =!= 1).count() === 0)
+    val holes = assembled.alias("a").join(assembled.alias("b"),
+        $"a.user_id" === $"b.user_id" &&
+        col("a.version") + 1 === col("b.version") &&
+        $"a.valid_to_us" =!= $"b.valid_from_us")
+    assert(holes.count() === 0)
   }
 
   test("SCD1 merge keeps tombstones so late-arriving older rows cannot resurrect") {
@@ -1073,6 +964,34 @@ class EventsCdcSpec extends SparkSpec {
     val liveUsers = StarSchema.live(s3, $"op" === "delete")
       .select($"user_id").as[Long].collect().toSet
     assert(liveUsers === Set(2L))
+  }
+
+  test("SCD1 sink: NULL-ts rows merge as scd1Latest orders them over the whole log") {
+    // scd1Latest's order (ts desc, event_id desc) puts a NULL ts last: a
+    // NULL-ts row loses to any timed row of its key, and a key seen only
+    // with NULL ts keeps its newest event_id's row, every column intact
+    val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
+    val t1 = java.sql.Timestamp.valueOf("2024-01-01 01:00:00")
+    def df(rows: (Long, Long, Option[java.sql.Timestamp], String)*) =
+      rows.toDF("user_id", "event_id", "ts", "payload")
+    // batch 1 carries a NULL-ts row for key 1, which the state holds with
+    // a timed row, and for key 3, which the state lacks; key 2's NULL-ts
+    // state row meets a timed batch row
+    val b0 = df((1L, 10L, Some(t0), "a"), (2L, 11L, None, "b0"))
+    val b1 = df((1L, 20L, None, "a-untimed"), (3L, 21L, None, "c"),
+      (2L, 22L, Some(t1), "b1"))
+    val keys = Seq("user_id")
+    val dir = graft.sources.Scratch.dir("graft_scd1_null_ts")
+    EventsCdc.scd1MergeBatch(spark, dir, keys)(b0, 0L)
+    EventsCdc.scd1MergeBatch(spark, dir, keys)(b1, 1L)
+    val state = spark.read.parquet(s"$dir/v=${EventsCdc.stateVersions(spark, dir).max}")
+    def rows(d: org.apache.spark.sql.DataFrame) =
+      d.select($"user_id", $"event_id", $"ts", $"payload")
+        .collect().map(_.toString).sorted.toSeq
+    assert(rows(state) === rows(StarSchema.scd1Latest(b0.unionByName(b1), keys,
+      Seq($"ts".desc, $"event_id".desc))))
+    assert(state.orderBy($"user_id").select($"payload").as[String].collect().toSeq
+      === Seq("a", "b1", "c"))
   }
 
   test("JDBC worker: file arrivals → dedup → tombstone-aware upsert into live DuckDB equals batch SCD1") {
@@ -1179,22 +1098,13 @@ class EventsCdcSpec extends SparkSpec {
       .as[(Long, String, Option[String])].collect().toSeq
     assert(rows === Seq((1L, "a2", Some("eu-west")), (2L, "b", None)),
       "key 2's standing row must survive with NULL in the added column")
-    // the CO-LOCATED merge makes the same evolution decision
-    val s2co = EventsCdc.mergeStepCoLocated(s1, b2, keys)
-    assert(s2co.orderBy($"user_id")
-      .select($"user_id", $"payload", $"region")
-      .as[(Long, String, Option[String])].collect().toSeq === rows)
-    // a batch MISSING a standing column is upstream breakage: both merge
-    // forms refuse loudly, naming the dropped column, before any write
+    // a batch MISSING a standing column is upstream breakage: the merge
+    // refuses loudly, naming the dropped column, before any write
     val narrowed = Seq((3L, 30L, t1)).toDF("user_id", "event_id", "ts")
     val e1 = intercept[IllegalArgumentException] {
       EventsCdc.mergeStep(Some(s1), narrowed, keys)
     }
     assert(e1.getMessage.contains("payload"))
-    val e2 = intercept[IllegalArgumentException] {
-      EventsCdc.mergeStepCoLocated(s1, narrowed, keys)
-    }
-    assert(e2.getMessage.contains("payload"))
     // a retyped column refuses too, naming both types
     val retyped = Seq((3L, 30L, t1, 7.5))
       .toDF("user_id", "event_id", "ts", "payload")
@@ -1227,10 +1137,6 @@ class EventsCdcSpec extends SparkSpec {
       "pre-evolution history reads NULL; the new version carries the value")
     assert(state.filter($"k" === 2L && $"is_current").count() === 1,
       "untouched key's open row survives the widened merge")
-    // the versioned full-rewrite sink gates identically (shared scd2Evolve)
-    val s1 = EventsCdc.scd2MergeStep(None, df((1L, 100L, 1L, "a1")), keys)
-    assert(EventsCdc.scd2MergeStep(Some(s1), widened, keys)
-      .columns.contains("channel"))
     // a narrowed batch refuses loudly with the standing state intact
     val before = state.collect().map(_.toString).sorted.toSeq
     val err = intercept[IllegalArgumentException] {

@@ -9,7 +9,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * `spark.read.parquet(..)` (or one with options) elsewhere would bring
   * back Spark's schema-inference job on every open; this scan of the
   * engine's sources keeps it from coming back. Inside `FileFormats` only
-  * `readEvolved`'s merge-schema read is a bare read. */
+  * `readEvolved`'s merge-schema read is a bare read.
+  *
+  * Every engine table is also a plain parquet path: nothing the engine
+  * writes registers in the session catalog, and nothing it reads comes
+  * from there, so a second, catalog-bound storage model cannot come back
+  * unnoticed either. */
 class ReadGuardSpec extends AnyFunSuite {
 
   /** `read` then any `.option(..)` calls then `.parquet(` or a parquet
@@ -17,15 +22,21 @@ class ReadGuardSpec extends AnyFunSuite {
   private val BareRead =
     """\bread\s*(?:\.\s*options?\s*\((?:[^()]|\([^()]*\))*\)\s*)*\.\s*(?:parquet\s*\(|format\s*\(\s*"parquet"\s*\))""".r
 
+  /** A bucketed or catalog-registered write, a read of a catalog table
+    * (`spark.table(..)`, `spark.read.table(..)`) or a `DROP TABLE`, across
+    * line breaks. */
+  private val CatalogUse =
+    """\b(?:saveAsTable|bucketBy)\s*\(|\.\s*table\s*\(|\bDROP\s+TABLE\b""".r
+
   private def sources(root: Path): Seq[Path] = {
     val s = Files.walk(root)
     try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
     finally s.close()
   }
 
-  private def bareReads(file: Path): Seq[String] = {
+  private def hits(pattern: scala.util.matching.Regex)(file: Path): Seq[String] = {
     val text = new String(Files.readAllBytes(file), "UTF-8")
-    BareRead.findAllMatchIn(text).map { m =>
+    pattern.findAllMatchIn(text).map { m =>
       val line = text.substring(0, m.start).count(_ == '\n') + 1
       s"$file:$line: ${m.matched.replaceAll("\\s+", " ")}"
     }.toList
@@ -37,10 +48,10 @@ class ReadGuardSpec extends AnyFunSuite {
     assert(all.size > 50, s"found only ${all.size} sources under $root")
     val (own, rest) = all.partition(_.endsWith(Paths.get("graft/sources/FileFormats.scala")))
     assert(own.size === 1)
-    val outside = rest.flatMap(bareReads)
+    val outside = rest.flatMap(hits(BareRead))
     assert(outside.isEmpty,
       "route these through FileFormats.readParquet:\n" + outside.mkString("\n"))
-    val inside = bareReads(own.head)
+    val inside = hits(BareRead)(own.head)
     assert(inside.size === 1 && inside.head.contains("mergeSchema"),
       "FileFormats' only bare read is readEvolved's:\n" + inside.mkString("\n"))
   }
@@ -60,5 +71,33 @@ class ReadGuardSpec extends AnyFunSuite {
       "spark.read.format(\"jdbc\").load()",
       "FileFormats.readParquet(spark, dir)")
     allowed.foreach(f => assert(BareRead.findFirstIn(f).isEmpty, f))
+  }
+
+  test("no engine table is bucketed or goes through the session catalog") {
+    val root = Paths.get("src/main/scala")
+    val all = sources(root)
+    assert(all.size > 50, s"found only ${all.size} sources under $root")
+    val found = all.flatMap(hits(CatalogUse))
+    assert(found.isEmpty,
+      "write and read these as plain parquet paths:\n" + found.mkString("\n"))
+  }
+
+  test("the catalog scan sees every form of a catalog table") {
+    val forms = Seq(
+      "df.write.bucketBy(4, \"k\").sortBy(\"k\").saveAsTable(name)",
+      "df.write.option(\"path\", p).format(\"parquet\").saveAsTable(name)",
+      "writer\n  .bucketBy (n, keys.head, keys.tail: _*)",
+      "spark.table(s\"${t}_v$v\")",
+      "s.read.table(\"t\")",
+      "spark\n  .table(prev)",
+      "spark.sql(s\"DROP TABLE IF EXISTS ${t}_v$v\")")
+    forms.foreach(f => assert(CatalogUse.findFirstIn(f).nonEmpty, f))
+    val allowed = Seq(
+      "df.write.mode(\"overwrite\").partitionBy(\"date_key\").parquet(dir)",
+      "FileFormats.readParquet(spark, s\"$dir/v=1\")",
+      "graft.sources.Jdbc.readTable(spark, conn, \"user_state\")",
+      "stream.writeStream.format(\"memory\").queryName(name)",
+      "col(bucketCol)")
+    allowed.foreach(f => assert(CatalogUse.findFirstIn(f).isEmpty, f))
   }
 }

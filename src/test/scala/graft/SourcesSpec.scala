@@ -204,64 +204,6 @@ class SourcesSpec extends SparkSpec {
     } finally ddl.close()
   }
 
-  test("size-tiered star: a forced-large dim writes bucketed multi-file and joins the fact SMJ with zero exchanges") {
-    val out = graft.sources.Scratch.dir("graft_star_tiered")
-    spark.sql("DROP TABLE IF EXISTS star_dim_customer")
-    spark.sql("DROP TABLE IF EXISTS bkt_fact_cust")
-    // declare dim_customer large (it mirrors the OLTP clientes giant):
-    // written through the bucketed sink on its join key instead of
-    // single-file + broadcast
-    val star = graft.olap.StarSchemaJob.run(spark, sf, out,
-      largeDims = Map("dim_customer" -> "c_custkey"), buckets = 4)
-    val dimFiles = new java.io.File(s"$out/dim_customer").listFiles()
-      .filter(f => f.getName.endsWith(".parquet"))
-    assert(dimFiles.length > 1, "a large dim must not be a single file")
-
-    // the fact copy clustered for customer-grain joins: same bucket count
-    val factPath = graft.sources.Scratch.dir("graft_bkt_factc")
-    FileFormats.writeBucketed(
-      star.factSales.select($"o_custkey", $"total_sale"),
-      "bkt_fact_cust", factPath, "o_custkey", buckets = 4)
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val joined = spark.table("bkt_fact_cust")
-        .join(spark.table("star_dim_customer"), $"o_custkey" === $"c_custkey")
-      val plan = planOf(joined)
-      assert(plan.contains("SortMergeJoin"), s"expected SMJ, not broadcast:\n$plan")
-      assert(!plan.contains("Exchange"),
-        s"fact⋈large-dim must be co-located (zero exchanges):\n$plan")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-  }
-
-  test("bucketed tables join with zero exchanges and match the shuffle join") {
-    val ordersPath = graft.sources.Scratch.dir("graft_bkt_o")
-    val liPath = graft.sources.Scratch.dir("graft_bkt_l")
-    spark.sql("DROP TABLE IF EXISTS bkt_orders")
-    spark.sql("DROP TABLE IF EXISTS bkt_lineitem")
-    FileFormats.writeBucketed(
-      Tables.orders(spark, sf).select($"o_orderkey", $"o_orderpriority"),
-      "bkt_orders", ordersPath, "o_orderkey", buckets = 4)
-    FileFormats.writeBucketed(
-      Tables.lineitem(spark, sf).select($"l_orderkey", $"l_quantity"),
-      "bkt_lineitem", liPath, "l_orderkey", buckets = 4)
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val joined = spark.table("bkt_lineitem")
-        .join(spark.table("bkt_orders"), $"l_orderkey" === $"o_orderkey")
-      val plan = planOf(joined)
-      assert(plan.contains("SortMergeJoin"), s"expected SMJ:\n$plan")
-      assert(!plan.contains("Exchange"),
-        "bucketed join should be shuffle-free on both sides")
-      // same result as the plain (shuffled) join over the raw parquet
-      val expected = Tables.lineitem(spark, sf)
-        .join(Tables.orders(spark, sf), $"l_orderkey" === $"o_orderkey")
-        .count()
-      assert(joined.count() === expected)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-  }
-
   test("range-sorted sink writes disjoint, ordered file ranges that prune") {
     import org.apache.spark.sql.functions.{max, min}
     val dir = graft.sources.Scratch.dir("graft_rangesort")
@@ -367,53 +309,6 @@ class SourcesSpec extends SparkSpec {
     // coalesce is narrow: the compaction job must plan no exchange
     val plan = planOf(spark.read.parquet(s"$dir/small").coalesce(3))
     assert(!plan.contains("Exchange"), s"compaction must not shuffle:\n$plan")
-  }
-
-  test("bucketed compaction: one file per bucket, spec preserved, join stays exchange-free") {
-    def parquetFiles(p: String): Array[java.io.File] =
-      new java.io.File(p).listFiles().filter(_.getName.endsWith(".parquet"))
-    val srcPath = graft.sources.Scratch.dir("graft_bktc_src")
-    val outPath = graft.sources.Scratch.dir("graft_bktc_out")
-    val liPath = graft.sources.Scratch.dir("graft_bktc_li")
-    Seq("bktc_src", "bktc_out", "bktc_li").foreach(t =>
-      spark.sql(s"DROP TABLE IF EXISTS $t"))
-    // 8 writer tasks × 4 buckets: the accreted-small-files state a
-    // recurring bucketed merge leaves behind
-    FileFormats.writeBucketed(
-      Tables.orders(spark, sf).select($"o_orderkey", $"o_orderpriority")
-        .repartition(8),
-      "bktc_src", srcPath, "o_orderkey", buckets = 4)
-    assert(parquetFiles(srcPath).length > 4, "setup should accrete >1 file/bucket")
-    val n = FileFormats.compactBucketed(spark, "bktc_src", "bktc_out", outPath)
-    assert(n === 4 && parquetFiles(outPath).length === 4,
-      "compaction must leave exactly one file per bucket")
-    // content survives
-    assert(spark.table("bktc_out").orderBy("o_orderkey").collect()
-      === spark.table("bktc_src").orderBy("o_orderkey").collect())
-    // the compacted table still join-co-locates with a sibling bucketed
-    // table: SMJ with no Exchange on either side — the property a plain
-    // coalesce compaction would silently destroy
-    FileFormats.writeBucketed(
-      Tables.lineitem(spark, sf).select($"l_orderkey", $"l_quantity"),
-      "bktc_li", liPath, "l_orderkey", buckets = 4)
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val joined = spark.table("bktc_li")
-        .join(spark.table("bktc_out"), $"l_orderkey" === $"o_orderkey")
-      val plan = planOf(joined)
-      assert(plan.contains("SortMergeJoin"), s"expected SMJ:\n$plan")
-      assert(!plan.contains("Exchange"),
-        s"post-compaction join must stay exchange-free:\n$plan")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    // a non-bucketed table refuses bucketed compaction loudly
-    val plainDir = graft.sources.Scratch.dir("graft_bktc_plain")
-    spark.sql("DROP TABLE IF EXISTS bktc_plain")
-    spark.range(10).write.option("path", plainDir).saveAsTable("bktc_plain")
-    intercept[IllegalArgumentException] {
-      FileFormats.compactBucketed(spark, "bktc_plain", "bktc_plain_out",
-        plainDir + "_out")
-    }
   }
 
   test("compactAndSwap rewrites in place atomically and refuses a lossy swap") {
