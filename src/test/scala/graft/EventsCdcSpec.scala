@@ -931,12 +931,56 @@ class EventsCdcSpec extends SparkSpec {
       s"$stateDir/open/v=${EventsCdc.stateVersions(spark, s"$stateDir/open").max}")
     assert(open.filter(!$"is_current").count() === 0)
     assert(open.count() === ev.select($"user_id").distinct().count())
-    // SCD2 invariants on the assembled state: exactly one current row per
+  }
+
+  test("runScd2: the streaming pipeline maintains versioned SCD2 state end to end") {
+    // the SCD2 streaming pipeline (runScd2Split, the one SCD2 sink) stopped
+    // between arrivals and restarted from its checkpoint: the restarted
+    // query merges the new batch into the open version the first run left,
+    // so the versioned state stays the batch scd2History of the whole log
+    val ev = Tables.events(spark, sf)
+      .select($"user_id", unix_micros($"ts").as("ts_us"), $"event_id",
+        $"event_type")
+    val third = ntile(3).over(org.apache.spark.sql.expressions.Window
+      .orderBy($"ts_us", $"event_id"))
+    val parts = ev.withColumn("b", third)
+    val dir = graft.sources.Scratch.path("graft_scd2_src")
+    def arrive(i: Int): Unit = {
+      val tmp = graft.sources.Scratch.dir("graft_scd2_tmp")
+      parts.filter($"b" === i).drop("b")
+        .coalesce(1).write.mode("overwrite").parquet(tmp)
+      val part = new java.io.File(tmp).listFiles()
+        .filter(_.getName.endsWith(".parquet")).head
+      Files.copy(part.toPath, dir.resolve(s"$i.parquet"))
+      Thread.sleep(1000)
+    }
+    val stateDir = graft.sources.Scratch.dir("graft_scd2_state")
+    val ckpt = graft.sources.Scratch.dir("graft_scd2_ckpt")
+    def run(): Unit = EventsCdc.runScd2Split(spark,
+      EventsCdc.readEventStream(spark, dir.toString, parts.drop("b"),
+        maxFilesPerTrigger = 1),
+      stateDir, ckpt, keys = Seq("user_id")).awaitTermination()
+    def history(upTo: Int) = graft.olap.StarSchema.scd2History(
+      parts.filter($"b" <= upTo).drop("b"), Seq("user_id"), $"ts_us",
+      Seq($"ts_us", $"event_id"))
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    arrive(1); arrive(2)
+    run()
+    assert(EventsCdc.stateVersions(spark, s"$stateDir/open").sorted === Seq(0L, 1L))
+    assert(rows(EventsCdc.scd2SplitState(spark, stateDir)) === rows(history(2)))
+    arrive(3)
+    run()
+    // the restart ran only the new file's batch; the retention rule keeps
+    // its open version and the one it merged into
+    assert(EventsCdc.stateVersions(spark, s"$stateDir/open").sorted === Seq(1L, 2L))
+    val finalState = EventsCdc.scd2SplitState(spark, stateDir)
+    assert(rows(finalState) === rows(history(3)))
+    // SCD2 invariants on the maintained state: exactly one current row per
     // key, and per-key intervals chain with no holes
-    val perKey = assembled.groupBy($"user_id")
+    val perKey = finalState.groupBy($"user_id")
       .agg(sum(when($"is_current", 1).otherwise(0)).as("n_open"))
     assert(perKey.filter($"n_open" =!= 1).count() === 0)
-    val holes = assembled.alias("a").join(assembled.alias("b"),
+    val holes = finalState.alias("a").join(finalState.alias("b"),
         $"a.user_id" === $"b.user_id" &&
         col("a.version") + 1 === col("b.version") &&
         $"a.valid_to_us" =!= $"b.valid_from_us")
