@@ -1588,7 +1588,9 @@ object Dedup {
     * incremental maintenance: one (gh, df) row per gram. Additive across
     * disjoint document sets (each doc counts once per gram), so
     * per-batch partials sum to the corpus value — what lets a stream
-    * maintain the table by blind batch-tagged appends. */
+    * maintain the table by blind batch-tagged appends
+    * ([[graft.streaming.StateSink.run]]). Replay: df adds, so a
+    * redelivered batch counts its docs twice. */
   def gramDf(docs: DataFrame, k: Int = 5,
              shingleHash: Column => Column = xxhash64(_)): DataFrame =
     posGramRows(docs, k, shingleHash)
@@ -1596,11 +1598,11 @@ object Dedup {
       .groupBy(col("gh")).agg(count(lit(1)).as("df"))
 
   /** Boilerplate spans for `docs` against a STANDING gram-df table
-    * (written by [[graft.streaming.IndexMaintenance.runGramDfMaintenance]]
-    * partials or a batch [[gramDf]] dump): partials sum per gram, the
-    * hot set (df > minDf) semi-joins the probed docs' grams, intervals
-    * merge per doc. Cost ∝ probed docs + table scan — corpus text never
-    * re-grams. The df a probe sees is as-of the table's last absorbed
+    * (streamed [[gramDf]] partials written by
+    * [[graft.streaming.StateSink.run]], or a batch [[gramDf]] dump):
+    * partials sum per gram, the hot set (df > minDf) semi-joins the
+    * probed docs' grams, intervals merge per doc. Cost ∝ probed docs +
+    * table scan — corpus text never re-grams. The df a probe sees is as-of the table's last absorbed
     * batch: a gram that turns hot LATER flags only docs screened after
     * that point (run the batch operator for a retroactive sweep). */
   def boilerplateSpansFromTable(spark: org.apache.spark.sql.SparkSession,

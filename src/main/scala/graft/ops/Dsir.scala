@@ -74,8 +74,9 @@ object Dsir {
     * so blind batch-tagged appends of these partials keep a standing
     * count-model table current with NO read-modify-write and no history
     * rescans — the gram-df / covariance-partials posture
-    * ([[graft.streaming.IndexMaintenance.runDsirMaintenance]]); readers
-    * sum per bucket and score through [[weightsFromCounts]]. */
+    * ([[graft.streaming.StateSink.run]]); readers sum per bucket and
+    * score through [[weightsFromCounts]]. Replay: counts add, so a
+    * redelivered batch counts twice. */
   def countPartials(docs: DataFrame, isTarget: Column): DataFrame =
     features(docs, isTarget).groupBy(col("fh"))
       .agg(sum(when(col("is_tgt"), lit(1L)).otherwise(lit(0L))).as("n_t"),
@@ -126,8 +127,8 @@ object Dsir {
 
   /** The standing-table read path: sum the appended [[countPartials]]
     * under `countsDir` and score `docs` — what a pipeline serves after
-    * [[graft.streaming.IndexMaintenance.runDsirMaintenance]] absorbed the
-    * corpus. */
+    * streaming [[countPartials]] through [[graft.streaming.StateSink.run]]
+    * absorbed the corpus. */
   def weightsFromTable(spark: org.apache.spark.sql.SparkSession,
                        countsDir: String, docs: DataFrame): DataFrame =
     weightsFromCounts(docs,

@@ -10,10 +10,11 @@ import org.apache.spark.sql.types.DataTypes
   * DECIMAL(38,6) sum of squares per (experiment key, arm)) merge by plain
   * addition — the same associative shape as the sketch tables — so batch
   * analysis ([[graft.queries.EventQueries]] `ab_test_zscore`) and
-  * continuous monitoring ([[graft.streaming.StreamingFeatures.runAbMaintenance]])
-  * share ONE read path: [[zFromMoments]]. Served-from-state and
-  * computed-from-raw results are equal EXACTLY (decimal addition is
-  * order-independent), not approximately — spec-pinned.
+  * continuous monitoring ([[armMoments]] per micro-batch through
+  * [[graft.streaming.StateSink.run]]) share ONE read path:
+  * [[zFromMoments]]. Served-from-state and computed-from-raw results are
+  * equal EXACTLY (decimal addition is order-independent), not
+  * approximately — spec-pinned.
   */
 object Experiments {
 
@@ -22,7 +23,8 @@ object Experiments {
   /** Reduce (key, arm, value) rows to per-(key, arm) moment partials:
     * at most 2 rows per key per call, mergeable by addition. Per-row
     * value² products are IEEE-exact doubles rounded once into
-    * DECIMAL(38,6); from there every aggregate is exact. */
+    * DECIMAL(38,6); from there every aggregate is exact. Replay: moments
+    * add, so a redelivered batch counts twice. */
   def armMoments(events: DataFrame): DataFrame =
     events.groupBy(col("key"), col("arm"))
       .agg(count(lit(1)).as("n"),

@@ -88,8 +88,9 @@ object Features {
     * (key, event-day, at-midnight) holding (row count, exact DECIMAL(38,6)
     * value sum, latest timestamp). Partials merge by plain addition/max
     * ([[mergePartials]]), so batch backfill and streaming maintenance
-    * ([[graft.streaming.StreamingFeatures]]) write the SAME table and a
+    * ([[graft.streaming.StateSink.run]]) write the SAME table and a
     * serving read answers from state alone — history is never rescanned.
+    * Replay: counts and sums add, so a redelivered batch counts twice.
     *
     * The `at_midnight` split exists for exactness, not convenience: a
     * midnight as-of A gives elapsed-age A−d−1 to every row of day d EXCEPT

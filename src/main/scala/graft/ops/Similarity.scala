@@ -101,8 +101,9 @@ object Similarity {
     * The sums are ADDITIVE across disjoint vector batches — per-batch
     * partials sum to the corpus value exactly (decimal, no float
     * reduction order), which is what lets
-    * [[graft.streaming.IndexMaintenance.runCovarianceMaintenance]] keep
-    * a standing partials table by blind batch-tagged appends. */
+    * [[graft.streaming.StateSink.run]] keep a standing partials table by
+    * blind batch-tagged appends. Replay: sums add, so a redelivered
+    * batch counts twice. */
   def covPartials(embeddings: DataFrame): DataFrame =
     // one d²-bounded buffer per partition ([[graft.functions.CovPartialsAgg]])
     // instead of exploding every vector into its d(d+1)/2 + d + 1 struct

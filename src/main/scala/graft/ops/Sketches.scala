@@ -20,7 +20,9 @@ object Sketches {
 
   /** One sketch row per bucket: (bucket, n_rows, exact_n — kept for
     * verification/backfill audits — and the mergeable HLL sketch of
-    * `key`). This is the table a pipeline PERSISTS per load. */
+    * `key`). This is the table a pipeline PERSISTS per load. Replay:
+    * HLL union is idempotent, so a redelivered batch leaves the estimate
+    * unchanged; the additive `n_rows` counts it twice. */
   def distinctSketch(df: DataFrame, bucket: Column, key: Column,
                      lgK: Int = 14): DataFrame =
     df.groupBy(bucket.as("bucket"))
@@ -40,7 +42,9 @@ object Sketches {
     * total item weight ([[graft.functions.MisraGries]]). This is the table
     * a pipeline PERSISTS per load shard, the heavy-hitter twin of
     * [[distinctSketch]]: each row is KBs regardless of shard size, and the
-    * partial/shuffle state behind it is O(k) everywhere. */
+    * partial/shuffle state behind it is O(k) everywhere. Replay: merge
+    * ADDS counters, so a redelivered shard counts twice — the
+    * f − n/(k+1) ≤ ĉ ≤ f bound holds against the recorded `n_items`. */
   def heavyHitterSketch(df: DataFrame, bucket: Column, shard: Column,
                         item: Column, k: Int = 64): DataFrame =
     df.groupBy(bucket.as("bucket"), shard.as("shard"))
@@ -71,7 +75,9 @@ object Sketches {
     * from [lo, hi]/nbins), not rank space. `lo`/`hi` come from partition
     * metadata or one min/max scalar at build time (the
     * [[graft.sources.FileFormats.writeZOrdered]] bounds posture).
-    * All bin math is integer (`div`), replayable exactly anywhere. */
+    * All bin math is integer (`div`), replayable exactly anywhere.
+    * Replay: bins add, so a redelivered batch counts twice; [est_lo,
+    * est_hi] still brackets the replayed stream's rank value. */
   def histogramSketch(df: DataFrame, bucket: Column, value: Column,
                       lo: Long, hi: Long, nbins: Int = 1024): DataFrame = {
     require(hi >= lo && nbins > 0, s"bad histogram domain [$lo,$hi] x $nbins")
@@ -141,7 +147,8 @@ object Sketches {
     * sides (the [[Audit.coverage]] policy): a NULL key hashes to a NULL
     * slot that can never join, which would silently turn into a false
     * negative / underestimate — count NULL keys separately with a plain
-    * isNull aggregate. */
+    * isNull aggregate. Replay: cells add, so a redelivered batch counts
+    * twice; est ≥ true frequency survives (redelivery only adds). */
   def countMinSketch(df: DataFrame, bucket: Column, item: Column,
                      depth: Int = 3, width: Int = 32): DataFrame =
     withDepths(df.select(bucket.as("bucket"), item.as("__item"))
@@ -158,7 +165,8 @@ object Sketches {
     * bits) — order-free and engine-replayable, so the filter itself
     * hash-checks. NULL items are excluded on both sides (see
     * [[countMinSketch]]'s NULL policy — a NULL bit never joins and would
-    * fabricate a false negative). */
+    * fabricate a false negative). Replay: bit union is idempotent, so a
+    * redelivered batch changes nothing. */
   def bloomSketch(df: DataFrame, bucket: Column, item: Column,
                   k: Int = 3, bits: Int = 65536): DataFrame =
     withDepths(df.select(bucket.as("bucket"), item.as("__item"))

@@ -176,7 +176,13 @@ object AsOfJoin {
     * [[graft.ops.Events.asofJoin]] (same argument and output contract:
     * left columns plus `matched_<col>` for each requested right column).
     * Requires the session to carry [[graft.GraftExtensions]] (which
-    * injects [[AsOfJoinStrategy]]). */
+    * injects [[AsOfJoinStrategy]]).
+    *
+    * Streaming enrichment is this join per micro-batch through
+    * [[graft.streaming.StateSink.run]] against the reference snapshot
+    * current at arrival: the concatenated output equals the batch join of
+    * everything arrived against a static reference (spec-pinned). Replay:
+    * output is per-row, so a redelivered batch is enriched twice. */
   def apply(left: DataFrame, right: DataFrame, key: String, timeUs: String,
             valueCols: Seq[String]): DataFrame = {
     val lp = left.queryExecution.analyzed

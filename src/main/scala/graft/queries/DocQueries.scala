@@ -323,8 +323,9 @@ object DocQueries {
     * [[tokenDrift]]'s report (the r13 `token_drift` entry pins its split
     * predicate at plan time; an ingest dashboard needs the before/after
     * comparison at ANY boundary without rescanning the corpus). Documents
-    * reduce to the per-(source, batch) partials
-    * [[graft.streaming.StreamingCorpusStats.runTokenStats]] maintains
+    * reduce to the per-(source, batch) partials the streaming
+    * maintenance keeps ([[graft.streaming.StreamingCorpusStats.batchPartials]]
+    * through [[graft.streaming.StateSink.run]])
     * (batch = pmod(doc_id, 8), the deterministic arrival stand-in) and the
     * report is served by
     * [[graft.streaming.StreamingCorpusStats.driftFromState]] at boundary 3

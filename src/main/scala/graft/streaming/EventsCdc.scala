@@ -158,11 +158,10 @@ object EventsCdc {
     * use [[runWorker]]'s parquet state when resurrect-proof tombstones
     * matter. */
   def scd1JdbcBatch(conn: graft.sources.Jdbc.ConnInfo, table: String,
-                    keys: Seq[String], deleteWhen: org.apache.spark.sql.Column,
-                    tsCol: String = "ts", tieCol: String = "event_id")
+                    keys: Seq[String], deleteWhen: org.apache.spark.sql.Column)
                    (batch: DataFrame, batchId: Long): Unit = {
     val latest = StarSchema
-      .scd1Latest(batch, keys, Seq(col(tsCol).desc, col(tieCol).desc))
+      .scd1Latest(batch, keys, Seq(col("ts").desc, col("event_id").desc))
       .persist()
     // NULL-safe split: a row where deleteWhen evaluates to NULL (e.g. a
     // NULL event_type under the default === "error" predicate) is not a
@@ -170,7 +169,7 @@ object EventsCdc {
     val isDelete = coalesce(deleteWhen, lit(false))
     try {
       graft.sources.Jdbc.upsert(latest.filter(!isDelete), conn, table, keys,
-        guardCols = Seq(tsCol, tieCol))
+        guardCols = Seq("ts", "event_id"))
       graft.sources.Jdbc.deleteKeys(latest.filter(isDelete), conn, table, keys)
     } finally latest.unpersist(blocking = false)
   }
@@ -246,33 +245,6 @@ object EventsCdc {
       total_state_rows: Long,
       last_progress_ts: String)
 
-  /** Streaming sketch-table maintenance — the streaming twin of
-    * [[graft.ops.Sketches]]: every micro-batch APPENDS one HLL sketch row
-    * per bucket (tagged with the batch id) to the sketch table; readers
-    * answer distinct-count questions over any bucket subset by merging
-    * sketches ([[graft.ops.Sketches.mergedEstimate]]) — history is never
-    * rescanned, and the per-batch write is a blind append (no
-    * read-modify-write, no streaming state). Replay-robust where it
-    * matters: a re-delivered batch unions in the SAME key set, and HLL
-    * union is idempotent — the distinct estimate is unaffected (the
-    * additive `n_rows` column double-counts on replay; treat it as
-    * at-least-once telemetry, the sketch as the truth). */
-  def runDistinctSketches(stream: DataFrame, sketchDir: String,
-                          checkpointDir: String,
-                          bucketCol: String, keyCol: String, lgK: Int = 14,
-                          trigger: Trigger = Trigger.AvailableNow())
-      : StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        StateSink.appendIdempotent(
-          graft.ops.Sketches.distinctSketch(batch, col(bucketCol), col(keyCol), lgK),
-          batchId, sketchDir)
-        ()
-      }
-      .start()
-
   /** Native `session_window` sessionization as a STREAMING aggregation —
     * Spark's built-in session state next to the custom
     * flatMapGroupsWithState `StreamingSessionize`: the IDENTICAL
@@ -285,62 +257,6 @@ object EventsCdc {
   def sessionizeNativeStream(events: DataFrame, gap: String = "30 minutes",
                              delay: String = "2 hours"): DataFrame =
     graft.ops.Events.sessionizeNative(events.withWatermark("ts", delay), gap)
-
-  /** Streaming Bloom-filter maintenance — the membership member of the
-    * streaming sketch family next to [[runDistinctSketches]]: every
-    * micro-batch APPENDS its (bucket, bit) set-bit rows to the filter
-    * table; readers probe any bucket subset by merging rows (bit union,
-    * [[graft.ops.Sketches.bloomProbe]]). Like the HLL twin — and unlike
-    * the Misra-Gries / Count-Min counters — bit union is IDEMPOTENT, so
-    * a re-delivered batch changes nothing and the no-false-negative
-    * guarantee is replay-robust under at-least-once delivery. */
-  def runBloomSketches(stream: DataFrame, sketchDir: String,
-                       checkpointDir: String,
-                       bucketCol: String, itemCol: String,
-                       k: Int = 3, bits: Int = 65536,
-                       trigger: Trigger = Trigger.AvailableNow())
-      : StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        StateSink.appendIdempotent(
-          graft.ops.Sketches.bloomSketch(
-            batch, col(bucketCol), col(itemCol), k, bits),
-          batchId, sketchDir)
-        ()
-      }
-      .start()
-
-  /** Streaming heavy-hitters maintenance — the Misra-Gries member of the
-    * streaming sketch family next to [[runDistinctSketches]]: every
-    * micro-batch APPENDS one ≤k-counter MG summary row per bucket (shard =
-    * batch id) to the sketch table; readers answer top-item questions over
-    * any bucket subset by merging rows
-    * ([[graft.ops.Sketches.heavyHittersMerged]]) — blind appends, no
-    * read-modify-write, no streaming state. Replay caveat (weaker than the
-    * HLL twin): MG merge ADDS counts, so a re-delivered batch inflates
-    * both the counters and the recorded `n_items` total — the
-    * f − n/(k+1) ≤ ĉ ≤ f guarantee keeps holding against the RECORDED
-    * at-least-once weight n, the frequencies it bounds are of the
-    * replayed stream. Exactly-once sinks (or dedup upstream, see the
-    * streaming-dedup operator) restore true-stream semantics. */
-  def runHeavyHitterSketches(stream: DataFrame, sketchDir: String,
-                             checkpointDir: String,
-                             bucketCol: String, itemCol: String, k: Int = 64,
-                             trigger: Trigger = Trigger.AvailableNow())
-      : StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        StateSink.appendIdempotent(
-          graft.ops.Sketches.heavyHitterSketch(
-            batch, col(bucketCol), lit(batchId), col(itemCol), k),
-          batchId, sketchDir, idCol = "shard")
-        ()
-      }
-      .start()
 
   /** The four columns [[graft.olap.StarSchema.scd2History]] adds to the
     * change rows — excluded from the evolution gate's standing anchor
@@ -373,19 +289,18 @@ object EventsCdc {
     * the delete still resolve and the live view excludes the key (no
     * resurrection). Returns the touched keys' full new version runs.
     *
-    * Assumes IN-ORDER batches (every change in batch N is `(tsUs, tie)`-
-    * after the state's open row for its key — the CDC worker contract;
+    * Assumes IN-ORDER batches (every change in batch N is
+    * `(ts_us, event_id)`-after the state's open row for its key — the CDC worker contract;
     * [[dedupStream]] upstream absorbs redelivery). With in-order batches
     * the assembled state is IDENTICAL to running scd2History over the
     * concatenated change log (spec-pinned). */
   private def scd2MergeOpen(open0: DataFrame, batch: DataFrame,
-                            keys: Seq[String], tsUsCol: String,
-                            tieCol: String): DataFrame = {
+                            keys: Seq[String]): DataFrame = {
     val open = scd2Evolve(open0, batch)
-    val batchHist = StarSchema.scd2History(batch, keys, col(tsUsCol),
-      Seq(col(tsUsCol), col(tieCol)))
+    val batchHist = StarSchema.scd2History(batch, keys, col("ts_us"),
+      Seq(col("ts_us"), col("event_id")))
     val firsts = batch.groupBy(keys.map(col): _*)
-      .agg(min(col(tsUsCol)).as("__first_ts"))
+      .agg(min(col("ts_us")).as("__first_ts"))
     val openMerged = open.join(firsts, keys, "left")
       .withColumn("valid_to_us",
         coalesce(col("__first_ts"), col("valid_to_us")))
@@ -420,18 +335,17 @@ object EventsCdc {
     * replay of batch N still finds its input; closed dirs are the product,
     * not cache, and are kept. */
   def scd2MergeBatchSplit(spark: SparkSession, stateDir: String,
-                          keys: Seq[String], tsUsCol: String = "ts_us",
-                          tieCol: String = "event_id")
+                          keys: Seq[String])
                          (batch: DataFrame, batchId: Long): Unit = {
     if (batch.isEmpty) return
     val versions = stateVersions(spark, s"$stateDir/open").filter(_ < batchId)
     val next = versions match {
       case vs if vs.isEmpty =>
-        StarSchema.scd2History(batch, keys, col(tsUsCol),
-          Seq(col(tsUsCol), col(tieCol)))
+        StarSchema.scd2History(batch, keys, col("ts_us"),
+          Seq(col("ts_us"), col("event_id")))
       case vs =>
         scd2MergeOpen(FileFormats.readParquet(spark, s"$stateDir/open/v=${vs.max}"),
-          batch, keys, tsUsCol, tieCol)
+          batch, keys)
     }
     // two actions split the merge result (closed slice, open slice), each
     // into its own dir so the closed write never has to know what earlier
@@ -470,81 +384,12 @@ object EventsCdc {
     * worker's apply loop with type-2 history instead of last-write-wins. */
   def runScd2Split(spark: SparkSession, changes: DataFrame, stateDir: String,
                    checkpointDir: String, keys: Seq[String] = Seq("user_id"),
-                   tsUsCol: String = "ts_us", tieCol: String = "event_id",
                    trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
     changes.writeStream
       .outputMode(OutputMode.Update())
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
-      .foreachBatch(scd2MergeBatchSplit(spark, stateDir, keys, tsUsCol, tieCol) _)
-      .start()
-
-  /** Streaming Count-Min maintenance — the point-frequency member that
-    * completes the streaming sketch family (HLL distinct / Bloom
-    * membership / Misra-Gries top-k / histogram via batch / CM here):
-    * every micro-batch APPENDS its (bucket, depth, slot, cnt) cell rows
-    * to the sketch table; readers answer "how often did item x occur"
-    * over any bucket subset by merging rows — cell-wise count ADDITION
-    * ([[graft.ops.Sketches.countMinEstimates]] sums cells before the
-    * min-over-depths read) — blind appends, no read-modify-write, no
-    * streaming state. Replay caveat (the MG posture, NOT the HLL/Bloom
-    * one): cell counts are sums, so a re-delivered batch adds its counts
-    * again and estimates bound the frequencies of the REPLAYED stream —
-    * the one-sided guarantee est ≥ true frequency survives replay (CM
-    * never underestimates; redelivery only adds), exactness of the upper
-    * side needs an exactly-once sink or upstream dedup
-    * ([[dedupStream]]). */
-  def runCountMinSketches(stream: DataFrame, sketchDir: String,
-                          checkpointDir: String,
-                          bucketCol: String, itemCol: String,
-                          depth: Int = 3, width: Int = 32,
-                          trigger: Trigger = Trigger.AvailableNow())
-      : StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        StateSink.appendIdempotent(
-          graft.ops.Sketches.countMinSketch(
-            batch, col(bucketCol), col(itemCol), depth, width),
-          batchId, sketchDir)
-        ()
-      }
-      .start()
-
-  /** Streaming histogram-quantile maintenance — the fifth and last
-    * streaming twin, completing the sketch family's symmetry (HLL
-    * distinct / Bloom membership / Misra-Gries top-k / Count-Min point
-    * frequency / fixed-bin quantiles here): every micro-batch APPENDS its
-    * (bucket, bin, cnt) rows to the sketch table — at most `nbins` rows
-    * per (batch, bucket) regardless of batch size — and readers answer
-    * rank queries over any bucket subset by merging bins with plain count
-    * addition ([[graft.ops.Sketches.histogramQuantiles]]). Blind appends,
-    * no read-modify-write, no streaming state. Replay caveat is the
-    * CM/MG one, not the HLL/Bloom one: bin counts are sums, so a
-    * re-delivered batch counts again and quantiles describe the REPLAYED
-    * stream — the [est_lo, est_hi] bin-bound guarantee itself survives
-    * (it brackets the replayed stream's true rank value exactly);
-    * rank-exactness over the LOGICAL stream needs an exactly-once sink or
-    * upstream [[dedupStream]]. The [lo, hi] domain is part of the sketch
-    * table's contract and must match the read path's, as in the batch
-    * [[graft.ops.Sketches.histogramSketch]]. */
-  def runHistogramSketches(stream: DataFrame, sketchDir: String,
-                           checkpointDir: String,
-                           bucketCol: String, valueCol: String,
-                           lo: Long, hi: Long, nbins: Int = 1024,
-                           trigger: Trigger = Trigger.AvailableNow())
-      : StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        StateSink.appendIdempotent(
-          graft.ops.Sketches.histogramSketch(
-            batch, col(bucketCol), col(valueCol), lo, hi, nbins),
-          batchId, sketchDir)
-        ()
-      }
+      .foreachBatch(scd2MergeBatchSplit(spark, stateDir, keys) _)
       .start()
 
   def health(spark: SparkSession, queries: Seq[StreamingQuery]): DataFrame = {

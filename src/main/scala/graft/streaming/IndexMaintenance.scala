@@ -47,37 +47,6 @@ object IndexMaintenance {
       }
       .start()
 
-  /** Continuous near-dup screening of a document-arrival stream against
-    * the standing corpus — [[graft.ops.Dedup.incrementalMinhash]] as a
-    * pipeline. Per micro-batch, in order:
-    *
-    *   1. PROBE: the batch's LSH band rows (broadcast — arrival batches
-    *      are small by construction) join the persisted signature index;
-    *      candidate pairs verify by exact Jaccard with old-corpus text
-    *      read through the semi-join prune — per-batch cost ∝ batch +
-    *      candidates, never corpus.
-    *   2. EMIT: verified near-dup pairs append to `pairsDir`, batch-tagged
-    *      — the audit log a curation pipeline filters against.
-    *   3. ABSORB: the batch's band rows append to the index and its docs
-    *      to the corpus store, so the NEXT batch's old↔new probe sees
-    *      this one as corpus.
-    *
-    * The sequencing inside one foreachBatch call is what makes
-    * batch-boundary pairs exact: a doc arriving in batch N+1 that
-    * near-dups a batch-N doc is found by the index probe (absorbed in
-    * step 3 of batch N). The concatenated pairs over any run equal the
-    * batch [[graft.ops.Dedup.minhashLsh]] over everything that arrived,
-    * minus the bootstrap corpus's internal pairs (found when ITS index
-    * was built) — spec-pinned. Retry/replay posture: the PAIRS sink
-    * writes through [[StateSink.appendIdempotent]], so an engine retry
-    * of the same batchId replaces its own pair partition; the index and
-    * corpus appends stay blind (they must mix with the unpartitioned
-    * bootstrap layout), but a retry's duplicate rows there are
-    * semantically inert — candidate pairs are `distinct()`-ed and
-    * shingle sets are per-doc distinct, so emitted pairs are unchanged
-    * (only corpus row COUNTS inflate). SOURCE-level redelivery (new
-    * batchId, same docs) still re-emits pairs; dedupe upstream
-    * ([[EventsCdc.dedupStream]]) or use an exactly-once source. */
   /** Continuous exact-substring screen — the span-level twin of
     * [[runDedupScreen]]: per micro-batch, (1) probe the arrivals against
     * the standing winnowing-fingerprint index and emit their REMOVAL
@@ -108,95 +77,6 @@ object IndexMaintenance {
           batchId, spansDir)
         graft.ops.Dedup.appendFingerprintIndex(batch, indexDir, k, w)
         batch.write.mode("append").parquet(corpusDir)
-        ()
-      }
-      .start()
-
-  /** Streaming boilerplate-gate maintenance — the standing gram-df table
-    * ([[graft.ops.Dedup.gramDf]]) kept current by blind batch-tagged
-    * appends: per-gram distinct-doc counts are ADDITIVE across disjoint
-    * document batches (each doc arrives once), so each micro-batch
-    * appends its own partials and readers sum per gram — no
-    * read-modify-write, no streaming state, history never rescanned
-    * (the [[EventsCdc.runDistinctSketches]] posture). Readers answer
-    * "which grams are hot?" and screen documents span-wise through
-    * [[graft.ops.Dedup.boilerplateSpansFromTable]]. Engine retries of a
-    * batchId replace their own partition ([[StateSink]]); SOURCE-level
-    * redelivery (same docs, new batchId) double-counts df — dedupe
-    * upstream or use an exactly-once source. */
-  def runGramDfMaintenance(spark: SparkSession, srcDir: String,
-                           schemaFrom: DataFrame, dfDir: String,
-                           checkpointDir: String, k: Int = 5,
-                           maxFilesPerTrigger: Int = 0,
-                           trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    EventsCdc.readEventStream(spark, srcDir, schemaFrom, maxFilesPerTrigger)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        StateSink.appendIdempotent(graft.ops.Dedup.gramDf(batch, k),
-          batchId, dfDir)
-        ()
-      }
-      .start()
-
-  /** Streaming DSIR model maintenance — the target/raw B=4096-bucket
-    * hashed-bigram count tables ([[graft.ops.Dsir.countPartials]]) kept
-    * current by blind batch-tagged appends: per-bucket occurrence counts
-    * are ADDITIVE across disjoint document batches (each doc arrives
-    * once), so each micro-batch appends its own ≤B-row partials and the
-    * served read ([[graft.ops.Dsir.weightsFromTable]]) sums per bucket —
-    * no read-modify-write, no streaming state, history never rescanned
-    * (the gram-df posture, [[runGramDfMaintenance]]). Because the counts
-    * collapse by exact long addition and the scoring replays the
-    * identical ratio tree and decimal mean, served weights over the
-    * absorbed corpus equal the one-shot batch [[graft.ops.Dsir.weights]]
-    * BIT FOR BIT (DsirSpec pins it over in-order micro-batches — the
-    * covariance/mixtureFromState precedent). A pipeline can re-score or
-    * re-[[graft.ops.Dsir.resample]] after every arrival batch at
-    * model-read cost. Engine retries of a batchId replace their own
-    * partition ([[StateSink]]); SOURCE-level redelivery double-counts —
-    * dedupe upstream or use an exactly-once source. */
-  def runDsirMaintenance(spark: SparkSession, srcDir: String,
-                         schemaFrom: DataFrame, countsDir: String,
-                         checkpointDir: String,
-                         targetSource: String = "src0",
-                         maxFilesPerTrigger: Int = 0,
-                         trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    EventsCdc.readEventStream(spark, srcDir, schemaFrom, maxFilesPerTrigger)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        StateSink.appendIdempotent(
-          graft.ops.Dsir.countPartials(batch,
-            org.apache.spark.sql.functions.col("source") === targetSource),
-          batchId, countsDir)
-        ()
-      }
-      .start()
-
-  /** Streaming PCA maintenance — the covariance-partials table
-    * ([[graft.ops.Similarity.covPartials]]) kept current by blind
-    * batch-tagged appends: the decimal sums are EXACTLY additive across
-    * disjoint vector batches (no float reduction order to disturb), so
-    * [[graft.ops.Similarity.pcaFromTable]] reads a PCA that equals the
-    * batch operator over everything absorbed bit for bit — spec-pinned.
-    * Same replay posture as the gram-df maintenance: engine retries
-    * replace their own partition; source-level redelivery double-counts
-    * — dedupe upstream. */
-  def runCovarianceMaintenance(spark: SparkSession, srcDir: String,
-                               schemaFrom: DataFrame, covDir: String,
-                               checkpointDir: String,
-                               maxFilesPerTrigger: Int = 0,
-                               trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    EventsCdc.readEventStream(spark, srcDir, schemaFrom, maxFilesPerTrigger)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        StateSink.appendIdempotent(graft.ops.Similarity.covPartials(batch),
-          batchId, covDir)
         ()
       }
       .start()
@@ -306,6 +186,37 @@ object IndexMaintenance {
       }
       .start()
 
+  /** Continuous near-dup screening of a document-arrival stream against
+    * the standing corpus — [[graft.ops.Dedup.incrementalMinhash]] as a
+    * pipeline. Per micro-batch, in order:
+    *
+    *   1. PROBE: the batch's LSH band rows (broadcast — arrival batches
+    *      are small by construction) join the persisted signature index;
+    *      candidate pairs verify by exact Jaccard with old-corpus text
+    *      read through the semi-join prune — per-batch cost ∝ batch +
+    *      candidates, never corpus.
+    *   2. EMIT: verified near-dup pairs append to `pairsDir`, batch-tagged
+    *      — the audit log a curation pipeline filters against.
+    *   3. ABSORB: the batch's band rows append to the index and its docs
+    *      to the corpus store, so the NEXT batch's old↔new probe sees
+    *      this one as corpus.
+    *
+    * The sequencing inside one foreachBatch call is what makes
+    * batch-boundary pairs exact: a doc arriving in batch N+1 that
+    * near-dups a batch-N doc is found by the index probe (absorbed in
+    * step 3 of batch N). The concatenated pairs over any run equal the
+    * batch [[graft.ops.Dedup.minhashLsh]] over everything that arrived,
+    * minus the bootstrap corpus's internal pairs (found when ITS index
+    * was built) — spec-pinned. Retry/replay posture: the PAIRS sink
+    * writes through [[StateSink.appendIdempotent]], so an engine retry
+    * of the same batchId replaces its own pair partition; the index and
+    * corpus appends stay blind (they must mix with the unpartitioned
+    * bootstrap layout), but a retry's duplicate rows there are
+    * semantically inert — candidate pairs are `distinct()`-ed and
+    * shingle sets are per-doc distinct, so emitted pairs are unchanged
+    * (only corpus row COUNTS inflate). SOURCE-level redelivery (new
+    * batchId, same docs) still re-emits pairs; dedupe upstream
+    * ([[EventsCdc.dedupStream]]) or use an exactly-once source. */
   def runDedupScreen(spark: SparkSession, srcDir: String, schemaFrom: DataFrame,
                      indexDir: String, corpusDir: String, pairsDir: String,
                      checkpointDir: String, n: Int = 3, threshold: Double = 0.8,

@@ -1,14 +1,13 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Continuous corpus-stats maintenance — the streaming twin of the
   * `token_drift` report: every micro-batch reduces its arrived documents
-  * to per-source partials (doc count, exact token sum — at most one row
-  * per source per batch regardless of batch size) and appends them
-  * idempotently ([[StateSink]]); the drift read
+  * to per-source partials ([[batchPartials]] — doc count, exact token
+  * sum, at most one row per source per batch regardless of batch size)
+  * appended through [[StateSink.run]]; the drift read
   * ([[driftFromState]]) answers the before/after comparison for ANY batch
   * boundary from state alone — the moving-boundary report the batch
   * operator (which pins its split predicate at plan time) cannot give
@@ -17,11 +16,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * Because the partials are longs merging by addition, the served report
   * equals the batch computation over the same split EXACTLY — counts and
   * token sums are integers, each mean is one long/long IEEE division and
-  * the ratio one double division (spec-pinned). Replay caveat: the usual
-  * additive-state pair — engine retries replace their own batch partition
-  * (StateSink); at-least-once SOURCE redelivery arrives under a new
-  * batchId and double-counts — dedupe upstream or use an exactly-once
-  * source.
+  * the ratio one double division (spec-pinned).
   */
 object StreamingCorpusStats {
 
@@ -29,8 +24,8 @@ object StreamingCorpusStats {
     * arrival stand-in the `corpus_drift` registry entry and SQL surface
     * share: batch_id = pmod(doc_id, nBatches) (pmod, not %, per the
     * truncate-vs-floor discipline; equal for the non-negative ids the
-    * tables carry). Produces exactly the state shape [[runTokenStats]]
-    * maintains (≤ sources × nBatches rows from one corpus scan), so
+    * tables carry). Produces exactly the state shape the streaming
+    * maintenance keeps (≤ sources × nBatches rows from one corpus scan), so
     * [[driftFromState]] over it IS the serve path — swap in the real
     * maintained state table in production and nothing downstream
     * changes. */
@@ -42,29 +37,14 @@ object StreamingCorpusStats {
       .groupBy(col("source"), col("batch_id"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("n_tok"))
 
-  /** Reduce one batch of documents to per-source partials. */
+  /** Reduce one batch of documents to per-source partials. Replay:
+    * counts and token sums add, so a redelivered batch counts twice. */
   def batchPartials(batch: DataFrame): DataFrame =
     batch
       .select(col("source"),
         size(graft.ops.TextAnalysis.tokens(col("text"))).cast("long").as("n_tok"))
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("n_tok"))
-
-  /** Launch per-source token-stats maintenance over a file-arrival
-    * document stream. */
-  def runTokenStats(spark: SparkSession, srcDir: String, schemaFrom: DataFrame,
-                    stateDir: String, checkpointDir: String,
-                    maxFilesPerTrigger: Int = 0,
-                    trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    EventsCdc.readEventStream(spark, srcDir, schemaFrom, maxFilesPerTrigger)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        StateSink.appendIdempotent(batchPartials(batch), batchId, stateDir)
-        ()
-      }
-      .start()
 
   /** The mixture read: the temperature-flattened training-mixture schedule
     * ([[graft.ops.Sampling.temperatureMixture]]) served from state alone —

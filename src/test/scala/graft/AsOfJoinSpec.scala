@@ -123,9 +123,11 @@ class AsOfJoinSpec extends SparkSpec {
       }
     val out = graft.sources.Scratch.dir("graft_ae_out")
     val ckpt = graft.sources.Scratch.dir("graft_ae_ck")
-    val q = graft.streaming.StreamingEnrich.runAsofEnrich(
-      spark, srcDir.toString, ev, () => ord, "k", "t_us",
-      Seq("o_orderkey", "o_totalprice"), out, ckpt, maxFilesPerTrigger = 1)
+    val q = graft.streaming.StateSink.run(
+      graft.streaming.EventsCdc.readEventStream(
+        spark, srcDir.toString, ev, maxFilesPerTrigger = 1),
+      out, ckpt)((b, _) =>
+        AsOfJoin(b, ord, "k", "t_us", Seq("o_orderkey", "o_totalprice")))
     q.awaitTermination()
     val streamed = spark.read.parquet(out)
       .select("event_id", "matched_o_orderkey", "matched_o_totalprice")

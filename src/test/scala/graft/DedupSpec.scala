@@ -885,8 +885,10 @@ class DedupSpec extends SparkSpec {
       Thread.sleep(1000)
     }
     val ckpt = graft.sources.Scratch.dir("graft_gdf_ck")
-    val q = graft.streaming.IndexMaintenance.runGramDfMaintenance(
-      spark, srcDir.toString, docs, dfDir, ckpt, maxFilesPerTrigger = 1)
+    val q = graft.streaming.StateSink.run(
+      graft.streaming.EventsCdc.readEventStream(
+        spark, srcDir.toString, docs, maxFilesPerTrigger = 1),
+      dfDir, ckpt)((b, _) => Dedup.gramDf(b))
     q.awaitTermination()
     val table = spark.read.parquet(dfDir)
     assert(table.select($"batch_id").distinct().count() === 2)

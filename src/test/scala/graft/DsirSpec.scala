@@ -101,9 +101,10 @@ class DsirSpec extends SparkSpec {
       Thread.sleep(1000)
     }
     val ckpt = graft.sources.Scratch.dir("graft_dsir_ck")
-    val q = graft.streaming.IndexMaintenance.runDsirMaintenance(
-      spark, srcDir.toString, corpus, countsDir, ckpt,
-      targetSource = "src0", maxFilesPerTrigger = 1)
+    val q = graft.streaming.StateSink.run(
+      graft.streaming.EventsCdc.readEventStream(
+        spark, srcDir.toString, corpus, maxFilesPerTrigger = 1),
+      countsDir, ckpt)((b, _) => Dsir.countPartials(b, col("source") === "src0"))
     q.awaitTermination()
     val state = spark.read.parquet(countsDir)
     assert(state.select($"batch_id").distinct().count() === 3)

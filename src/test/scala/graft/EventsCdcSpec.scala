@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.olap.StarSchema
 import graft.ops.Events
 import graft.sources.Tables
-import graft.streaming.EventsCdc
+import graft.streaming.{EventsCdc, StateSink}
 
 /** Structured-Streaming CDC pipeline specs: the streaming operators must
   * agree with their batch twins (one set of semantics, two execution modes),
@@ -485,10 +485,11 @@ class EventsCdcSpec extends SparkSpec {
     writeFile("3.parquet", $"b" === 1) // an at-least-once source replaying batch 1
     val sketchDir = graft.sources.Scratch.dir("graft_bl_out")
     val ckpt = graft.sources.Scratch.dir("graft_bl_ckpt")
-    val q = EventsCdc.runBloomSketches(
+    val q = StateSink.run(
       EventsCdc.readEventStream(spark, dir.toString, Tables.events(spark, sf),
         maxFilesPerTrigger = 1),
-      sketchDir, ckpt, bucketCol = "event_type", itemCol = "user_id")
+      sketchDir, ckpt)((b, _) =>
+        graft.ops.Sketches.bloomSketch(b, $"event_type", $"user_id"))
     q.awaitTermination()
     val sketches = spark.read.parquet(sketchDir)
     assert(sketches.select($"batch_id").distinct().count() === 3)
@@ -530,10 +531,11 @@ class EventsCdcSpec extends SparkSpec {
     writeFile("2.parquet", $"b" === 2)
     val sketchDir = graft.sources.Scratch.dir("graft_sk_out")
     val ckpt = graft.sources.Scratch.dir("graft_sk_ckpt")
-    val q = EventsCdc.runDistinctSketches(
+    val q = StateSink.run(
       EventsCdc.readEventStream(spark, dir.toString, Tables.events(spark, sf),
         maxFilesPerTrigger = 1),
-      sketchDir, ckpt, bucketCol = "event_type", keyCol = "user_id")
+      sketchDir, ckpt)((b, _) =>
+        graft.ops.Sketches.distinctSketch(b, $"event_type", $"user_id"))
     q.awaitTermination()
     val sketches = spark.read.parquet(sketchDir)
     // one sketch row per (batch, bucket): blind appends, tagged per batch
@@ -580,11 +582,13 @@ class EventsCdcSpec extends SparkSpec {
     val ckpt = graft.sources.Scratch.dir("graft_hh_ckpt")
     // items = user ids as strings (the heavy-hitter question: most active
     // users per event type, answered from KB-sized rows)
-    val q = EventsCdc.runHeavyHitterSketches(
+    val q = StateSink.run(
       EventsCdc.readEventStream(spark, dir.toString, Tables.events(spark, sf),
           maxFilesPerTrigger = 1)
         .withColumn("item", $"user_id".cast("string")),
-      sketchDir, ckpt, bucketCol = "event_type", itemCol = "item", k = k)
+      sketchDir, ckpt)((b, batchId) =>
+        graft.ops.Sketches.heavyHitterSketch(
+          b, $"event_type", lit(batchId), $"item", k))
     q.awaitTermination()
     val sketches = spark.read.parquet(sketchDir)
     // blind appends: one row per (bucket, batch shard)
@@ -634,12 +638,13 @@ class EventsCdcSpec extends SparkSpec {
     writeFile("3.parquet", $"b" === 1) // an at-least-once source replaying batch 1
     val sketchDir = graft.sources.Scratch.dir("graft_cm_out")
     val ckpt = graft.sources.Scratch.dir("graft_cm_ckpt")
-    val q = EventsCdc.runCountMinSketches(
+    val q = StateSink.run(
       EventsCdc.readEventStream(spark, dir.toString, Tables.events(spark, sf),
           maxFilesPerTrigger = 1)
         .withColumn("item", $"user_id".cast("string")),
-      sketchDir, ckpt, bucketCol = "event_type", itemCol = "item",
-      depth = 3, width = 256)
+      sketchDir, ckpt)((b, _) =>
+        graft.ops.Sketches.countMinSketch(
+          b, $"event_type", $"item", depth = 3, width = 256))
     q.awaitTermination()
     val sketches = spark.read.parquet(sketchDir)
     assert(sketches.select($"batch_id").distinct().count() === 3)
@@ -706,12 +711,12 @@ class EventsCdcSpec extends SparkSpec {
     writeFile("3.parquet", $"b" === 1) // at-least-once replay of batch 1
     val sketchDir = graft.sources.Scratch.dir("graft_hg_out")
     val ckpt = graft.sources.Scratch.dir("graft_hg_ckpt")
-    val q = EventsCdc.runHistogramSketches(
+    val q = StateSink.run(
       EventsCdc.readEventStream(spark, dir.toString, Tables.events(spark, sf),
           maxFilesPerTrigger = 1)
         .withColumn("v", ($"value".cast("decimal(38,2)") * 100).cast("long")),
-      sketchDir, ckpt, bucketCol = "event_type", valueCol = "v",
-      lo = lo, hi = hi, nbins = nbins)
+      sketchDir, ckpt)((b, _) =>
+        graft.ops.Sketches.histogramSketch(b, $"event_type", $"v", lo, hi, nbins))
     q.awaitTermination()
     val sketches = spark.read.parquet(sketchDir)
     assert(sketches.select($"batch_id").distinct().count() === 3)

@@ -152,10 +152,10 @@ class FeaturesSpec extends SparkSpec {
     writeFile("3.parquet", $"b" === 1) // at-least-once source replays batch 1
     val stateDir = graft.sources.Scratch.dir("graft_feat_state")
     val ckpt = graft.sources.Scratch.dir("graft_feat_ckpt")
-    val q = graft.streaming.StreamingFeatures.runFeatureMaintenance(
+    val q = graft.streaming.StateSink.run(
       graft.streaming.EventsCdc.readEventStream(
         spark, dir.toString, ev.drop("b"), maxFilesPerTrigger = 1),
-      stateDir, ckpt)
+      stateDir, ckpt)((b, _) => Features.dayPartials(b))
     q.awaitTermination()
     val state = spark.read.parquet(stateDir)
     assert(state.select($"batch_id").distinct().count() === 3)
@@ -268,10 +268,10 @@ class FeaturesSpec extends SparkSpec {
     writeFile("3.parquet", $"b" === 1) // at-least-once replay
     val stateDir = graft.sources.Scratch.dir("graft_ab_state")
     val ckpt = graft.sources.Scratch.dir("graft_ab_ckpt")
-    val q = graft.streaming.StreamingFeatures.runAbMaintenance(
+    val q = graft.streaming.StateSink.run(
       graft.streaming.EventsCdc.readEventStream(
         spark, dir.toString, ev.drop("b"), maxFilesPerTrigger = 1),
-      stateDir, ckpt)
+      stateDir, ckpt)((b, _) => graft.ops.Experiments.armMoments(b))
     q.awaitTermination()
     val state = spark.read.parquet(stateDir)
     assert(state.select($"batch_id").distinct().count() === 3)
@@ -311,6 +311,44 @@ class FeaturesSpec extends SparkSpec {
     // a retry of an OLD batch while newer state exists must not touch it
     graft.streaming.StateSink.appendIdempotent(b0, 0L, dir)
     assert(spark.read.parquet(dir).count() === 3)
+  }
+
+  test("StateSink.run: a restart that re-runs the uncommitted batch leaves the table unchanged") {
+    // the engine's own retry path: batch 1 ran and wrote, but its commit
+    // never landed (deleted here), so the restarted query re-runs batch 1
+    // under the SAME batchId from the offset log
+    import java.nio.file.Files
+    val src = graft.sources.Scratch.path("graft_retry_src")
+    val batches = Seq(
+      Seq((1L, 10L), (2L, 20L), (3L, 30L)).toDF("k", "v"),
+      Seq((4L, 40L), (5L, 50L)).toDF("k", "v"))
+    batches.zipWithIndex.foreach { case (b, i) =>
+      val tmp = graft.sources.Scratch.dir("graft_retry_tmp")
+      b.coalesce(1).write.mode("overwrite").parquet(tmp)
+      val part = new java.io.File(tmp).listFiles()
+        .filter(_.getName.endsWith(".parquet")).head
+      Files.copy(part.toPath, src.resolve(s"$i.parquet"))
+      Thread.sleep(1000)
+    }
+    val dir = graft.sources.Scratch.dir("graft_retry_state")
+    val ckpt = graft.sources.Scratch.dir("graft_retry_ckpt")
+    def start() = graft.streaming.StateSink.run(
+      graft.streaming.EventsCdc.readEventStream(
+        spark, src.toString, batches.head, maxFilesPerTrigger = 1),
+      dir, ckpt)((b, _) => b)
+    def rows() = spark.read.parquet(dir)
+      .select($"batch_id", $"k", $"v").as[(Long, Long, Long)].collect().sorted.toSeq
+    start().awaitTermination()
+    val before = rows()
+    assert(before.map(_._1).distinct === Seq(0L, 1L))
+    assert(before.size === 5)
+    Files.delete(java.nio.file.Paths.get(ckpt, "commits", "1"))
+    Files.delete(java.nio.file.Paths.get(ckpt, "commits", ".1.crc"))
+    val q = start()
+    q.awaitTermination()
+    assert(q.recentProgress.exists(p => p.batchId == 1L && p.numInputRows == 2L),
+      "the restart must re-run batch 1, or this spec proves nothing")
+    assert(rows() === before)
   }
 
   test("registry feature queries: single window shuffle, no cartesian, pruned scans") {

@@ -203,8 +203,10 @@ class SimilaritySpec extends SparkSpec {
       Thread.sleep(1000)
     }
     val ckpt = graft.sources.Scratch.dir("graft_cov_ck")
-    val q = graft.streaming.IndexMaintenance.runCovarianceMaintenance(
-      spark, srcDir.toString, emb, covDir, ckpt, maxFilesPerTrigger = 1)
+    val q = graft.streaming.StateSink.run(
+      graft.streaming.EventsCdc.readEventStream(
+        spark, srcDir.toString, emb, maxFilesPerTrigger = 1),
+      covDir, ckpt)((b, _) => Similarity.covPartials(b))
     q.awaitTermination()
     assert(spark.read.parquet(covDir).select($"batch_id").distinct().count() === 2)
     val fromTable = Similarity.pcaFromTable(spark, covDir)

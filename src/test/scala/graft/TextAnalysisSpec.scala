@@ -385,8 +385,10 @@ class TextAnalysisSpec extends SparkSpec {
     }
     val stateDir = graft.sources.Scratch.dir("graft_cs_state")
     val ckpt = graft.sources.Scratch.dir("graft_cs_ck")
-    val q = graft.streaming.StreamingCorpusStats.runTokenStats(
-      spark, srcDir.toString, docs, stateDir, ckpt, maxFilesPerTrigger = 1)
+    val q = graft.streaming.StateSink.run(
+      graft.streaming.EventsCdc.readEventStream(
+        spark, srcDir.toString, docs, maxFilesPerTrigger = 1),
+      stateDir, ckpt)((b, _) => graft.streaming.StreamingCorpusStats.batchPartials(b))
     q.awaitTermination()
     val state = spark.read.parquet(stateDir)
     assert(state.select($"batch_id").distinct().count() === 2)
