@@ -123,7 +123,7 @@ object Bench {
         val standing = all.filter(col("doc_id") % 25 =!= 0)
         val dir = indexCache.computeIfAbsent(d, _ => {
           val dd = graft.sources.Scratch.dir("graft_sig_bench")
-          graft.ops.Dedup.writeSignatureIndex(standing, dd)
+          graft.ops.Dedup.appendSignatureIndex(standing, dd)
           dd
         })
         graft.ops.Dedup.incrementalMinhash(s, dir,
@@ -144,7 +144,7 @@ object Bench {
         val standing = all.filter(col("doc_id") % 25 =!= 0)
         val dir = indexCache.computeIfAbsent(d, _ => {
           val dd = graft.sources.Scratch.dir("graft_fp_bench")
-          graft.ops.Dedup.writeFingerprintIndex(standing, dd)
+          graft.ops.Dedup.appendFingerprintIndex(standing, dd)
           dd
         })
         graft.ops.Dedup.incrementalSpanScreen(s, dir,
@@ -245,7 +245,7 @@ object Bench {
         val standing = all.filter(col("doc_id") % 25 =!= 0)
         val dir = indexCache.computeIfAbsent(d, _ => {
           val dd = graft.sources.Scratch.dir("graft_fp_bench10x")
-          graft.ops.Dedup.writeFingerprintIndex(standing, dd)
+          graft.ops.Dedup.appendFingerprintIndex(standing, dd)
           dd
         })
         graft.ops.Dedup.incrementalSpanScreen(s, dir,
@@ -399,7 +399,7 @@ object Bench {
       val isArrival = col("doc_id") < ReplicaOffset && col("doc_id") % 25 === 0
       val dir = indexCache.computeIfAbsent(s"$d/$factor", _ => {
         val dd = graft.sources.Scratch.dir(s"graft_cont_bench${factor}x")
-        graft.ops.Dedup.writeContainmentIndex(all.filter(!isArrival), dd)
+        graft.ops.Dedup.appendContainmentIndex(all.filter(!isArrival), dd)
         dd
       })
       graft.ops.Dedup.incrementalContainmentScreen(s, dir, all.filter(isArrival))

@@ -64,7 +64,7 @@ object Dedup {
     * hash-only distinct, one bounded census — no corpus-scale joins. The
     * per-hash frame is persisted (it feeds both the per-source sizes and
     * the pair census); a standing deployment writes it as a (source, hash)
-    * index table instead ([[writeSourceShingleIndex]] — the
+    * index table instead ([[appendSourceShingleIndex]] — the
     * fingerprint-index discipline) and serves the matrix from the index
     * ([[sourceOverlapFromIndex]]) while arrivals maintain it at O(batch).
     *
@@ -116,17 +116,13 @@ object Dedup {
       .orderBy(col("s1"), col("s2"))
   }
 
-  /** Standing source-shingle index: the distinct (source, hash128) shingle
-    * rows of the corpus so far, hash-clustered on write
-    * (repartition + sort by h1, the [[writeFingerprintIndex]] layout) so
+  /** Standing source-shingle index: append a batch's distinct
+    * (source, hash128) shingle rows, hash-clustered per appended file
+    * (repartition + sort by h1, the [[appendFingerprintIndex]] layout) so
     * census scans stream sorted row groups. Hash-only rows — corpus text
-    * never reaches the index. */
-  def writeSourceShingleIndex(docs: DataFrame, dir: String, n: Int = 3): Unit =
-    sourceShingleRows(docs, n)
-      .repartition(col("h1")).sortWithinPartitions(col("h1"))
-      .write.mode("overwrite").parquet(dir)
-
-  /** Append an arrival batch's distinct (source, hash128) shingle rows.
+    * never reaches the index. An empty or missing `dir` is a new index; a
+    * rebuild writes to a new directory.
+    *
     * Blind append — no read-modify-write, so concurrent appenders and
     * at-least-once redelivery are safe by construction: rows the standing
     * index already holds are absorbed by [[sourceOverlapCensus]]'s
@@ -558,15 +554,12 @@ object Dedup {
         (col("words_total") - col("words_removed")).cast("double") /
           col("words_total").cast("double"))
 
-  /** Standing block-hash index: the distinct hash128 pairs of every block
-    * seen so far — the state an ingestion pipeline screens arrivals
-    * against. Hash-only rows (16 bytes + ids of nothing): corpus text
-    * never reaches the index. */
-  def writeBlockIndex(docs: DataFrame, dir: String, blockWords: Int = 8): Unit =
-    blockRows(docs, blockWords).select(col("__h1"), col("__h2")).distinct()
-      .write.mode("overwrite").parquet(dir)
-
-  /** Append an arrival batch's block hashes to the standing index.
+  /** Standing block-hash index: append a batch's distinct hash128 block
+    * pairs. The index is every block hash seen so far — the state an
+    * ingestion pipeline screens arrivals against. Hash-only rows (16 bytes
+    * + ids of nothing): corpus text never reaches the index. An empty or
+    * missing `dir` is a new index; a rebuild writes to a new directory.
+    *
     * Blind append — NO read-modify-write, so concurrent appenders and
     * at-least-once redelivery are safe by construction: duplicate hash
     * rows are harmless because every reader ([[incrementalBlockDedup]])
@@ -815,13 +808,14 @@ object Dedup {
         col("containment"))
   }
 
-  /** Standing containment index under `dir` — three hash-only tables
-    * (corpus text never reaches the index):
+  /** Standing containment index under `dir`: absorb a batch into three
+    * hash-only tables (corpus text never reaches the index):
     *   - `shingles/` (doc_id, h): each doc's DISTINCT shingle hashes
     *   - `sizes/`    (doc_id, sz): each doc's shingle-set size
     *   - `df/`       (h, df): per-shingle document-frequency PARTIALS
-    * All three absorb arrivals by BLIND APPEND ([[appendContainmentIndex]]
-    * — no read-modify-write, so concurrent appenders are safe): a doc's
+    * An empty or missing `dir` is a new index; a rebuild writes to a new
+    * directory. All three absorb batches by BLIND APPEND — no
+    * read-modify-write, so concurrent appenders are safe: a doc's
     * shingle and size rows are written once (arrival ids are new — the
     * ingestion contract), and df partials are ADDITIVE across disjoint
     * document batches (each doc counts once), summed per hash by readers
@@ -830,33 +824,23 @@ object Dedup {
     * through max() and probe rows through distinct(), and a double-counted
     * df only perturbs the (lossless-under-any-order) prefix ORDER — pairs
     * are unchanged, the [[appendBlockIndex]] discipline. */
-  def writeContainmentIndex(docs: DataFrame, dir: String, n: Int = 3): Unit =
-    containmentIndexParts(docs, dir, n, "overwrite")
-
-  /** Absorb an arrival batch into the standing containment index (blind
-    * append; see [[writeContainmentIndex]] for the layout + replay
-    * posture). */
-  def appendContainmentIndex(docs: DataFrame, dir: String, n: Int = 3): Unit =
-    containmentIndexParts(docs, dir, n, "append")
-
-  private def containmentIndexParts(docs: DataFrame, dir: String, n: Int,
-                                    mode: String): Unit = {
+  def appendContainmentIndex(docs: DataFrame, dir: String, n: Int = 3): Unit = {
     // batch-bounded; feeds all three writes — left lazy each write
     // re-shingles the batch
     val ex = shingleRows(docs, n)
       .select(col("doc_id"), xxhash64(col("g")).as("h"))
       .localCheckpoint(true)
-    // hash-clustered layout (the [[writeFingerprintIndex]] discipline):
+    // hash-clustered layout (the [[appendFingerprintIndex]] discipline):
     // probe-side scans of a hash-sorted table skip row groups via parquet
     // min/max; same for the id-keyed sizes table
     ex.repartition(col("h")).sortWithinPartitions(col("h"))
-      .write.mode(mode).parquet(s"$dir/shingles")
+      .write.mode("append").parquet(s"$dir/shingles")
     ex.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
       .sortWithinPartitions(col("doc_id"))
-      .write.mode(mode).parquet(s"$dir/sizes")
+      .write.mode("append").parquet(s"$dir/sizes")
     ex.groupBy(col("h")).agg(count(lit(1)).as("df"))
       .sortWithinPartitions(col("h"))
-      .write.mode(mode).parquet(s"$dir/df")
+      .write.mode("append").parquet(s"$dir/df")
     Checkpoints.unpersist(ex)
   }
 
@@ -997,7 +981,7 @@ object Dedup {
 
   /** The LSH banding stage as exploded (doc_id, band, band_hash) rows — the
     * unit both the batch join ([[minhashLsh]]) and the persisted signature
-    * index ([[writeSignatureIndex]]/[[incrementalMinhash]]) operate on. */
+    * index ([[appendSignatureIndex]]/[[incrementalMinhash]]) operate on. */
   def bandRows(docs: DataFrame, n: Int = 3,
                bands: Int = 32, rows: Int = 4, seed: Long = 42L): DataFrame =
     bandRowsFromHashed(
@@ -1021,26 +1005,20 @@ object Dedup {
           b => xxhash64(b, slice(col("sig"), b * rows + 1, lit(rows))))))
       .toDF("doc_id", "band", "band_hash")
 
-  /** Persist the corpus's LSH band rows as the standing signature index a
-    * recurring dedup job probes. Clustered by band_hash (hash-partitioned
-    * AND sort-led within files), so row-group min/max stats are tight on
-    * band_hash: a probe variant that PUSHES a band_hash filter (a
-    * non-broadcastable arrival batch joining shuffled) skips row groups;
-    * the broadcast probe in [[incrementalMinhash]] reads the index once
-    * sequentially either way. */
-  def writeSignatureIndex(docs: DataFrame, dir: String, n: Int = 3,
-                          bands: Int = 32, rows: Int = 4, seed: Long = 42L): Unit =
-    bandRows(docs, n, bands, rows, seed)
-      .repartition(col("band_hash"))
-      .sortWithinPartitions(col("band_hash"), col("band"))
-      .write.mode("overwrite").parquet(dir)
-
-  /** Absorb an arrival batch into the standing signature index — the
-    * append twin of [[writeSignatureIndex]] (same clustering per appended
-    * file): run AFTER [[incrementalMinhash]] probed the batch, so the
-    * next batch's old↔new candidates see this one as corpus. Caller
-    * contract: arrival doc_ids are new (blind append, at-least-once
-    * under replay — the [[graft.ops.Ivf.appendToIndex]] posture). */
+  /** Append a batch's LSH band rows to the standing signature index a
+    * recurring dedup job probes. An empty or missing `dir` is a new
+    * index; a rebuild writes to a new directory. Each appended file is
+    * clustered by band_hash (hash-partitioned AND sort-led within files),
+    * so row-group min/max stats are tight on band_hash: a probe variant
+    * that PUSHES a band_hash filter (a non-broadcastable arrival batch
+    * joining shuffled) skips row groups; the broadcast probe in
+    * [[incrementalMinhash]] reads the index once sequentially either way.
+    *
+    * For arrivals, run it AFTER [[incrementalMinhash]] probed the batch,
+    * so the next batch's old↔new candidates see this one as corpus.
+    * Caller contract: arrival doc_ids are new. The append is blind, so a
+    * replay writes the batch's rows again; the probe `distinct()`s its
+    * candidate pairs, so duplicate rows emit no extra pair. */
   def appendSignatureIndex(docs: DataFrame, dir: String, n: Int = 3,
                            bands: Int = 32, rows: Int = 4,
                            seed: Long = 42L): Unit =
@@ -1051,7 +1029,7 @@ object Dedup {
 
   /** Persist the corpus's duplicate-cluster membership table — the other
     * standing artifact of a recurring dedup (the cluster twin of
-    * [[writeSignatureIndex]]): (doc_id, cluster_id, cluster_size) for every
+    * [[appendSignatureIndex]]): (doc_id, cluster_id, cluster_size) for every
     * doc that belongs to a near-dup cluster, hash-distributed and sort-led
     * by cluster_id so per-cluster reads (canonical selection, cluster
     * audits) get tight row-group stats. Built once per corpus refresh;
@@ -1103,7 +1081,8 @@ object Dedup {
     * found when the index was built; DedupSpec pins the equality).
     *
     * After the run, append the new docs' band rows to the index
-    * ([[bandRows]]) to absorb the batch into the standing corpus.
+    * ([[appendSignatureIndex]]) to absorb the batch into the standing
+    * corpus.
     */
   def incrementalMinhash(spark: org.apache.spark.sql.SparkSession,
                          indexDir: String, oldDocs: DataFrame, newDocs: DataFrame,
@@ -1329,21 +1308,18 @@ object Dedup {
           col("n_novel_ngrams").cast("double") / col("n_distinct_ngrams")))
       .orderBy(col("source"))
 
-  /** Standing novelty index: the distinct n-gram hashes the corpus has
-    * seen so far — the state the first-occurrence novelty screen
+  /** Standing novelty index: append a batch's distinct n-gram hashes.
+    * The index is every n-gram hash the corpus has seen so far — the
+    * state the first-occurrence novelty screen
     * ([[incrementalNgramNovelty]]) probes. Hash-only rows, hash-clustered
-    * on write (repartition + sort by h, the fingerprint-index discipline)
-    * so probe co-scans stream tight row groups. */
-  def writeNoveltyIndex(docs: DataFrame, dir: String, n: Int = 8): Unit =
-    shingleRows(docs, n).select(xxhash64(col("g")).as("h")).distinct()
-      .repartition(col("h")).sortWithinPartitions(col("h"))
-      .write.mode("overwrite").parquet(dir)
-
-  /** Append an arrival batch's distinct n-gram hashes to the standing
-    * novelty index. Blind append — rows the index already holds are
-    * harmless because the reader probes with a semi-join (idempotent in
-    * the probe table, the [[appendBlockIndex]] discipline), so
-    * at-least-once redelivery and concurrent appenders are safe. */
+    * per appended file (repartition + sort by h, the fingerprint-index
+    * discipline) so probe co-scans stream tight row groups. An empty or
+    * missing `dir` is a new index; a rebuild writes to a new directory.
+    *
+    * Blind append — rows the index already holds are harmless because
+    * the reader probes with a semi-join (idempotent in the probe table,
+    * the [[appendBlockIndex]] discipline), so at-least-once redelivery
+    * and concurrent appenders are safe. */
   def appendNoveltyIndex(docs: DataFrame, dir: String, n: Int = 8): Unit =
     shingleRows(docs, n).select(xxhash64(col("g")).as("h")).distinct()
       .repartition(col("h")).sortWithinPartitions(col("h"))
@@ -1619,28 +1595,21 @@ object Dedup {
         (col("pos") + lit(k)).cast("long").as("e")))
   }
 
-  /** Persist the corpus's winnowing-fingerprint index — the standing
+  /** Append a batch to the winnowing-fingerprint index — the standing
     * artifact that makes exact-substring dedup INCREMENTAL (the span-level
-    * twin of [[writeSignatureIndex]]): one (doc_id, fp_hash) row per
+    * twin of [[appendSignatureIndex]]): one (doc_id, fp_hash) row per
     * distinct fingerprint per doc, hash-distributed and sort-led by
     * fp_hash so an arrival probe's fingerprint lookups get tight row-group
-    * stats. Stored UNFILTERED (no maxDf cut): document frequency is a
-    * corpus-relative quantity that changes as arrivals absorb, so the cap
-    * is applied at PROBE time against the union df — a cap baked into the
-    * index would go stale with every batch. */
-  def writeFingerprintIndex(docs: DataFrame, dir: String, k: Int = 5,
-                            w: Int = 4,
-                            shingleHash: Column => Column = xxhash64(_)): Unit =
-    TextAnalysis.fingerprintHashes(docs, k, w, shingleHash)
-      .repartition(col("fp_hash"))
-      .sortWithinPartitions(col("fp_hash"))
-      .write.mode("overwrite").parquet(dir)
-
-  /** Absorb an arrival batch into the standing fingerprint index (append —
-    * same caller contract as [[appendSignatureIndex]]: arrival doc_ids are
+    * stats. An empty or missing `dir` is a new index; a rebuild writes to
+    * a new directory. Stored UNFILTERED (no maxDf cut): document frequency
+    * is a corpus-relative quantity that changes as arrivals absorb, so the
+    * cap is applied at PROBE time against the union df — a cap baked into
+    * the index would go stale with every batch.
+    *
+    * Same caller contract as [[appendSignatureIndex]]: arrival doc_ids are
     * new; at-least-once under replay — [[incrementalSpanScreen]] probes
     * with collect_set, so a replayed (doc_id, fp_hash) row can neither
-    * synthesize a self-pair nor inflate the df cap). */
+    * synthesize a self-pair nor inflate the df cap. */
   def appendFingerprintIndex(docs: DataFrame, dir: String, k: Int = 5,
                              w: Int = 4,
                              shingleHash: Column => Column = xxhash64(_)): Unit =
@@ -1651,7 +1620,7 @@ object Dedup {
 
   /** Incremental exact-substring screen — the arrival path of a standing
     * span-level dedup: a batch of new documents is checked against the
-    * corpus's persisted fingerprint index ([[writeFingerprintIndex]]) and
+    * corpus's persisted fingerprint index ([[appendFingerprintIndex]]) and
     * returns the ARRIVALS' removal spans (doc_id, start_tok, len_tok) —
     * maximal verbatim runs >= minLen the arrival shares with any standing
     * doc or an earlier-id arrival peer.

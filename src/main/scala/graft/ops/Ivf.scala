@@ -148,9 +148,16 @@ object Ivf {
     * the accumulated drift warrants a re-fit. Returns the arrivals'
     * (vec_id, centroid_id) assignments for audit/union-model checks.
     *
-    * Caller contract: arrival vec_ids are new (dedupe upstream — the
-    * index append, like every blind append here, is at-least-once under
-    * replay). The returned assignments frame is persisted through the
+    * Replay: arrivals whose vec_id the lists already hold are dropped
+    * before the append, so a batch the engine re-runs after its append
+    * landed (or a redelivered vector) adds nothing; they are also absent
+    * from the returned assignments. The lists are scanned for ids only,
+    * semi-joined against a broadcast of the batch's ids, and never
+    * shuffled; the held ids (at most the batch's) are collected to the
+    * driver. A vec_id that repeats inside one batch is still the
+    * caller's to dedupe.
+    *
+    * The returned assignments frame is persisted through the
     * [[InternalCaches]] LRU (the write below materializes it into the
     * cache, so a caller's count/collect does not re-run the
     * broadcast-join + window assignment plan); its lifecycle is
@@ -160,7 +167,14 @@ object Ivf {
   def appendToIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
                     newEmbeddings: DataFrame): DataFrame = {
     val centroids = FileFormats.readParquet(spark, s"$dir/centroids")
-    val data = prepared(newEmbeddings)
+    val arrived = prepared(newEmbeddings)
+    // collected before the write: a lazy frame over `lists` would be
+    // re-planned against the appended files when Spark re-caches the
+    // persisted assignments by path, and would then drop every arrival
+    val held = FileFormats.readParquet(spark, s"$dir/lists").select(col("vec_id"))
+      .join(broadcast(arrived.select(col("vec_id"))), Seq("vec_id"), "left_semi")
+      .collect().map(_.get(0))
+    val data = arrived.filter(!col("vec_id").isin(held.toIndexedSeq: _*))
     val assigned = graft.ops.InternalCaches.persistBounded(assign(data, centroids))
     data.join(assigned, "vec_id")
       .repartition(col("centroid_id"))

@@ -452,10 +452,12 @@ object TextAnalysis {
       .orderBy(col("bucket"))
   }
 
-  /** Standing vocabulary index — [[vocabGrowth]]'s write/append/serve
+  /** Standing vocabulary index — [[vocabGrowth]]'s append/serve
     * lifecycle, so the frontier curve is servable after every ingest
-    * batch WITHOUT rescanning history (the gram-df posture). Two
-    * hash-/key-clustered tables under `dir`:
+    * batch WITHOUT rescanning history (the gram-df posture). Each call
+    * blind-appends one batch's partials to two hash-/key-clustered tables
+    * under `dir`. An empty or missing `dir` is a new index; a rebuild
+    * writes to a new directory.
     *
     *  - `types`: per batch, each distinct token hash with the MINIMUM
     *    bucket the batch saw it in. The reader takes the per-hash min
@@ -464,31 +466,18 @@ object TextAnalysis {
     *    (the source_overlap census posture, via min instead of set
     *    union).
     *  - `vol`: per batch, per-bucket doc/token count partials — additive
-    *    across DISJOINT batches (each doc arrives once). Engine retries
-    *    should replace their partition (StateSink-style); source-level
-    *    redelivery double-counts volumes (the gram-df caveat) while
-    *    leaving the type half untouched.
+    *    across DISJOINT batches (each doc arrives once). The write is a
+    *    blind append, so a re-appended batch (an engine retry after the
+    *    write landed, or a source redelivery) double-counts its volumes
+    *    (the gram-df caveat); `types` is unaffected.
     *
     * Served after any batches covering the corpus, the curve equals the
     * batch [[vocabGrowth]] bit for bit (counts are longs; the windows
     * replay identically) — the registry entry reuses the batch oracle
     * verbatim, and batch splits need NOT align with bucket boundaries
     * (everything the reader does is a sum or a min). */
-  def writeVocabIndex(docs: DataFrame, dir: String,
-                      bucketWidth: Long = 64): Unit = {
-    vocabPartials(docs, bucketWidth, s"$dir", overwrite = true)
-  }
-
-  /** Blind-append an arrival batch's partials to the standing vocabulary
-    * index (see [[writeVocabIndex]] for the replay contract). */
   def appendVocabIndex(docs: DataFrame, dir: String,
                        bucketWidth: Long = 64): Unit = {
-    vocabPartials(docs, bucketWidth, s"$dir", overwrite = false)
-  }
-
-  private def vocabPartials(docs: DataFrame, bucketWidth: Long, dir: String,
-                            overwrite: Boolean): Unit = {
-    val mode = if (overwrite) "overwrite" else "append"
     val bucket = expr(s"doc_id div $bucketWidth").as("bucket")
     val toks = docs
       .select(bucket, explode(tokens(col("text"))).as("tok"))
@@ -496,7 +485,7 @@ object TextAnalysis {
       .select(col("bucket"), xxhash64(col("tok")).as("h"))
     toks.groupBy(col("h")).agg(min(col("bucket")).as("bucket"))
       .repartition(col("h")).sortWithinPartitions(col("h"))
-      .write.mode(mode).parquet(s"$dir/types")
+      .write.mode("append").parquet(s"$dir/types")
     toks.groupBy(col("bucket")).agg(count(lit(1)).as("n_tokens"))
       .join(docs.select(bucket).groupBy(col("bucket"))
           .agg(count(lit(1)).as("n_docs")),
@@ -504,7 +493,7 @@ object TextAnalysis {
       .select(col("bucket"), coalesce(col("n_docs"), lit(0L)).as("n_docs"),
         coalesce(col("n_tokens"), lit(0L)).as("n_tokens"))
       .repartition(col("bucket")).sortWithinPartitions(col("bucket"))
-      .write.mode(mode).parquet(s"$dir/vol")
+      .write.mode("append").parquet(s"$dir/vol")
   }
 
   /** Serve the vocabulary-growth curve from the standing index — one

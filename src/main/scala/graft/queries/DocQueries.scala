@@ -89,7 +89,7 @@ object DocQueries {
     import s.implicits._
     val all = Tables.documents(s, d)
     val dir = graft.sources.Scratch.dir("graft_nov_idx")
-    Dedup.writeNoveltyIndex(all.filter($"doc_id" < 400), dir)
+    Dedup.appendNoveltyIndex(all.filter($"doc_id" < 400), dir)
     Dedup.incrementalNgramNovelty(s, dir, all.filter($"doc_id" >= 400))
       .orderBy("doc_id")
   }
@@ -165,7 +165,7 @@ object DocQueries {
     import s.implicits._
     val all = Tables.documents(s, d)
     val dir = graft.sources.Scratch.dir("graft_vocab_idx")
-    TextAnalysis.writeVocabIndex(all.filter($"doc_id" < 400), dir)
+    TextAnalysis.appendVocabIndex(all.filter($"doc_id" < 400), dir)
     TextAnalysis.appendVocabIndex(all.filter($"doc_id" >= 400), dir)
     TextAnalysis.vocabGrowthFromIndex(s, dir)
   }
@@ -670,7 +670,7 @@ object DocQueries {
     import s.implicits._
     val all = Tables.documents(s, d)
     val dir = graft.sources.Scratch.dir("graft_blk_idx")
-    Dedup.writeBlockIndex(all.filter($"doc_id" < 400), dir)
+    Dedup.appendBlockIndex(all.filter($"doc_id" < 400), dir)
     Dedup.incrementalBlockDedup(s, dir, all.filter($"doc_id" >= 400))
       .orderBy("doc_id")
   }
@@ -790,7 +790,7 @@ object DocQueries {
     import s.implicits._
     val all = Tables.documents(s, d)
     val dir = graft.sources.Scratch.dir("graft_cont_idx")
-    Dedup.writeContainmentIndex(all.filter($"doc_id" < 400), dir)
+    Dedup.appendContainmentIndex(all.filter($"doc_id" < 400), dir)
     Dedup.incrementalContainmentScreen(s, dir, all.filter($"doc_id" >= 400))
       .orderBy("d_sub", "d_super")
   }
@@ -823,7 +823,7 @@ object DocQueries {
     import s.implicits._
     val all = Tables.documents(s, d)
     val dir = graft.sources.Scratch.dir("graft_sig_idx")
-    Dedup.writeSignatureIndex(all.filter($"doc_id" < 400), dir)
+    Dedup.appendSignatureIndex(all.filter($"doc_id" < 400), dir)
     Dedup.incrementalMinhash(s, dir,
         all.filter($"doc_id" < 400), all.filter($"doc_id" >= 400))
       .orderBy("d1", "d2")
@@ -1311,7 +1311,7 @@ object DocQueries {
     import s.implicits._
     val all = Tables.documents(s, d).select(col("doc_id"), col("source"), col("text"))
     val dir = graft.sources.Scratch.dir("graft_src_sh_idx")
-    Dedup.writeSourceShingleIndex(all.filter($"doc_id" < 400), dir)
+    Dedup.appendSourceShingleIndex(all.filter($"doc_id" < 400), dir)
     Dedup.appendSourceShingleIndex(all.filter($"doc_id" >= 400), dir)
     Dedup.sourceOverlapFromIndex(s, dir)
   }
@@ -2935,7 +2935,7 @@ $sel
     val dir = graft.sources.Scratch.dir("graft_fp_idx")
     val md5h: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
       c => md5(c.cast("binary"))
-    Dedup.writeFingerprintIndex(all.filter($"doc_id" < 400), dir,
+    Dedup.appendFingerprintIndex(all.filter($"doc_id" < 400), dir,
       shingleHash = md5h)
     Dedup.incrementalSpanScreen(s, dir,
         all.filter($"doc_id" < 400), all.filter($"doc_id" >= 400),

@@ -17,14 +17,13 @@ import graft.sources.FileFormats
   * scheduled [[graft.ops.Ivf.refreshIndex]] batch job — a re-fit inside a
   * micro-batch would stall the stream for an index-sized rebuild.
   *
-  * Replay caveat (the Count-Min/Misra-Gries posture, not the HLL one):
-  * appends are at-least-once — a re-delivered batch appends its vectors
-  * again, and a duplicated vector occupies TWO top-k slots in any search
-  * whose probe reaches it (displacing the k-th distinct neighbor), while
-  * list sizes and drift statistics count the replayed stream. Feed
-  * through [[EventsCdc.dedupStream]]-style upstream dedup or an
-  * exactly-once source; [[graft.ops.Ivf.appendToIndex]]'s caller
-  * contract (arrival vec_ids are new) is this pipeline's contract too. */
+  * Replay: [[graft.ops.Ivf.appendToIndex]] drops arrivals whose vec_id
+  * the lists already hold, so an engine retry of a batch whose append
+  * landed, or a source redelivery of the same vectors, adds nothing — a
+  * duplicated vector would take two top-k slots in any search whose
+  * probe reaches it and count twice in list sizes and drift statistics.
+  * A redelivered vec_id carrying a NEW vector is dropped too: the index
+  * keeps the first vector it absorbed for an id. */
 object IndexMaintenance {
 
   /** Launch the continuous index-append pipeline over a file-arrival
@@ -159,8 +158,7 @@ object IndexMaintenance {
       .start()
 
   /** Streaming source-overlap maintenance — the standing (source, hash128)
-    * shingle index ([[graft.ops.Dedup.writeSourceShingleIndex]]) kept
-    * current by BLIND per-batch appends
+    * shingle index kept current by BLIND per-batch appends
     * ([[graft.ops.Dedup.appendSourceShingleIndex]]): the census reader
     * ([[graft.ops.Dedup.sourceOverlapFromIndex]]) dedups sources per hash
     * with `collect_set`, so duplicate rows from engine retries AND

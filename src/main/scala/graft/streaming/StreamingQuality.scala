@@ -42,12 +42,13 @@ object StreamingQuality {
         // its own partition instead of double-appending report rows or
         // keeper docs.
         val report = graft.ops.TextAnalysis.gopherRules(batch).persist()
-        StateSink.appendIdempotent(report, batchId, reportDir)
-        StateSink.appendIdempotent(
-          batch.join(report.filter(col("keep")).select("doc_id"),
-            Seq("doc_id"), "left_semi"),
-          batchId, keptDir)
-        report.unpersist(blocking = false)
+        try {
+          StateSink.appendIdempotent(report, batchId, reportDir)
+          StateSink.appendIdempotent(
+            batch.join(report.filter(col("keep")).select("doc_id"),
+              Seq("doc_id"), "left_semi"),
+            batchId, keptDir)
+        } finally report.unpersist(blocking = false)
         ()
       }
       .start()

@@ -327,7 +327,7 @@ class AdversarialSpec extends SparkSpec {
       "solo")).toDF("doc_id", "text", "source")).isEmpty)
     // an EMPTY standing shingle index serves an empty matrix with schema
     val srcIdxDir = graft.sources.Scratch.dir("graft_adv_srcsh")
-    Dedup.writeSourceShingleIndex(emptySrc, srcIdxDir)
+    Dedup.appendSourceShingleIndex(emptySrc, srcIdxDir)
     assert(Dedup.sourceOverlapFromIndex(spark, srcIdxDir).isEmpty &&
       Dedup.sourceOverlapFromIndex(spark, srcIdxDir).columns.toSeq ===
         Seq("s1", "s2", "n_s1", "n_s2", "n_shared",
@@ -340,7 +340,7 @@ class AdversarialSpec extends SparkSpec {
     assert(Similarity.labelPropagate(emptyEmb).isEmpty)
     // the r14 screen with an EMPTY standing corpus, then empty arrivals
     val dir = graft.sources.Scratch.dir("graft_adv_cont")
-    Dedup.writeContainmentIndex(emptyDocs, dir)
+    Dedup.appendContainmentIndex(emptyDocs, dir)
     val arr = docs((10L, "alpha beta gamma delta"))
     assert(Dedup.incrementalContainmentScreen(spark, dir, arr).isEmpty,
       "nothing can contain an arrival when the corpus is empty")

@@ -271,26 +271,31 @@ class DedupSpec extends SparkSpec {
       (2L, "B", "b c d y"),   // adds {b c d, c d y} to B — b c d now shared with A
       (3L, "C", "a b c")      // a new source appearing only via append
     ).toDF("doc_id", "source", "text")
-    val dir = graft.sources.Scratch.dir("src_sh_idx")
-    Dedup.writeSourceShingleIndex(standing, dir)
-    Dedup.appendSourceShingleIndex(arrivals, dir)
-    // the arrival batch REDELIVERED whole (at-least-once): census unchanged —
-    // duplicate (source, hash) rows are absorbed by the collect_set
-    Dedup.appendSourceShingleIndex(arrivals, dir)
-    val served = Dedup.sourceOverlapFromIndex(spark, dir)
-      .collect().map(r => (r.getString(0), r.getString(1)) -> r).toMap
     val batch = Dedup.sourceOverlap(standing.union(arrivals))
       .collect().map(r => (r.getString(0), r.getString(1)) -> r).toMap
-    assert(served.keySet === batch.keySet)
-    for ((k, s) <- served; b = batch(k))
-      assert(s.toSeq === b.toSeq, s"pair $k served != batch")
-    // and the matrix itself is what the hand count says: A={a b c, b c d},
-    // B={a b c, b c x, b c d, c d y}, C={a b c}
-    val ab = served(("A", "B"))
-    assert((ab.getLong(2), ab.getLong(3), ab.getLong(4)) === ((2L, 4L, 2L)))
-    assert(ab.getDouble(5) === 1.0 && ab.getDouble(6) === 0.5)
-    val ac = served(("A", "C"))
-    assert((ac.getLong(2), ac.getLong(3), ac.getLong(4)) === ((2L, 1L, 1L)))
+    // bootstrap into a fresh empty directory, and into a deployment's own
+    // managed path that does not exist yet: both are a new index
+    val missing = s"${graft.sources.Scratch.dir("src_sh_managed")}/corpus/index"
+    assert(!new java.io.File(missing).exists())
+    Seq(graft.sources.Scratch.dir("src_sh_idx"), missing).foreach { dir =>
+      Dedup.appendSourceShingleIndex(standing, dir)
+      Dedup.appendSourceShingleIndex(arrivals, dir)
+      // the arrival batch REDELIVERED whole (at-least-once): census unchanged —
+      // duplicate (source, hash) rows are absorbed by the collect_set
+      Dedup.appendSourceShingleIndex(arrivals, dir)
+      val served = Dedup.sourceOverlapFromIndex(spark, dir)
+        .collect().map(r => (r.getString(0), r.getString(1)) -> r).toMap
+      assert(served.keySet === batch.keySet, s"served keys at $dir")
+      for ((k, s) <- served; b = batch(k))
+        assert(s.toSeq === b.toSeq, s"pair $k served != batch at $dir")
+      // and the matrix itself is what the hand count says: A={a b c, b c d},
+      // B={a b c, b c x, b c d, c d y}, C={a b c}
+      val ab = served(("A", "B"))
+      assert((ab.getLong(2), ab.getLong(3), ab.getLong(4)) === ((2L, 4L, 2L)))
+      assert(ab.getDouble(5) === 1.0 && ab.getDouble(6) === 0.5)
+      val ac = served(("A", "C"))
+      assert((ac.getLong(2), ac.getLong(3), ac.getLong(4)) === ((2L, 1L, 1L)))
+    }
   }
 
   test("block dedup: hand-computed segmentation, first-instance rule, stats") {
@@ -353,7 +358,7 @@ class DedupSpec extends SparkSpec {
       (11L, "x y z p q r"),  // first block dups (10, 1) WITHIN the batch
       (12L, "n o p")         // all fresh
     ).toDF("doc_id", "text")
-    Dedup.writeBlockIndex(standing, dir, blockWords = 3)
+    Dedup.appendBlockIndex(standing, dir, blockWords = 3)
     val screened = Dedup.incrementalBlockDedup(spark, dir, arrivals, blockWords = 3)
       .orderBy("doc_id").collect().map(_.toString)
     val global = Dedup.blockDedup(standing.unionByName(arrivals), blockWords = 3)
@@ -496,7 +501,7 @@ class DedupSpec extends SparkSpec {
     val standing = docs.filter($"doc_id" < 400)
     val arrivals = docs.filter($"doc_id" >= 400)
     val dir = graft.sources.Scratch.dir("graft_sig_spec")
-    Dedup.writeSignatureIndex(standing, dir)
+    Dedup.appendSignatureIndex(standing, dir)
     val inc = Dedup.incrementalMinhash(spark, dir, standing, arrivals)
       .select("d1", "d2").as[(Long, Long)].collect().toSet
     val full = Dedup.minhashLsh(docs)
@@ -582,7 +587,7 @@ class DedupSpec extends SparkSpec {
     val b1 = docs.filter($"doc_id" >= 300 && $"doc_id" < 400)
     val b2 = docs.filter($"doc_id" >= 400)
     val idx = graft.sources.Scratch.dir("graft_fpidx")
-    Dedup.writeFingerprintIndex(standing, idx)
+    Dedup.appendFingerprintIndex(standing, idx)
     val s1 = Dedup.incrementalSpanScreen(spark, idx, standing, b1, maxDf = 64)
       .as[(Long, Long, Long)].collect().toSet
     Dedup.appendFingerprintIndex(b1, idx)
@@ -610,7 +615,7 @@ class DedupSpec extends SparkSpec {
     val arrival = Seq(
       (1L, "x y c d e f g h i j z")).toDF("doc_id", "text")
     val idx = graft.sources.Scratch.dir("graft_fpidx2")
-    Dedup.writeFingerprintIndex(standing, idx)
+    Dedup.appendFingerprintIndex(standing, idx)
     val out = Dedup.incrementalSpanScreen(spark, idx, standing, arrival)
       .as[(Long, Long, Long)].collect().toSeq
     assert(out === Seq((1L, 3L, 8L)),
@@ -630,7 +635,7 @@ class DedupSpec extends SparkSpec {
     val arrival = Seq(
       (20L, "x y c d e f g h i j z")).toDF("doc_id", "text")
     val idx = graft.sources.Scratch.dir("graft_fpidx3")
-    Dedup.writeFingerprintIndex(standing, idx)
+    Dedup.appendFingerprintIndex(standing, idx)
     val clean = Dedup.incrementalSpanScreen(spark, idx, standing, arrival)
       .as[(Long, Long, Long)].collect().toSet
     assert(clean === Set((20L, 3L, 8L)), s"got $clean")
@@ -720,7 +725,7 @@ class DedupSpec extends SparkSpec {
     val idx = graft.sources.Scratch.dir("graft_ds_idx")
     val corpus = graft.sources.Scratch.dir("graft_ds_corp")
     val pairs = graft.sources.Scratch.dir("graft_ds_pairs")
-    Dedup.writeSignatureIndex(standing, idx)
+    Dedup.appendSignatureIndex(standing, idx)
     standing.write.mode("overwrite").parquet(corpus)
     val srcDir = graft.sources.Scratch.path("graft_ds_src")
     Seq(b1, b2).zipWithIndex.foreach { case (b, i) =>
@@ -764,7 +769,7 @@ class DedupSpec extends SparkSpec {
     val idx = graft.sources.Scratch.dir("graft_ss_idx")
     val corpus = graft.sources.Scratch.dir("graft_ss_corp")
     val spans = graft.sources.Scratch.dir("graft_ss_spans")
-    Dedup.writeFingerprintIndex(standing, idx)
+    Dedup.appendFingerprintIndex(standing, idx)
     standing.write.mode("overwrite").parquet(corpus)
     val srcDir = graft.sources.Scratch.path("graft_ss_src")
     Seq(b1, b2).zipWithIndex.foreach { case (b, i) =>
@@ -811,7 +816,7 @@ class DedupSpec extends SparkSpec {
       (12L, "ab")  // shorter than n=3 words: no shingles, absent
     ).toDF("doc_id", "text")
     val dir = graft.sources.Scratch.dir("graft_cont_toy")
-    Dedup.writeContainmentIndex(standing, dir)
+    Dedup.appendContainmentIndex(standing, dir)
     val out = Dedup.incrementalContainmentScreen(spark, dir, arrivals)
       .as[(Long, Long, Long, Long, Double)].collect().toSet
     // doc 10: 6 distinct 3-gram shingles, all inside doc 1's set
@@ -836,7 +841,7 @@ class DedupSpec extends SparkSpec {
     val b2 = docs.filter($"doc_id" >= 400)
     val idx = graft.sources.Scratch.dir("graft_cs_idx")
     val pairsDir = graft.sources.Scratch.dir("graft_cs_pairs")
-    Dedup.writeContainmentIndex(standing, idx)
+    Dedup.appendContainmentIndex(standing, idx)
     val srcDir = graft.sources.Scratch.path("graft_cs_src")
     Seq(b1, b2).zipWithIndex.foreach { case (b, i) =>
       val tmp = graft.sources.Scratch.dir("graft_cs_tmp")
@@ -1045,7 +1050,7 @@ class DedupSpec extends SparkSpec {
     // monotone-id identity: the screen over batch 1 equals the corpus-wide
     // first-occurrence rule restricted to batch 1 (novelty doubles are the
     // same identical-operand division in both paths — exact equality)
-    Dedup.writeNoveltyIndex(standing, dir)
+    Dedup.appendNoveltyIndex(standing, dir)
     assert(rows(Dedup.incrementalNgramNovelty(spark, dir, b1)) ===
       rows(Dedup.ngramNovelty(standing.union(b1))
         .filter($"doc_id" >= 300 && $"doc_id" < 400)))
@@ -1088,7 +1093,7 @@ class DedupSpec extends SparkSpec {
     val b2 = docs.filter($"doc_id" >= 400)
     val idx = graft.sources.Scratch.dir("graft_novs_idx")
     val novDir = graft.sources.Scratch.dir("graft_novs_out")
-    Dedup.writeNoveltyIndex(standing, idx)
+    Dedup.appendNoveltyIndex(standing, idx)
     val srcDir = graft.sources.Scratch.path("graft_novs_src")
     Seq(b1, b2).zipWithIndex.foreach { case (b, i) =>
       val tmp = graft.sources.Scratch.dir("graft_novs_tmp")
@@ -1139,7 +1144,7 @@ class DedupSpec extends SparkSpec {
 
     // bootstrap index + two streamed batches, then serve MID-STREAM:
     // the census must equal the batch operator over everything arrived
-    Dedup.writeSourceShingleIndex(b1, idxDir)
+    Dedup.appendSourceShingleIndex(b1, idxDir)
     ship(b2, 0)
     graft.streaming.IndexMaintenance.runSourceOverlapMaintenance(
       spark, srcDir.toString, docs, idxDir, ckpt, maxFilesPerTrigger = 1)

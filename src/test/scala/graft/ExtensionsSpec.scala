@@ -249,7 +249,7 @@ class ExtensionsSpec extends SparkSpec {
     // the standing-index serve path: census TVF over the index relation ≡
     // the Scala index read ≡ the inline whole-corpus matrix
     val idxDir = graft.sources.Scratch.dir("graft_ext_srcsh")
-    graft.ops.Dedup.writeSourceShingleIndex(docs.filter($"doc_id" < 400), idxDir)
+    graft.ops.Dedup.appendSourceShingleIndex(docs.filter($"doc_id" < 400), idxDir)
     graft.ops.Dedup.appendSourceShingleIndex(docs.filter($"doc_id" >= 400), idxDir)
     spark.read.parquet(idxDir).createOrReplaceTempView("ext_srcsh_idx")
     pin(spark.sql("SELECT * FROM graft_source_overlap_census('ext_srcsh_idx')"),
@@ -282,7 +282,7 @@ class ExtensionsSpec extends SparkSpec {
       nonEmpty = true)
     // and the TVF identity equals the REAL standing-index screen
     val dir = graft.sources.Scratch.dir("graft_ext_cont")
-    graft.ops.Dedup.writeContainmentIndex(all.filter($"doc_id" < 400), dir)
+    graft.ops.Dedup.appendContainmentIndex(all.filter($"doc_id" < 400), dir)
     pin(spark.sql("SELECT * FROM graft_incremental_containment(" +
         "'ext_arr_standing', 'ext_arr_arrivals', '3', '0.8')"),
       graft.ops.Dedup.incrementalContainmentScreen(
@@ -297,7 +297,7 @@ class ExtensionsSpec extends SparkSpec {
       nonEmpty = true)
     val spanIdx = graft.sources.Scratch.dir("graft_ext_span")
     val corpusDir = graft.sources.Scratch.dir("graft_ext_corp")
-    graft.ops.Dedup.writeFingerprintIndex(all.filter($"doc_id" < 400), spanIdx)
+    graft.ops.Dedup.appendFingerprintIndex(all.filter($"doc_id" < 400), spanIdx)
     all.filter($"doc_id" < 400).write.mode("overwrite").parquet(corpusDir)
     pin(spark.sql("SELECT * FROM graft_span_screen_indexed(" +
         s"'ext_arr_arrivals', '$spanIdx', '$corpusDir', '8')"),
@@ -353,7 +353,7 @@ class ExtensionsSpec extends SparkSpec {
     val contIdx = graft.sources.Scratch.dir("graft_ext_cs_lazy")
     Seq((10L, "alpha beta gamma delta")).toDF("doc_id", "text")
       .createOrReplaceTempView("ext_lazy_arr")
-    graft.ops.Dedup.writeContainmentIndex(
+    graft.ops.Dedup.appendContainmentIndex(
       Seq((1L, "alpha beta gamma delta epsilon")).toDF("doc_id", "text"),
       contIdx)
     spark.sql(s"EXPLAIN SELECT * FROM graft_containment_screen(" +
@@ -383,7 +383,7 @@ class ExtensionsSpec extends SparkSpec {
     val standingDocs = Seq(
       (1L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"))
       .toDF("doc_id", "text")
-    graft.ops.Dedup.writeFingerprintIndex(standingDocs, spanIdx)
+    graft.ops.Dedup.appendFingerprintIndex(standingDocs, spanIdx)
     standingDocs.write.mode("overwrite").parquet(spanCorpus)
     Seq((10L, "alpha beta gamma delta epsilon zeta eta theta iota mu"))
       .toDF("doc_id", "text").createOrReplaceTempView("ext_lazy_span_arr")

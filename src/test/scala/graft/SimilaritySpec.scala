@@ -676,6 +676,20 @@ class SimilaritySpec extends SparkSpec {
         .as[(Long, Int, Long, Double)].collect().toSet
       assert(onDisk === inMem, s"streamed append diverged at nprobe=$nprobe")
     }
+    // the engine's own retry path: batch 1 appended, but its commit never
+    // landed (deleted here), so the restarted query re-runs batch 1 under
+    // the SAME batchId — its vectors are already in the lists
+    java.nio.file.Files.delete(java.nio.file.Paths.get(ckpt, "commits", "1"))
+    java.nio.file.Files.delete(java.nio.file.Paths.get(ckpt, "commits", ".1.crc"))
+    val retry = graft.streaming.IndexMaintenance.runIvfAppend(
+      spark, srcDir.toString, all, dir, ckpt, maxFilesPerTrigger = 1)
+    retry.awaitTermination()
+    assert(retry.recentProgress.exists(p => p.batchId == 1L && p.numInputRows > 0L),
+      "the restart must re-run batch 1, or this spec proves nothing")
+    val relisted = spark.read.parquet(s"$dir/lists")
+    assert(relisted.count() === all.count(), "a re-run batch appends nothing")
+    assert(relisted.groupBy($"vec_id").count().filter($"count" > 1).count() === 0,
+      "no vec_id may appear twice after the re-run")
   }
 
   test("compactLists recovers an interrupted swap and never stages inside the lists tree") {

@@ -344,6 +344,32 @@ class TextAnalysisSpec extends SparkSpec {
       docs.columns.toSet + "batch_id")
   }
 
+  test("streaming quality screen: a failed keeper write releases the persisted report") {
+    val docs = graft.sources.Tables.documents(spark, sf).filter($"doc_id" < 50)
+    val srcDir = graft.sources.Scratch.path("graft_qsf_src")
+    val tmp = graft.sources.Scratch.dir("graft_qsf_tmp")
+    docs.coalesce(1).write.mode("overwrite").parquet(tmp)
+    val part = new java.io.File(tmp).listFiles()
+      .filter(_.getName.endsWith(".parquet")).head
+    java.nio.file.Files.copy(part.toPath, srcDir.resolve("0.parquet"))
+    // the keeper store is a regular file: the report write lands, then
+    // the keeper write throws with the report still persisted
+    val kept = java.nio.file.Files.createFile(
+      graft.sources.Scratch.path("graft_qsf_kept").resolve("kept")).toString
+    val report = graft.sources.Scratch.dir("graft_qsf_rep")
+    val ckpt = graft.sources.Scratch.dir("graft_qsf_ck")
+    val before = spark.sparkContext.getPersistentRDDs.size
+    val q = graft.streaming.StreamingQuality.runQualityScreen(
+      spark, srcDir.toString, docs, kept, report, ckpt)
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      q.awaitTermination()
+    }
+    assert(spark.read.parquet(report).count() === docs.count(),
+      "the report write must land before the keeper write fails")
+    assert(spark.sparkContext.getPersistentRDDs.size <= before,
+      "the batch's persisted report must be released when a write throws")
+  }
+
   test("corpus drift: tagged partials + moving-boundary read, hand-computed") {
     val docs = Seq(
       (0L, "s", "w1 w2"),       // batch 0 (old side), 2 tokens
@@ -531,7 +557,7 @@ class TextAnalysisSpec extends SparkSpec {
       df.collect().map(_.toSeq).toSeq
 
     // prefix serve: index over batch 1 alone equals the batch operator on it
-    TextAnalysis.writeVocabIndex(b1, dir)
+    TextAnalysis.appendVocabIndex(b1, dir)
     assert(rows(TextAnalysis.vocabGrowthFromIndex(spark, dir)) ===
       rows(TextAnalysis.vocabGrowth(b1)))
 
