@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.sources.FileFormats
 
@@ -11,8 +12,9 @@ import graft.sources.FileFormats
   * triggers it — run-order noise was r2's biggest bench artifact), the
   * second (warm) run is the reported number. `value` is the warm total.
   * Failures are never swallowed: a query that throws is reported as -1 in
-  * both maps plus an entry in `errors`, so a fast failure can't read as a
-  * fast success.
+  * both time maps plus an entry in `errors`, so a fast failure can't read as
+  * a fast success. `warm_compiles` counts the generated classes janino
+  * compiled during each warm run.
   */
 object Bench {
 
@@ -580,6 +582,9 @@ object Bench {
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     val cold = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     val warm = scala.collection.mutable.LinkedHashMap.empty[String, Double]
+    // -1 when the cold run failed; 0 once an entry's classes stay cached
+    val warmCompiles = scala.collection.mutable.LinkedHashMap.empty[String, Long]
+    def compiled(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
     def once(name: String, fn: (SparkSession, String) => DataFrame): Double = {
       val t0 = System.nanoTime()
@@ -599,7 +604,9 @@ object Bench {
 
     entries.foreach { case (name, fn) =>
       cold(name) = once(name, fn)
+      val c0 = compiled()
       warm(name) = if (cold(name) < 0) -1.0 else once(name, fn)
+      warmCompiles(name) = if (cold(name) < 0) -1L else compiled() - c0
     }
 
     // a partial total would read as "faster than a green run" — report -1
@@ -608,6 +615,7 @@ object Bench {
     val coldTotal = if (errors.nonEmpty) -1.0 else cold.values.sum
     val qs = jmap(warm.toSeq.map { case (k, v) => k -> v.toString })
     val cs = jmap(cold.toSeq.map { case (k, v) => k -> v.toString })
+    val wc = jmap(warmCompiles.toSeq.map { case (k, v) => k -> v.toString })
     val es = jmap(errors.toSeq.map { case (k, v) => k -> JsonEscape.str(v) })
     // the HEAD commit ties a recorded bench line to the exact sources it
     // measured (best-effort: absent outside a git checkout)
@@ -622,7 +630,7 @@ object Bench {
     // recorder that keeps only the tail of stdout (the driver truncates to
     // 2000 chars) still retains every headline number — r10's recorded
     // bench lost its warm map AND total to exactly that truncation
-    val line = s"""{"queries":$qs,"cold":$cs,"errors":$es,"metric":"total","value":$total,"unit":"sec","partial":${errors.nonEmpty},"n_errors":${errors.size},"warm_total":$total,"cold_total":$coldTotal,"cold_is_plan_warm":true,"n_entries":${entries.size},"gauge":{"q1":$gauge,"baseline":$gaugeBaseline},"commit":${JsonEscape.str(commit)},"sf":${JsonEscape.str(sfDir)}}"""
+    val line = s"""{"queries":$qs,"cold":$cs,"warm_compiles":$wc,"errors":$es,"metric":"total","value":$total,"unit":"sec","partial":${errors.nonEmpty},"n_errors":${errors.size},"warm_total":$total,"cold_total":$coldTotal,"cold_is_plan_warm":true,"n_entries":${entries.size},"gauge":{"q1":$gauge,"baseline":$gaugeBaseline},"commit":${JsonEscape.str(commit)},"sf":${JsonEscape.str(sfDir)}}"""
     println(line)
     // stdout capture can truncate to a tail (r4 lost the whole warm map that
     // way) — also persist the full line next to the sources. A filtered

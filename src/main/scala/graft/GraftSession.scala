@@ -43,6 +43,30 @@ import org.apache.spark.sql.SparkSession
   *    graft included. A listing on the driver is cheap already: the whole
   *    2,405-partition read above is under 0.85 s, and none of the
   *    engine's reads runs the schema job on top of it.
+  *
+  * The codegen cache is sized to a benchmark run's working set. Spark
+  * janino-compiles each generated class and keeps it in a JVM-global LRU
+  * cache of `spark.sql.codegen.cache.maxEntries` classes, 100 by default,
+  * and a benchmark run uses more: at that size every `curation` pass
+  * recompiled 147–152 classes and the first ladder read of each round 34
+  * (seed 7, `local[4]`, the compile-time histogram's count read around each
+  * call). `builder` sets the size to 1024, and sets
+  * `spark.sql.codegen.useIdInClassName` to false: AQE numbers a query's
+  * whole-stage codegen stages in the order its re-planning creates them,
+  * which follows task timing, so with that number in the class name a stage
+  * can come back under a new name and miss the cache (`CodegenHealthSpec`'s
+  * curation chain recompiled 64–196 classes on its third run with the size
+  * alone). With both, a whole `curation` run compiles each of its 190
+  * distinct classes once and a `cdc_serve` run each of its 140: the first
+  * timed pass compiles 37, later passes 0–2 and ladder reads 0. The size is
+  * read once per JVM, when `CodeGenerator`'s cache is built at the first
+  * code generation, from the session active then; it holds when a graft
+  * session generates code first, as every graft main, the test suite and the
+  * benchmark do. The cache keeps about 28 KB of heap per class (benchmark
+  * `retained_heap_mb` +2.6 MB for `curation`'s 90 extra classes, +1.1 MB for
+  * `cdc_serve`'s 40), so at most about 28 MB; a larger working set, such as
+  * one pass over the whole registry, still evicts. The caches of the
+  * executor JVMs of cluster masters were not measured.
   */
 object GraftSession {
   /** `local`, `local[N]`, `local[*]`, `local[N,F]`, `local[*,F]`: the
@@ -75,6 +99,11 @@ object GraftSession {
       // (graft.sources.Tables.events converts to microsecond timestamps)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      // the codegen cache holds one run's distinct generated classes, and a
+      // whole-stage class's name leaves out its AQE-numbered stage id, so a
+      // re-planned stage finds its class again (scaladoc above)
+      .config("spark.sql.codegen.cache.maxEntries", "1024")
+      .config("spark.sql.codegen.useIdInClassName", "false")
     if (inProcess(master))
       b.config("spark.sql.sources.parallelPartitionDiscovery.threshold",
         Int.MaxValue.toString)

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
@@ -38,5 +39,15 @@ trait SparkSpec extends AnyFunSuite {
       org.apache.spark.sql.graft.GraftSqlShim.drainListenerBus(spark)
     } finally spark.sparkContext.removeSparkListener(listener)
     n.get()
+  }
+
+  /** The number of generated classes janino compiles while `body` runs:
+    * the delta of the JVM-wide compile-time histogram's count. A local
+    * session compiles on this JVM's own threads, so every compile of the
+    * body is counted. */
+  def compilesDuring(body: => Unit): Long = {
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    body
+    CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
   }
 }
