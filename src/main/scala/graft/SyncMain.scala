@@ -16,7 +16,8 @@ package graft
   * a driver-side JDBC poll of a pg_notify-style relay relation
   * ([[graft.streaming.NotifyShim]]) that appends each batch of notified
   * event rows as an arrival file under `<arrivalsDir>` — the directory a
-  * concurrently-running [[graft.streaming.EventsCdc.runWorker]] watches.
+  * concurrently-running SCD1 worker watches (the [[graft.streaming.StateSink.run]]
+  * composition in [[graft.streaming.EventsCdc.scd1MergeBatch]]'s scaladoc).
   * Tunables ride the environment, reference-style: GRAFT_NOTIFY_TABLE
   * (default `notifications`), GRAFT_EVENTS_TABLE (`events`),
   * GRAFT_POLL_SECONDS (`5`), GRAFT_JDBC_USER / GRAFT_JDBC_PASSWORD (empty),

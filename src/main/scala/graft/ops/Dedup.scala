@@ -871,6 +871,10 @@ object Dedup {
     * ([[appendContainmentIndex]]), any LATER arrival containing a batch
     * peer is caught normally, so across a run the emitted pairs are
     * exactly those whose sub side arrived strictly after its super side.
+    * The `shingles/` and `sizes/` reads skip the arrivals' own doc_ids,
+    * so a probe re-run after the batch was absorbed (an engine retry)
+    * emits the same pairs; the df counts the retry inflated only reorder
+    * the lossless prefix.
     *
     * The arrival shingles and candidate pairs are eagerly materialized
     * (batch-/candidate-bounded, multi-branch consumers — the
@@ -879,9 +883,15 @@ object Dedup {
                                    dir: String, arrivals: DataFrame,
                                    n: Int = 3,
                                    threshold: Double = 0.8): DataFrame = {
+    // the standing side never includes the arrivals themselves: an
+    // engine retry probes after its own absorb landed, and their index
+    // rows would pair each arrival with itself and with its batch peers
+    val arrived = broadcast(arrivals.select(col("doc_id")))
     val idxSh = FileFormats.readParquet(spark, s"$dir/shingles")
+      .join(arrived, Seq("doc_id"), "left_anti")
     // max() collapses replayed size rows (same value re-appended)
     val idxSz = FileFormats.readParquet(spark, s"$dir/sizes")
+      .join(arrived, Seq("doc_id"), "left_anti")
       .groupBy(col("doc_id")).agg(max(col("sz")).as("sz_super"))
     // batch-bounded; feeds prefix + verification. Lazy bounded persist,
     // not eager localCheckpoint: the SQL-surface resolution rule invokes
@@ -1318,8 +1328,11 @@ object Dedup {
     *
     * Blind append — rows the index already holds are harmless because
     * the reader probes with a semi-join (idempotent in the probe table,
-    * the [[appendBlockIndex]] discipline), so at-least-once redelivery
-    * and concurrent appenders are safe. */
+    * the [[appendBlockIndex]] discipline), so concurrent appenders are
+    * safe. A batch probed AGAIN after its own absorb (an engine retry or
+    * a source redelivery) finds all its grams indexed and scores
+    * zero-novel: the hash-only index cannot tell its grams from earlier
+    * docs' ([[graft.streaming.IndexMaintenance.noveltyScreenBatch]]). */
   def appendNoveltyIndex(docs: DataFrame, dir: String, n: Int = 8): Unit =
     shingleRows(docs, n).select(xxhash64(col("g")).as("h")).distinct()
       .repartition(col("h")).sortWithinPartitions(col("h"))

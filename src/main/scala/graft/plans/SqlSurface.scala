@@ -144,7 +144,7 @@ class GraftTableOpResolution(session: SparkSession) extends Rule[LogicalPlan] {
           // surface; a standing ingest pipeline should use the Scala path
           // (Dedup.incrementalSpanScreen probing a persisted fingerprint
           // index at cost ∝ batch + candidates, fed by
-          // IndexMaintenance.runSpanScreen) — a SQL TVF cannot carry the
+          // IndexMaintenance.spanScreenBatch) — a SQL TVF cannot carry the
           // index directory handle, so the cheap path is Scala-only.
           val docs = ldf.select(col("doc_id"), col("text"))
             .unionByName(rdf.select(col("doc_id"), col("text")))

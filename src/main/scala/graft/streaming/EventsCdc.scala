@@ -2,14 +2,15 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import graft.olap.StarSchema
 import graft.sources.FileFormats
 
 /** Structured-Streaming CDC pipeline — the streaming form of the reference's
   * LISTEN/NOTIFY worker (worker_sync.py:42-108): a change stream of events is
   * consumed continuously, windowed aggregates maintain the OLAP rollups, and
-  * a foreachBatch SCD1 merge keeps the latest-state table current.
+  * an SCD1 merge step run by [[StateSink.run]] keeps the latest-state
+  * table current.
   *
   * The batch operators in `graft.ops.Events` and `StarSchema.scd1Latest` are
   * reused verbatim — one set of semantics, two execution modes.
@@ -27,25 +28,6 @@ object EventsCdc {
        reader.option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
      else reader).parquet(dir)
   }
-
-  /** The reference worker's FULL loop (worker_sync.py:71-108) as one
-    * streaming pipeline: file-arrival change stream → exactly-once guard →
-    * tombstone-aware SCD1 state maintenance. Each new file plays a NOTIFY
-    * delivery; [[dedupStream]] absorbs the at-least-once re-deliveries a
-    * real queue/file source produces; the [[runScd1]] merge keeps the
-    * newest row per key with deletes preserved as tombstones (read the live
-    * view via [[graft.olap.StarSchema.live]]). One call, continuously
-    * current state — the library form of the worker process. */
-  def runWorker(spark: SparkSession, srcDir: String, schemaFrom: DataFrame,
-                stateDir: String, checkpointDir: String,
-                keys: Seq[String] = Seq("user_id"),
-                dedupDelay: String = "2 hours",
-                maxFilesPerTrigger: Int = 0,
-                trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    runScd1(spark,
-      dedupStream(readEventStream(spark, srcDir, schemaFrom, maxFilesPerTrigger),
-                  dedupDelay),
-      stateDir, checkpointDir, keys, trigger)
 
   /** Watermarked tumbling-window aggregation: the streaming mirror of
     * `Events.windowed`. The watermark bounds state — windows older than
@@ -108,14 +90,29 @@ object EventsCdc {
       p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
     }
 
-  /** foreachBatch SCD1 merge into a versioned parquet state directory:
+  /** One SCD1 micro-batch into a versioned parquet state directory:
     * batch N writes `v=N` from `v=N-1 ∪ batch` (last-write-wins per key).
     * Versioned writes keep the merge idempotent under micro-batch replay —
     * re-running batch N simply overwrites `v=N` with identical content;
     * [[sweepVersions]] keeps just `v=N` and its input, so a worker that
     * never stops holds two copies of the state, not one per micro-batch.
     * (A transactional table format would replace the versioning in a real
-    * deployment; the merge semantics are the deliverable here.) */
+    * deployment; the merge semantics are the deliverable here.)
+    *
+    * The reference worker's full loop (worker_sync.py:71-108) is this
+    * step behind the exactly-once guard on a file-arrival change stream,
+    * each new file playing one NOTIFY delivery:
+    * {{{
+    * StateSink.run(
+    *   EventsCdc.dedupStream(EventsCdc.readEventStream(spark, srcDir, schemaFrom)),
+    *   checkpointDir)(EventsCdc.scd1MergeBatch(spark, stateDir, Seq("user_id")))
+    * }}}
+    * [[dedupStream]] absorbs the at-least-once redeliveries a real queue
+    * or file source produces; the merge keeps the newest row per key with
+    * deletes preserved as tombstones (read the live view via
+    * [[graft.olap.StarSchema.live]]). The same composition with
+    * [[scd1JdbcBatch]] keeps a live JDBC table current instead, and with
+    * [[scd2MergeBatchSplit]] keeps type-2 history. */
   def scd1MergeBatch(spark: SparkSession, stateDir: String, keys: Seq[String])
                     (batch: DataFrame, batchId: Long): Unit = {
     if (batch.isEmpty) return
@@ -127,17 +124,6 @@ object EventsCdc {
       .write.mode("overwrite").parquet(s"$stateDir/v=$batchId")
     sweepVersions(spark, stateDir, prior)
   }
-
-  /** Launch the CDC pipeline: change stream → SCD1 state maintenance. */
-  def runScd1(spark: SparkSession, events: DataFrame, stateDir: String,
-              checkpointDir: String, keys: Seq[String] = Seq("user_id"),
-              trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    events.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch(scd1MergeBatch(spark, stateDir, keys) _)
-      .start()
 
   /** One micro-batch of the JDBC worker: reduce the batch to its newest
     * row per key FIRST (a batch carrying several versions of a key must
@@ -155,8 +141,11 @@ object EventsCdc {
     * parquet state sink: a DELETE leaves no tombstone ROW in the table,
     * so an upsert for that key arriving LATER than its delete re-inserts
     * — the reference worker's exact semantics (worker_sync.py:96-101);
-    * use [[runWorker]]'s parquet state when resurrect-proof tombstones
-    * matter. */
+    * use [[scd1MergeBatch]]'s parquet state when resurrect-proof
+    * tombstones matter. Behind [[dedupStream]] (the composition in
+    * [[scd1MergeBatch]]'s scaladoc) this is the worker's literal
+    * deployment shape: delivery is at-least-once into an idempotent
+    * apply, i.e. effectively-once for the table state. */
   def scd1JdbcBatch(conn: graft.sources.Jdbc.ConnInfo, table: String,
                     keys: Seq[String], deleteWhen: org.apache.spark.sql.Column)
                    (batch: DataFrame, batchId: Long): Unit = {
@@ -173,29 +162,6 @@ object EventsCdc {
       graft.sources.Jdbc.deleteKeys(latest.filter(isDelete), conn, table, keys)
     } finally latest.unpersist(blocking = false)
   }
-
-  /** The reference worker's LITERAL deployment shape (worker_sync.py:
-    * 96-108): change stream → exactly-once guard → tombstone-aware upsert
-    * into a LIVE JDBC OLAP database — [[runWorker]] with the warehouse,
-    * not a parquet directory, as the state. Composes [[dedupStream]] with
-    * [[scd1JdbcBatch]] under foreachBatch; delivery is at-least-once into
-    * an idempotent apply, i.e. effectively-once for the table state. */
-  def runWorkerJdbc(spark: SparkSession, srcDir: String, schemaFrom: DataFrame,
-                    conn: graft.sources.Jdbc.ConnInfo, table: String,
-                    checkpointDir: String,
-                    keys: Seq[String] = Seq("user_id"),
-                    deleteWhen: org.apache.spark.sql.Column =
-                      col("event_type") === "error",
-                    dedupDelay: String = "2 hours",
-                    maxFilesPerTrigger: Int = 0,
-                    trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    dedupStream(readEventStream(spark, srcDir, schemaFrom, maxFilesPerTrigger),
-                dedupDelay)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch(scd1JdbcBatch(conn, table, keys, deleteWhen) _)
-      .start()
 
   /** Stream-stream interval join — the streaming twin of the batch
     * `range_join`: each event joined to the SAME user's events strictly
@@ -315,7 +281,7 @@ object EventsCdc {
     openMerged.unionByName(shifted)
   }
 
-  /** foreachBatch SCD2 merge into a split closed/open state directory —
+  /** One SCD2 micro-batch into a split closed/open state directory —
     * the SCD2 twin of [[scd1MergeBatch]], whose write cost matches
     * [[scd2MergeOpen]]'s read cost. Closed history only ever grows, so it
     * is stored append-only and never rewritten:
@@ -379,19 +345,6 @@ object EventsCdc {
       .unionByName(open, allowMissingColumns = true)
   }
 
-  /** Launch the continuous SCD2 pipeline: change stream → split SCD2
-    * history maintenance ([[scd2MergeBatchSplit]]) — the reference
-    * worker's apply loop with type-2 history instead of last-write-wins. */
-  def runScd2Split(spark: SparkSession, changes: DataFrame, stateDir: String,
-                   checkpointDir: String, keys: Seq[String] = Seq("user_id"),
-                   trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    changes.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch(scd2MergeBatchSplit(spark, stateDir, keys) _)
-      .start()
-
   def health(spark: SparkSession, queries: Seq[StreamingQuery]): DataFrame = {
     import spark.implicits._
     queries.map { q =>
@@ -407,16 +360,4 @@ object EventsCdc {
         last_progress_ts = p.map(_.timestamp).getOrElse(""))
     }.toDF()
   }
-
-  /** Launch the windowed-aggregate pipeline into an in-memory or file sink
-    * name/path (append mode — only finalized windows are emitted). */
-  def runWindowed(events: DataFrame, queryName: String,
-                  every: String = "1 hour", delay: String = "2 hours",
-                  trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    windowedCounts(events, every, delay).writeStream
-      .format("memory")
-      .queryName(queryName)
-      .outputMode(OutputMode.Append())
-      .trigger(trigger)
-      .start()
 }

@@ -14,10 +14,11 @@ import graft.sources.Jdbc
   * loop, deliberately tiny: poll a pg_notify-style relay relation over
   * plain JDBC, fetch the notified OLTP rows by key
   * ([[graft.sources.Jdbc.readChanged]] — the keys ride the remote WHERE),
-  * and append them as ONE arrival parquet file into the directory
-  * [[EventsCdc.runWorker]] watches. Each relayed file plays a NOTIFY
-  * delivery; everything downstream (exactly-once dedup, tombstone-aware
-  * SCD1 merge) is the already-verified worker pipeline.
+  * and append them as ONE arrival parquet file into the directory the
+  * SCD1 worker watches (the composition in [[EventsCdc.scd1MergeBatch]]'s
+  * scaladoc). Each relayed file plays a NOTIFY delivery; everything
+  * downstream (exactly-once dedup, tombstone-aware SCD1 merge) is the
+  * already-verified worker pipeline.
   *
   * The relay relation emulates the channel: `(notify_id BIGINT
   * monotonic, channel VARCHAR, payload VARCHAR)`, payload `op:id` —

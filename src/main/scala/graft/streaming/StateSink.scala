@@ -4,7 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-/** Idempotent micro-batch state appends for every foreachBatch sink that
+/** The engine's one stream launcher ([[run]]) and the idempotent
+  * micro-batch state append ([[appendIdempotent]]) for every step that
   * maintains an additive parquet state table (feature partials, experiment
   * moments, sketch rows, dedup pairs, quality reports).
   *
@@ -33,12 +34,19 @@ object StateSink {
       .partitionBy("batch_id")
       .parquet(dir)
 
-  /** The one streaming runner for a partials table: every micro-batch of
-    * `stream` is reduced by `partials(batch, batchId)` and written through
-    * [[appendIdempotent]] into `dir`. No read-modify-write and no
-    * streaming state — readers merge the partitions.
+  /** The one stream launcher in the engine: every micro-batch of
+    * `stream` runs `step(batch, batchId)`, checkpointed under
+    * `checkpointDir`. The steps are the engine's per-batch functions —
+    * the CDC applies ([[EventsCdc.scd1MergeBatch]], `scd1JdbcBatch`,
+    * `scd2MergeBatchSplit`), the standing-index screens
+    * ([[IndexMaintenance]], [[StreamingQuality]]) — or, for a partials
+    * table, `(b, id) => appendIdempotent(partials(b, id), id, dir)`. No
+    * output mode is set: a step sees each micro-batch whole, so the
+    * default (append) is all a stateless or watermark-deduped stream
+    * needs.
     *
-    * Replay rule, for every table this runner maintains:
+    * Replay rule, for every partials table written through
+    * [[appendIdempotent]]:
     *   - An ENGINE retry (the same batchId re-run after a failure)
     *     replaces its own `batch_id=` partition, so it never duplicates.
     *   - A SOURCE redelivery (the same rows under a new batchId) appends
@@ -48,15 +56,12 @@ object StateSink {
     *     partials, arm moments, token stats). Dedupe those upstream with
     *     [[EventsCdc.dedupStream]] or use an exactly-once source.
     */
-  def run(stream: DataFrame, dir: String, checkpointDir: String,
+  def run(stream: DataFrame, checkpointDir: String,
           trigger: Trigger = Trigger.AvailableNow())
-         (partials: (DataFrame, Long) => DataFrame): StreamingQuery =
+         (step: (DataFrame, Long) => Unit): StreamingQuery =
     stream.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        appendIdempotent(partials(batch, batchId), batchId, dir)
-        ()
-      }
+      .foreachBatch(step)
       .start()
 }

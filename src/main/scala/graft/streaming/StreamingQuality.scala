@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, lit}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 
 /** Continuous quality gating of a document-arrival stream — the
   * [[graft.ops.TextAnalysis.gopherRules]] suite as a screen in front of
@@ -10,7 +9,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * behavior: the per-arrival dispatch loop of worker_sync.py:42-108,
   * re-expressed as per-batch set operations over document arrivals).
   *
-  * Per micro-batch: score every arrived doc, append the full signal +
+  * Per micro-batch ([[qualityScreenBatch]] run by [[StateSink.run]]):
+  * score every arrived doc, append the full signal +
   * first-fail-reason rows to `reportDir` (batch-tagged — the filter-rate
   * dashboard and ablation log), and append only the keepers to `keptDir`.
   * The rules are per-doc and corpus-independent, so there is NO streaming
@@ -24,32 +24,21 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   */
 object StreamingQuality {
 
-  /** Launch the continuous quality screen over a file-arrival document
-    * stream (each new parquet file = one arrival batch). */
-  def runQualityScreen(spark: SparkSession, srcDir: String,
-                       schemaFrom: DataFrame, keptDir: String,
-                       reportDir: String, checkpointDir: String,
-                       maxFilesPerTrigger: Int = 0,
-                       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    EventsCdc.readEventStream(spark, srcDir, schemaFrom, maxFilesPerTrigger)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // the report feeds two writes (full log + keeper semi-join);
-        // persist the batch-sized frame across them. Both sinks write
-        // through StateSink: an engine retry of the same batchId replaces
-        // its own partition instead of double-appending report rows or
-        // keeper docs.
-        val report = graft.ops.TextAnalysis.gopherRules(batch).persist()
-        try {
-          StateSink.appendIdempotent(report, batchId, reportDir)
-          StateSink.appendIdempotent(
-            batch.join(report.filter(col("keep")).select("doc_id"),
-              Seq("doc_id"), "left_semi"),
-            batchId, keptDir)
-        } finally report.unpersist(blocking = false)
-        ()
-      }
-      .start()
+  /** One micro-batch of the quality screen: score the batch, write the
+    * full report to `reportDir` and the keepers to `keptDir`. */
+  def qualityScreenBatch(keptDir: String, reportDir: String)
+                        (batch: DataFrame, batchId: Long): Unit = {
+    // the report feeds two writes (full log + keeper semi-join); persist
+    // the batch-sized frame across them. Both sinks write through
+    // StateSink: an engine retry of the same batchId replaces its own
+    // partition instead of double-appending report rows or keeper docs.
+    val report = graft.ops.TextAnalysis.gopherRules(batch).persist()
+    try {
+      StateSink.appendIdempotent(report, batchId, reportDir)
+      StateSink.appendIdempotent(
+        batch.join(report.filter(col("keep")).select("doc_id"),
+          Seq("doc_id"), "left_semi"),
+        batchId, keptDir)
+    } finally report.unpersist(blocking = false)
+  }
 }

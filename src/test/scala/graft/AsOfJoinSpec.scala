@@ -126,8 +126,8 @@ class AsOfJoinSpec extends SparkSpec {
     val q = graft.streaming.StateSink.run(
       graft.streaming.EventsCdc.readEventStream(
         spark, srcDir.toString, ev, maxFilesPerTrigger = 1),
-      out, ckpt)((b, _) =>
-        AsOfJoin(b, ord, "k", "t_us", Seq("o_orderkey", "o_totalprice")))
+      ckpt)((b, id) => graft.streaming.StateSink.appendIdempotent(
+        AsOfJoin(b, ord, "k", "t_us", Seq("o_orderkey", "o_totalprice")), id, out))
     q.awaitTermination()
     val streamed = spark.read.parquet(out)
       .select("event_id", "matched_o_orderkey", "matched_o_totalprice")

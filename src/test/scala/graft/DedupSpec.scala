@@ -713,7 +713,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("streaming dedup screen: per-batch probe+absorb, concatenated pairs equal the batch run") {
-    // runDedupScreen through the real streaming wiring: two arrival files,
+    // the dedup screen through the real streaming wiring: two arrival files,
     // one micro-batch each — batch 0's docs must be corpus by the time
     // batch 1 probes (the absorb step), so the concatenated emitted pairs
     // equal the batch minhashLsh over EVERYTHING minus the bootstrap
@@ -737,9 +737,11 @@ class DedupSpec extends SparkSpec {
       Thread.sleep(1000)
     }
     val ckpt = graft.sources.Scratch.dir("graft_ds_ck")
-    val q = graft.streaming.IndexMaintenance.runDedupScreen(
-      spark, srcDir.toString, docs, idx, corpus, pairs, ckpt,
-      maxFilesPerTrigger = 1)
+    val q = graft.streaming.StateSink.run(
+      graft.streaming.EventsCdc.readEventStream(
+        spark, srcDir.toString, docs, maxFilesPerTrigger = 1),
+      ckpt)(graft.streaming.IndexMaintenance.dedupScreenBatch(
+        spark, idx, corpus, pairs))
     q.awaitTermination()
     val got = spark.read.parquet(pairs)
     assert(got.select($"batch_id").distinct().count() === 2)
@@ -781,9 +783,11 @@ class DedupSpec extends SparkSpec {
       Thread.sleep(1000)
     }
     val ckpt = graft.sources.Scratch.dir("graft_ss_ck")
-    val q = graft.streaming.IndexMaintenance.runSpanScreen(
-      spark, srcDir.toString, docs, idx, corpus, spans, ckpt,
-      maxDf = 64, maxFilesPerTrigger = 1)
+    val q = graft.streaming.StateSink.run(
+      graft.streaming.EventsCdc.readEventStream(
+        spark, srcDir.toString, docs, maxFilesPerTrigger = 1),
+      ckpt)(graft.streaming.IndexMaintenance.spanScreenBatch(
+        spark, idx, corpus, spans, maxDf = 64))
     q.awaitTermination()
     val got = spark.read.parquet(spans)
     assert(got.select($"batch_id").distinct().count() === 2)
@@ -852,8 +856,11 @@ class DedupSpec extends SparkSpec {
       Thread.sleep(1000)
     }
     val ckpt = graft.sources.Scratch.dir("graft_cs_ck")
-    val q = graft.streaming.IndexMaintenance.runContainmentScreen(
-      spark, srcDir.toString, docs, idx, pairsDir, ckpt, maxFilesPerTrigger = 1)
+    val q = graft.streaming.StateSink.run(
+      graft.streaming.EventsCdc.readEventStream(
+        spark, srcDir.toString, docs, maxFilesPerTrigger = 1),
+      ckpt)(graft.streaming.IndexMaintenance.containmentScreenBatch(
+        spark, idx, pairsDir))
     q.awaitTermination()
     val got = spark.read.parquet(pairsDir)
     assert(got.select($"batch_id").distinct().count() === 2)
@@ -893,7 +900,8 @@ class DedupSpec extends SparkSpec {
     val q = graft.streaming.StateSink.run(
       graft.streaming.EventsCdc.readEventStream(
         spark, srcDir.toString, docs, maxFilesPerTrigger = 1),
-      dfDir, ckpt)((b, _) => Dedup.gramDf(b))
+      ckpt)((b, id) => graft.streaming.StateSink.appendIdempotent(
+        Dedup.gramDf(b), id, dfDir))
     q.awaitTermination()
     val table = spark.read.parquet(dfDir)
     assert(table.select($"batch_id").distinct().count() === 2)
@@ -1104,8 +1112,11 @@ class DedupSpec extends SparkSpec {
       Thread.sleep(1000)
     }
     val ckpt = graft.sources.Scratch.dir("graft_novs_ck")
-    graft.streaming.IndexMaintenance.runNoveltyScreen(
-      spark, srcDir.toString, docs, idx, novDir, ckpt, maxFilesPerTrigger = 1)
+    graft.streaming.StateSink.run(
+      graft.streaming.EventsCdc.readEventStream(
+        spark, srcDir.toString, docs, maxFilesPerTrigger = 1),
+      ckpt)(graft.streaming.IndexMaintenance.noveltyScreenBatch(
+        spark, idx, novDir))
       .awaitTermination()
     val got = spark.read.parquet(novDir)
     assert(got.select($"batch_id").distinct().count() === 2)
@@ -1142,22 +1153,24 @@ class DedupSpec extends SparkSpec {
     def matrix(df: org.apache.spark.sql.DataFrame): Set[Seq[Any]] =
       df.collect().map(_.toSeq).toSet
 
+    def maintain(): Unit = graft.streaming.StateSink.run(
+      graft.streaming.EventsCdc.readEventStream(
+        spark, srcDir.toString, docs, maxFilesPerTrigger = 1),
+      ckpt)(graft.streaming.IndexMaintenance.sourceOverlapBatch(idxDir))
+      .awaitTermination()
+
     // bootstrap index + two streamed batches, then serve MID-STREAM:
     // the census must equal the batch operator over everything arrived
     Dedup.appendSourceShingleIndex(b1, idxDir)
     ship(b2, 0)
-    graft.streaming.IndexMaintenance.runSourceOverlapMaintenance(
-      spark, srcDir.toString, docs, idxDir, ckpt, maxFilesPerTrigger = 1)
-      .awaitTermination()
+    maintain()
     assert(matrix(Dedup.sourceOverlapFromIndex(spark, idxDir)) ===
       matrix(Dedup.sourceOverlap(b1.union(b2))),
       "served matrix after two batches must equal the batch operator")
 
     // third batch arrives; the SAME checkpoint resumes where it left off
     ship(b3, 1)
-    graft.streaming.IndexMaintenance.runSourceOverlapMaintenance(
-      spark, srcDir.toString, docs, idxDir, ckpt, maxFilesPerTrigger = 1)
-      .awaitTermination()
+    maintain()
     val full = matrix(Dedup.sourceOverlap(docs))
     assert(matrix(Dedup.sourceOverlapFromIndex(spark, idxDir)) === full)
 
@@ -1168,4 +1181,136 @@ class DedupSpec extends SparkSpec {
       "replayed batch must be absorbed by the census's collect_set")
   }
 
+  /** Drives a screen step over three arrival files (docs 300–399, 400–449,
+    * 450–499; docs < 300 are the caller's standing corpus) through
+    * StateSink.run the way the engine retries: the first two batches run,
+    * batch 1's commit is lost, so the restart re-runs batch 1 under the
+    * same batchId after its absorb has landed; then the third file
+    * arrives and runs on the absorbed state. Returns the rows of `out`
+    * after the first run and after the restart. */
+  private def runWithRetry(name: String, out: String)
+                          (step: (org.apache.spark.sql.DataFrame, Long) => Unit)
+      : (Seq[String], Seq[String]) = {
+    import java.nio.file.{Files, Paths}
+    val docs = graft.sources.Tables.documents(spark, sf)
+    val srcDir = graft.sources.Scratch.path(s"${name}_src")
+    val ckpt = graft.sources.Scratch.dir(s"${name}_ck")
+    def ship(i: Int, from: Long, until: Long): Unit = {
+      val tmp = graft.sources.Scratch.dir(s"${name}_tmp")
+      docs.filter($"doc_id" >= from && $"doc_id" < until).coalesce(1)
+        .write.mode("overwrite").parquet(tmp)
+      val part = new java.io.File(tmp).listFiles()
+        .filter(_.getName.endsWith(".parquet")).head
+      Files.copy(part.toPath, srcDir.resolve(s"$i.parquet"))
+      Thread.sleep(1000)
+    }
+    def run() = {
+      val q = graft.streaming.StateSink.run(
+        graft.streaming.EventsCdc.readEventStream(
+          spark, srcDir.toString, docs, maxFilesPerTrigger = 1),
+        ckpt)(step)
+      q.awaitTermination()
+      q
+    }
+    def rows() = spark.read.parquet(out).collect().map(_.toString).sorted.toSeq
+    ship(0, 300, 400)
+    ship(1, 400, 450)
+    run()
+    val before = rows()
+    Files.delete(Paths.get(ckpt, "commits", "1"))
+    Files.delete(Paths.get(ckpt, "commits", ".1.crc"))
+    val q = run()
+    assert(q.recentProgress.exists(p => p.batchId == 1L && p.numInputRows > 0L),
+      "the restart must re-run batch 1, or this spec proves nothing")
+    val retried = rows()
+    ship(2, 450, 500)
+    run()
+    (before, retried)
+  }
+
+  test("streaming dedup screen: an engine retry rewrites the same pairs and stores each doc once") {
+    val docs = graft.sources.Tables.documents(spark, sf)
+    val standing = docs.filter($"doc_id" < 300)
+    val idx = graft.sources.Scratch.dir("graft_dsr_idx")
+    val corpus = graft.sources.Scratch.dir("graft_dsr_corp")
+    val pairs = graft.sources.Scratch.dir("graft_dsr_pairs")
+    Dedup.appendSignatureIndex(standing, idx)
+    standing.write.mode("overwrite").parquet(corpus)
+    val (before, retried) = runWithRetry("graft_dsr", pairs)(
+      graft.streaming.IndexMaintenance.dedupScreenBatch(spark, idx, corpus, pairs))
+    assert(retried === before, "the re-run batch must rewrite the pairs it emitted")
+    // the batch after the retry verifies against single copies of the
+    // re-run batch's docs: the whole run still equals the batch operator
+    val got = spark.read.parquet(pairs).select("d1", "d2").as[(Long, Long)].collect().toSet
+    val full = Dedup.minhashLsh(docs).select("d1", "d2").as[(Long, Long)].collect().toSet
+    val bootstrap = Dedup.minhashLsh(standing)
+      .select("d1", "d2").as[(Long, Long)].collect().toSet
+    assert(got === (full -- bootstrap))
+    assert(spark.read.parquet(corpus).count() === docs.count(),
+      "a re-run batch must not store its docs twice")
+  }
+
+  test("streaming containment screen: an engine retry rewrites the same pairs") {
+    val docs = graft.sources.Tables.documents(spark, sf)
+    val idx = graft.sources.Scratch.dir("graft_csr_idx")
+    val pairsDir = graft.sources.Scratch.dir("graft_csr_pairs")
+    Dedup.appendContainmentIndex(docs.filter($"doc_id" < 300), idx)
+    val (before, retried) = runWithRetry("graft_csr", pairsDir)(
+      graft.streaming.IndexMaintenance.containmentScreenBatch(spark, idx, pairsDir))
+    assert(retried === before,
+      "the re-run batch must not pair its docs with themselves or their batch peers")
+    val got = spark.read.parquet(pairsDir)
+      .select($"d_sub", $"d_super", $"n_sub", $"inter", $"containment")
+      .as[(Long, Long, Long, Long, Double)].collect().toSet
+    def arrBatch(id: Long) = if (id < 300) 0 else if (id < 400) 1 else if (id < 450) 2 else 3
+    val expected = Dedup.containmentJoin(docs)
+      .as[(Long, Long, Long, Long, Double)].collect()
+      .filter(r => arrBatch(r._1) > arrBatch(r._2)).toSet
+    assert(got === expected)
+  }
+
+  test("streaming span screen: an engine retry rewrites the same spans") {
+    val docs = graft.sources.Tables.documents(spark, sf)
+    val standing = docs.filter($"doc_id" < 300)
+    val idx = graft.sources.Scratch.dir("graft_ssr_idx")
+    val corpus = graft.sources.Scratch.dir("graft_ssr_corp")
+    val spans = graft.sources.Scratch.dir("graft_ssr_spans")
+    Dedup.appendFingerprintIndex(standing, idx)
+    standing.write.mode("overwrite").parquet(corpus)
+    val (before, retried) = runWithRetry("graft_ssr", spans)(
+      graft.streaming.IndexMaintenance.spanScreenBatch(
+        spark, idx, corpus, spans, maxDf = 64))
+    assert(retried === before, "the re-run batch must rewrite the spans it emitted")
+    val got = spark.read.parquet(spans).select($"doc_id", $"start_tok", $"len_tok")
+      .as[(Long, Long, Long)].collect().toSet
+    val batch = Dedup.exactSubstrSpans(docs, maxDf = 64)
+      .filter($"doc_id" >= 300)
+      .as[(Long, Long, Long)].collect().toSet
+    assert(got === batch)
+  }
+
+  test("streaming novelty screen: an engine retry re-scores its batch as zero-novel (known divergence)") {
+    // the hash-only index cannot tell a batch's own absorbed grams from
+    // earlier docs' grams, so the re-run replaces batch 1's rows with
+    // zero-novel ones; the batches around it stay exact
+    val docs = graft.sources.Tables.documents(spark, sf)
+    val idx = graft.sources.Scratch.dir("graft_nsr_idx")
+    val novDir = graft.sources.Scratch.dir("graft_nsr_out")
+    Dedup.appendNoveltyIndex(docs.filter($"doc_id" < 300), idx)
+    val (before, retried) = runWithRetry("graft_nsr", novDir)(
+      graft.streaming.IndexMaintenance.noveltyScreenBatch(spark, idx, novDir))
+    val got = spark.read.parquet(novDir)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.select($"doc_id",
+      $"n_distinct_ngrams", $"n_novel_ngrams", $"novelty").collect().map(_.toSeq).toSet
+    val expected = Dedup.ngramNovelty(docs).filter($"doc_id" >= 300)
+    val inBatch1 = $"doc_id" >= 400 && $"doc_id" < 450
+    assert(rows(got.filter($"batch_id" =!= 1)) === rows(expected.filter(!inBatch1)))
+    assert(expected.filter(inBatch1 && $"n_novel_ngrams" > 0).count() > 0,
+      "batch 1 must carry novel grams, or this spec proves nothing")
+    val rescored = got.filter($"batch_id" === 1)
+    assert(rescored.count() === expected.filter(inBatch1).count())
+    assert(rescored.filter($"n_novel_ngrams" > 0).count() === 0,
+      "the retry no longer zero-scores its batch: drop this divergence")
+    assert(retried !== before)
+  }
 }

@@ -104,7 +104,8 @@ class DsirSpec extends SparkSpec {
     val q = graft.streaming.StateSink.run(
       graft.streaming.EventsCdc.readEventStream(
         spark, srcDir.toString, corpus, maxFilesPerTrigger = 1),
-      countsDir, ckpt)((b, _) => Dsir.countPartials(b, col("source") === "src0"))
+      ckpt)((b, id) => graft.streaming.StateSink.appendIdempotent(
+        Dsir.countPartials(b, col("source") === "src0"), id, countsDir))
     q.awaitTermination()
     val state = spark.read.parquet(countsDir)
     assert(state.select($"batch_id").distinct().count() === 3)

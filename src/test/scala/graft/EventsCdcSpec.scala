@@ -42,7 +42,11 @@ class EventsCdcSpec extends SparkSpec {
       .schema(Tables.events(spark, sf).schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(dir)
-    val q = EventsCdc.runWindowed(src, "cdc_windowed")
+    val q = EventsCdc.windowedCounts(src)
+      .writeStream.format("memory").queryName("cdc_windowed")
+      .outputMode("append")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
     q.awaitTermination()
     val streamed = spark.table("cdc_windowed")
       .select(unix_micros($"window_start").as("window_start_us"), $"event_type",
@@ -65,7 +69,8 @@ class EventsCdcSpec extends SparkSpec {
       .schema(Tables.events(spark, sf).schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(dir)
-    val q = EventsCdc.runScd1(spark, src, stateDir, ckpt, keys = Seq("user_id"))
+    val q = StateSink.run(src, ckpt)(
+      EventsCdc.scd1MergeBatch(spark, stateDir, Seq("user_id")))
     q.awaitTermination()
     val versions = EventsCdc.stateVersions(spark, stateDir)
     assert(versions.nonEmpty)
@@ -376,7 +381,8 @@ class EventsCdcSpec extends SparkSpec {
       .schema(Tables.events(spark, sf).schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(dir)
-    val q = EventsCdc.runScd1(spark, src, stateDir, ckpt, keys = Seq("user_id"))
+    val q = StateSink.run(src, ckpt)(
+      EventsCdc.scd1MergeBatch(spark, stateDir, Seq("user_id")))
     q.awaitTermination()
     val row = EventsCdc.health(spark, Seq(q))
       .select("query_id", "is_active", "last_batch_id", "num_input_rows")
@@ -408,9 +414,12 @@ class EventsCdcSpec extends SparkSpec {
     // listing goes through the Hadoop FS API (java.io.File can't open it)
     val stateDir = "file:" + graft.sources.Scratch.dir("graft_worker_state")
     val ckpt = graft.sources.Scratch.dir("graft_worker_ckpt")
-    val q = EventsCdc.runWorker(spark, dir.toString, Tables.events(spark, sf),
-      stateDir, ckpt, keys = Seq("user_id"),
-      dedupDelay = "3650 days", maxFilesPerTrigger = 1)
+    val q = StateSink.run(
+      EventsCdc.dedupStream(
+        EventsCdc.readEventStream(spark, dir.toString, Tables.events(spark, sf),
+          maxFilesPerTrigger = 1),
+        "3650 days"),
+      ckpt)(EventsCdc.scd1MergeBatch(spark, stateDir, Seq("user_id")))
     q.awaitTermination()
     // final state must equal the batch SCD1 over the DISTINCT delivered
     // events — the replay must not perturb it. At least two micro-batches
@@ -488,8 +497,10 @@ class EventsCdcSpec extends SparkSpec {
     val q = StateSink.run(
       EventsCdc.readEventStream(spark, dir.toString, Tables.events(spark, sf),
         maxFilesPerTrigger = 1),
-      sketchDir, ckpt)((b, _) =>
-        graft.ops.Sketches.bloomSketch(b, $"event_type", $"user_id"))
+      ckpt)((b, batchId) =>
+        StateSink.appendIdempotent(
+          graft.ops.Sketches.bloomSketch(b, $"event_type", $"user_id"),
+          batchId, sketchDir))
     q.awaitTermination()
     val sketches = spark.read.parquet(sketchDir)
     assert(sketches.select($"batch_id").distinct().count() === 3)
@@ -534,8 +545,10 @@ class EventsCdcSpec extends SparkSpec {
     val q = StateSink.run(
       EventsCdc.readEventStream(spark, dir.toString, Tables.events(spark, sf),
         maxFilesPerTrigger = 1),
-      sketchDir, ckpt)((b, _) =>
-        graft.ops.Sketches.distinctSketch(b, $"event_type", $"user_id"))
+      ckpt)((b, batchId) =>
+        StateSink.appendIdempotent(
+          graft.ops.Sketches.distinctSketch(b, $"event_type", $"user_id"),
+          batchId, sketchDir))
     q.awaitTermination()
     val sketches = spark.read.parquet(sketchDir)
     // one sketch row per (batch, bucket): blind appends, tagged per batch
@@ -586,9 +599,11 @@ class EventsCdcSpec extends SparkSpec {
       EventsCdc.readEventStream(spark, dir.toString, Tables.events(spark, sf),
           maxFilesPerTrigger = 1)
         .withColumn("item", $"user_id".cast("string")),
-      sketchDir, ckpt)((b, batchId) =>
-        graft.ops.Sketches.heavyHitterSketch(
-          b, $"event_type", lit(batchId), $"item", k))
+      ckpt)((b, batchId) =>
+        StateSink.appendIdempotent(
+          graft.ops.Sketches.heavyHitterSketch(
+            b, $"event_type", lit(batchId), $"item", k),
+          batchId, sketchDir))
     q.awaitTermination()
     val sketches = spark.read.parquet(sketchDir)
     // blind appends: one row per (bucket, batch shard)
@@ -642,9 +657,11 @@ class EventsCdcSpec extends SparkSpec {
       EventsCdc.readEventStream(spark, dir.toString, Tables.events(spark, sf),
           maxFilesPerTrigger = 1)
         .withColumn("item", $"user_id".cast("string")),
-      sketchDir, ckpt)((b, _) =>
-        graft.ops.Sketches.countMinSketch(
-          b, $"event_type", $"item", depth = 3, width = 256))
+      ckpt)((b, batchId) =>
+        StateSink.appendIdempotent(
+          graft.ops.Sketches.countMinSketch(
+            b, $"event_type", $"item", depth = 3, width = 256),
+          batchId, sketchDir))
     q.awaitTermination()
     val sketches = spark.read.parquet(sketchDir)
     assert(sketches.select($"batch_id").distinct().count() === 3)
@@ -715,8 +732,10 @@ class EventsCdcSpec extends SparkSpec {
       EventsCdc.readEventStream(spark, dir.toString, Tables.events(spark, sf),
           maxFilesPerTrigger = 1)
         .withColumn("v", ($"value".cast("decimal(38,2)") * 100).cast("long")),
-      sketchDir, ckpt)((b, _) =>
-        graft.ops.Sketches.histogramSketch(b, $"event_type", $"v", lo, hi, nbins))
+      ckpt)((b, batchId) =>
+        StateSink.appendIdempotent(
+          graft.ops.Sketches.histogramSketch(b, $"event_type", $"v", lo, hi, nbins),
+          batchId, sketchDir))
     q.awaitTermination()
     val sketches = spark.read.parquet(sketchDir)
     assert(sketches.select($"batch_id").distinct().count() === 3)
@@ -913,10 +932,10 @@ class EventsCdcSpec extends SparkSpec {
     }
     val stateDir = graft.sources.Scratch.dir("graft_scd2sp_state")
     val ckpt = graft.sources.Scratch.dir("graft_scd2sp_ckpt")
-    val q = EventsCdc.runScd2Split(spark,
+    val q = StateSink.run(
       EventsCdc.readEventStream(spark, dir.toString, parts.drop("b"),
         maxFilesPerTrigger = 1),
-      stateDir, ckpt, keys = Seq("user_id"))
+      ckpt)(EventsCdc.scd2MergeBatchSplit(spark, stateDir, Seq("user_id")))
     q.awaitTermination()
     // one closed append per batch; the retention rule keeps two open
     // versions (the last and the one it merged into), never the batch count
@@ -939,7 +958,7 @@ class EventsCdcSpec extends SparkSpec {
   }
 
   test("runScd2: the streaming pipeline maintains versioned SCD2 state end to end") {
-    // the SCD2 streaming pipeline (runScd2Split, the one SCD2 sink) stopped
+    // the SCD2 streaming pipeline (scd2MergeBatchSplit, the one SCD2 sink) stopped
     // between arrivals and restarted from its checkpoint: the restarted
     // query merges the new batch into the open version the first run left,
     // so the versioned state stays the batch scd2History of the whole log
@@ -961,10 +980,11 @@ class EventsCdcSpec extends SparkSpec {
     }
     val stateDir = graft.sources.Scratch.dir("graft_scd2_state")
     val ckpt = graft.sources.Scratch.dir("graft_scd2_ckpt")
-    def run(): Unit = EventsCdc.runScd2Split(spark,
+    def run(): Unit = StateSink.run(
       EventsCdc.readEventStream(spark, dir.toString, parts.drop("b"),
         maxFilesPerTrigger = 1),
-      stateDir, ckpt, keys = Seq("user_id")).awaitTermination()
+      ckpt)(EventsCdc.scd2MergeBatchSplit(spark, stateDir, Seq("user_id")))
+      .awaitTermination()
     def history(upTo: Int) = graft.olap.StarSchema.scd2History(
       parts.filter($"b" <= upTo).drop("b"), Seq("user_id"), $"ts_us",
       Seq($"ts_us", $"event_id"))
@@ -1074,10 +1094,13 @@ class EventsCdcSpec extends SparkSpec {
           "user_id BIGINT PRIMARY KEY, event_type VARCHAR, value DOUBLE, " +
           "props VARCHAR)")
       val ckpt = graft.sources.Scratch.dir("graft_jworker_ckpt")
-      val q = EventsCdc.runWorkerJdbc(spark, dir.toString,
-        Tables.events(spark, sf), conn, "user_state", ckpt,
-        keys = Seq("user_id"), deleteWhen = $"event_type" === "error",
-        dedupDelay = "3650 days", maxFilesPerTrigger = 1)
+      val q = StateSink.run(
+        EventsCdc.dedupStream(
+          EventsCdc.readEventStream(spark, dir.toString,
+            Tables.events(spark, sf), maxFilesPerTrigger = 1),
+          "3650 days"),
+        ckpt)(EventsCdc.scd1JdbcBatch(conn, "user_state", Seq("user_id"),
+          deleteWhen = $"event_type" === "error"))
       q.awaitTermination()
       // expected: batch SCD1 over the distinct delivered events, with
       // tombstoned users DELETED (the JDBC worker's delete semantics)
@@ -1203,7 +1226,7 @@ class EventsCdcSpec extends SparkSpec {
     // end to end: a pg_notify-style relay relation in a live DuckDB OLTP
     // announces event ids in `op:id` payloads; NotifyShim polls it over
     // JDBC, fetches the announced rows by key, appends arrival files; a
-    // runWorker pass over the arrival directory must equal batch SCD1
+    // worker pass over the arrival directory must equal batch SCD1
     // over exactly the DISTINCT announced events — replayed
     // notifications (at-least-once) and foreign/malformed payloads
     // included
@@ -1268,8 +1291,12 @@ class EventsCdcSpec extends SparkSpec {
     // payloads never relayed)
     val stateDir = graft.sources.Scratch.dir("graft_notify_state")
     val ckpt = graft.sources.Scratch.dir("graft_notify_ckpt")
-    EventsCdc.runWorker(spark, arrivals, Tables.events(spark, sf),
-      stateDir, ckpt, dedupDelay = "3650 days").awaitTermination()
+    StateSink.run(
+      EventsCdc.dedupStream(
+        EventsCdc.readEventStream(spark, arrivals, Tables.events(spark, sf)),
+        "3650 days"),
+      ckpt)(EventsCdc.scd1MergeBatch(spark, stateDir, Seq("user_id")))
+      .awaitTermination()
     val vmax = EventsCdc.stateVersions(spark, stateDir).max
     val got = spark.read.parquet(s"$stateDir/v=$vmax")
       .select($"user_id", $"event_id").as[(Long, Long)].collect().toSet

@@ -155,7 +155,8 @@ class FeaturesSpec extends SparkSpec {
     val q = graft.streaming.StateSink.run(
       graft.streaming.EventsCdc.readEventStream(
         spark, dir.toString, ev.drop("b"), maxFilesPerTrigger = 1),
-      stateDir, ckpt)((b, _) => Features.dayPartials(b))
+      ckpt)((b, id) => graft.streaming.StateSink.appendIdempotent(
+        Features.dayPartials(b), id, stateDir))
     q.awaitTermination()
     val state = spark.read.parquet(stateDir)
     assert(state.select($"batch_id").distinct().count() === 3)
@@ -271,7 +272,8 @@ class FeaturesSpec extends SparkSpec {
     val q = graft.streaming.StateSink.run(
       graft.streaming.EventsCdc.readEventStream(
         spark, dir.toString, ev.drop("b"), maxFilesPerTrigger = 1),
-      stateDir, ckpt)((b, _) => graft.ops.Experiments.armMoments(b))
+      ckpt)((b, id) => graft.streaming.StateSink.appendIdempotent(
+        graft.ops.Experiments.armMoments(b), id, stateDir))
     q.awaitTermination()
     val state = spark.read.parquet(stateDir)
     assert(state.select($"batch_id").distinct().count() === 3)
@@ -335,7 +337,8 @@ class FeaturesSpec extends SparkSpec {
     def start() = graft.streaming.StateSink.run(
       graft.streaming.EventsCdc.readEventStream(
         spark, src.toString, batches.head, maxFilesPerTrigger = 1),
-      dir, ckpt)((b, _) => b)
+      ckpt)((b, id) => graft.streaming.StateSink.appendIdempotent(
+        b, id, dir))
     def rows() = spark.read.parquet(dir)
       .select($"batch_id", $"k", $"v").as[(Long, Long, Long)].collect().sorted.toSeq
     start().awaitTermination()

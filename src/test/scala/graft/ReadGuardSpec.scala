@@ -14,7 +14,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * Every engine table is also a plain parquet path: nothing the engine
   * writes registers in the session catalog, and nothing it reads comes
   * from there, so a second, catalog-bound storage model cannot come back
-  * unnoticed either. */
+  * unnoticed either.
+  *
+  * And every stream starts in `StateSink.run`: a pipeline is a per-batch
+  * step passed to it, so a second launcher with its own checkpoint,
+  * trigger and defaults cannot come back either. */
 class ReadGuardSpec extends AnyFunSuite {
 
   /** `read` then any `.option(..)` calls then `.parquet(` or a parquet
@@ -27,6 +31,11 @@ class ReadGuardSpec extends AnyFunSuite {
     * line breaks. */
   private val CatalogUse =
     """\b(?:saveAsTable|bucketBy)\s*\(|\.\s*table\s*\(|\bDROP\s+TABLE\b""".r
+
+  /** A stream start: a `.writeStream` or `.foreachBatch` member access,
+    * across line breaks. The words in prose ("a foreachBatch retry") are
+    * not a member access. */
+  private val StreamStart = """\.\s*(?:writeStream|foreachBatch)\b""".r
 
   private def sources(root: Path): Seq[Path] = {
     val s = Files.walk(root)
@@ -99,5 +108,39 @@ class ReadGuardSpec extends AnyFunSuite {
       "stream.writeStream.format(\"memory\").queryName(name)",
       "col(bucketCol)")
     allowed.foreach(f => assert(CatalogUse.findFirstIn(f).isEmpty, f))
+  }
+
+  test("no stream starts anywhere but StateSink.run") {
+    val root = Paths.get("src/main/scala")
+    val all = sources(root)
+    assert(all.size > 50, s"found only ${all.size} sources under $root")
+    val (own, rest) = all.partition(_.endsWith(Paths.get("graft/streaming/StateSink.scala")))
+    assert(own.size === 1)
+    val outside = rest.flatMap(hits(StreamStart))
+    assert(outside.isEmpty,
+      "run these through StateSink.run with a per-batch step:\n" + outside.mkString("\n"))
+    val inside = hits(StreamStart)(own.head)
+    assert(inside.size === 2,
+      "StateSink.run's writeStream and foreachBatch are the only starts:\n" +
+        inside.mkString("\n"))
+  }
+
+  test("the stream scan sees every form of a stream start") {
+    val forms = Seq(
+      "events.writeStream",
+      "windowedCounts(events, every, delay).writeStream\n  .format(\"memory\")",
+      "readEventStream(spark, dir, schema)\n      .writeStream\n      .option(\"checkpointLocation\", ckpt)",
+      "      .foreachBatch(scd1MergeBatch(spark, stateDir, keys) _)",
+      "  .foreachBatch { (batch: DataFrame, batchId: Long) =>",
+      "q.writeStream . foreachBatch(step)")
+    forms.foreach(f => assert(StreamStart.findFirstIn(f).nonEmpty, f))
+    val allowed = Seq(
+      "spark.readStream.schema(s).parquet(dir)",
+      "// a foreachBatch retry after the append landed",
+      "  * maintains an additive parquet state table (every foreachBatch sink)",
+      "df.write.mode(\"append\").parquet(dir)",
+      "StateSink.run(stream, ckpt)(EventsCdc.scd1MergeBatch(spark, dir, keys))",
+      "val writeStreamed = 1")
+    allowed.foreach(f => assert(StreamStart.findFirstIn(f).isEmpty, f))
   }
 }

@@ -206,7 +206,8 @@ class SimilaritySpec extends SparkSpec {
     val q = graft.streaming.StateSink.run(
       graft.streaming.EventsCdc.readEventStream(
         spark, srcDir.toString, emb, maxFilesPerTrigger = 1),
-      covDir, ckpt)((b, _) => Similarity.covPartials(b))
+      ckpt)((b, id) => graft.streaming.StateSink.appendIdempotent(
+        Similarity.covPartials(b), id, covDir))
     q.awaitTermination()
     assert(spark.read.parquet(covDir).select($"batch_id").distinct().count() === 2)
     val fromTable = Similarity.pcaFromTable(spark, covDir)
@@ -657,8 +658,11 @@ class SimilaritySpec extends SparkSpec {
       Thread.sleep(1000)
     }
     val ckpt = graft.sources.Scratch.dir("graft_ivf_ck")
-    val q = graft.streaming.IndexMaintenance.runIvfAppend(
-      spark, srcDir.toString, all, dir, ckpt, maxFilesPerTrigger = 1)
+    def start() = graft.streaming.StateSink.run(
+      graft.streaming.EventsCdc.readEventStream(
+        spark, srcDir.toString, all, maxFilesPerTrigger = 1),
+      ckpt)(graft.streaming.IndexMaintenance.ivfAppendBatch(spark, dir))
+    val q = start()
     q.awaitTermination()
     // every arrival is in the lists exactly once
     val lists = spark.read.parquet(s"$dir/lists")
@@ -681,8 +685,7 @@ class SimilaritySpec extends SparkSpec {
     // the SAME batchId — its vectors are already in the lists
     java.nio.file.Files.delete(java.nio.file.Paths.get(ckpt, "commits", "1"))
     java.nio.file.Files.delete(java.nio.file.Paths.get(ckpt, "commits", ".1.crc"))
-    val retry = graft.streaming.IndexMaintenance.runIvfAppend(
-      spark, srcDir.toString, all, dir, ckpt, maxFilesPerTrigger = 1)
+    val retry = start()
     retry.awaitTermination()
     assert(retry.recentProgress.exists(p => p.batchId == 1L && p.numInputRows > 0L),
       "the restart must re-run batch 1, or this spec proves nothing")

@@ -324,8 +324,10 @@ class TextAnalysisSpec extends SparkSpec {
     val kept = graft.sources.Scratch.dir("graft_qs_kept")
     val report = graft.sources.Scratch.dir("graft_qs_rep")
     val ckpt = graft.sources.Scratch.dir("graft_qs_ck")
-    val q = graft.streaming.StreamingQuality.runQualityScreen(
-      spark, srcDir.toString, docs, kept, report, ckpt, maxFilesPerTrigger = 1)
+    val q = graft.streaming.StateSink.run(
+      graft.streaming.EventsCdc.readEventStream(
+        spark, srcDir.toString, docs, maxFilesPerTrigger = 1),
+      ckpt)(graft.streaming.StreamingQuality.qualityScreenBatch(kept, report))
     q.awaitTermination()
     val rep = spark.read.parquet(report)
     assert(rep.count() === docs.count(), "every arrived doc is scored")
@@ -359,8 +361,9 @@ class TextAnalysisSpec extends SparkSpec {
     val report = graft.sources.Scratch.dir("graft_qsf_rep")
     val ckpt = graft.sources.Scratch.dir("graft_qsf_ck")
     val before = spark.sparkContext.getPersistentRDDs.size
-    val q = graft.streaming.StreamingQuality.runQualityScreen(
-      spark, srcDir.toString, docs, kept, report, ckpt)
+    val q = graft.streaming.StateSink.run(
+      graft.streaming.EventsCdc.readEventStream(spark, srcDir.toString, docs),
+      ckpt)(graft.streaming.StreamingQuality.qualityScreenBatch(kept, report))
     intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
       q.awaitTermination()
     }
@@ -414,7 +417,8 @@ class TextAnalysisSpec extends SparkSpec {
     val q = graft.streaming.StateSink.run(
       graft.streaming.EventsCdc.readEventStream(
         spark, srcDir.toString, docs, maxFilesPerTrigger = 1),
-      stateDir, ckpt)((b, _) => graft.streaming.StreamingCorpusStats.batchPartials(b))
+      ckpt)((b, id) => graft.streaming.StateSink.appendIdempotent(
+        graft.streaming.StreamingCorpusStats.batchPartials(b), id, stateDir))
     q.awaitTermination()
     val state = spark.read.parquet(stateDir)
     assert(state.select($"batch_id").distinct().count() === 2)
