@@ -24,57 +24,11 @@ import graft.functions.NativeExpressions.{DotProduct, MinHashSignature, NfcNorma
   *   - `graft_mg_sketch(item, k)` / `graft_mg_merge(sketch, k)` — the
   *     Misra-Gries heavy-hitter sketch pair (build shards, merge subsets)
   *
-  * Table-valued functions (FROM-clause; table names as string literals,
-  * resolved against the session catalog — temp views included):
-  *   - `graft_asof_join('l', 'r', 'key', 'time_us', 'v1,v2')` — the
-  *     NATIVE as-of join plan, identical to [[graft.plans.AsOfJoin]]
-  *   - `graft_dedup_exact('t')` — exact dedup canonical mapping
-  *   - `graft_minhash_pairs('t', 'n', 'threshold')` — MinHash+LSH
-  *     near-dup pairs with exact-Jaccard verification
-  *   - `graft_heavy_hitters('t', 'bucket_col', 'item_col', 'k')` —
-  *     one-shot Misra-Gries heavy hitters per bucket
-  *   - `graft_boilerplate_spans('t', 'min_df')` — hot-gram boilerplate
-  *     removal spans
-  *   - `graft_exact_substr_spans('t', 'min_len')` — ExactSubstr
-  *     remove-the-span dedup
-  *   - `graft_knn_graph('t', 'k')` — corpus-wide cosine kNN graph
-  *   - `graft_mixture_schedule('t', 'budget_tokens')` — τ=0.5
-  *     temperature-flattened training-mixture schedule per source
-  *   - `graft_span_screen('standing', 'arrivals', 'min_len')` — arrival
-  *     removal spans against a standing corpus (monotone arrival ids).
-  *     NOTE: recomputes over the full standing∪arrivals corpus per query
-  *     (O(corpus)); continuous ingest should use the Scala
-  *     incremental-index path instead (see the resolution-rule comment)
-  *   - `graft_block_dedup('t', 'block_words')` — CCNet block-hash dedup
-  *   - `graft_cdc_chunk_dedup('t', 'gram_k', 'divisor')` — content-defined
-  *     chunking dedup (shift-robust)
-  *   - `graft_containment_join('t', 'n', 'threshold')` — directional
-  *     |A∩B|/|A| containment pairs
-  *   - `graft_label_propagation('t', 'k', 'seed_mod', 'rounds')` —
-  *     hard-clamp label propagation over the mutual-kNN graph
-  *   - `graft_random_projection('t', 'out_dims')` — portable JL sign
-  *     projection (long form)
-  *   - `graft_graph_triangles('t', 'k')` — triangle census of the
-  *     mutual-kNN graph (degree, triangles, local cc)
-  *   - `graft_source_overlap('t', 'ngram_n')` — pairwise cross-source
-  *     shingle containment/Jaccard matrix
-  *   - `graft_source_overlap_census('idx')` — the same matrix served from
-  *     a standing (source, hash128) shingle-index table (hash-only scan)
-  *   - `graft_corpus_drift('t', 'n_batches', 'boundary')` — the
-  *     moving-boundary token-drift read over batch-tagged partials
-  *   - `graft_dsir_weights('t', 'target_source')` /
-  *     `graft_dsir_sample('t', 'target_source')` — DSIR importance
-  *     weights / deterministic resample against the named target source
-  *   - `graft_incremental_block_dedup('standing', 'arrivals',
-  *     'block_words')` and `graft_incremental_containment('standing',
-  *     'arrivals', 'n', 'threshold')` — the arrival screens' batch
-  *     identities (monotone arrival ids; O(corpus) ad-hoc recompute —
-  *     continuous ingest uses the standing-index paths)
-  *   - `graft_containment_screen('arrivals', 'index_dir', 'n',
-  *     'threshold')` and `graft_span_screen_indexed('arrivals',
-  *     'index_dir', 'corpus_dir', 'min_len')` — the REAL standing-index
-  *     probes from SQL (cost ∝ batch + candidates; resolving them runs
-  *     the batch-bounded probe jobs — see the resolution-rule notes)
+  * Table-valued functions (FROM-clause; every argument a string literal,
+  * table names resolved against the session catalog — temp views
+  * included): each `graft_*` table function is one entry of
+  * [[graft.plans.SqlSurface.tableFns]], which carries its arguments,
+  * its doc line and its body.
   *
   * Wire up via `GraftSession.builder` (already applied) or
   * `--conf spark.sql.extensions=graft.GraftExtensions` on a stock session.
@@ -140,179 +94,25 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // whole-operator extension: the native as-of join (custom LogicalPlan
     // -> Strategy -> SparkPlan; see graft.plans.AsOfJoin)
     ext.injectPlannerStrategy(_ => new graft.plans.AsOfJoinStrategy)
-    // SQL-surface resolution rules: rewrite the table-function markers
+    // the SQL-surface resolution rule: rewrites the table-function markers
     // below into real operator plans once their relations resolve
-    ext.injectResolutionRule(_ => graft.plans.AsOfJoinResolution)
-    ext.injectResolutionRule(s => new graft.plans.GraftTableOpResolution(s))
+    ext.injectResolutionRule(s => new graft.plans.GraftTableFnResolution(s))
 
     // ---- table-valued functions: whole-table operators from plain SQL ----
-    // SELECT * FROM graft_asof_join('trades', 'quotes', 'sym', 'ts_us', 'bid,ask')
-    ext.injectTableFunction((
-      FunctionIdentifier("graft_asof_join"),
-      new ExpressionInfo(classOf[graft.plans.AsOfJoinPlan].getName, "graft_asof_join"),
-      (args: Seq[Expression]) => {
-        require(args.length == 5,
-          "graft_asof_join('left', 'right', 'key', 'time_us', 'v1,v2')")
-        graft.plans.AsOfJoinSqlPlan(
-          org.apache.spark.sql.catalyst.analysis.UnresolvedRelation(
-            constStr(args(0), "left table").split('.').toIndexedSeq),
-          org.apache.spark.sql.catalyst.analysis.UnresolvedRelation(
-            constStr(args(1), "right table").split('.').toIndexedSeq),
-          constStr(args(2), "key"), constStr(args(3), "time column"),
-          constStr(args(4), "value columns")
-            .split(',').map(_.trim).filter(_.nonEmpty).toIndexedSeq)
-      }))
-    def tableOp(name: String, nArgs: Int, usage: String)
-               (mk: Seq[String] => (String, Seq[String])): Unit =
+    graft.plans.SqlSurface.tableFns.foreach { fn =>
       ext.injectTableFunction((
-        FunctionIdentifier(name),
-        new ExpressionInfo(classOf[graft.plans.GraftTableOpPlan].getName, name),
+        FunctionIdentifier(fn.name),
+        new ExpressionInfo(classOf[graft.plans.GraftTableFnPlan].getName, fn.name),
         (args: Seq[Expression]) => {
-          require(args.length == nArgs, usage)
-          val strs = args.zipWithIndex.map { case (a, i) => constStr(a, s"arg $i") }
-          val (op, params) = mk(strs)
-          graft.plans.GraftTableOpPlan(
-            org.apache.spark.sql.catalyst.analysis.UnresolvedRelation(
-              strs.head.split('.').toIndexedSeq),
-            op, params)
+          require(args.length == fn.args.length, fn.usage)
+          val strs = args.zip(fn.args).map { case (a, n) => constStr(a, n) }
+          graft.plans.GraftTableFnPlan(
+            strs.take(fn.tables).map(t =>
+              org.apache.spark.sql.catalyst.analysis.UnresolvedRelation(
+                t.split('.').toIndexedSeq)),
+            fn.name, strs.drop(fn.tables))
         }))
-    // SELECT * FROM graft_dedup_exact('docs')
-    tableOp("graft_dedup_exact", 1,
-      "graft_dedup_exact('table')")(s => ("dedup_exact", Nil))
-    // SELECT * FROM graft_minhash_pairs('docs', '3', '0.8')
-    tableOp("graft_minhash_pairs", 3,
-      "graft_minhash_pairs('table', 'ngram_n', 'threshold')")(
-      s => ("minhash_pairs", s.tail))
-    // SELECT * FROM graft_heavy_hitters('events', 'event_type', 'props', '64')
-    tableOp("graft_heavy_hitters", 4,
-      "graft_heavy_hitters('table', 'bucket_col', 'item_col', 'k')")(
-      s => ("heavy_hitters", s.tail))
-    // SELECT * FROM graft_gopher_rules('docs') — the curation quality gate
-    tableOp("graft_gopher_rules", 1,
-      "graft_gopher_rules('table')")(s => ("gopher_rules", Nil))
-    // SELECT * FROM graft_sessionize('events', '1800000000') — gap in µs
-    tableOp("graft_sessionize", 2,
-      "graft_sessionize('table', 'gap_us')")(s => ("sessionize", s.tail))
-    // SELECT * FROM graft_boilerplate_spans('docs', '16') — hot-gram gate
-    tableOp("graft_boilerplate_spans", 2,
-      "graft_boilerplate_spans('table', 'min_df')")(
-      s => ("boilerplate_spans", s.tail))
-    // SELECT * FROM graft_exact_substr_spans('docs', '8') — span dedup
-    tableOp("graft_exact_substr_spans", 2,
-      "graft_exact_substr_spans('table', 'min_len')")(
-      s => ("exact_substr_spans", s.tail))
-    // SELECT * FROM graft_knn_graph('embeddings', '5') — corpus-wide kNN
-    tableOp("graft_knn_graph", 2,
-      "graft_knn_graph('table', 'k')")(s => ("knn_graph", s.tail))
-    // SELECT * FROM graft_block_dedup('docs', '8') — CCNet block-hash dedup
-    tableOp("graft_block_dedup", 2,
-      "graft_block_dedup('table', 'block_words')")(s => ("block_dedup", s.tail))
-    // SELECT * FROM graft_cdc_chunk_dedup('docs', '3', '8') — CDC dedup
-    tableOp("graft_cdc_chunk_dedup", 3,
-      "graft_cdc_chunk_dedup('table', 'gram_k', 'divisor')")(
-      s => ("cdc_chunk_dedup", s.tail))
-    // SELECT * FROM graft_containment_join('docs', '3', '0.8')
-    tableOp("graft_containment_join", 3,
-      "graft_containment_join('table', 'ngram_n', 'threshold')")(
-      s => ("containment_join", s.tail))
-    // SELECT * FROM graft_label_propagation('embeddings', '5', '5', '2')
-    tableOp("graft_label_propagation", 4,
-      "graft_label_propagation('table', 'k', 'seed_mod', 'rounds')")(
-      s => ("label_propagation", s.tail))
-    // SELECT * FROM graft_random_projection('embeddings', '16') — JL map
-    tableOp("graft_random_projection", 2,
-      "graft_random_projection('table', 'out_dims')")(
-      s => ("random_projection", s.tail))
-    // SELECT * FROM graft_mixture_schedule('docs', '1000000') — τ=0.5
-    // training-mixture schedule under the given token budget
-    tableOp("graft_mixture_schedule", 2,
-      "graft_mixture_schedule('table', 'budget_tokens')")(
-      s => ("mixture_schedule", s.tail))
-    // SELECT * FROM graft_containment_screen('arrivals', '/idx', '3', '0.8')
-    // — the STANDING-INDEX containment probe (cost ∝ batch + candidates;
-    // the cheap path the ad-hoc graft_incremental_containment recomputes)
-    tableOp("graft_containment_screen", 4,
-      "graft_containment_screen('arrivals', 'index_dir', 'ngram_n', 'threshold')")(
-      s => ("containment_screen", s.tail))
-    // SELECT * FROM graft_span_screen_indexed('arrivals', '/idx', '/corpus', '8')
-    // — the standing fingerprint-index span screen (the incremental probe
-    // graft_span_screen's O(corpus) form documents against)
-    tableOp("graft_span_screen_indexed", 4,
-      "graft_span_screen_indexed('arrivals', 'index_dir', 'corpus_dir', 'min_len')")(
-      s => ("span_screen_indexed", s.tail))
-    // SELECT * FROM graft_graph_triangles('embeddings', '5') — triangle
-    // census of the mutual-kNN graph
-    tableOp("graft_graph_triangles", 2,
-      "graft_graph_triangles('table', 'k')")(s => ("graph_triangles", s.tail))
-    // SELECT * FROM graft_dsir_weights('docs', 'src0') — DSIR importance
-    // weights against the named target source
-    tableOp("graft_dsir_weights", 2,
-      "graft_dsir_weights('table', 'target_source')")(
-      s => ("dsir_weights", s.tail))
-    // SELECT * FROM graft_dsir_sample('docs', 'src0') — the deterministic
-    // DSIR importance resample
-    tableOp("graft_dsir_sample", 2,
-      "graft_dsir_sample('table', 'target_source')")(
-      s => ("dsir_sample", s.tail))
-    // SELECT * FROM graft_source_overlap('docs', '3') — pairwise
-    // cross-source shingle containment/Jaccard matrix
-    tableOp("graft_source_overlap", 2,
-      "graft_source_overlap('table', 'ngram_n')")(
-      s => ("source_overlap", s.tail))
-    // SELECT * FROM graft_source_overlap_census('idx') — the matrix served
-    // from a standing (source, h1, h2) shingle-index table (e.g. a temp
-    // view over the index parquet): hash-only scan, no tokenization
-    tableOp("graft_source_overlap_census", 1,
-      "graft_source_overlap_census('index_table')")(
-      s => ("source_overlap_census", Nil))
-    // SELECT * FROM graft_corpus_drift('docs', '8', '3') — the
-    // moving-boundary drift read served from batch-tagged partials
-    tableOp("graft_corpus_drift", 3,
-      "graft_corpus_drift('table', 'n_batches', 'boundary')")(
-      s => ("corpus_drift", s.tail))
-    // SELECT * FROM graft_span_screen('corpus', 'arrivals', '8') — the
-    // standing exact-substring screen: arrival removal spans against the
-    // corpus (monotone arrival ids — the ingestion contract)
-    ext.injectTableFunction((
-      FunctionIdentifier("graft_span_screen"),
-      new ExpressionInfo(classOf[graft.plans.GraftBinaryTableOpPlan].getName,
-        "graft_span_screen"),
-      (args: Seq[Expression]) => {
-        require(args.length == 3,
-          "graft_span_screen('standing', 'arrivals', 'min_len')")
-        graft.plans.GraftBinaryTableOpPlan(
-          org.apache.spark.sql.catalyst.analysis.UnresolvedRelation(
-            constStr(args(0), "standing table").split('.').toIndexedSeq),
-          org.apache.spark.sql.catalyst.analysis.UnresolvedRelation(
-            constStr(args(1), "arrivals table").split('.').toIndexedSeq),
-          "span_screen", Seq(constStr(args(2), "min_len")))
-      }))
-    def binaryTableOp(name: String, nArgs: Int, usage: String, op: String): Unit =
-      ext.injectTableFunction((
-        FunctionIdentifier(name),
-        new ExpressionInfo(classOf[graft.plans.GraftBinaryTableOpPlan].getName,
-          name),
-        (args: Seq[Expression]) => {
-          require(args.length == nArgs, usage)
-          graft.plans.GraftBinaryTableOpPlan(
-            org.apache.spark.sql.catalyst.analysis.UnresolvedRelation(
-              constStr(args(0), "standing table").split('.').toIndexedSeq),
-            org.apache.spark.sql.catalyst.analysis.UnresolvedRelation(
-              constStr(args(1), "arrivals table").split('.').toIndexedSeq),
-            op, args.drop(2).zipWithIndex.map { case (a, i) =>
-              constStr(a, s"arg ${i + 2}") })
-        }))
-    // SELECT * FROM graft_incremental_block_dedup('corpus', 'arrivals', '8')
-    // — the arrival block screen (monotone arrival ids; O(corpus) ad-hoc
-    // form — continuous ingest uses the Scala standing-index path)
-    binaryTableOp("graft_incremental_block_dedup", 3,
-      "graft_incremental_block_dedup('standing', 'arrivals', 'block_words')",
-      "incremental_block_dedup")
-    // SELECT * FROM graft_incremental_containment('corpus', 'arrivals', '3', '0.8')
-    // — the arrival containment gate (same ad-hoc O(corpus) caveat)
-    binaryTableOp("graft_incremental_containment", 4,
-      "graft_incremental_containment('standing', 'arrivals', 'ngram_n', 'threshold')",
-      "incremental_containment")
+    }
 
     // ---- scalar + aggregate functions ----
     // the portable sampling bucket every deterministic sampling/split

@@ -224,9 +224,10 @@ object Ivf {
     * standing index accretes files at arrival-batch rate and probe scans
     * degrade to open-per-small-file. Each directory holding more than
     * `maxFiles` parquet files is rewritten into a row-count-verified copy
-    * and swapped in by rename. All staging lives OUTSIDE the partitioned
-    * `lists/` tree (under `$dir/compact_stage`) — a tmp or moved-aside
-    * directory INSIDE the tree would be discovered as a bogus
+    * and swapped in by rename ([[FileFormats.swapCompacted]], the
+    * moved-aside original staged too). All staging lives OUTSIDE the
+    * partitioned `lists/` tree (under `$dir/compact_stage`) — a tmp or
+    * moved-aside directory INSIDE the tree would be discovered as a bogus
     * `centroid_id` partition value on the next read, silently turning the
     * partition column into strings and duplicating or orphaning a list.
     * An interrupted swap therefore never corrupts discovery; the one
@@ -270,23 +271,8 @@ object Ivf {
           val tmp = new Path(stage, name)
           val expected = FileFormats.footerRowCount(spark, d.getPath.toString).getOrElse(0L)
           FileFormats.compact(spark, d.getPath.toString, tmp.toString)
-          val rewritten = FileFormats.footerRowCount(spark, tmp.toString).getOrElse(0L)
-          if (rewritten != expected) {
-            fs.delete(tmp, true)
-            throw new IllegalStateException(
-              s"list compaction refused for $name: rewrite has $rewritten " +
-                s"rows, source has $expected — original left untouched")
-          }
-          val old = new Path(stage, s"$name.old")
-          if (!fs.rename(d.getPath, old))
-            throw new java.io.IOException(s"could not move ${d.getPath} aside")
-          if (!fs.rename(tmp, d.getPath)) {
-            if (!fs.rename(old, d.getPath)) throw new java.io.IOException(
-              s"could not swap in $tmp AND could not restore — the list is " +
-                s"intact at $old; the next compactLists call restores it")
-            throw new java.io.IOException(s"could not swap $tmp into ${d.getPath}")
-          }
-          fs.delete(old, true)
+          FileFormats.swapCompacted(spark, d.getPath.toString, tmp.toString, expected,
+            new Path(stage, s"$name.old").toString)
         }
         accreted
       }

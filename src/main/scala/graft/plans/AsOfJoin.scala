@@ -182,14 +182,21 @@ object AsOfJoin {
     * [[graft.streaming.StateSink.run]] against the reference snapshot
     * current at arrival: the concatenated output equals the batch join of
     * everything arrived against a static reference (spec-pinned). Replay:
-    * output is per-row, so a redelivered batch is enriched twice. */
+    * output is per-row, so a redelivered batch is enriched twice.
+    *
+    * Column names resolve by the session's resolver (case-insensitive
+    * unless `spark.sql.caseSensitive` is set), as SQL names do; the
+    * `graft_asof_join` table function calls this. */
   def apply(left: DataFrame, right: DataFrame, key: String, timeUs: String,
             valueCols: Seq[String]): DataFrame = {
     val lp = left.queryExecution.analyzed
     val rp = right.queryExecution.analyzed
+    val resolver = left.queryExecution.sparkSession.sessionState.conf.resolver
     def attr(p: LogicalPlan, n: String, side: String): Attribute =
-      p.output.find(_.name == n).getOrElse(
-        throw new IllegalArgumentException(s"$side side has no column '$n'"))
+      p.output.find(a => resolver(a.name, n)).getOrElse(
+        throw new IllegalArgumentException(
+          s"as-of join: $side side has no column '$n' " +
+            s"(has: ${p.output.map(_.name).mkString(", ")})"))
     val rv = valueCols.map(c => attr(rp, c, "right"))
     val mo = rv.map(a =>
       AttributeReference(s"matched_${a.name}", a.dataType, nullable = true)())

@@ -1,8 +1,8 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference}
-import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan, UnaryNode}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 import graft.sources.FileFormats
 
@@ -11,216 +11,279 @@ import graft.sources.FileFormats
   * (no session, no resolved children), so a table-valued call like
   * `SELECT * FROM graft_dedup_exact('docs')` cannot build its final plan
   * at parse time. The pattern here is the view-resolution one: the
-  * builder emits a MARKER plan over an `UnresolvedRelation`, and an
+  * builder emits a MARKER plan over `UnresolvedRelation`s, and an
   * injected resolution rule rewrites the marker into the real operator
-  * plan once the child has resolved — for Scala-composed operators by
-  * invoking the library function on the child DataFrame and splicing its
-  * analyzed plan back in.
+  * plan once its children have resolved — by invoking the library
+  * function on the child DataFrames and splicing its analyzed plan back
+  * in.
   *
   * This is what closes the "SQL reachability" gap: the reference's users
-  * drove it over HTTP with SQL — with these rules a `spark.sql`-only
-  * client reaches the as-of join, dedup, and sketch operators without
-  * touching the Scala API. Each marker is deliberately `resolved = false`
-  * so an unknown op or missing rule fails analysis loudly instead of
-  * producing an empty-schema plan.
+  * drove it over HTTP with SQL — with this rule a `spark.sql`-only client
+  * reaches the as-of join, dedup, and sketch operators without touching
+  * the Scala API. The marker is deliberately `resolved = false` so a
+  * missing rule fails analysis loudly instead of producing an
+  * empty-schema plan.
   */
-final case class GraftTableOpPlan(child: LogicalPlan, op: String,
-                                  params: Seq[String]) extends UnaryNode {
+final case class GraftTableFnPlan(children: Seq[LogicalPlan], name: String,
+                                  params: Seq[String]) extends LogicalPlan {
   override def output: Seq[Attribute] = Nil
   override lazy val resolved: Boolean = false
-  override protected def withNewChildInternal(c: LogicalPlan): LogicalPlan =
-    copy(child = c)
+  override protected def withNewChildrenInternal(
+      newChildren: IndexedSeq[LogicalPlan]): LogicalPlan =
+    copy(children = newChildren)
 }
 
-/** Rewrites [[GraftTableOpPlan]] markers into the library operator's
-  * analyzed plan. The op registry is deliberately small and explicit —
-  * each entry is an operator whose SQL reachability the round's contract
-  * promises (ExtensionsSpec pins SQL ≡ Scala for every one). */
-class GraftTableOpResolution(session: SparkSession) extends Rule[LogicalPlan] {
+/** Rewrites [[GraftTableFnPlan]] markers into the library operator's
+  * analyzed plan, through the entry [[SqlSurface.tableFns]] declares for
+  * the marker's name. A plan without a marker comes back unchanged. */
+class GraftTableFnResolution(session: SparkSession) extends Rule[LogicalPlan] {
+  override def apply(plan: LogicalPlan): LogicalPlan = plan.resolveOperatorsUp {
+    case GraftTableFnPlan(children, name, params) if children.forall(_.resolved) =>
+      val fn = SqlSurface.byName.getOrElse(name,
+        throw new IllegalArgumentException(s"unknown graft table function '$name'"))
+      fn.body(session,
+        children.map(org.apache.spark.sql.graft.GraftSqlShim.ofRows(session, _)),
+        params).queryExecution.analyzed
+  }
+}
+
+/** One SQL table function: its name, its arguments (the first `tables`
+  * name relations, resolved against the session catalog — temp views
+  * included; the rest are string parameters), and the body that builds
+  * the operator from the session, the relations and the parameters. */
+final case class TableFn(name: String, tables: Int, args: Seq[String],
+                         body: (SparkSession, Seq[DataFrame], Seq[String]) => DataFrame) {
+  def usage: String = args.map(a => s"'$a'").mkString(s"$name(", ", ", ")")
+}
+
+/** Every `graft_*` table-valued function, declared once. Each argument
+  * is a string literal; [[graft.GraftExtensions]] registers the table and
+  * [[GraftTableFnResolution]] runs an entry's body once its relations
+  * resolve. ExtensionsSpec pins SQL ≡ Scala for every entry. */
+object SqlSurface {
   import org.apache.spark.sql.functions.{col, lit}
 
-  override def apply(plan: LogicalPlan): LogicalPlan = plan.resolveOperatorsUp {
-    case GraftTableOpPlan(child, op, params) if child.resolved =>
-      val df = org.apache.spark.sql.graft.GraftSqlShim.ofRows(session, child)
-      val out = op match {
-        case "dedup_exact" =>
-          graft.ops.Dedup.exact(df)
-        case "minhash_pairs" =>
-          graft.ops.Dedup.minhashLsh(df, params(0).toInt, params(1).toDouble)
-        case "heavy_hitters" =>
-          val k = params(2).toInt
-          graft.ops.Sketches.heavyHittersMerged(
-            graft.ops.Sketches.heavyHitterSketch(
-              df, col(params(0)), lit(0L), col(params(1)), k), k)
-        case "gopher_rules" =>
-          graft.ops.TextAnalysis.gopherRules(df)
-        case "sessionize" =>
-          graft.ops.Events.sessionize(df, params(0).toLong)
-        case "boilerplate_spans" =>
-          graft.ops.Dedup.boilerplateSpans(df, params(0).toInt)
-        case "exact_substr_spans" =>
-          graft.ops.Dedup.exactSubstrSpans(df, params(0).toInt)
-        case "knn_graph" =>
-          graft.ops.Similarity.knnGraph(df, params(0).toInt)
-        case "block_dedup" =>
-          graft.ops.Dedup.blockDedup(df, params(0).toInt)
-        case "cdc_chunk_dedup" =>
-          graft.ops.Dedup.cdcChunkDedup(df, params(0).toInt, params(1).toInt)
-        case "containment_join" =>
-          graft.ops.Dedup.containmentJoin(df, params(0).toInt, params(1).toDouble)
-        case "label_propagation" =>
-          graft.ops.Similarity.labelPropagate(
-            df, params(0).toInt, params(1).toInt, params(2).toInt)
-        case "random_projection" =>
-          graft.ops.Similarity.randomProjection(df, params(0).toInt)
-        case "containment_screen" =>
-          // the REAL standing-index probe (cost ∝ batch + candidates) —
-          // the cheap path the ad-hoc graft_incremental_containment TVF
-          // documents against. The probe frames are LAZY bounded persists
-          // (r14 ADVICE), so resolving this call (EXPLAIN included) runs
-          // no probe jobs — only the parquet sources' fixed schema/
-          // listing work (ExtensionsSpec pins the job floor).
-          graft.ops.Dedup.incrementalContainmentScreen(session, params(0),
-            df, params(1).toInt, params(2).toDouble)
-        case "span_screen_indexed" =>
-          // the standing fingerprint-index span screen (cost ∝ batch +
-          // candidates; r13 ADVICE asked for an index-directory argument
-          // so SQL reaches the incremental probe instead of the
-          // O(corpus) graft_span_screen recompute). Same analysis-time
-          // probe-materialization note as containment_screen.
-          graft.ops.Dedup.incrementalSpanScreen(session, params(0),
-            FileFormats.readParquet(session, params(1)), df, params(2).toInt)
-        case "graph_triangles" =>
-          graft.ops.Similarity.graphTriangles(df, params(0).toInt)
-        case "dsir_weights" =>
-          graft.ops.Dsir.weights(df, col("source") === params(0))
-        case "dsir_sample" =>
-          graft.ops.Dsir.resample(df, col("source") === params(0))
-        case "mixture_schedule" =>
-          // the registry derivation verbatim: one tokenize-count scan to
-          // per-source token totals, then the |sources|-sized schedule
-          graft.ops.Sampling.temperatureMixture(
-            df.select(col("source"),
-                org.apache.spark.sql.functions.size(
-                  graft.ops.TextAnalysis.tokens(col("text"))).cast("long").as("n"))
-              .groupBy(col("source"))
-              .agg(org.apache.spark.sql.functions.sum(col("n")).as("n_tokens")),
-            budgetTokens = params(0).toDouble)
-        case "source_overlap" =>
-          graft.ops.Dedup.sourceOverlap(df, params(0).toInt)
-        case "source_overlap_census" =>
-          // the standing-index serve path: census over an already-built
-          // (source, h1, h2) shingle-index relation — duplicate rows from
-          // blind appends are absorbed by the census aggregate
-          graft.ops.Dedup.sourceOverlapCensus(
-            df.select(col("source"), col("h1"), col("h2")))
-        case "corpus_drift" =>
-          // the state-served moving-boundary drift read, the registry
-          // derivation verbatim: one scan to ≤ sources×n_batches partials,
-          // then the O(state) boundary read
-          graft.streaming.StreamingCorpusStats.driftFromState(
-            graft.streaming.StreamingCorpusStats.taggedPartials(
-              df, params(0).toInt),
-            params(1).toLong)
-        case other => throw new IllegalArgumentException(
-          s"unknown graft table op '$other'")
-      }
-      out.queryExecution.analyzed
+  private def fn(name: String, tables: Int, args: String*)
+                (body: (SparkSession, Seq[DataFrame], Seq[String]) => DataFrame): TableFn =
+    TableFn(name, tables, args, body)
 
-    case GraftBinaryTableOpPlan(left, right, op, params)
-        if left.resolved && right.resolved =>
-      val ldf = org.apache.spark.sql.graft.GraftSqlShim.ofRows(session, left)
-      val rdf = org.apache.spark.sql.graft.GraftSqlShim.ofRows(session, right)
-      val out = op match {
-        case "span_screen" =>
-          // the standing screen's batch identity (Dedup.incrementalSpanScreen
-          // scaladoc, DedupSpec-pinned): under monotone ingestion (arrival
-          // ids larger than every standing id — the contract this TVF
-          // documents), keep-standing ≡ the corpus-wide keep-first pipeline
-          // over (standing ∪ arrivals) restricted to arrival doc_ids.
-          // COST CAVEAT (r13 ADVICE): this SQL form RECOMPUTES the span
-          // pipeline over the ENTIRE standing∪arrivals corpus on every
-          // query — O(corpus), not O(batch). It is the ad-hoc/one-shot
-          // surface; a standing ingest pipeline should use the Scala path
-          // (Dedup.incrementalSpanScreen probing a persisted fingerprint
-          // index at cost ∝ batch + candidates, fed by
-          // IndexMaintenance.spanScreenBatch) — a SQL TVF cannot carry the
-          // index directory handle, so the cheap path is Scala-only.
-          val docs = ldf.select(col("doc_id"), col("text"))
-            .unionByName(rdf.select(col("doc_id"), col("text")))
-          graft.ops.Dedup.exactSubstrSpans(docs, params(0).toInt)
-            .join(rdf.select(col("doc_id")), Seq("doc_id"), "left_semi")
-        case "incremental_block_dedup" =>
-          // the screen's monotone-ingestion batch identity
-          // (Dedup.incrementalBlockDedup scaladoc, registry-oracle-pinned):
-          // corpus-wide first-instance stats over (standing ∪ arrivals)
-          // restricted to arrival doc_ids. Same O(corpus) recompute caveat
-          // as graft_span_screen — the standing-index probe path is
-          // Scala-only (a TVF cannot carry the index directory handle).
-          val docs = ldf.select(col("doc_id"), col("text"))
-            .unionByName(rdf.select(col("doc_id"), col("text")))
-          graft.ops.Dedup.blockDedup(docs, params(0).toInt)
-            .join(rdf.select(col("doc_id")), Seq("doc_id"), "left_semi")
-        case "incremental_containment" =>
-          // containment of a pair depends on nothing but the pair, so the
-          // screen ≡ the corpus-wide containment join restricted to
-          // (arrival sub, standing super) — no id-monotonicity needed.
-          // Same O(corpus) recompute caveat as above.
-          val docs = ldf.select(col("doc_id"), col("text"))
-            .unionByName(rdf.select(col("doc_id"), col("text")))
-          graft.ops.Dedup
-            .containmentJoin(docs, params(0).toInt, params(1).toDouble)
-            .join(rdf.select(col("doc_id").as("d_sub")), Seq("d_sub"), "left_semi")
-            .join(ldf.select(col("doc_id").as("d_super")), Seq("d_super"), "left_semi")
-            .select(col("d_sub"), col("d_super"), col("n_sub"), col("inter"),
-              col("containment"))
-        case other => throw new IllegalArgumentException(
-          s"unknown graft binary table op '$other'")
-      }
-      out.queryExecution.analyzed
-  }
-}
+  val tableFns: Seq[TableFn] = Seq(
+    // SELECT * FROM graft_asof_join('trades', 'quotes', 'sym', 'ts_us', 'bid,ask')
+    // — the NATIVE as-of join plan, identical to AsOfJoin's
+    fn("graft_asof_join", 2, "left", "right", "key", "time_us", "v1,v2") {
+      case (_, Seq(l, r), params) =>
+        AsOfJoin(l, r, params(0), params(1),
+          params(2).split(',').map(_.trim).filter(_.nonEmpty).toIndexedSeq)
+    },
+    // SELECT * FROM graft_dedup_exact('docs') — exact dedup canonical mapping
+    fn("graft_dedup_exact", 1, "table") { case (_, Seq(df), _) =>
+      graft.ops.Dedup.exact(df)
+    },
+    // SELECT * FROM graft_minhash_pairs('docs', '3', '0.8') — MinHash+LSH
+    // near-dup pairs with exact-Jaccard verification
+    fn("graft_minhash_pairs", 1, "table", "ngram_n", "threshold") {
+      case (_, Seq(df), params) =>
+        graft.ops.Dedup.minhashLsh(df, params(0).toInt, params(1).toDouble)
+    },
+    // SELECT * FROM graft_heavy_hitters('events', 'event_type', 'props', '64')
+    // — one-shot Misra-Gries heavy hitters per bucket
+    fn("graft_heavy_hitters", 1, "table", "bucket_col", "item_col", "k") {
+      case (_, Seq(df), params) =>
+        val k = params(2).toInt
+        graft.ops.Sketches.heavyHittersMerged(
+          graft.ops.Sketches.heavyHitterSketch(
+            df, col(params(0)), lit(0L), col(params(1)), k), k)
+    },
+    // SELECT * FROM graft_gopher_rules('docs') — the curation quality gate
+    fn("graft_gopher_rules", 1, "table") { case (_, Seq(df), _) =>
+      graft.ops.TextAnalysis.gopherRules(df)
+    },
+    // SELECT * FROM graft_sessionize('events', '1800000000') — gap in µs
+    fn("graft_sessionize", 1, "table", "gap_us") { case (_, Seq(df), params) =>
+      graft.ops.Events.sessionize(df, params(0).toLong)
+    },
+    // SELECT * FROM graft_boilerplate_spans('docs', '16') — hot-gram
+    // boilerplate removal spans
+    fn("graft_boilerplate_spans", 1, "table", "min_df") { case (_, Seq(df), params) =>
+      graft.ops.Dedup.boilerplateSpans(df, params(0).toInt)
+    },
+    // SELECT * FROM graft_exact_substr_spans('docs', '8') — ExactSubstr
+    // remove-the-span dedup
+    fn("graft_exact_substr_spans", 1, "table", "min_len") { case (_, Seq(df), params) =>
+      graft.ops.Dedup.exactSubstrSpans(df, params(0).toInt)
+    },
+    // SELECT * FROM graft_knn_graph('embeddings', '5') — corpus-wide cosine kNN
+    fn("graft_knn_graph", 1, "table", "k") { case (_, Seq(df), params) =>
+      graft.ops.Similarity.knnGraph(df, params(0).toInt)
+    },
+    // SELECT * FROM graft_block_dedup('docs', '8') — CCNet block-hash dedup
+    fn("graft_block_dedup", 1, "table", "block_words") { case (_, Seq(df), params) =>
+      graft.ops.Dedup.blockDedup(df, params(0).toInt)
+    },
+    // SELECT * FROM graft_cdc_chunk_dedup('docs', '3', '8') — content-defined
+    // chunking dedup (shift-robust)
+    fn("graft_cdc_chunk_dedup", 1, "table", "gram_k", "divisor") {
+      case (_, Seq(df), params) =>
+        graft.ops.Dedup.cdcChunkDedup(df, params(0).toInt, params(1).toInt)
+    },
+    // SELECT * FROM graft_containment_join('docs', '3', '0.8') — directional
+    // |A∩B|/|A| containment pairs
+    fn("graft_containment_join", 1, "table", "ngram_n", "threshold") {
+      case (_, Seq(df), params) =>
+        graft.ops.Dedup.containmentJoin(df, params(0).toInt, params(1).toDouble)
+    },
+    // SELECT * FROM graft_label_propagation('embeddings', '5', '5', '2') —
+    // hard-clamp label propagation over the mutual-kNN graph
+    fn("graft_label_propagation", 1, "table", "k", "seed_mod", "rounds") {
+      case (_, Seq(df), params) =>
+        graft.ops.Similarity.labelPropagate(
+          df, params(0).toInt, params(1).toInt, params(2).toInt)
+    },
+    // SELECT * FROM graft_random_projection('embeddings', '16') — portable
+    // JL sign projection (long form)
+    fn("graft_random_projection", 1, "table", "out_dims") { case (_, Seq(df), params) =>
+      graft.ops.Similarity.randomProjection(df, params(0).toInt)
+    },
+    // SELECT * FROM graft_containment_screen('arrivals', '/idx', '3', '0.8')
+    // — the STANDING-INDEX containment probe
+    fn("graft_containment_screen", 1, "arrivals", "index_dir", "ngram_n", "threshold") {
+      case (session, Seq(df), params) =>
+        // the REAL standing-index probe (cost ∝ batch + candidates) —
+        // the cheap path the ad-hoc graft_incremental_containment TVF
+        // documents against. The probe frames are LAZY bounded persists,
+        // so resolving this call (EXPLAIN included) runs no probe jobs —
+        // only the parquet sources' fixed schema/listing work
+        // (ExtensionsSpec pins the job floor).
+        graft.ops.Dedup.incrementalContainmentScreen(session, params(0),
+          df, params(1).toInt, params(2).toDouble)
+    },
+    // SELECT * FROM graft_span_screen_indexed('arrivals', '/idx', '/corpus', '8')
+    // — the standing fingerprint-index span screen
+    fn("graft_span_screen_indexed", 1,
+        "arrivals", "index_dir", "corpus_dir", "min_len") {
+      case (session, Seq(df), params) =>
+        // the standing fingerprint-index span screen (cost ∝ batch +
+        // candidates; the index-directory argument lets SQL reach the
+        // incremental probe instead of the O(corpus) graft_span_screen
+        // recompute). Same analysis-time probe-materialization note as
+        // containment_screen.
+        graft.ops.Dedup.incrementalSpanScreen(session, params(0),
+          FileFormats.readParquet(session, params(1)), df, params(2).toInt)
+    },
+    // SELECT * FROM graft_graph_triangles('embeddings', '5') — triangle
+    // census of the mutual-kNN graph (degree, triangles, local cc)
+    fn("graft_graph_triangles", 1, "table", "k") { case (_, Seq(df), params) =>
+      graft.ops.Similarity.graphTriangles(df, params(0).toInt)
+    },
+    // SELECT * FROM graft_dsir_weights('docs', 'src0') — DSIR importance
+    // weights against the named target source
+    fn("graft_dsir_weights", 1, "table", "target_source") { case (_, Seq(df), params) =>
+      graft.ops.Dsir.weights(df, col("source") === params(0))
+    },
+    // SELECT * FROM graft_dsir_sample('docs', 'src0') — the deterministic
+    // DSIR importance resample
+    fn("graft_dsir_sample", 1, "table", "target_source") { case (_, Seq(df), params) =>
+      graft.ops.Dsir.resample(df, col("source") === params(0))
+    },
+    // SELECT * FROM graft_mixture_schedule('docs', '1000000') — τ=0.5
+    // temperature-flattened training-mixture schedule per source under
+    // the given token budget
+    fn("graft_mixture_schedule", 1, "table", "budget_tokens") {
+      case (_, Seq(df), params) =>
+        // the registry derivation verbatim: one tokenize-count scan to
+        // per-source token totals, then the |sources|-sized schedule
+        graft.ops.Sampling.temperatureMixture(
+          df.select(col("source"),
+              org.apache.spark.sql.functions.size(
+                graft.ops.TextAnalysis.tokens(col("text"))).cast("long").as("n"))
+            .groupBy(col("source"))
+            .agg(org.apache.spark.sql.functions.sum(col("n")).as("n_tokens")),
+          budgetTokens = params(0).toDouble)
+    },
+    // SELECT * FROM graft_source_overlap('docs', '3') — pairwise
+    // cross-source shingle containment/Jaccard matrix
+    fn("graft_source_overlap", 1, "table", "ngram_n") { case (_, Seq(df), params) =>
+      graft.ops.Dedup.sourceOverlap(df, params(0).toInt)
+    },
+    // SELECT * FROM graft_source_overlap_census('idx') — the matrix served
+    // from a standing (source, h1, h2) shingle-index table (e.g. a temp
+    // view over the index parquet): hash-only scan, no tokenization
+    fn("graft_source_overlap_census", 1, "index_table") { case (_, Seq(df), _) =>
+      // the standing-index serve path: census over an already-built
+      // (source, h1, h2) shingle-index relation — duplicate rows from
+      // blind appends are absorbed by the census aggregate
+      graft.ops.Dedup.sourceOverlapCensus(
+        df.select(col("source"), col("h1"), col("h2")))
+    },
+    // SELECT * FROM graft_corpus_drift('docs', '8', '3') — the
+    // moving-boundary drift read served from batch-tagged partials
+    fn("graft_corpus_drift", 1, "table", "n_batches", "boundary") {
+      case (_, Seq(df), params) =>
+        // the state-served moving-boundary drift read, the registry
+        // derivation verbatim: one scan to ≤ sources×n_batches partials,
+        // then the O(state) boundary read
+        graft.streaming.StreamingCorpusStats.driftFromState(
+          graft.streaming.StreamingCorpusStats.taggedPartials(
+            df, params(0).toInt),
+          params(1).toLong)
+    },
+    // SELECT * FROM graft_span_screen('corpus', 'arrivals', '8') — the
+    // standing exact-substring screen: arrival removal spans against the
+    // corpus (monotone arrival ids — the ingestion contract)
+    fn("graft_span_screen", 2, "standing", "arrivals", "min_len") {
+      case (_, Seq(ldf, rdf), params) =>
+        // the standing screen's batch identity (Dedup.incrementalSpanScreen
+        // scaladoc, DedupSpec-pinned): under monotone ingestion (arrival
+        // ids larger than every standing id — the contract this TVF
+        // documents), keep-standing ≡ the corpus-wide keep-first pipeline
+        // over (standing ∪ arrivals) restricted to arrival doc_ids.
+        // COST CAVEAT: this SQL form RECOMPUTES the span pipeline over
+        // the ENTIRE standing∪arrivals corpus on every query — O(corpus),
+        // not O(batch). It is the ad-hoc/one-shot surface; a standing
+        // ingest pipeline should use the indexed probe
+        // (graft_span_screen_indexed, or Dedup.incrementalSpanScreen fed
+        // by IndexMaintenance.spanScreenBatch) at cost ∝ batch +
+        // candidates.
+        val docs = ldf.select(col("doc_id"), col("text"))
+          .unionByName(rdf.select(col("doc_id"), col("text")))
+        graft.ops.Dedup.exactSubstrSpans(docs, params(0).toInt)
+          .join(rdf.select(col("doc_id")), Seq("doc_id"), "left_semi")
+    },
+    // SELECT * FROM graft_incremental_block_dedup('corpus', 'arrivals', '8')
+    // — the arrival block screen (monotone arrival ids; O(corpus) ad-hoc
+    // form — continuous ingest uses the Scala standing-index path)
+    fn("graft_incremental_block_dedup", 2, "standing", "arrivals", "block_words") {
+      case (_, Seq(ldf, rdf), params) =>
+        // the screen's monotone-ingestion batch identity
+        // (Dedup.incrementalBlockDedup scaladoc, registry-oracle-pinned):
+        // corpus-wide first-instance stats over (standing ∪ arrivals)
+        // restricted to arrival doc_ids. Same O(corpus) recompute caveat
+        // as graft_span_screen — the standing-index probe path is
+        // Scala-only.
+        val docs = ldf.select(col("doc_id"), col("text"))
+          .unionByName(rdf.select(col("doc_id"), col("text")))
+        graft.ops.Dedup.blockDedup(docs, params(0).toInt)
+          .join(rdf.select(col("doc_id")), Seq("doc_id"), "left_semi")
+    },
+    // SELECT * FROM graft_incremental_containment('corpus', 'arrivals', '3', '0.8')
+    // — the arrival containment gate (same ad-hoc O(corpus) caveat;
+    // graft_containment_screen is the indexed probe)
+    fn("graft_incremental_containment", 2,
+        "standing", "arrivals", "ngram_n", "threshold") {
+      case (_, Seq(ldf, rdf), params) =>
+        // containment of a pair depends on nothing but the pair, so the
+        // screen ≡ the corpus-wide containment join restricted to
+        // (arrival sub, standing super) — no id-monotonicity needed.
+        // Same O(corpus) recompute caveat as above.
+        val docs = ldf.select(col("doc_id"), col("text"))
+          .unionByName(rdf.select(col("doc_id"), col("text")))
+        graft.ops.Dedup
+          .containmentJoin(docs, params(0).toInt, params(1).toDouble)
+          .join(rdf.select(col("doc_id").as("d_sub")), Seq("d_sub"), "left_semi")
+          .join(ldf.select(col("doc_id").as("d_super")), Seq("d_super"), "left_semi")
+          .select(col("d_sub"), col("d_super"), col("n_sub"), col("inter"),
+            col("containment"))
+    })
 
-/** Two-relation form of [[GraftTableOpPlan]] for table functions over a
-  * (standing, arrival) pair — same marker discipline: `resolved = false`
-  * until the resolution rule rewrites it. */
-final case class GraftBinaryTableOpPlan(left: LogicalPlan, right: LogicalPlan,
-                                        op: String, params: Seq[String])
-    extends BinaryNode {
-  override def output: Seq[Attribute] = Nil
-  override lazy val resolved: Boolean = false
-  override protected def withNewChildrenInternal(
-      newLeft: LogicalPlan, newRight: LogicalPlan): LogicalPlan =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Unresolved form of [[AsOfJoinPlan]] for the `graft_asof_join` table
-  * function: carries the column NAMES until both relations resolve. */
-final case class AsOfJoinSqlPlan(left: LogicalPlan, right: LogicalPlan,
-                                 key: String, timeUs: String,
-                                 valueCols: Seq[String]) extends BinaryNode {
-  override def output: Seq[Attribute] = Nil
-  override lazy val resolved: Boolean = false
-  override protected def withNewChildrenInternal(
-      newLeft: LogicalPlan, newRight: LogicalPlan): LogicalPlan =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Rewrites [[AsOfJoinSqlPlan]] into the native [[AsOfJoinPlan]] once both
-  * sides resolve — the same attribute lookup [[AsOfJoin.apply]] performs
-  * on the Scala path, so SQL and Scala build the IDENTICAL plan node. */
-object AsOfJoinResolution extends Rule[LogicalPlan] {
-  override def apply(plan: LogicalPlan): LogicalPlan = plan.resolveOperatorsUp {
-    case AsOfJoinSqlPlan(l, r, key, ts, vals) if l.resolved && r.resolved =>
-      def attr(p: LogicalPlan, n: String, side: String): Attribute =
-        p.output.find(_.name.equalsIgnoreCase(n)).getOrElse(
-          throw new IllegalArgumentException(
-            s"graft_asof_join: $side side has no column '$n' " +
-              s"(has: ${p.output.map(_.name).mkString(", ")})"))
-      val rv = vals.map(c => attr(r, c, "right"))
-      val mo = rv.map(a =>
-        AttributeReference(s"matched_${a.name}", a.dataType, nullable = true)())
-      AsOfJoinPlan(l, r, attr(l, key, "left"), attr(l, ts, "left"),
-        attr(r, key, "right"), attr(r, ts, "right"), rv, mo)
-  }
+  val byName: Map[String, TableFn] = tableFns.map(f => f.name -> f).toMap
 }

@@ -79,24 +79,27 @@ object FileFormats {
     * destroyed-only-copy hazard [[compact]]'s scaladoc hands to callers: if
     * the rewrite's row count differs from `expectedRows`, the swap is
     * REFUSED — the original directory is untouched and the rewrite is
-    * deleted. On success the original moves aside to `<dir>.compact_old`,
-    * the rewrite renames in, and only then is the old data deleted; a
-    * failed second rename restores the original. Renames go through the
-    * Hadoop FS API (atomic metadata moves on HDFS/local; on S3A rename is
-    * a copy — repoint a metastore there instead). */
+    * deleted. On success the original moves aside to `aside`, the
+    * rewrite renames in, and only then is the old data deleted; a failed
+    * second rename restores the original. A crash between the two renames
+    * leaves the original at `aside` with no `dir`; [[compactAndSwap]] and
+    * [[graft.ops.Ivf.compactLists]] restore it on their next call. Renames go through the Hadoop FS API
+    * (atomic metadata moves on HDFS/local; on S3A rename is a copy —
+    * repoint a metastore there instead). */
   private[graft] def swapCompacted(spark: SparkSession, dir: String,
-                                   tmpDir: String, expectedRows: Long): Unit = {
-    val src = new org.apache.hadoop.fs.Path(dir)
-    val tmp = new org.apache.hadoop.fs.Path(tmpDir)
+                                   tmpDir: String, expectedRows: Long,
+                                   aside: String): Unit = {
+    val src = new Path(dir)
+    val tmp = new Path(tmpDir)
     val fs = src.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val rewritten = footerRowCount(spark, tmpDir).getOrElse(0L)
     if (rewritten != expectedRows) {
       fs.delete(tmp, true)
       throw new IllegalStateException(
-        s"compaction swap refused: rewrite has $rewritten rows, source has " +
-          s"$expectedRows — original directory left untouched")
+        s"compaction swap refused for $dir: rewrite has $rewritten rows, " +
+          s"source has $expectedRows — original directory left untouched")
     }
-    val old = new org.apache.hadoop.fs.Path(dir + ".compact_old")
+    val old = new Path(aside)
     fs.delete(old, true) // stale leftover from an interrupted prior swap
     if (!fs.rename(src, old))
       throw new java.io.IOException(s"could not move $dir aside to $old")
@@ -106,22 +109,33 @@ object FileFormats {
       if (!fs.rename(old, src))
         throw new java.io.IOException(
           s"could not move $tmpDir into $dir AND could not restore the " +
-            s"original — the data is intact at $old; move it back manually")
+            s"original — the data is intact at $old; the next compaction " +
+            "call restores it")
       throw new java.io.IOException(s"could not move $tmpDir into $dir")
     }
     fs.delete(old, true)
   }
 
   /** [[compact]] plus the atomic swap: rewrite into `<dir>.compact_tmp`,
-    * verify the row count survived, then rename into place (refusing the
-    * swap — original untouched — on any row-count mismatch).
+    * verify the row count survived, then rename into place through
+    * `<dir>.compact_old` (refusing the swap — original untouched — on any
+    * row-count mismatch). A swap
+    * interrupted after the original moved aside is recovered first: with
+    * `dir` missing and `<dir>.compact_old` present, the original renames
+    * back before anything is compacted.
     * @return number of output files chosen */
   def compactAndSwap(spark: SparkSession, dir: String,
                      targetBytes: Long = 128L * 1024 * 1024): Int = {
+    val src = new Path(dir)
+    val old = new Path(dir + ".compact_old")
+    val fs = src.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(src) && fs.exists(old) && !fs.rename(old, src))
+      throw new java.io.IOException(
+        s"could not restore $old to $dir after an interrupted compaction")
     val expected = footerRowCount(spark, dir).getOrElse(0L)
     val tmpDir = dir + ".compact_tmp"
     val n = compact(spark, dir, tmpDir, targetBytes)
-    swapCompacted(spark, dir, tmpDir, expected)
+    swapCompacted(spark, dir, tmpDir, expected, old.toString)
     n
   }
 

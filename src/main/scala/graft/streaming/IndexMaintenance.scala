@@ -53,22 +53,24 @@ object IndexMaintenance {
     * ([[graft.ops.Dedup.incrementalSpanScreen]] — keep-standing
     * semantics, spans land on arrivals) into the batch-partitioned span
     * table, then (2) absorb the batch into the index and (3) the corpus
-    * store, so the next batch's probe sees it. Concatenated spans over a
-    * run of monotone-id arrivals equal the batch
-    * [[graft.ops.Dedup.exactSubstrSpans]] over everything, restricted to
-    * arrival doc_ids (DedupSpec pins it through the real streaming
-    * wiring, and that an engine retry of a batch leaves every emitted span
-    * unchanged). Same source-redelivery caveat as the dedup screen. */
+    * store, appending only the docs the store lacks, so the next batch's
+    * probe sees it. Concatenated spans over a run of monotone-id arrivals
+    * equal the batch [[graft.ops.Dedup.exactSubstrSpans]] over everything,
+    * restricted to arrival doc_ids (DedupSpec pins it through the real
+    * streaming wiring, and that an engine retry of a batch leaves every
+    * emitted span unchanged and stores each doc once). Same
+    * source-redelivery caveat as the dedup screen. */
   def spanScreenBatch(spark: SparkSession, indexDir: String, corpusDir: String,
                       spansDir: String, minLen: Int = 8, k: Int = 5,
                       w: Int = 4, maxDf: Int = 16)
                      (batch: DataFrame, batchId: Long): Unit = {
+    val corpus = FileFormats.readParquet(spark, corpusDir)
     StateSink.appendIdempotent(
       graft.ops.Dedup.incrementalSpanScreen(spark, indexDir,
-        FileFormats.readParquet(spark, corpusDir), batch, minLen, k, w, maxDf),
+        corpus, batch, minLen, k, w, maxDf),
       batchId, spansDir)
     graft.ops.Dedup.appendFingerprintIndex(batch, indexDir, k, w)
-    batch.write.mode("append").parquet(corpusDir)
+    appendMissingDocs(corpus, batch, corpusDir)
   }
 
   /** Directional-containment screening —
@@ -194,8 +196,17 @@ object IndexMaintenance {
         n, threshold, bands, rows, seed),
       batchId, pairsDir)
     graft.ops.Dedup.appendSignatureIndex(batch, indexDir, n, bands, rows, seed)
-    // the corpus ids stream past the broadcast batch ids, so only the
-    // batch-sized set of already-stored ids meets the batch
+    appendMissingDocs(corpus, batch, corpusDir)
+  }
+
+  /** The corpus absorb of the screens that keep a corpus store: append
+    * the batch docs `corpus` (the store as the step read it) lacks, so an
+    * engine retry of a batch whose absorb landed stores nothing twice.
+    * The corpus ids stream past the broadcast batch ids, so only the
+    * batch-sized set of already-stored ids meets the batch. */
+  private def appendMissingDocs(corpus: DataFrame, batch: DataFrame,
+                                corpusDir: String): Unit = {
+    val arrived = broadcast(batch.select(col("doc_id")))
     batch.join(corpus.select(col("doc_id")).join(arrived, Seq("doc_id"), "left_semi"),
         Seq("doc_id"), "left_anti")
       .write.mode("append").parquet(corpusDir)

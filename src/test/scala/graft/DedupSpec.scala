@@ -1287,6 +1287,10 @@ class DedupSpec extends SparkSpec {
       .filter($"doc_id" >= 300)
       .as[(Long, Long, Long)].collect().toSet
     assert(got === batch)
+    val stored = spark.read.parquet(corpus)
+    assert(stored.count() === docs.count() &&
+      stored.select($"doc_id").distinct().count() === docs.count(),
+      "a re-run batch must not store its docs twice")
   }
 
   test("streaming novelty screen: an engine retry re-scores its batch as zero-novel (known divergence)") {

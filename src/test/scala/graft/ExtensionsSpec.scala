@@ -82,6 +82,48 @@ class ExtensionsSpec extends SparkSpec {
       api.collect().map(_.toString).sorted.toSeq)
   }
 
+  test("AsOfJoin resolves column names as SQL does: a mixed-case Scala call equals the SQL result") {
+    val ev = graft.sources.Tables.events(spark, sf)
+      .select($"user_id", unix_micros($"ts").as("ts_us"), $"event_id")
+    val marks = graft.sources.Tables.events(spark, sf)
+      .filter($"event_id" % 5 === 0)
+      .select($"user_id", unix_micros($"ts").as("ts_us"), $"value")
+    ev.createOrReplaceTempView("ext_asof_case_l")
+    marks.createOrReplaceTempView("ext_asof_case_r")
+    val sql = spark.sql("SELECT * FROM graft_asof_join(" +
+      "'ext_asof_case_l', 'ext_asof_case_r', 'USER_ID', 'Ts_Us', 'VALUE')")
+    val api = graft.plans.AsOfJoin(ev, marks, "USER_ID", "Ts_Us", Seq("VALUE"))
+    assert(api.columns.toSeq === Seq("user_id", "ts_us", "event_id", "matched_value"))
+    assert(sql.columns.toSeq === api.columns.toSeq)
+    val rows = api.collect().map(_.toString).sorted.toSeq
+    assert(sql.collect().map(_.toString).sorted.toSeq === rows && rows.nonEmpty)
+    val ex = intercept[IllegalArgumentException](
+      graft.plans.AsOfJoin(ev, marks, "user", "ts_us", Seq("value")))
+    assert(ex.getMessage.contains("no column 'user'") &&
+      ex.getMessage.contains("user_id, ts_us, event_id"), ex.getMessage)
+  }
+
+  test("every table function rejects a wrong argument count with its usage, and an unknown table fails analysis") {
+    def messages(t: Throwable): String =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" / ")
+    val fns = graft.plans.SqlSurface.tableFns
+    assert(fns.size === 26 && fns.map(_.name).distinct.size === 26)
+    fns.foreach { fn =>
+      val tooMany = (fn.args :+ "extra").map(a => s"'$a'").mkString(", ")
+      val ex = intercept[Exception](spark.sql(s"SELECT * FROM ${fn.name}($tooMany)"))
+      assert(messages(ex).contains(fn.usage), s"${fn.name}: ${messages(ex)}")
+      val missing = fn.args.zipWithIndex
+        .map { case (a, i) => if (i < fn.tables) s"'ext_no_such_table_$i'" else s"'$a'" }
+        .mkString(", ")
+      val ax = intercept[org.apache.spark.sql.AnalysisException](
+        spark.sql(s"SELECT * FROM ${fn.name}($missing)"))
+      assert(ax.getMessage.contains("ext_no_such_table_0"), s"${fn.name}: ${ax.getMessage}")
+    }
+    // the one injected rule hands back a plan without a marker unchanged
+    val plain = spark.range(3).queryExecution.analyzed
+    assert(new graft.plans.GraftTableFnResolution(spark)(plain) eq plain)
+  }
+
   test("graft_dedup_exact and graft_minhash_pairs TVFs match the Scala operators") {
     graft.sources.Tables.documents(spark, sf)
       .createOrReplaceTempView("ext_docs")

@@ -18,7 +18,12 @@ import org.scalatest.funsuite.AnyFunSuite
   *
   * And every stream starts in `StateSink.run`: a pipeline is a per-batch
   * step passed to it, so a second launcher with its own checkpoint,
-  * trigger and defaults cannot come back either. */
+  * trigger and defaults cannot come back either.
+  *
+  * And every SQL table function is one entry of `SqlSurface.tableFns`,
+  * registered by the one loop in `GraftExtensions`, so a second
+  * registration shape with its own marker plan and rule cannot come back
+  * either. */
 class ReadGuardSpec extends AnyFunSuite {
 
   /** `read` then any `.option(..)` calls then `.parquet(` or a parquet
@@ -36,6 +41,10 @@ class ReadGuardSpec extends AnyFunSuite {
     * across line breaks. The words in prose ("a foreachBatch retry") are
     * not a member access. */
   private val StreamStart = """\.\s*(?:writeStream|foreachBatch)\b""".r
+
+  /** A table-function registration: an `injectTableFunction` member
+    * access, across line breaks. */
+  private val TableFnInjection = """\.\s*injectTableFunction\b""".r
 
   private def sources(root: Path): Seq[Path] = {
     val s = Files.walk(root)
@@ -142,5 +151,33 @@ class ReadGuardSpec extends AnyFunSuite {
       "StateSink.run(stream, ckpt)(EventsCdc.scd1MergeBatch(spark, dir, keys))",
       "val writeStreamed = 1")
     allowed.foreach(f => assert(StreamStart.findFirstIn(f).isEmpty, f))
+  }
+
+  test("no table function registers anywhere but the one loop in GraftExtensions") {
+    val root = Paths.get("src/main/scala")
+    val all = sources(root)
+    assert(all.size > 50, s"found only ${all.size} sources under $root")
+    val (own, rest) = all.partition(_.endsWith(Paths.get("graft/GraftExtensions.scala")))
+    assert(own.size === 1)
+    val outside = rest.flatMap(hits(TableFnInjection))
+    assert(outside.isEmpty,
+      "declare these as entries of SqlSurface.tableFns:\n" + outside.mkString("\n"))
+    val inside = hits(TableFnInjection)(own.head)
+    assert(inside.size === 1,
+      "GraftExtensions registers the table in one loop:\n" + inside.mkString("\n"))
+  }
+
+  test("the table-function scan sees every form of a registration") {
+    val forms = Seq(
+      "ext.injectTableFunction((",
+      "    ext\n      .injectTableFunction((FunctionIdentifier(name), info, builder))",
+      "extensions . injectTableFunction(fn)")
+    forms.foreach(f => assert(TableFnInjection.findFirstIn(f).nonEmpty, f))
+    val allowed = Seq(
+      "ext.injectFunction((",
+      "ext.injectResolutionRule(s => new GraftTableFnResolution(s))",
+      "  * Spark's `injectTableFunction` hands a builder only the argument",
+      "val injectTableFunctions = 1")
+    allowed.foreach(f => assert(TableFnInjection.findFirstIn(f).isEmpty, f))
   }
 }

@@ -330,11 +330,26 @@ class SourcesSpec extends SparkSpec {
     val tmp = dir + ".compact_tmp"
     spark.read.parquet(dir).limit(10).write.mode("overwrite").parquet(tmp)
     val ex = intercept[IllegalStateException] {
-      FileFormats.swapCompacted(spark, dir, tmp, before)
+      FileFormats.swapCompacted(spark, dir, tmp, before, dir + ".compact_old")
     }
     assert(ex.getMessage.contains("refused"))
     assert(spark.read.parquet(dir).count() === before, "original must survive")
     assert(!new java.io.File(tmp).exists(), "refused rewrite must be cleaned up")
+  }
+
+  test("compactAndSwap restores a directory an interrupted swap left aside, then compacts it") {
+    val dir = graft.sources.Scratch.dir("graft_swap_recover") + "/t"
+    val df = spark.range(0, 4000).select($"id",
+      org.apache.spark.sql.functions.md5($"id".cast("string")).as("payload"))
+    df.repartition(6).write.parquet(dir)
+    val before = spark.read.parquet(dir).orderBy("id").collect().toSeq
+    // the crash window: the original moved aside, the rewrite never renamed in
+    assert(new java.io.File(dir).renameTo(new java.io.File(dir + ".compact_old")))
+    val n = FileFormats.compactAndSwap(spark, dir)
+    val files = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".parquet"))
+    assert(files.length === n && n < 6, s"expected <6 files, got ${files.length}")
+    assert(spark.read.parquet(dir).orderBy("id").collect().toSeq === before)
+    assert(!new java.io.File(dir + ".compact_old").exists(), "old copy must be gone")
   }
 
   test("compactAndSwap refuses a partitioned directory before writing anything") {
